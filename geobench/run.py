@@ -11,6 +11,7 @@ import argparse
 import hashlib
 import json
 import os
+import signal
 import subprocess
 import sys
 
@@ -50,6 +51,23 @@ def source_files():
                 yield os.path.join(d, f)
 
 
+def run(cmd, timeout, what, own_group=False, **kw):
+    """Runs cmd and returns (stdout, exit code). On timeout it kills cmd, or
+    with `own_group` the process group cmd leads (sbt's launcher forks a
+    JVM), waits for it and fails."""
+    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True, start_new_session=own_group, **kw)
+    try:
+        out, _ = proc.communicate(timeout=timeout)
+    except subprocess.TimeoutExpired:
+        if own_group:
+            os.killpg(proc.pid, signal.SIGKILL)
+        else:
+            proc.kill()
+        proc.communicate()
+        fail(f"{what} timed out", 3)
+    return out, proc.returncode
+
+
 def build():
     h = hashlib.sha256()
     for f in source_files():
@@ -60,21 +78,17 @@ def build():
     if os.path.isfile(STAMP) and open(STAMP).read() == stamp and os.path.isdir(CLASSES):
         return
     print("[geobench] building graft and the harness", file=sys.stderr)
-    try:
-        # sbt's global state and temporary files go under target/ too, so a
-        # build writes nothing outside the checkout
-        tmp = os.path.join(HERE, "target", "tmp")
-        os.makedirs(tmp, exist_ok=True)
-        p = subprocess.run(["sbt", "-batch", "-Dsbt.log.noformat=true", "-Dsbt.server.autostart=false",
-                            f"-Dsbt.global.base={os.path.join(HERE, 'target', 'sbt-global')}",
-                            f"-Djava.io.tmpdir={tmp}", f"-Djna.tmpdir={tmp}", "compile"],
-                           cwd=HERE, env=dict(os.environ, JAVA_TOOL_OPTIONS="-XX:-UsePerfData"),
-                           stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
-                           timeout=BUILD_TIMEOUT_S)
-    except subprocess.TimeoutExpired:
-        fail("build timed out", 4)
-    if p.returncode != 0:
-        sys.stderr.write(p.stdout[-20000:])
+    # sbt's global state and temporary files go under target/ too, so a
+    # build writes nothing outside the checkout
+    tmp = os.path.join(HERE, "target", "tmp")
+    os.makedirs(tmp, exist_ok=True)
+    out, code = run(["sbt", "-batch", "-Dsbt.log.noformat=true", "-Dsbt.server.autostart=false",
+                     f"-Dsbt.global.base={os.path.join(HERE, 'target', 'sbt-global')}",
+                     f"-Djava.io.tmpdir={tmp}", f"-Djna.tmpdir={tmp}", "compile"],
+                    BUILD_TIMEOUT_S, "build", own_group=True, cwd=HERE, stderr=subprocess.STDOUT,
+                    env=dict(os.environ, JAVA_TOOL_OPTIONS="-XX:-UsePerfData"))
+    if code != 0:
+        sys.stderr.write(out[-20000:])
         fail("build failed", 4)
     with open(STAMP, "w") as fh:
         fh.write(stamp)
@@ -111,17 +125,11 @@ def main():
             "graftbench.Main", "--workload", a.workload, "--seed", str(a.seed),
             "--seconds", str(a.seconds), "--trace", str(a.trace), "--slots", str(a.slots),
             "--work", os.path.join(work, "run")]
-    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True)
-    try:
-        out, _ = proc.communicate(timeout=RUN_TIMEOUT_S)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
-        fail("run timed out", 3)
+    out, code = run(cmd, RUN_TIMEOUT_S, "run")
     lines = [l for l in out.splitlines() if l.strip()]
-    if proc.returncode != 0 or not lines:
+    if code != 0 or not lines:
         sys.stderr.write(out)
-        fail(f"harness exited with {proc.returncode}", proc.returncode or 5)
+        fail(f"harness exited with {code}", code or 5)
     result = json.loads(lines[-1])
     if set(result) != {"correct", "attempted", "failed", "metrics"}:
         fail("harness printed no result line", 5)
