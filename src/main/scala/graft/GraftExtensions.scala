@@ -11,26 +11,28 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * in spark-defaults (or `SparkSession.builder.withExtensions(new
   * GraftExtensions()(_))`) and every session gets the full surface with
-  * no `GeoFunctions.register(spark)` call: all ST_* scalar functions and
-  * the two aggregates (injected at the registry level, so they resolve
-  * for the session's very FIRST query — Spark 4 raises
-  * UNRESOLVED_ROUTINE during resolution, which rules out any
-  * post-resolution registration hook), the spatial-join planner
-  * strategy, and the optimizer rules.
+  * no `GeoFunctions.register(spark)` call: every graft SQL function —
+  * the ST_* scalars and aggregates and the Text and Media `graft_*`
+  * functions (injected at the registry level, so they resolve for the
+  * session's very FIRST query — Spark 4 raises UNRESOLVED_ROUTINE during
+  * resolution, which rules out any post-resolution registration hook),
+  * the spatial-join planner strategy, and the optimizer rules.
   *
-  * The builders are the SAME objects `register` installs — one audited
-  * code path, two wiring mechanisms. Placement note: extension-injected
-  * optimizer rules run inside the main operator-optimization batch
-  * rather than `experimental.extraOptimizations` (after it) where
-  * `register` puts them. All three rules are shape-driven, idempotent
+  * Both wirings read the one descriptor list
+  * [[graft.functions.GeoFunctions.functionDescriptors]], so the builders
+  * are the SAME objects `register` installs. Placement note:
+  * extension-injected optimizer rules run inside the main
+  * operator-optimization batch rather than
+  * `experimental.extraOptimizations` (after it) where `register` puts
+  * them. All three rules are shape-driven, idempotent
   * accelerators whose non-firing leaves plans correct (the WKB path /
   * unfolded count / planar-refused-then-wrapped extents), and
   * GeodesicExtentRule still precedes NativePointFastPath in injection
   * order — the end-to-end equivalence of both wirings is pinned by the
   * extensions drive (native fast path + geodesic extent + spatial
   * strategy through a config-only spark-shell). Calling `register`
-  * on an extensions-built session stays safe: the temp-function
-  * re-registration replaces identical builders and the
+  * on an extensions-built session stays safe and cheap: it skips every
+  * name already bound to graft's own builder, and its
   * `extraOptimizations` appends are idempotent re-runs. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic harness for the optimization rounds: run named queries under
   * the Bench session shape and report the orchestration profile — job,
@@ -20,16 +19,10 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // experiment passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets an
     // optimization round A/B a session conf without rebuilding
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";")).map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> v
+    }
+    val spark = LocalSession(cpus, "ERROR", extraConf)
 
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong

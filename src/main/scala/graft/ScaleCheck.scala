@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-20 scale sanity for the operators whose INTERNALS changed this
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus, "ERROR")
     import spark.implicits._
 
     def timed[T](name: String)(f: => T): T = {
@@ -158,7 +152,6 @@ object ScaleCheck {
     // left, k=3; probe: every left row resolves exactly k neighbors and
     // ranks are 1..k
     locally {
-      graft.functions.GeoFunctions.register(spark)
       val right = spark.range(1000000).toDF("rid")
         .withColumn("rg", call_function("st_point",
           (col("rid") % 250000).cast("double") % 500.0,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-slope evidence harness (BASELINE.md "time vs rows"): generates
   * k× synthetic blow-ups of the sf0.1 inputs for the four heaviest shuffle
@@ -40,14 +40,8 @@ object ScaleSlope {
     // decades fan out. This is exactly what a 1000-executor cluster
     // does; the env knob keeps the pinned-32 floor reproducible.
     val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus, "ERROR",
+      Seq("spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> initParts))
 
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
@@ -130,7 +124,6 @@ object ScaleSlope {
       * ~flat (reads only the window's row groups + footers) while the full
       * scan grows ~linearly — the measured form of the 100-TB claim. */
     def statsPruneSlope(factor: Int): Unit = {
-      graft.functions.GeoFunctions.register(spark)
       val n = 1048576L * factor
       val side = math.max(1L, math.round(math.sqrt(n.toDouble)))
       val dir = s"$base/gpq2m_x$factor" // 2m = 2 MB row groups; layout version keys the cache
@@ -166,7 +159,6 @@ object ScaleSlope {
       * is the measured form of "the conservative meters→degrees pads don't
       * blow up candidates at high latitude". */
     def geoKnnSlope(factor: Int): Unit = {
-      graft.functions.GeoFunctions.register(spark)
       val nl = 10000L * factor
       val nr = 30000L * factor
       def pts(n: Long, salt: Int, idCol: String, geomCol: String) = spark.sql(
@@ -188,7 +180,6 @@ object ScaleSlope {
       * densifies cells, a density change, not a volume change). Broadcast
       * is disabled so the slope pins the GRID exec, the 100 TB path. */
     def geoDWithinSlope(factor: Int): Unit = {
-      graft.functions.GeoFunctions.register(spark)
       val nl = 100000L * factor
       val dir = s"$base/geodw_x$factor"
       if (!new java.io.File(s"$dir/_DONE").exists()) {

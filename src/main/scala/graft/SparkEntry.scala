@@ -24,11 +24,17 @@ object SparkEntry {
   private val viewsDone =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
 
+  /** `s` with graft's SQL surface installed: the one place the catalogue
+    * registers a session. Every query runs through it, so a body never
+    * registers, and a session that already has the surface pays only name
+    * lookups. */
+  private def withSurface(s: SparkSession): SparkSession = {
+    GeoFunctions.register(s)
+    s
+  }
+
   private def views(s: SparkSession, dir: String): Unit = {
     if (viewsDone.containsKey((s, dir))) return
-    GeoFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
-    graft.functions.MediaFunctions.register(s)
     tables.foreach { n =>
       if (n == "events") {
         val raw = readNanosAsLong(s, s"$dir/$n.parquet")
@@ -125,7 +131,7 @@ object SparkEntry {
   private def runStream(parent: SparkSession, prefix: String)(
       build: (SparkSession, String) => DataFrame): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    val sess = parent.newSession()
+    val sess = withSurface(parent.newSession())
     sess.conf.set("spark.sql.shuffle.partitions", "4")
     sess.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -181,6 +187,7 @@ object SparkEntry {
     * The SURVEY.md §7 "minimum end-to-end slice": spatial filter → measure →
     * aggregate, over a real table. */
   def entry(spark: SparkSession): DataFrame = {
+    withSurface(spark)
     views(spark, "/root/testdata/sf0.001")
     spark.sql("""
       SELECT l_returnflag,
@@ -1223,7 +1230,7 @@ object SparkEntry {
     * Geometry. Runs the distributed collect_set pass twice. */
   private def g32Fn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    views(s, dir) // registers ST_* functions; keeps the query order-independent
+    views(s, dir)
     val nation = s.read.parquet(s"$dir/nation.parquet")
     val sameFamily = nation.selectExpr(
       """ST_GeomFromText(CASE WHEN n_nationkey % 2 = 0 THEN 'POINT (1 2)'
@@ -1249,7 +1256,7 @@ object SparkEntry {
     * SparkContext), so queries planned concurrently on the parent session
     * keep broadcast joins and AQE. */
   private def g33Fn(parent: SparkSession, dir: String): DataFrame = {
-    val s = parent.newSession()
+    val s = withSurface(parent.newSession())
     views(s, dir)
     val p = s.sparkContext.defaultParallelism
     s.conf.set("spark.sql.shuffle.partitions",
@@ -1425,7 +1432,6 @@ object SparkEntry {
     * rows are pinned by a closed-form oracle. Any index layout or
     * traversal regression changes the row set and hash-mismatches. */
   private def g38Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g38_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = s.sql("""
@@ -1455,7 +1461,6 @@ object SparkEntry {
     * exact in binary, so the double SUM is order-independent and
     * closed-form. */
   private def g51Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g51_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = s.sql("""
@@ -1640,7 +1645,6 @@ object SparkEntry {
     * The oracle reproduces the blob arithmetic; counts, min/max ids, and
     * labels are all closed-form. */
   private def g53Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val pts = s.sql("""
       SELECT id,
              ST_Point(CASE WHEN id < 1800 THEN (id % 6) * 10.0 + (id % 7) * 0.05
@@ -1667,7 +1671,6 @@ object SparkEntry {
     * and back through ArrowIpc.read; values are pinned by a closed-form
     * oracle. Previously spec-only (ArrowIpcSpec vs the reference fixture). */
   private def g39Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g39_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -1697,7 +1700,6 @@ object SparkEntry {
     * the skip with decode counters, this query hash-gates the values
     * through the pruned path end-to-end). */
   private def g55Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g55_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -1740,7 +1742,6 @@ object SparkEntry {
     * to a temp dir in-query, read through sources/Shapefile (.shp geometry +
     * .dbf typed attributes), and pinned to literals. Previously spec-only. */
   private def g40Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     def unhex(h: String): Array[Byte] =
       h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
     val d = java.nio.file.Files.createTempDirectory("graft_g40")
@@ -1818,7 +1819,6 @@ object SparkEntry {
     * distinction (pz rec 1 vs 2; lz rec 1 vs 2) that content-length
     * band detection keys on. */
   private def g93Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     def unhex(h: String): Array[Byte] =
       h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
     val d = java.nio.file.Files.createTempDirectory("graft_g93")
@@ -2217,7 +2217,6 @@ object SparkEntry {
     * value-exact F doubles, C strings, and X/Y/Z coordinates against a
     * closed-form oracle. */
   private def g110Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g110_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -2450,7 +2449,6 @@ object SparkEntry {
     * decodes index→value per cell; the aggregate pins lookup + geometry
     * against closed forms. */
   private def g95Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g95_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -2616,7 +2614,6 @@ object SparkEntry {
     * and maps back to WKB on read through the byte-pruning DSv2 face; the
     * aggregate pins coordinates and the null row against closed forms. */
   private def g97Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g97_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -2648,7 +2645,6 @@ object SparkEntry {
     * scan-time transcode whose zmFlags detect the z field — the aggregate
     * pins x AND z, so a dropped or fabricated ordinate breaks the hash. */
   private def g98Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g98_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -2682,7 +2678,6 @@ object SparkEntry {
     * the NaN sentinel and NULL rows stay NULL; both must stay out of the
     * sums and the extent. */
   private def g105Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g105_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -2737,7 +2732,6 @@ object SparkEntry {
     * and NULL rows are in the corpus; empties count 0 points and stay
     * out of the bounds via the ST_IsEmpty guard. */
   private def g113Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g113_" + java.util.UUID.randomUUID().toString.take(8))
     val lineOut = new java.io.File(base, "lines").getAbsolutePath
@@ -3054,7 +3048,6 @@ object SparkEntry {
     * directly — merging across blob boundaries is exactly what the
     * transitive-closure step must get right. */
   private def g120Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val pts = s.sql("""
       SELECT CAST(id AS BIGINT) AS pid,
              ST_Point((CAST(id AS DOUBLE) - CAST(id % 6 AS DOUBLE)) / 6.0 * 7.0
@@ -3077,7 +3070,6 @@ object SparkEntry {
     * label is the group's minimum id. The pair join rides the planner's
     * grid strategy — candidate generation is O(local overlap). */
   private def g125Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val boxes = s.sql("""
       SELECT CAST(id AS BIGINT) AS pid,
              ST_MakeEnvelope(
@@ -3102,7 +3094,6 @@ object SparkEntry {
     * read must return exactly those pairs, grid-planned like any
     * predicate join. */
   private def g126Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g126_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     graft.sources.GeoParquet.write(s.sql("""
@@ -3164,7 +3155,6 @@ object SparkEntry {
     * between iterations and the replay exercises the full loop, not a
     * converged fixed point. */
   private def g122Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val pts = s.sql("""
       SELECT CAST(id AS BIGINT) AS pid,
              ST_Point(CAST((id % 4) * 6 + (id DIV 4) % 5 AS DOUBLE),
@@ -3251,7 +3241,6 @@ object SparkEntry {
     * decided with ≥ 1° margin, so the spherical closed form in DuckDB and
     * the engine's Karney-arc refine (≤ 0.2° apart) agree exactly. */
   private def g124Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g124_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val rows = s.sql("""
@@ -3653,7 +3642,6 @@ object SparkEntry {
     * its ≥5°N endpoints, so nothing can match — including the
     * world-spanning planar chord a naive refine would trace. */
   private def g137Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g137_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val rows = s.sql("""
@@ -4233,7 +4221,6 @@ object SparkEntry {
     * offset-only tail and an EOF clamp; expected membership is pure
     * range arithmetic. */
   private def g138Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     import org.apache.spark.sql.functions.{col, lit, call_function}
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g138_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -4385,7 +4372,6 @@ object SparkEntry {
     * union decode; the aggregate pins coordinates, Z, planar area, and
     * the null count against closed forms. */
   private def g99Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g99_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -4431,7 +4417,6 @@ object SparkEntry {
     * length-0 lists) and read back as empties, nulls stay null. Every row
     * pins its exact WKT against a DuckDB closed form. */
   private def g100Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g100_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -4477,7 +4462,6 @@ object SparkEntry {
     * rust/geoparquet/src/writer/encode.rs:21-74); the aggregates pin x, z
     * AND m per hop, so a dropped/fabricated ordinate breaks the hash. */
   private def g101Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     import org.apache.spark.sql.functions._
     def hop(encoding: String, mk: String): DataFrame = {
       val out = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -4517,7 +4501,6 @@ object SparkEntry {
     * back as the envelope, pinned by its four corners. Closes the write
     * face of round 16's decode-only g96 matrix. */
   private def g102Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val wktOut = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g102w_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val boxOut = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -4565,7 +4548,6 @@ object SparkEntry {
     * incl. the EMPTY collection (distinct from the null row) and a
     * two-kind collection whose elements exercise the inner union. */
   private def g103Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g103_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -4608,7 +4590,6 @@ object SparkEntry {
     * literals, including Z and M ordinates carried by the union children's
     * dimension-suffixed names. */
   private def g96Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     def unhex(h: String): Array[Byte] =
       h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
     val d = java.nio.file.Files.createTempDirectory("graft_g96")
@@ -4664,7 +4645,6 @@ object SparkEntry {
     * WKT + SRID literals. The JDBC transport itself needs a live server
     * (spec-mocked); the format decode is the part that can regress. */
   private def g42Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val df = s.sql("""
       SELECT id, hx AS geom FROM VALUES
         (0, '0101000020E6100000000000000000F03F0000000000000040'),
@@ -4689,7 +4669,6 @@ object SparkEntry {
     * encode/decode functions g18 covers) under the hash gate: writeLines →
     * readLines roundtrip with a property column, pinned closed-form. */
   private def g43Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g43_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -4717,7 +4696,6 @@ object SparkEntry {
     * set is pinned closed-form. Spatial sort + multi-part write means the
     * prune actually skips files/row groups, not just rows. */
   private def g44Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g44_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = s.sql("""
@@ -4753,7 +4731,6 @@ object SparkEntry {
     * proves the skip via scan metrics; this oracle pins the surviving row
     * set closed-form. */
   private def g81Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g81_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = s.sql("""
@@ -4786,7 +4763,6 @@ object SparkEntry {
     * column so a header regression (back to Unknown, or a wrong code)
     * breaks the hash. */
   private def g82Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g82_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     // even fid → single Polygon cell (area 0.5); odd fid → MultiPolygon of
@@ -4875,7 +4851,6 @@ object SparkEntry {
     * distances. Oracle = closed-form haversine + the same window in
     * DuckDB. */
   private def g87Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g87_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val l = s.sql("""
@@ -4945,7 +4920,6 @@ object SparkEntry {
     * over a SPHERICAL-stamped column must run through KnnTopKExec. Oracle =
     * closed-form haversine + the same window in DuckDB. */
   private def g88Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g88_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val l = s.sql("""
@@ -5022,7 +4996,6 @@ object SparkEntry {
     * rust/geoarrow-schema/src/metadata.rs:16); a dropped stamp or lost
     * point evidence would measure planar degrees and fail the hash. */
   private def g89Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val tmp = java.nio.file.Files.createTempDirectory("graft_g89").toString
     val pts = s.sql("""
       SELECT CAST(id AS BIGINT) AS fid,
@@ -5079,7 +5052,6 @@ object SparkEntry {
     * BNLJ fall-through both break the hash. The plan must contain the
     * spatial exec and no BroadcastNestedLoopJoin. */
   private def g90Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val vP = "graft_g90_p_" + tag
     val vQ = "graft_g90_q_" + tag
@@ -5166,7 +5138,6 @@ object SparkEntry {
     * membership + coordinates against a closed form. */
   private def s16Fn(s: SparkSession, dir: String): DataFrame = {
     runStream(s, "graft_s16") { (sess, tmp) =>
-      graft.functions.GeoFunctions.register(sess)
       val pts = sess.sql("""
         SELECT CAST(id AS BIGINT) AS fid,
                ST_Point(CAST(id % 10 AS DOUBLE), CAST(id % 3 AS DOUBLE)) AS geometry
@@ -5216,7 +5187,6 @@ object SparkEntry {
     * the aggregate pins both the index→value lookup and the geometry
     * coordinates against closed forms. */
   private def g86Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g86_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -5246,7 +5216,6 @@ object SparkEntry {
     * getObject→Spark conversion in one oracle. */
   private def g91Fn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g91_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -5393,7 +5362,6 @@ object SparkEntry {
     * (must be 1), and the header-declared feature count, so a regression
     * to per-partition files or a broken global index breaks the hash. */
   private def g85Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g85_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val out = base + "/dataset.fgb"
@@ -5432,7 +5400,6 @@ object SparkEntry {
     * segment) — no caller-side variant picking. The stamped edges string
     * rides as a literal so the metadata roundtrip itself gates the hash. */
   private def g83Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     import org.apache.spark.sql.functions.{col, lit, round}
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g83_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -5497,7 +5464,6 @@ object SparkEntry {
     * wrong-direction dispatch flips rows, not just scales them. The
     * explicit `edgeDistance` helper is pinned equal to the SQL column. */
   private def g84Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     import org.apache.spark.sql.functions.{col, lit, round}
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g84_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -5559,7 +5525,6 @@ object SparkEntry {
     * literal alongside both columns' coordinate data. Reference:
     * multi-entry `columns` map, rust/geoparquet/src/metadata.rs:30. */
   private def g49Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g49_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -5598,7 +5563,6 @@ object SparkEntry {
     * distributed feature serialization + single-stream document assembly;
     * the read path is Spark's multiLine JSON + features explode. */
   private def g50Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g50_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -5630,7 +5594,6 @@ object SparkEntry {
     * `Table::geometry_column` / python `geometry_col` accessor. */
   private def g48Fn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g48_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = s.sql("""
@@ -5755,7 +5718,6 @@ object SparkEntry {
     * materializes (batch group-by on the sink table). */
   private def s04Fn(s: SparkSession, dir: String): DataFrame = {
     runStream(s, "graft_s04") { (sess, tmp) =>
-      graft.functions.GeoFunctions.register(sess)
       val pts = sess.sql("""
         SELECT CAST(id AS BIGINT) AS point_id,
                timestamp_seconds(1700000000 + id) AS ts,
@@ -5805,7 +5767,6 @@ object SparkEntry {
     * holds one string each. Nothing accumulates on the driver. */
   private def s07Fn(s: SparkSession, dir: String): DataFrame = {
     runStream(s, "graft_s07") { (sess, tmp) =>
-      graft.functions.GeoFunctions.register(sess)
       val pts = sess.sql("""
         SELECT CAST(d AS BIGINT) AS device_id,
                timestamp_seconds(1700000000 + k * 60) AS ts,
@@ -7540,7 +7501,6 @@ object SparkEntry {
     * rust/geoparquet/src/reader/parse.rs infer_geoarrow_schema). Values
     * pinned closed-form; was spec-only before round 8. */
   private def g46Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g46_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = s.sql("""
@@ -7564,7 +7524,6 @@ object SparkEntry {
     * Header.has_z/has_m — sources/FlatGeobufWriter.scala:241-294) and back
     * through the source; all four ordinates pinned closed-form. */
   private def g47Fn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_g47_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = s.sql("""
@@ -8857,7 +8816,6 @@ object SparkEntry {
   private def e06Fn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     views(s, dir)
-    graft.functions.GeoFunctions.register(s)
     val p = s.sparkContext.defaultParallelism
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_e06_" + java.util.UUID.randomUUID().toString.take(8)).getPath
@@ -8921,7 +8879,6 @@ object SparkEntry {
   private def e16Fn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     views(s, dir)
-    graft.functions.GeoFunctions.register(s)
     val p = s.sparkContext.defaultParallelism
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_e16_" + java.util.UUID.randomUUID().toString.take(8)).getPath
@@ -10738,7 +10695,6 @@ object SparkEntry {
     * EVERY one of its band groups (arrival order is doc_id order). */
   private def s08Fn(s: SparkSession, dir: String): DataFrame = {
     val fin = runStream(s, "graft_s08") { (sess, tmp) =>
-      graft.functions.TextFunctions.register(sess)
       def gen(lo: Int, hi: Int) = sess.sql(s"""
         SELECT CAST(id AS BIGINT) AS doc_id,
                timestamp_seconds(1700000000 + id) AS ts,
@@ -14583,7 +14539,9 @@ object SparkEntry {
   )
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (name, fn, _) => name -> fn }.toMap
+    all.map { case (name, fn, _) =>
+      name -> ((s: SparkSession, dir: String) => fn(withSurface(s), dir))
+    }.toMap
 
   // empty oracle = non-SQL-expressible op → driver's weaker rows-only check
   def oracleSql: Map[String, String] =

@@ -1,6 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession, functions => F}
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
 import org.locationtech.jts.operation.union.UnaryUnionOp
 
@@ -208,49 +211,21 @@ object GeoAggregates {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Idempotent registration under `ST_Extent_Agg` / `ST_Union_Agg` /
-    * `ST_CoverageUnion_Agg`. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("st_extent_agg", F.udaf(ExtentAgg, Encoders.BINARY))
-    spark.udf.register("st_union_agg", F.udaf(UnionAgg, Encoders.BINARY))
-    spark.udf.register("st_coverageunion_agg", F.udaf(CoverageUnionAgg, Encoders.BINARY))
-    spark.udf.register("st_3dextent_agg", F.udaf(Extent3DAgg, Encoders.BINARY))
-  }
-
-  /** The aggregates as `injectFunction` descriptors (the
-    * [[graft.GraftExtensions]] path): the builder constructs the SAME
-    * [[org.apache.spark.sql.execution.aggregate.ScalaAggregator]]
-    * expression `spark.udf.register(F.udaf(...))` resolves to — built
-    * directly because the udaf's Column-level apply yields a ColumnNode
-    * that only a live session's converter can lower, which an
-    * injectFunction builder does not have. `agg` stays the SAME
+  /** `ST_Extent_Agg` / `ST_Union_Agg` / `ST_CoverageUnion_Agg` /
+    * `ST_3DExtent_Agg` builders for [[GeoFunctions.functionDescriptors]]:
+    * the same [[org.apache.spark.sql.execution.aggregate.ScalaAggregator]]
+    * that `F.udaf` builds, constructed directly because an injected builder
+    * has no live session to lower a udaf Column. The name makes the
+    * unaliased column `st_extent_agg(g)`, and `agg` stays the SAME
     * singleton, so [[graft.plans.NativePointFastPath]]'s and
-    * [[graft.plans.GeodesicExtentRule]]'s `eq`-based ExtentAgg matches
-    * fire identically on both wirings. */
-  private[graft] def functionDescriptors: Seq[(
-      org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
-    def desc[BUF](name: String,
-                  agg: org.apache.spark.sql.expressions.Aggregator[Array[Byte], BUF, _],
-                  bufEnc: Encoder[BUF]) =
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.GeoAggregates", name),
-        (args: Seq[Expression]) => new ScalaAggregator(
-          args, agg,
-          ExpressionEncoder(Encoders.BINARY.asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[Array[Byte]]]),
-          ExpressionEncoder(bufEnc.asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[BUF]]),
-          true, true, 0, 0, scala.None)
-          .toAggregateExpression(): Expression)
-    Seq(desc("st_extent_agg", ExtentAgg, Encoders.product[BBox]),
-        desc("st_union_agg", UnionAgg, Encoders.kryo[Seq[(Int, Array[Byte])]]),
-        desc("st_coverageunion_agg", CoverageUnionAgg,
-          Encoders.kryo[Seq[(Int, Array[Byte])]]),
-        desc("st_3dextent_agg", Extent3DAgg, Encoders.product[BBox3]))
+    * [[graft.plans.GeodesicExtentRule]]'s `eq`-based ExtentAgg matches fire. */
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = {
+    def builder[BUF, OUT](name: String, agg: Aggregator[Array[Byte], BUF, OUT]) =
+      name -> ((args: Seq[Expression]) => new ScalaAggregator(args, agg,
+        encoderFor(Encoders.BINARY), encoderFor(agg.bufferEncoder),
+        true, true, 0, 0, Some(name)): Expression)
+    Seq(builder("st_extent_agg", ExtentAgg), builder("st_union_agg", UnionAgg),
+      builder("st_coverageunion_agg", CoverageUnionAgg),
+      builder("st_3dextent_agg", Extent3DAgg))
   }
 }

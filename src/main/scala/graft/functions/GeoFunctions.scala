@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.{call_function, col}
 import org.apache.spark.sql.types._
@@ -725,32 +726,37 @@ object GeoFunctions extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** `injectFunction` descriptors for [[graft.GraftExtensions]] — the
-    * SAME builders `register` installs, exposed as extension injections.
-    * Resolution-time availability is the point: Spark 4 raises
-    * UNRESOLVED_ROUTINE during resolution, so a post-resolution
-    * registration hook can never serve a session's first query. */
-  private[graft] def functionDescriptors: Seq[(
-      org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+  /** graft's whole SQL surface, one `injectFunction` descriptor per name:
+    * the Geo scalars, the Geo aggregates, and the Text and Media functions.
+    * [[graft.GraftExtensions]] injects this list and [[register]] installs
+    * it, so both wirings hand Spark the SAME builder objects. Resolution
+    * time is the point of injection: Spark 4 raises UNRESOLVED_ROUTINE
+    * during resolution, so a post-resolution hook can never serve a
+    * session's first query. A `val`, not a `def`: [[register]] recognizes
+    * its own earlier install by builder identity. */
+  private[graft] val functionDescriptors: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    byName.toSeq.map { case (name, overloads) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.GeoFunctions", name),
-        (args: Seq[Expression]) => build(name, overloads)(args))
-    } ++ GeoAggregates.functionDescriptors
+    val geo = byName.toSeq.map { case (name, overloads) => name -> build(name, overloads) _ }
+    for {
+      (owner, builders) <- Seq(this -> geo, GeoAggregates -> GeoAggregates.builders,
+        TextFunctions -> TextFunctions.builders, MediaFunctions -> MediaFunctions.builders)
+      (name, builder) <- builders
+    } yield (FunctionIdentifier(name),
+      new ExpressionInfo(owner.getClass.getName.stripSuffix("$"), name), builder)
   }
 
-  /** Idempotent per-session registration of all ST_* SQL names, aggregates,
-    * and the spatial-join planner strategy. */
+  /** Installs graft's SQL surface ([[functionDescriptors]]), the
+    * spatial-join planner strategy and the optimizer rules on `spark`.
+    * Idempotent and cheap to repeat: a name already bound to graft's own
+    * builder is skipped, and any other binding — including the Spark
+    * builtins graft shadows (`st_asbinary`, `st_geomfromwkb`, `st_srid`,
+    * `st_setsrid`) — is replaced. */
   def register(spark: SparkSession): Unit = synchronized {
     val reg = spark.sessionState.functionRegistry
-    byName.foreach { case (name, overloads) =>
-      reg.createOrReplaceTempFunction(name, build(name, overloads), "scala_udf")
+    functionDescriptors.foreach { case (id, info, builder) =>
+      if (!reg.lookupFunctionBuilder(id).exists(_ eq builder))
+        reg.registerFunction(id, info, builder)
     }
-    GeoAggregates.register(spark)
     // auto-plan `JOIN … ON ST_pred(l, r)` as SpatialJoinExec (else Spark
     // falls back to BroadcastNestedLoopJoin, O(n·m))
     val exp = spark.experimental

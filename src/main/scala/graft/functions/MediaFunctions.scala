@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
@@ -12,7 +11,7 @@ object MediaFunctions {
 
   private val mediaOps = Class.forName("graft.core.MediaOps")
 
-  private case class Sig(method: String, ret: DataType, params: Seq[DataType],
+  private[graft] case class Sig(method: String, ret: DataType, params: Seq[DataType],
                          nullableRet: Boolean = false)
 
   /** struct emitted by the REAL decoder (javax.imageio). */
@@ -43,7 +42,7 @@ object MediaFunctions {
     StructField("sum_abs", LongType, nullable = false),
     StructField("sum_sq", LongType, nullable = false)))
 
-  private val sigs: Map[String, Sig] = Map(
+  private[graft] val sigs: Map[String, Sig] = Map(
     "mm_framelen" -> Sig("mediaFrameLen", IntegerType, Seq(BinaryType, IntegerType, IntegerType)),
     "mm_frame" -> Sig("mediaFrame", BinaryType, Seq(BinaryType, IntegerType, IntegerType)),
     "mm_framecount" -> Sig("mediaFrameCount", IntegerType, Seq(BinaryType)),
@@ -98,10 +97,7 @@ object MediaFunctions {
       propagateNull = true, returnNullable = sig.nullableRet)
   }
 
-  def register(spark: SparkSession): Unit = synchronized {
-    val reg = spark.sessionState.functionRegistry
-    sigs.foreach { case (name, sig) =>
-      reg.createOrReplaceTempFunction(name, build(name, sig), "scala_udf")
-    }
-  }
+  /** Builders for [[GeoFunctions.functionDescriptors]]. */
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] =
+    sigs.toSeq.map { case (name, sig) => name -> build(name, sig) _ }
 }

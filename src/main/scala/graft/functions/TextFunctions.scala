@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 
@@ -40,7 +40,7 @@ object TextFunctions {
   private val vecOps = Class.forName("graft.core.VecOps")
 
   /** name → (class, method, returnType, paramTypes) */
-  private val sigs: Seq[(String, (Class[_], String, DataType, Seq[DataType]))] = Seq(
+  private[graft] val sigs: Seq[(String, (Class[_], String, DataType, Seq[DataType]))] = Seq(
     // text kernels
     "graft_hash" -> ((textOps, "hash32", L, Seq(S))),
     "graft_tokens" -> ((textOps, "tokens", AS, Seq(S))),
@@ -82,36 +82,29 @@ object TextFunctions {
     "graft_l2" -> ((vecOps, "l2", D, Seq(AD, AD))),
   )
 
-  def register(spark: SparkSession): Unit = {
-    sigs.foreach { case (name, (cls, method, ret, params)) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
-        args => StaticInvoke(cls, ret, method,
-          args.zip(params).map { case (e, t) => Cast(e, t) }, Nil,
-          propagateNull = true, returnNullable = false),
-        "scala_udf")
-    }
-    // Bloom-filter surface: Spark's OWN runtime-filter expressions
-    // (BloomFilterAggregate / BloomFilterMightContain — the machinery
-    // behind spark.sql.optimizer.runtime.bloomFilter), exposed as SQL
-    // functions so a pipeline can build a filter over a SMALL key set
-    // (one binary blob, broadcast via scalar subquery) and prune a 100 TB
-    // scan MAP-SIDE before any shuffle. No false negatives, so an exact
-    // confirm join downstream makes results bloom-independent (t20).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("graft_bloom_agg",
-      args => (args match {
-        case Seq(c) => new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(Cast(c, L))
-        case Seq(c, n) => new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(Cast(c, L), Cast(n, L))
+  /** Builders for [[GeoFunctions.functionDescriptors]]. */
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] =
+    sigs.map { case (name, (cls, method, ret, params)) =>
+      name -> ((args: Seq[Expression]) => StaticInvoke(cls, ret, method,
+        args.zip(params).map { case (e, t) => Cast(e, t) }, Nil,
+        propagateNull = true, returnNullable = false): Expression)
+    } ++ Seq(
+      // Bloom-filter surface: Spark's OWN runtime-filter expressions
+      // (BloomFilterAggregate / BloomFilterMightContain — the machinery
+      // behind spark.sql.optimizer.runtime.bloomFilter), exposed as SQL
+      // functions so a pipeline can build a filter over a SMALL key set
+      // (one binary blob, broadcast via scalar subquery) and prune a 100 TB
+      // scan MAP-SIDE before any shuffle. No false negatives, so an exact
+      // confirm join downstream makes results bloom-independent (t20).
+      "graft_bloom_agg" -> ((args: Seq[Expression]) => (args match {
+        case Seq(c) => new BloomFilterAggregate(Cast(c, L))
+        case Seq(c, n) => new BloomFilterAggregate(Cast(c, L), Cast(n, L))
         case _ => throw new IllegalArgumentException(
           "graft_bloom_agg(hash[, estimatedItems]) expects 1 or 2 args")
-      }).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("graft_might_contain",
-      { case Seq(b, v) =>
-          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(b, Cast(v, L))
+      }).toAggregateExpression()),
+      "graft_might_contain" -> ((args: Seq[Expression]) => args match {
+        case Seq(b, v) => BloomFilterMightContain(b, Cast(v, L))
         case _ => throw new IllegalArgumentException(
-          "graft_might_contain(bloom, hash) expects 2 args") },
-      "scala_udf")
-  }
+          "graft_might_contain(bloom, hash) expects 2 args")
+      }))
 }

@@ -29,9 +29,10 @@ import org.apache.spark.sql.types.IntegerType
   * Remaining conjuncts become a `FilterExec` above the join.
   * `ST_DWithin(a, b, d)` is supported for foldable `d`.
   *
-  * Registered per-session by `GeoFunctions.register` through
+  * Registered once per session by `GeoFunctions.register`, together with
+  * the whole SQL surface (Geo, Text, Media, aggregates), through
   * `spark.experimental.extraStrategies` (no spark.sql.extensions config
-  * needed, works on a live session).
+  * needed, works on a live session); `GraftExtensions` injects it too.
   */
 object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
 

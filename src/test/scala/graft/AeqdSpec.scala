@@ -54,7 +54,6 @@ class AeqdSpec extends SparkTestBase {
   }
 
   test("SQL surface: ST_TransformAeqd(+Inv) roundtrip and range semantics") {
-    graft.functions.GeoFunctions.register(spark)
     val rows = spark.sql("""
       SELECT id,
              ST_TransformAeqd(ST_Point(2.0 + id * 0.1, 48.0 + id * 0.05), 2.35, 48.85) AS p
@@ -193,7 +192,6 @@ class AeqdSpec extends SparkTestBase {
   }
 
   test("ST_ProjectGeodesic / ST_AzimuthGeodesic: spheroid-exact forward/azimuth pair") {
-    graft.functions.GeoFunctions.register(spark)
     val r = spark.sql("""
       SELECT ST_AzimuthGeodesic(ST_Point(0.0, 0.0), ST_Point(10.0, 0.0)) AS east,
              ST_AzimuthGeodesic(ST_Point(5.0, 10.0), ST_Point(5.0, -5.0)) AS south,
@@ -278,7 +276,6 @@ class AeqdSpec extends SparkTestBase {
   }
 
   test("edges dispatch routes ST_Intersection on stamped columns to the geodesic overlay") {
-    graft.functions.GeoFunctions.register(spark)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "aeqd_ov_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     // two long chords crossing near 60N, stamped spherical
@@ -425,7 +422,6 @@ class AeqdSpec extends SparkTestBase {
   }
 
   test("SQL surface: ST_BufferGeodesic at both arities, monotone containment") {
-    graft.functions.GeoFunctions.register(spark)
     val r = spark.sql("""
       SELECT ST_NPoints(ST_BufferGeodesic(ST_Point(2.35, 48.85), 10000.0)) AS np8,
              ST_NPoints(ST_BufferGeodesic(ST_Point(2.35, 48.85), 10000.0, 24)) AS np24,

@@ -65,7 +65,6 @@ class CoverageFuzzSpec extends SparkTestBase {
   }
 
   test("fuzz: aggregate answers identically across partition counts") {
-    graft.functions.GeoAggregates.register(spark)
     import spark.implicits._
     val r = new Rng(0xC0FFEE02L)
     for (k <- 0 until 6) {
@@ -86,7 +85,6 @@ class CoverageFuzzSpec extends SparkTestBase {
   test("fuzz: reworked ST_Union_Agg matches the scalar union across partition counts") {
     // OVERLAPPING random boxes — exercises the binary-counter collapse
     // through real overlay merges, not just edge-dissolves
-    graft.functions.GeoAggregates.register(spark)
     import spark.implicits._
     val r = new Rng(0xC0FFEE05L)
     for (k <- 0 until 5) {

@@ -3,7 +3,6 @@ package graft
 import org.locationtech.jts.io.WKTReader
 
 import graft.core.GeomOps
-import graft.functions.GeoAggregates
 
 /** Round-20 coverage/median/wrap batch: the PostGIS 3.4 ST_Coverage*
   * family (edge-dissolve union, topology-preserving coverage simplify,
@@ -36,7 +35,6 @@ class CoverageOpsSpec extends SparkTestBase {
   }
 
   test("ST_CoverageUnion_Agg: partial merges across partitions are exact") {
-    GeoAggregates.register(spark)
     import spark.implicits._
     val nx = 16; val ny = 8
     val cells = for { i <- 0 until nx; j <- 0 until ny } yield
@@ -341,7 +339,6 @@ class CoverageOpsSpec extends SparkTestBase {
   }
 
   test("ST_3DExtent_Agg: XYZ bounds with the 2D zero-Z convention") {
-    graft.functions.GeoAggregates.register(spark)
     val r = sql("""
       SELECT ST_3DExtent_Agg(g) AS e FROM (
         SELECT ST_GeomFromText('POINT Z (1 2 -4)') AS g

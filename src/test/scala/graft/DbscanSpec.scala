@@ -96,7 +96,6 @@ class DbscanSpec extends SparkTestBase {
     // PostGIS ST_ClusterIntersecting semantics: overlap chains merge
     // transitively; touching (boundary-only contact) counts as
     // intersecting; disjoint geometries are singleton clusters
-    graft.functions.GeoFunctions.register(spark)
     val df = spark.sql("""
       SELECT * FROM VALUES
         (0L, ST_MakeEnvelope(0.0, 0.0, 2.0, 1.0)),

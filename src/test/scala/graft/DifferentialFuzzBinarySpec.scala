@@ -43,7 +43,6 @@ class DifferentialFuzzBinarySpec extends SparkTestBase {
     assert(expected.size == WktFuzzGen.N)
 
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     WktFuzzGen.all.zipWithIndex.map { case (w, i) => (i, w) }
       .toDF("id", "wkt").createOrReplaceTempView("fuzz_bin_wkts")
     val got = spark.sql(s"""

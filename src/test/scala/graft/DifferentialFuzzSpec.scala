@@ -40,7 +40,6 @@ class DifferentialFuzzSpec extends SparkTestBase {
     assert(expected.size == WktFuzzGen.N)
 
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     WktFuzzGen.all.zipWithIndex.map { case (w, i) => (i, w) }
       .toDF("id", "wkt").createOrReplaceTempView("fuzz_wkts")
     val got = spark.sql("""

@@ -26,7 +26,6 @@ class EditingParitySpec extends SparkTestBase {
   }
 
   test("ST_Segmentize is the planar max-length contract (densify alias)") {
-    graft.functions.GeoFunctions.register(spark)
     val r = spark.sql("""
       SELECT ST_NPoints(ST_Segmentize(ST_GeomFromText('LINESTRING (0 0, 10 0)'), 3.0)) AS np,
              ST_AsText(ST_Segmentize(ST_GeomFromText('LINESTRING (0 0, 10 0)'), 5.0)) AS w
@@ -102,7 +101,6 @@ class EditingParitySpec extends SparkTestBase {
     assert(GeomOps.dWithin3D(wkb("POINT Z (0 0 0)"), wkb("POINT Z (0 0 5)"), 5.0))
     assert(!GeomOps.dWithin3D(wkb("POINT Z (0 0 0)"), wkb("POINT Z (0 0 5)"), 4.9))
     // SQL surface
-    graft.functions.GeoFunctions.register(spark)
     val r = spark.sql("""
       SELECT ST_3DDistance(ST_GeomFromText('POINT Z(0 0 0)'), ST_GeomFromText('POINT Z(2 3 6)')) AS d,
              ST_3DLength(ST_GeomFromText('LINESTRING Z(0 0 0, 2 3 6)')) AS l""").head()

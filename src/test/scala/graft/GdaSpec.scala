@@ -80,7 +80,6 @@ class GdaSpec extends SparkTestBase {
   }
 
   test("SQL surface: ST_Transform wires the GDA family; MGA2020 − MGA94 ≈ the datum shift") {
-    graft.functions.GeoFunctions.register(spark)
     val r = spark.sql("""
       SELECT ST_X(ST_Transform(p, 4326, 28355)) AS e94,
              ST_Y(ST_Transform(p, 4326, 28355)) AS n94,

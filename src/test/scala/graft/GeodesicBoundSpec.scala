@@ -108,7 +108,6 @@ class GeodesicBoundSpec extends SparkTestBase {
   }
 
   test("SQL dispatch: ST_Envelope / ST_BBox / ST_Extent_Agg go geodesic on stamped columns") {
-    graft.functions.GeoFunctions.register(spark)
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "gbound_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val df = spark.sql(
@@ -147,7 +146,6 @@ class GeodesicBoundSpec extends SparkTestBase {
     // [-1, 66]×[1, 68] is crossed by the ARC but disjoint from the CHORD
     // bbox (lat 50). The stamped write pads the covering to the vertex and
     // the stamped read traces the arc, so the row survives end to end.
-    graft.functions.GeoFunctions.register(spark)
     import graft.sources.GeoParquet
     def tmp(tag: String) = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"garc_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -201,7 +199,6 @@ class GeodesicBoundSpec extends SparkTestBase {
     // read must widen the latitude window away (lon-only prune + arc
     // refine), and ST_Extent_Agg must take the GeodesicExtentRule wrap
     // rather than NativePointFastPath's planar leaf-stats rewrite.
-    graft.functions.GeoFunctions.register(spark)
     import graft.sources.GeoParquet
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "gnative_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -232,7 +229,6 @@ class GeodesicBoundSpec extends SparkTestBase {
     // row set replicates the refine semantics EXACTLY (segmentized arc ∩
     // window via the same kernels), so any divergence is a pruning loss
     // (the g124 bug class) or an over-return
-    graft.functions.GeoFunctions.register(spark)
     import graft.sources.GeoParquet
     import graft.core.{Geodesy, GeomOps}
     val rnd = new scala.util.Random(23)
@@ -307,7 +303,6 @@ class GeodesicBoundSpec extends SparkTestBase {
   }
 
   test("antimeridian: stamped bbox reads keep seam-crossing rows, drop mid-world") {
-    graft.functions.GeoFunctions.register(spark)
     import graft.sources.GeoParquet
     def tmp(tag: String) = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"gseam_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -347,7 +342,6 @@ class GeodesicBoundSpec extends SparkTestBase {
     // the planar kernel answers exactly. Non-point stamped columns keep
     // the planar predicate (warned at build; divergence shared with the
     // reference, which has no geodesic predicate kernel either).
-    graft.functions.GeoFunctions.register(spark)
     import graft.sources.GeoParquet
     def tmp(tag: String) = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"gpred_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath

@@ -110,7 +110,6 @@ class HttpFsSpec extends SparkTestBase {
   }
 
   test("GeoParquet over http: footer + bbox read through range requests") {
-    graft.functions.GeoFunctions.register(spark)
     import graft.sources.GeoParquet
     // build a small covering-indexed GeoParquet file, then serve it
     val gdir = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -166,7 +165,6 @@ class HttpFsSpec extends SparkTestBase {
   }
 
   test("Shapefile over http: sibling probes (.dbf/.shx/.prj) and ranged decode") {
-    graft.functions.GeoFunctions.register(spark)
     // write a small shapefile set locally, then serve the whole directory
     val sdir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "httpshp_" + java.util.UUID.randomUUID().toString.take(8))

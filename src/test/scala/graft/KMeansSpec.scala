@@ -32,7 +32,6 @@ class KMeansSpec extends SparkTestBase {
   }
 
   test("null and EMPTY geometries get null cluster; centroid used for non-points") {
-    graft.functions.GeoFunctions.register(spark)
     val df = spark.sql("""
       SELECT * FROM VALUES
         (0L, ST_Point(0.0, 0.0)),

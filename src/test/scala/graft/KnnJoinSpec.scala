@@ -9,7 +9,6 @@ class KnnJoinSpec extends SparkTestBase {
   import spark.implicits._
 
   private def pts(rows: Seq[(Long, Double, Double)], id: String, g: String) = {
-    graft.functions.GeoFunctions.register(spark)
     rows.toDF(id, "__x", "__y")
       .withColumn(g, call_function("st_point", col("__x"), col("__y")))
       .drop("__x", "__y")
@@ -288,7 +287,6 @@ class KnnJoinSpec extends SparkTestBase {
                 (4L, "b", 5.0, 5.0))
     val r = Seq((10L, 1.0, 0.0), (11L, 0.0, 2.0), (12L, 9.0, 1.0),
       (13L, 4.0, 4.0), (14L, 30.0, 30.0))
-    graft.functions.GeoFunctions.register(spark)
     l.toDF("lid", "cat", "__x", "__y")
       .withColumn("lg", call_function("st_point", col("__x"), col("__y")))
       .drop("__x", "__y").createOrReplaceTempView("knn_gl")
@@ -392,7 +390,6 @@ class KnnJoinSpec extends SparkTestBase {
     // duplicates so the group's rank-k boundary is a tie class spanning
     // BOTH left rows (each left is at distance 1 from the duplicated
     // coordinate pair nearest it — symmetric by construction)
-    graft.functions.GeoFunctions.register(spark)
     import spark.implicits._
     Seq((1L, "a", 0.0, 0.0), (2L, "a", 10.0, 0.0))
       .toDF("lid", "cat", "__x", "__y")
@@ -987,7 +984,6 @@ class KnnJoinSpec extends SparkTestBase {
     // the cell bounds are box facts over member ENVELOPES; polygons and
     // multi-cell-spanning boxes are where lo/hi could go wrong — fuzz a
     // mixed corpus against brute-force JTS distance across seeds
-    graft.functions.GeoFunctions.register(spark)
     (1 to 3).foreach { seed =>
       val rnd = new scala.util.Random(7000L + seed)
       def boxRow(i: Long) = {
@@ -1122,7 +1118,6 @@ class KnnJoinSpec extends SparkTestBase {
     // resolution with cells far smaller than the boxes, maximizing
     // multi-cell co-occurrence; brute force over envelope distance is the
     // ground truth in BOTH modes.
-    graft.functions.GeoFunctions.register(spark)
     def boxes(rows: Seq[(Long, Double, Double, Double)], id: String, g: String) =
       rows.toDF(id, "__x", "__y", "__s")
         .withColumn(g, call_function("st_makeenvelope",
@@ -1180,7 +1175,6 @@ class KnnJoinSpec extends SparkTestBase {
     // inferior same-side neighbors. Ground truth is the operator's own
     // kernel (first-vertex haversine — distanceSphere's documented
     // semantics for non-points) ranked brute-force driver-side.
-    graft.functions.GeoFunctions.register(spark)
     def boxes(rows: Seq[(Long, Double, Double, Double, Double)], id: String, g: String) =
       rows.toDF(id, "__x0", "__y0", "__x1", "__y1")
         .withColumn(g, call_function("st_makeenvelope",

@@ -303,7 +303,6 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("SQL surface: graft_media_decode struct on a real PNG") {
-    graft.functions.MediaFunctions.register(spark)
     val png = grayPng(3, 2, Array[Byte](10, 20, 30, 40, 50, 60))
     val df = spark.createDataFrame(Seq((1L, png))).toDF("id", "payload")
     df.createOrReplaceTempView("mm_real")
@@ -329,7 +328,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(sumAbs == 845 + 844 + 841 + 836)
     assert(sumSq == 845L * 845 + 844L * 844 + 841L * 841 + 836L * 836)
     // SQL surface: the statics are registered and compose
-    graft.functions.MediaFunctions.register(spark)
     val r = sql("""SELECT graft_audio_meta(graft_audio_wav(5)).frames AS f,
                           graft_audio_stats(graft_audio_wav(5)).n_samples AS n""").head()
     assert(r.getLong(0) == 256L && r.getLong(1) == 256L)
@@ -349,7 +347,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(ws.map(_._4).sum == sumAbs)
     assert(ws.map(_._5).sum == sumSq)
     // SQL surface explodes to one row per window
-    graft.functions.MediaFunctions.register(spark)
     val r = sql("""SELECT w.win_idx, w.n_samples
                    FROM (SELECT explode(graft_audio_windows(graft_audio_wav(5), 100)) AS w)""")
       .collect().map(x => (x.getInt(0), x.getLong(1)))
@@ -382,7 +379,6 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("imageFeatures pipeline: schema, null payload, value spot-check") {
-    graft.functions.MediaFunctions.register(spark)
     val df = spark.sql(
       "SELECT id, CASE WHEN id = 3 THEN CAST(NULL AS BINARY) ELSE graft_media_png(id) END AS payload FROM range(5)")
     val out = Multimodal.imageFeatures(df, "payload", targetW = 2, targetH = 2, bins = 4)

@@ -288,7 +288,6 @@ class NativeNestedFastPathSpec extends SparkTestBase {
   private def nativeTable(kind: String): String = {
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"nnfp_${kind}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
-    graft.functions.GeoFunctions.register(spark)
     import spark.implicits._
     val df = corpusFor(kind).zipWithIndex
       .map { case (w, i) => (i.toLong, w) }.toDF("fid", "wkt")
@@ -404,7 +403,6 @@ class NativeNestedFastPathSpec extends SparkTestBase {
   test("edges-stamped native linestring: ST_Length dispatches AND drops the transcode") {
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "nnfp_edges_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
-    graft.functions.GeoFunctions.register(spark)
     import spark.implicits._
     val df = WktFuzzGen.all.filter(_.startsWith("LINESTRING")).take(60).zipWithIndex
       .map { case (w, i) => (i.toLong, w) }.toDF("fid", "wkt")
@@ -465,7 +463,6 @@ class NativeNestedFastPathSpec extends SparkTestBase {
   test("edges-stamped native polygon: ST_Area/ST_Perimeter dispatch transcode-free") {
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "nnfp_edgespg_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
-    graft.functions.GeoFunctions.register(spark)
     import spark.implicits._
     val df = WktFuzzGen.all.filter(_.startsWith("POLYGON")).take(60).zipWithIndex
       .map { case (w, i) => (i.toLong, w) }.toDF("fid", "wkt")
@@ -498,7 +495,6 @@ class NativeNestedFastPathSpec extends SparkTestBase {
     // Min/Max would silently drop it — the rewrite carries a poison flag
     // per ordinate (round-19 review finding). EMPTY points (both-NaN)
     // still skip; a single-NaN ordinate poisons exactly that ordinate.
-    graft.functions.GeoFunctions.register(spark)
     val ptDir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "nnfp_nan_pt_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = spark.sql("""

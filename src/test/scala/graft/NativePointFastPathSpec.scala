@@ -14,7 +14,6 @@ class NativePointFastPathSpec extends SparkTestBase {
   private lazy val nativeDir = {
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "npfp_native_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
-    graft.functions.GeoFunctions.register(spark)
     val df = spark.sql("""
       SELECT CAST(id AS BIGINT) AS fid,
              CASE WHEN id = 7 THEN ST_GeomFromText('POINT EMPTY')
@@ -172,7 +171,6 @@ class NativePointFastPathSpec extends SparkTestBase {
   }
 
   test("the WKB path is untouched when geometry is genuinely WKB") {
-    graft.functions.GeoFunctions.register(spark)
     val q = spark.sql(
       "SELECT SUM(ST_X(ST_Point(CAST(id AS DOUBLE), 1.0))) AS sx FROM range(50)")
     assert(math.abs(q.head().getDouble(0) - (0 until 50).sum.toDouble) < 1e-9)

@@ -8,10 +8,7 @@ package graft
   * must roundtrip. */
 class ParamProjectionSpec extends SparkTestBase {
 
-  private def ready(): Unit = graft.functions.GeoFunctions.register(spark)
-
   test("custom TM with UTM-32N parameters == ST_Transform(…, 32632); inverse roundtrips") {
-    ready()
     val rows = sql("""
       SELECT ST_AsText(ST_TransformTM(p, 6378137.0D, 298.257223563D, 0.9996D,
                                       9.0D, 0.0D, 500000.0D, 0.0D)) AS custom,
@@ -34,7 +31,6 @@ class ParamProjectionSpec extends SparkTestBase {
   }
 
   test("custom LAEA with EPSG:3035 parameters == ST_Transform(…, 3035)") {
-    ready()
     val rows = sql("""
       SELECT ST_AsText(ST_TransformLAEA(p, 6378137.0D, 298.257222101D,
                                         52.0D, 10.0D, 4321000.0D, 3210000.0D)) AS custom,
@@ -45,7 +41,6 @@ class ParamProjectionSpec extends SparkTestBase {
   }
 
   test("custom Albers/LCC with EPSG:5070 / EPSG:2154 parameters match; inverses roundtrip") {
-    ready()
     val alb = sql("""
       SELECT ST_AsText(ST_TransformAlbers(p, 6378137.0D, 298.257222101D,
                29.5D, 45.5D, 23.0D, -96.0D, 0.0D, 0.0D)) AS custom,
@@ -69,7 +64,6 @@ class ParamProjectionSpec extends SparkTestBase {
   }
 
   test("a genuinely custom grid (non-EPSG params) projects, inverts, and rejects bad input") {
-    ready()
     // a made-up regional TM on a made-up ellipsoid
     val r = sql("""
       SELECT ST_AsText(g) AS fwd, ST_AsText(ST_TransformTMInv(g,

@@ -97,7 +97,6 @@ class PipelinePlanSpec extends SparkTestBase {
     val toks = (0 until 2000).map(i => s"tail_$i") ++
       Seq.fill(300)("heavy_a") ++ Seq.fill(300)("heavy_b")
     toks.toDF("tok").createOrReplaceTempView("t25spec_tok")
-    graft.functions.TextFunctions.register(spark)
     val cand = spark.sql("""
       SELECT tok FROM t25spec_tok
       WHERE graft_cms_estimate(

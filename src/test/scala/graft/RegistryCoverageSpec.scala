@@ -54,27 +54,47 @@ class RegistryCoverageSpec extends SparkTestBase {
   private def rootCauses(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(12).toSeq
 
+  /** Every SQL signature graft defines: the Geo scalars, the Text and
+    * Media functions, and the aggregates and bloom functions, which have
+    * no signature table of their own. */
+  private val allSignatures: Seq[(String, Seq[DataType])] =
+    GeoFunctions.kernelMatrix.map { case (name, _, _, params, _) => name -> params } ++
+      graft.functions.TextFunctions.sigs.map { case (name, (_, _, _, params)) => name -> params } ++
+      graft.functions.MediaFunctions.sigs.toSeq.map { case (name, sig) => name -> sig.params } ++
+      Seq("st_extent_agg", "st_union_agg", "st_coverageunion_agg", "st_3dextent_agg")
+        .map(_ -> Seq(BinaryType)) ++
+      // graft_bloom_agg's optional size argument must be a non-null
+      // constant (Spark's BloomFilterAggregate), so only its one-argument
+      // form takes the null gate
+      Seq("graft_bloom_agg" -> Seq(LongType), "graft_might_contain" -> Seq(BinaryType, LongType))
+
   test("resolution + null contract: every signature analyzes and nulls out") {
-    GeoFunctions.register(spark)
-    var checked = 0
-    GeoFunctions.kernelMatrix.foreach { case (name, _, _, params, _) =>
-      val nullArgs = params.map(dt => lit(null).cast(dt))
-      val df = spark.range(1).select(call_function(name, nullArgs: _*).as("v"))
-      // analysis happens here; an unresolvable signature throws AnalysisException
-      val row =
-        try df.head()
-        catch {
-          case e: Throwable => fail(s"$name/${params.length}: null-input call " +
-            s"failed (${e.getClass.getSimpleName}: ${e.getMessage})")
+    assert(allSignatures.map(_._1).toSet ==
+      GeoFunctions.functionDescriptors.map(_._1.funcName).toSet,
+      "a descriptor without a signature here escapes the gate")
+    // the registered session, and one holding only the descriptors
+    // GraftExtensions injects (the zero-code path)
+    Seq("registered" -> spark, "injected" -> GraftExtensionsSpec.injectedSession(spark))
+      .foreach { case (wiring, s) =>
+        var checked = 0
+        allSignatures.foreach { case (name, params) =>
+          val nullArgs = params.map(dt => lit(null).cast(dt))
+          val df = s.range(1).select(call_function(name, nullArgs: _*).as("v"))
+          // analysis happens here; an unresolvable signature throws AnalysisException
+          val row =
+            try df.head()
+            catch {
+              case e: Throwable => fail(s"$wiring: $name/${params.length}: null-input call " +
+                s"failed (${e.getClass.getSimpleName}: ${e.getMessage})")
+            }
+          assert(row.isNullAt(0), s"$wiring: $name/${params.length}: null inputs must answer null")
+          checked += 1
         }
-      assert(row.isNullAt(0), s"$name/${params.length}: null inputs must answer null")
-      checked += 1
-    }
-    assert(checked >= 230, s"registry shrank? $checked signatures")
+        assert(checked >= 290, s"$wiring: registry shrank? $checked signatures")
+      }
   }
 
   test("execution: geometry signatures run on at least one candidate shape") {
-    GeoFunctions.register(spark)
     var geomSigs = 0
     GeoFunctions.kernelMatrix.foreach { case (name, _, _, params, _) =>
       if (params.contains(BinaryType)) {

@@ -12,7 +12,6 @@ import graft.sources.GeoParquet
 class RowWindowSpec extends SparkTestBase {
 
   private lazy val (dir, perFile) = {
-    graft.functions.GeoFunctions.register(spark)
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "rowwin_" + java.util.UUID.randomUUID().toString.take(8))
     base.mkdirs()

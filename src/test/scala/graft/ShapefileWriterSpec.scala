@@ -21,7 +21,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("point roundtrip with typed properties, nulls, and adaptive dbf sizing") {
-    graft.functions.GeoFunctions.register(spark)
     val out = tmp("pts")
     val df = spark.sql("""
       SELECT CAST(id AS INT) AS small_i,
@@ -53,7 +52,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("all four families roundtrip, polygons with holes re-oriented to spec") {
-    graft.functions.GeoFunctions.register(spark)
     val shapes = Seq(
       ("pt", "POINT (3 4)"),
       ("mpt", "MULTIPOINT ((1 1), (2 3), (2 3))"),
@@ -77,7 +75,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("XYZ / XYM / XYZM roundtrip through the per-record bands") {
-    graft.functions.GeoFunctions.register(spark)
     for ((tag, wkt) <- Seq(
         ("z", "LINESTRING Z(0 0 5, 1 1 6, 2 0 7)"),
         ("m", "LINESTRING M(0 0 9, 1 1 8)"),
@@ -94,7 +91,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("NULL geometry writes a null shape; EMPTY and mixed families are refused") {
-    graft.functions.GeoFunctions.register(spark)
     val out = tmp("nulls")
     spark.sql("""
       SELECT id, CASE WHEN id = 1 THEN NULL
@@ -124,7 +120,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("writer-produced files read through the .shx split path identically") {
-    graft.functions.GeoFunctions.register(spark)
     val out = tmp("split")
     val n = 5000
     spark.sql(s"""
@@ -150,7 +145,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test(".dbf refuses record sizes beyond the 16-bit header slot (round-18 review)") {
-    graft.functions.GeoFunctions.register(spark)
     // 260 C(254) columns -> recordSize ~66k > 0xFFFF: must refuse loudly,
     // not wrap the short and corrupt every reader's offsets
     val wide = (0 until 260).map(i => s"c$i").toArray
@@ -171,7 +165,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("long field names launder to 10 chars with dedup suffixes (the ogr2ogr convention)") {
-    graft.functions.GeoFunctions.register(spark)
     val out = tmp("launder")
     // two names that COLLIDE after a plain 10-char truncation
     spark.sql("""
@@ -190,7 +183,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test(".prj writes verbatim and the reader stamps the CRS") {
-    graft.functions.GeoFunctions.register(spark)
     val out = tmp("prj")
     val wkt = """GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",6378137,298.257223563]],PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433],AUTHORITY["EPSG","4326"]]"""
     spark.sql("SELECT id, ST_Point(CAST(id AS DOUBLE), 1.0) AS geometry FROM range(3)")
@@ -201,7 +193,6 @@ class ShapefileWriterSpec extends SparkTestBase {
   }
 
   test("full fuzz corpus roundtrips per kind (normalized: ring orientation is the spec's)") {
-    graft.functions.GeoFunctions.register(spark)
     val corpus = WktFuzzGen.all.zipWithIndex.map { case (w, i) => (i.toLong, i % 6, w) }
       .toDF("id", "kind", "wkt")
       .selectExpr("id", "kind", "ST_GeomFromText(wkt) AS geometry")

@@ -26,7 +26,6 @@ class SinkRoundtripFuzzSpec extends SparkTestBase {
       s"sink_fuzz_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
 
   private lazy val corpus: DataFrame = {
-    graft.functions.GeoFunctions.register(spark)
     WktFuzzGen.all.zipWithIndex.map { case (w, i) => (i.toLong, i % 6, w) }
       .toDF("id", "kind", "wkt")
       .selectExpr("id", "kind", "ST_GeomFromText(wkt) AS geometry")
@@ -37,7 +36,6 @@ class SinkRoundtripFuzzSpec extends SparkTestBase {
     * ordinate so a sink that drops or reorders the extra dimension
     * mismatches loudly */
   private def dimCorpus(m: Boolean): DataFrame = {
-    graft.functions.GeoFunctions.register(spark)
     import org.locationtech.jts.geom.{Coordinate, CoordinateXYM, Geometry}
     val rows = WktFuzzGen.all.zipWithIndex.map { case (w, i) =>
       val g = graft.core.GeomOps.read(graft.core.GeomOps.geomFromText(

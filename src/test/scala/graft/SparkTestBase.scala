@@ -27,6 +27,7 @@ object SparkTestBase {
     // only masks genuine warnings. Test config only.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // the whole SQL surface, once: specs never re-register this session
     graft.functions.GeoFunctions.register(s)
     s
   }

@@ -51,7 +51,6 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("SQL surface registered (graft_fingerprints)") {
-    graft.functions.TextFunctions.register(spark)
     val n = sql("SELECT size(graft_fingerprints('abcdefghijklmnop', 8, 4)) AS n").head().getInt(0)
     assert(n >= 1)
   }
@@ -137,7 +136,6 @@ class TextOpsSpec extends SparkTestBase {
     assert(toks("") === Nil)
     assert(TextOps.bpeCount(UTF8String.fromString("it's 3.14, ok!")) == 8)
     // registered SQL surface matches the static
-    graft.functions.TextFunctions.register(spark)
     val r = sql("""SELECT graft_bpe_count("it's 3.14, ok!") AS n,
                           graft_bpe_tokens('a  b') AS t""").head()
     assert(r.getInt(0) == 8 && r.getSeq[String](1).toList === List("a", "  ", "b"))
@@ -163,7 +161,6 @@ class TextOpsSpec extends SparkTestBase {
     assert(spellings.distinct.length == 3)
     assert(spellings.map(s => nfc(strip(s))).distinct == Seq(composed))
     // SQL surface
-    graft.functions.TextFunctions.register(spark)
     val r = sql("SELECT graft_nfc(graft_strip_invisible('caf​é')) AS n").head()
     assert(r.getString(0) == composed)
     // NFKC folds compatibility forms NFC leaves alone
@@ -174,7 +171,6 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("SQL surface registered (repetition + pii kernels)") {
-    graft.functions.TextFunctions.register(spark)
     val r = sql("""SELECT graft_top_ngram_frac('a b a b a', 2) AS t,
                           graft_dup_ngram_frac('a b a b a', 2) AS d,
                           graft_pii_emails('x@y.io') AS e,

@@ -119,7 +119,6 @@ class VecOpsSpec extends SparkTestBase {
   }
 
   test("SQL surface: graft_bucketk registered and matches the static") {
-    graft.functions.TextFunctions.register(spark)
     val r = sql(
       """SELECT graft_bucketk(array(1.0D, -2.0D, 3.0D), 8, 7) AS b,
                 graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d""").head()
