@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Text-analysis / dedup / vector primitives for large-scale training-data
@@ -98,7 +99,13 @@ object TextFunctions {
       // confirm join downstream makes results bloom-independent (t20).
       "graft_bloom_agg" -> ((args: Seq[Expression]) => (args match {
         case Seq(c) => new BloomFilterAggregate(Cast(c, L))
-        case Seq(c, n) => new BloomFilterAggregate(Cast(c, L), Cast(n, L))
+        case Seq(c, n) =>
+          // Spark's aggregate reads its size while the query is analyzed
+          // and fails with an internal NPE on a null or non-constant one
+          val size = Cast(n, L, Option(SQLConf.get.sessionLocalTimeZone))
+          if (!size.foldable || size.eval() == null) throw new IllegalArgumentException(
+            "graft_bloom_agg(hash, estimatedItems): estimatedItems must be a non-null constant")
+          new BloomFilterAggregate(Cast(c, L), size)
         case _ => throw new IllegalArgumentException(
           "graft_bloom_agg(hash[, estimatedItems]) expects 1 or 2 args")
       }).toAggregateExpression()),

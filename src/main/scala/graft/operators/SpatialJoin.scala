@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Spatial join strategies.
@@ -302,18 +302,14 @@ object SpatialJoin {
           // bound the broadcast's KEY count, not just the row count
           // (round-21 review fix): wide multi-cell left envelopes at a
           // small round radius could otherwise blow the distinct-cells
-          // broadcast past driver memory. One narrow aggregate over the
-          // (small) unresolved side sums each row's covering-cell count —
-          // an upper bound on the distinct keys; past
+          // broadcast past driver memory. Past
           // `graft.knn.cellPrefilterMaxKeys` the round keeps the plain
           // unfiltered shuffle (slower, never wrong, never OOM).
           val maxKeys = conf.get("graft.knn.cellPrefilterMaxKeys", "2000000").toLong
           val ly0 = floor((col("__lb.ymin") - csy) / csy).cast("long")
           val ly1 = floor((col("__lb.ymax") + csy) / csy).cast("long")
-          val boundRow = lhs.withColumn("__lb", call_function("st_bbox", col(leftGeomCol)))
-            .agg(sum((lx1 - lx0 + 1) * (ly1 - ly0 + 1))).first()
-          val keyBound = if (boundRow.isNullAt(0)) Long.MaxValue else boundRow.getLong(0)
-          if (keyBound <= maxKeys) {
+          if (cellKeysWithin(lhs.withColumn("__lb", call_function("st_bbox", col(leftGeomCol))),
+                lx0, lx1, ly0, ly1, maxKeys)) {
             cellPrefilterCount.increment()
             val cells = l.select(col("__cx").as("__pcx"), col("__cy").as("__pcy")).distinct()
             rr0.join(org.apache.spark.sql.functions.broadcast(cells),
@@ -611,6 +607,20 @@ object SpatialJoin {
   /** Spec probe: number of rounds that engaged the shrinking-remainder
     * cell pre-filter (round 21, behind graft.knn.cellPrefilterMinRight). */
   private[graft] val cellPrefilterCount = new java.util.concurrent.atomic.LongAdder
+
+  /** Whether the rows' covering-cell counts, (x1 − x0 + 1)·(y1 − y0 + 1)
+    * each, sum to at most `maxKeys`: an upper bound on the distinct keys
+    * the cell pre-filter would broadcast. The counts are computed in
+    * doubles and capped at maxKeys + 1 per row before the sum, so a range,
+    * product or sum past the long range reads as "too many" (skip the
+    * pre-filter) instead of an ANSI overflow error or a wrapped small
+    * count. No rows, or only null envelopes, also read as "too many". */
+  private[graft] def cellKeysWithin(rows: DataFrame, x0: Column, x1: Column, y0: Column,
+                                    y1: Column, maxKeys: Long): Boolean = {
+    def cells(lo: Column, hi: Column) = hi.cast("double") - lo.cast("double") + 1
+    val b = rows.agg(sum(least(cells(x0, x1) * cells(y0, y1), lit(maxKeys + 1.0)))).first()
+    !b.isNullAt(0) && b.getDouble(0) <= maxKeys
+  }
 
   /** Farthest-k join (round 19 — the last warned-not-planned window
     * shape): per left row, the k rows of `right` with the LARGEST planar

@@ -107,7 +107,7 @@ object GeoJsonSource {
                              geometryColumn: String = "geometry"): Unit = {
     val staging = path + "_fc_staging_" + java.util.UUID.randomUUID().toString.take(8)
     writeLines(df, staging, geometryColumn)
-    val serConf = new GeoParquet.SerializableHadoopConf(
+    val serConf = new org.apache.spark.util.SerializableConfiguration(
       df.sparkSession.sessionState.newHadoopConf())
     df.sparkSession.sparkContext.parallelize(Seq(path -> staging), 1).foreach {
       case (targetStr, stagingStr) =>

@@ -6,11 +6,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{GraftSchemas, MetadataBuilder, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** GeoParquet 1.1 source/sink on top of Spark's native parquet scan.
   *
@@ -109,25 +113,41 @@ object GeoParquet {
     *  - per-file bbox: unioned into dataset bounds; None unless every file
     *    declares one.
     */
-  def metadata(spark: SparkSession, path: String): Option[GeoMeta] = {
+  def metadata(spark: SparkSession, path: String): Option[GeoMeta] = footers(spark, path).meta
+
+  /** One listing of `path` and one footer read per part-file: the sorted
+    * part-files, their row counts, their distinct Spark schemas (under the
+    * `schemaConf` parquet settings; the first, or all merged as Spark
+    * merges them under `mergeSchema`) and the reconciled `geo` metadata. */
+  private case class Footers(root: Path, files: Seq[FileStatus], rows: Seq[Long],
+                             schemas: Seq[StructType], meta: Option[GeoMeta],
+                             schemaConf: Map[String, String]) {
+    def schema(conf: SQLConf): StructType =
+      if (conf.isParquetSchemaMergingEnabled)
+        schemas.reduce(GraftSchemas.merge(_, _, conf.caseSensitiveAnalysis))
+      else schemas.head
+  }
+
+  private def footers(spark: SparkSession, path: String): Footers = {
     installHttpIfUrl(spark, path)
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val stats =
-      if (fs.getFileStatus(p).isDirectory) listPartFiles(fs, p)
-      else Seq(fs.getFileStatus(p))
+    val top = fs.getFileStatus(p)
+    val stats = if (top.isDirectory) listPartFiles(fs, p) else Seq(top)
     // dataset-level metadata cache (the reference's GeoParquetDataset holds
     // per-fragment metadata once, python/geoarrow-io/.../_parquet.pyi:31-258;
     // here repeated read()/metadata() calls over the same 100 TB dataset
     // must not re-read thousands of footers). Validity = the directory
     // LISTING signature (path, length, mtime per part-file) — one listing
     // RPC replaces N ranged footer reads; any append/overwrite/delete
-    // changes the signature and recomputes.
-    val key = fs.makeQualified(p).toString
-    val sig = stats.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-    val hit = metaCache.get(key)
-    if (hit != null && hit.signature == sig) return hit.meta
+    // changes the signature and recomputes, as do other parquet settings.
+    val root = fs.makeQualified(p)
+    def sig(sts: Seq[FileStatus]) = sts.map(st => (st.getPath, st.getLen, st.getModificationTime))
+    val schemaConf = spark.conf.getAll.filter { case (k, _) => k.startsWith("spark.sql.parquet.") ||
+      k.startsWith("spark.sql.legacy.parquet.") || k == SQLConf.CASE_SENSITIVE.key }
+    val hit = metaCache.get(root.toString)
+    if (hit != null && sig(hit.files) == sig(stats) && hit.schemaConf == schemaConf) return hit
     val files = stats.map(_.getPath)
     val perFile = footerKVs(spark, conf, files, "geo")
     // labels are root-relative so partitioned layouts (k=v/part-000…) stay
@@ -137,18 +157,16 @@ object GeoParquet {
       val rel = f.toString.stripPrefix(rootStr).stripPrefix("/")
       if (rel.isEmpty) f.getName else rel
     }
-    val result = reconcile(labels.zip(perFile).map {
-      case (l, (kv, rows)) => (l, kv.map(parseGeoJson), rows)
+    val meta = reconcile(labels.zip(perFile).map {
+      case (l, pf) => (l, pf.geo.map(parseGeoJson), pf.rows)
     })
+    val result = Footers(root, stats, perFile.map(_.rows), perFile.map(_.schema).distinct, meta, schemaConf)
     if (metaCache.size > 1024) metaCache.clear() // bound the driver map
-    metaCache.put(key, MetaCacheEntry(sig, result))
+    metaCache.put(root.toString, result)
     result
   }
 
-  private case class MetaCacheEntry(signature: Seq[(String, Long, Long)],
-                                    meta: Option[GeoMeta])
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MetaCacheEntry]()
+  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Footers]()
 
   /** Drop cached dataset metadata — all of it, or one dataset's. Normal
     * invalidation is automatic (listing signature); this is the escape
@@ -161,11 +179,7 @@ object GeoParquet {
       // SEGMENT boundary ("…/data" matches, "…/mydata" must not: a bare
       // suffix match would over-evict unrelated datasets)
       val suffix = "/" + p.stripPrefix("/")
-      val it = metaCache.keys()
-      while (it.hasMoreElements) {
-        val k = it.nextElement()
-        if (k == p || k.stripSuffix("/").endsWith(suffix)) metaCache.remove(k)
-      }
+      metaCache.keySet.removeIf(k => k == p || k.stripSuffix("/").endsWith(suffix))
   }
 
   /** All data part-files under `root`, recursively — a `partitionBy` layout
@@ -190,50 +204,74 @@ object GeoParquet {
     out.sortBy(_.getPath.toString).toSeq
   }
 
-  /** One footer KV read per file. Small datasets use a bounded driver-side
-    * pool (footer reads are tiny ranged IO); past 64 part-files the reads
-    * run as a Spark job so a 100 TB dataset's thousands of footers scale
-    * out with the executors instead of queuing behind 16 driver threads. */
   /** Test gauge: footer opens performed by [[footerKVs]]. */
   private[graft] val footerOpens = new java.util.concurrent.atomic.LongAdder
 
-  /** Per file: (KV value for `key`, row count) — the row count rides along
-    * from the same footer read so [[reconcile]] can treat empty fragments'
-    * declarations as vacuous (an empty part-file observes `geometry_types:
-    * []` and no bbox, which must not defeat the dataset-level union). */
+  private case class PartFooter(geo: Option[String], rows: Long, schema: StructType)
+
+  /** Shared by every read; its daemon threads exit when idle. */
+  private lazy val footerPool = new java.util.concurrent.ForkJoinPool(16)
+
+  /** One footer read per file: the KV value for `key`, the row count (so
+    * [[reconcile]] can treat empty fragments' declarations as vacuous: an
+    * empty part-file observes `geometry_types: []` and no bbox, which must
+    * not defeat the dataset-level union) and the Spark schema, converted
+    * as Spark's parquet schema inference converts it. Small datasets use
+    * the shared driver-side pool (footer reads are tiny ranged IO); past
+    * 64 part-files the reads run as a Spark job so a 100 TB dataset's
+    * thousands of footers scale out with the executors instead of queuing
+    * behind 16 driver threads. */
   private def footerKVs(spark: SparkSession, conf: Configuration, files: Seq[Path],
-                        key: String): Seq[(Option[String], Long)] = {
-    if (files.isEmpty) return Nil
+                        key: String): Seq[PartFooter] = {
     // gauge counts here (driver side, exactly one open per file on every
     // path) — NOT inside readOne: an object-field reference from the
     // Spark-job closure would capture the non-serializable module
     footerOpens.add(files.length)
-    def readOne(f: Path, c: Configuration): (Option[String], Long) = {
+    def readOne(f: Path, c: Configuration, sc: ParquetToSparkSchemaConverter): PartFooter = {
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, c))
-      try (Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(key)),
-        r.getRecordCount)
+      try PartFooter(Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(key)),
+        r.getRecordCount, ParquetFileFormat.readSchemaFromFooter(new Footer(f, r.getFooter), sc))
       finally r.close()
     }
     if (files.length > 64) {
-      val serConf = new SerializableHadoopConf(conf)
+      val serConf = new SerializableConfiguration(conf)
+      // a deserialized SQLConf cannot be read: tasks rebuild one
+      val settings = spark.sessionState.conf.getAllConfs
       spark.sparkContext
         .parallelize(files.map(_.toString).zipWithIndex,
           math.max(1, math.min(files.length, spark.sparkContext.defaultParallelism)))
-        .map { case (f, i) => (i, readOne(new Path(f), serConf.value)) }
+        .mapPartitions { it =>
+          val sc = new SQLConf
+          settings.foreach { case (k, v) => sc.setConfString(k, v) }
+          val converter = new ParquetToSparkSchemaConverter(sc)
+          it.map { case (f, i) => (i, readOne(new Path(f), serConf.value, converter)) }
+        }
         .collect().sortBy(_._1).map(_._2).toSeq
     } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.length))
-      try {
-        val tasks: java.util.List[java.util.concurrent.Callable[(Option[String], Long)]] =
-          files.map { f =>
-            new java.util.concurrent.Callable[(Option[String], Long)] {
-              def call(): (Option[String], Long) = readOne(f, conf)
-            }
-          }.asJava
-        pool.invokeAll(tasks).asScala.map(_.get()).toSeq
-      } finally pool.shutdown()
+      val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      footerPool.invokeAll(files.map { f =>
+        (() => readOne(f, conf, converter)): java.util.concurrent.Callable[PartFooter]
+      }.asJava).asScala.map(_.get()).toSeq
     }
+  }
+
+  /** The relation `spark.read.parquet` resolves to (Hive partition
+    * columns included) over `leaves`, or every part-file when empty, with
+    * the footers' schema; its file index serves the listing in hand, so
+    * planning neither lists again nor runs a schema-inference job. */
+  private def relation(spark: SparkSession, ds: Footers, format: FileFormat = new ParquetFileFormat,
+                       options: Map[String, String] = Map.empty,
+                       leaves: Seq[FileStatus] = Nil): DataFrame = {
+    val listing = new FileStatusCache {
+      private var known = ((ds.root -> ds.files.toArray) +: ds.files.map(f => f.getPath -> Array(f))).toMap
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = known.get(p)
+      def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = known = Map.empty // a refresh lists again
+    }
+    val roots = if (leaves.isEmpty) Seq(ds.root) else leaves.map(_.getPath)
+    val index = new InMemoryFileIndex(spark, roots, options, None, listing)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      GraftSchemas.asNullable(ds.schema(spark.sessionState.conf)), None, format, options)(spark))
   }
 
   /** Merge per-file metadata into one dataset view (rules in [[metadata]]).
@@ -346,6 +384,17 @@ object GeoParquet {
     * `bbox`, filters push to parquet row-group stats through the covering
     * column when one exists (coarse) and always refine exactly.
     *
+    * The dataset is the `.parquet` part-files under `path` (recursively,
+    * hidden and `_`-prefixed entries skipped), or `path` itself if it is a
+    * file. Its schema is the first part-file's in sorted path order, as
+    * with `spark.read.parquet`; under `spark.sql.parquet.mergeSchema` it
+    * is all part-files' schemas merged as Spark merges them. Hive
+    * partition columns are inferred from the directory names. An empty
+    * directory fails. Cost: one listing and, unless the dataset's listing
+    * is unchanged since an earlier call, one footer open per part-file,
+    * all on the driver (a Spark job past 64 part-files); the returned
+    * DataFrame's actions then run only their own scan jobs.
+    *
     * Session-conf side effect (bbox + native encoding only): appends
     * `geoparquet` to `spark.sql.optimizer.nestedPredicatePushdown
     * .supportedFileSources` — once, logged — so the struct-leaf envelope
@@ -357,13 +406,14 @@ object GeoParquet {
            bbox: Option[(Double, Double, Double, Double)] = None,
            limit: Long = -1L, offset: Long = 0L): DataFrame = {
     graft.functions.GeoFunctions.register(spark)
-    installHttpIfUrl(spark, path)
     require(offset >= 0, s"GeoParquet.read: offset $offset must be >= 0")
     require(bbox.isEmpty || (offset == 0 && limit < 0),
       "GeoParquet.read: limit/offset with bbox is ambiguous in a parallel " +
         "engine (no defined row order after a spatial filter) — apply " +
         ".limit/.offset on the returned DataFrame instead")
-    val meta = metadata(spark, path)
+    val ds = footers(spark, path)
+    require(ds.files.nonEmpty, s"GeoParquet.read: no parquet part-files under $path")
+    val meta = ds.meta
     // bbox on a NATIVE-encoded column with no covering struct: route the
     // scan through GeoParquetFileFormat's stats-pruning reader, which plans
     // row groups from the x/y leaf columns' own parquet min/max stats (the
@@ -414,10 +464,9 @@ object GeoParquet {
             "parquet column-index; persists for the session (see read() scaladoc)")
           spark.conf.set(key, cur + ",geoparquet")
         }
-        spark.read.format(classOf[GeoParquetFileFormat].getName)
-          .option(GeoParquetFileFormat.BboxFilterKey, spec).load(path)
-      case None if offset > 0 || limit >= 0 => rowWindowDf(spark, path, limit, offset)
-      case None => spark.read.parquet(path)
+        relation(spark, ds, new GeoParquetFileFormat, Map(GeoParquetFileFormat.BboxFilterKey -> spec))
+      case None if offset > 0 || limit >= 0 => rowWindowDf(spark, ds, limit, offset)
+      case None => relation(spark, ds)
     }
 
     // Row-level refine DURING decode for the native covering-less path —
@@ -573,13 +622,6 @@ object GeoParquet {
     }
   }
 
-  /** Spatially cluster `df` by Hilbert order of geometry-envelope centers
-    * over the dataset extent: range-partition + sort on the Hilbert cell so
-    * nearby geometries land in the same files/row groups. THIS is what
-    * makes the covering-column bbox pushdown actually prune at scale — with
-    * random row order every row group's bbox spans the whole extent and the
-    * parquet reader can skip nothing. One extent-aggregation job, one
-    * range shuffle (sampled boundaries, Spark's RangePartitioner). */
   /** `http(s)://` datasets read through [[HttpFileSystem]]'s range
     * requests like FlatGeobuf's (the reference's remote demo path) —
     * footer seeks and row-group reads become ranged GETs. Installed on
@@ -595,9 +637,9 @@ object GeoParquet {
   /** Reader-level `limit`/`offset` (the reference's pagination options,
     * python/geoarrow-io/.../_parquet.pyi:134-135,153-154) over the
     * dataset's STABLE row order: files sorted by path, row groups in
-    * file order, rows in group order. The driver reads footers only
-    * (row counts per file), selects the files overlapping the half-open
-    * window [offset, offset+limit), and each task decodes only its row
+    * file order, rows in group order. From the row counts of the
+    * footers already read, the driver selects the files overlapping the
+    * half-open window [offset, offset+limit), and each task decodes its row
     * groups inside the window ([[GeoParquetFileFormat.rowWindowRead]]);
     * the ≤ 2 boundary FILES get a row-exact trim via the codegen'd
     * `_metadata.row_index` comparison — rows before `offset` or past the
@@ -607,43 +649,28 @@ object GeoParquet {
     * partition directory instead). The returned rows are the exact
     * window SET; Spark DataFrames carry no inter-partition order, so
     * re-sort on output if presentation order matters. */
-  private def rowWindowDf(spark: SparkSession, path: String,
+  private def rowWindowDf(spark: SparkSession, ds: Footers,
                           limit: Long, offset: Long): DataFrame = {
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val parts = listPartFiles(fs, root).map(_.getPath)
-    require(parts.nonEmpty, s"GeoParquet.read: no parquet files under $path")
-    require(!parts.exists(_.getParent.getName.contains("=")),
+    require(!ds.files.exists(_.getPath.getParent.getName.contains("=")),
       "GeoParquet.read: limit/offset over a hive-partitioned layout is " +
         "not supported — paginate one partition directory at a time")
-    val sorted = parts.map(_.toString).sorted
-    val counts: Seq[Long] = sorted.map { f =>
-      footerOpens.increment()
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }
-    val starts = counts.scanLeft(0L)(_ + _)
+    val starts = ds.rows.scanLeft(0L)(_ + _)
     val total = starts.last
     val winStart = math.min(offset, total)
     val winEnd = if (limit < 0) total
       else math.min(total, math.addExact(winStart, limit))
-    val windowed = sorted.zip(starts.zip(counts)).collect {
+    val windowed = ds.files.zip(starts.zip(ds.rows)).collect {
       case (f, (s, n)) if s < winEnd && s + n > winStart => (f, s, n)
     }
-    if (windowed.isEmpty)
-      return spark.read.parquet(sorted.head).where(org.apache.spark.sql.functions.lit(false))
+    if (windowed.isEmpty) return relation(spark, ds).where(lit(false))
     val spec = s"$winStart\t$winEnd\t" +
-      windowed.map { case (f, s, _) => s"$f=$s" }.mkString("")
-    var df = spark.read.format(classOf[GeoParquetFileFormat].getName)
-      .option(GeoParquetFileFormat.RowWindowKey, spec)
-      .load(windowed.map(_._1): _*)
+      windowed.map { case (f, s, _) => s"${f.getPath}=$s" }.mkString("\u0001")
+    var df = relation(spark, ds, new GeoParquetFileFormat,
+      Map(GeoParquetFileFormat.RowWindowKey -> spec), windowed.map(_._1))
     // row-exact trim for the boundary files only (codegen'd literals —
     // middle files pass with a single path comparison short-circuit)
-    val (headF, headS, _) = windowed.head
-    val (tailF, tailS, _) = windowed.last
+    val (headF, headS) = (windowed.head._1.getPath.toString, windowed.head._2)
+    val (tailF, tailS) = (windowed.last._1.getPath.toString, windowed.last._2)
     val needHead = headS < winStart
     val needTail = tailS + windowed.last._3 > winEnd
     if (needHead || needTail) {
@@ -659,6 +686,13 @@ object GeoParquet {
     df
   }
 
+  /** Spatially cluster `df` by Hilbert order of geometry-envelope centers
+    * over the dataset extent: range-partition + sort on the Hilbert cell so
+    * nearby geometries land in the same files/row groups. THIS is what
+    * makes the covering-column bbox pushdown actually prune at scale — with
+    * random row order every row group's bbox spans the whole extent and the
+    * parquet reader can skip nothing. One extent-aggregation job, one
+    * range shuffle (sampled boundaries, Spark's RangePartitioner). */
   def spatialSort(df: DataFrame, geometryColumn: String = "geometry",
                   numPartitions: Int = 0): DataFrame = {
     graft.functions.GeoFunctions.register(df.sparkSession)
@@ -722,35 +756,29 @@ object GeoParquet {
 
   /** z/m presence from the leaf coordinate struct's field names (GeoArrow
     * separated layout: x, y[, z][, m]). */
-  private def zmFlags(dt: org.apache.spark.sql.types.DataType): (Boolean, Boolean) = {
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    def leaf(t: org.apache.spark.sql.types.DataType): Option[StructType] = t match {
-      case ArrayType(e, _) => leaf(e)
-      case s: StructType => Some(s)
-      case _ => None
-    }
-    leaf(dt) match {
-      case Some(s) =>
-        val names = s.fieldNames.map(_.toLowerCase).toSet
-        (names.contains("z"), names.contains("m"))
-      case None => (false, false)
-    }
+  private def zmFlags(dt: org.apache.spark.sql.types.DataType): (Boolean, Boolean) = dt match {
+    case org.apache.spark.sql.types.ArrayType(e, _) => zmFlags(e)
+    case s: StructType =>
+      val names = s.fieldNames.map(_.toLowerCase).toSet
+      (names.contains("z"), names.contains("m"))
+    case _ => (false, false)
   }
 
   // ── write ─────────────────────────────────────────────────────────────
 
-  /** Write `df` as GeoParquet 1.1: adds the `bbox` covering struct (unless
-    * `covering=false`), writes via Spark's parquet writer, then rewrites
-    * each part-file footer with the `geo` KV metadata. When `crs` is not
-    * given, the `geoparquet.crs` field metadata stamped by [[read]] is
-    * propagated automatically — read→write→read preserves CRS with no
-    * caller involvement. */
   /** geometry WKB column → GeoArrow export function for a native encoding;
     * inverse of [[nativeTranscoder]]. */
   private def nativeExporter(encoding: String): Option[String] =
     nativeTranscoder(encoding).map("ga_to_" + _.stripPrefix("ga_"))
 
-  /** `secondaryGeometry`: additional WKB geometry columns recorded in the
+  /** Write `df` as GeoParquet 1.1: adds the `bbox` covering struct (unless
+    * `covering=false`) and writes in one pass through Spark's parquet
+    * writer, each part-file's `geo` KV set at file close. When `crs` is not
+    * given, the `geoparquet.crs` field metadata stamped by [[read]] is
+    * propagated automatically — read→write→read preserves CRS with no
+    * caller involvement.
+    *
+    * `secondaryGeometry`: additional WKB geometry columns recorded in the
     * `geo` footer alongside the primary (GeoParquet 1.1 multi-column model,
     * e.g. centroid + boundary; the reference's `columns` map,
     * rust/geoparquet/src/metadata.rs:30). Each gets its own per-file
@@ -874,7 +902,7 @@ object GeoParquet {
     val fs = d.getFileSystem(conf)
     val parts = listPartFiles(fs, d).map(_.getPath.toString)
     if (parts.isEmpty) return 0L
-    val serConf = new SerializableHadoopConf(conf)
+    val serConf = new SerializableConfiguration(conf)
     val inTask = spark.sparkContext.longAccumulator("graft.geoparquet.footerRewrites")
     spark.sparkContext
       .parallelize(parts, math.max(1, math.min(parts.length, spark.sparkContext.defaultParallelism)))
@@ -885,21 +913,6 @@ object GeoParquet {
         if (org.apache.spark.TaskContext.get() != null) inTask.add(1L)
       }
     inTask.value
-  }
-
-  /** Hadoop `Configuration` is not `java.io.Serializable`; this carries one
-    * into task closures via its own writable form (the standard Spark-side
-    * pattern — the built-in equivalent is `private[spark]`). */
-  private[sources] class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
-    }
   }
 
   private def rewriteFooter(conf: Configuration, fs: FileSystem, part: Path,

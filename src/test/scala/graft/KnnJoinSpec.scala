@@ -123,6 +123,41 @@ class KnnJoinSpec extends SparkTestBase {
     }
   }
 
+  test("cell pre-filter under ANSI: overflowing key bounds skip the pre-filter, never throw") {
+    val s = spark
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      // cell ranges whose product (4e9 · 4e9), range (Long.MinValue to
+      // Long.MaxValue) or sum (three rows of 4e18) passes the long range: in
+      // long arithmetic each throws under ANSI or wraps to a small count
+      val big = 4000000000L
+      def within(rows: Seq[(Long, Long, Long, Long)], maxKeys: Long) =
+        SpatialJoin.cellKeysWithin(rows.toDF("x0", "x1", "y0", "y1"),
+          col("x0"), col("x1"), col("y0"), col("y1"), maxKeys)
+      assert(!within(Seq((0L, big, 0L, big)), 2000000L), "product overflow")
+      assert(!within(Seq((Long.MinValue, Long.MaxValue, 0L, 0L)), 2000000L), "range overflow")
+      assert(!within(Seq.fill(3)((0L, 1999999999L, 0L, 1999999999L)), Long.MaxValue - 1), "sum overflow")
+      assert(within(Seq((0L, 9L, 0L, 9L), (5L, 5L, 5L, 5L)), 101L))
+      assert(!within(Seq((0L, 9L, 0L, 9L), (5L, 5L, 6L, 7L)), 101L))
+      assert(!within(Nil, 101L), "no rows: nothing to bound, no pre-filter")
+
+      // the whole kNN under ANSI with the pre-filter engaged equals the
+      // answer with it off
+      val l = Seq((1L, 0.0, 0.0), (2L, 50.0, 0.0), (3L, 120.0, 10.0))
+      val r = (0L until 60L).map(i => (100L + i, (i % 40) * 2.5, 10.0 + (i % 5)))
+      def run(): Seq[(Long, Long, Long)] =
+        SpatialJoin.knn(pts(l, "lid", "lg"), pts(r, "rid", "rg"),
+          "lg", "rg", 3, "lid", "rid", initialRadius = 0.5)
+          .select("lid", "rid", "knn_rank").as[(Long, Long, Long)].collect().toSeq.sorted
+      val plain = run()
+      val c0 = SpatialJoin.cellPrefilterCount.sum()
+      s.conf.set("graft.knn.cellPrefilterMinRight", "0")
+      val filtered = try run() finally s.conf.unset("graft.knn.cellPrefilterMinRight")
+      assert(SpatialJoin.cellPrefilterCount.sum() > c0, "the pre-filter path never engaged")
+      assert(filtered == plain)
+    } finally s.conf.unset("spark.sql.ansi.enabled")
+  }
+
   test("empty right side yields empty result with the knn schema") {
     val l = Seq((1L, 0.0, 0.0))
     val out = SpatialJoin.knn(pts(l, "lid", "lg"), pts(Nil, "rid", "rg"),

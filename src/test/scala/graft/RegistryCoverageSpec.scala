@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.{call_function, col, lit}
 
 import graft.core.GeomOps
 import graft.functions.GeoFunctions
@@ -63,10 +63,14 @@ class RegistryCoverageSpec extends SparkTestBase {
       graft.functions.MediaFunctions.sigs.toSeq.map { case (name, sig) => name -> sig.params } ++
       Seq("st_extent_agg", "st_union_agg", "st_coverageunion_agg", "st_3dextent_agg")
         .map(_ -> Seq(BinaryType)) ++
-      // graft_bloom_agg's optional size argument must be a non-null
-      // constant (Spark's BloomFilterAggregate), so only its one-argument
-      // form takes the null gate
-      Seq("graft_bloom_agg" -> Seq(LongType), "graft_might_contain" -> Seq(BinaryType, LongType))
+      Seq("graft_bloom_agg" -> Seq(LongType), "graft_bloom_agg" -> Seq(LongType, LongType),
+        "graft_might_contain" -> Seq(BinaryType, LongType))
+
+  /** Arguments that must be non-null constants, so the null gate passes
+    * a constant there: graft_bloom_agg's size (its rejection of a null
+    * size has its own test below). */
+  private val constantArgs: Map[(String, Int), org.apache.spark.sql.Column] =
+    Map(("graft_bloom_agg", 1) -> lit(1000L))
 
   test("resolution + null contract: every signature analyzes and nulls out") {
     assert(allSignatures.map(_._1).toSet ==
@@ -78,7 +82,9 @@ class RegistryCoverageSpec extends SparkTestBase {
       .foreach { case (wiring, s) =>
         var checked = 0
         allSignatures.foreach { case (name, params) =>
-          val nullArgs = params.map(dt => lit(null).cast(dt))
+          val nullArgs = params.zipWithIndex.map { case (dt, i) =>
+            constantArgs.getOrElse((name, i), lit(null).cast(dt))
+          }
           val df = s.range(1).select(call_function(name, nullArgs: _*).as("v"))
           // analysis happens here; an unresolvable signature throws AnalysisException
           val row =
@@ -91,6 +97,23 @@ class RegistryCoverageSpec extends SparkTestBase {
           checked += 1
         }
         assert(checked >= 290, s"$wiring: registry shrank? $checked signatures")
+      }
+  }
+
+  test("graft_bloom_agg: a null or non-constant size fails with a clear message") {
+    Seq("registered" -> spark, "injected" -> GraftExtensionsSpec.injectedSession(spark))
+      .foreach { case (wiring, s) =>
+        Seq(lit(null).cast(LongType), col("id")).foreach { size =>
+          val e = intercept[Exception](
+            s.range(3).select(call_function("graft_bloom_agg", col("id"), size)).head())
+          val causes = rootCauses(e)
+          assert(causes.exists(c => String.valueOf(c.getMessage)
+            .contains("estimatedItems must be a non-null constant")),
+            s"$wiring: unclear failure for size $size: $e")
+          assert(!causes.exists(_.isInstanceOf[NullPointerException]), s"$wiring: NPE for size $size")
+        }
+        val bloom = s.range(100).select(call_function("graft_bloom_agg", col("id"), lit(100L))).head()
+        assert(!bloom.isNullAt(0), s"$wiring: a constant size builds a filter")
       }
   }
 
