@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   *    ([[graft.plans.SpatialJoinExec]], planned by
   *    [[graft.plans.SpatialJoinStrategy]]). O(n log m) instead of the
   *    O(n·m) BroadcastNestedLoopJoin Spark would plan for a θ-join on ST_*.
-  *  - [[grid]]: big×big. Both sides explode to covering grid cells,
-  *    equi-shuffle on cell id, refine with the exact predicate, and dedupe
-  *    multi-cell matches with the reference-point rule (a pair is emitted
-  *    only in the cell containing the top-left corner of the envelope
-  *    intersection) — no DISTINCT pass needed.
+  *  - [[grid]]: big×big at the caller's cell size
+  *    ([[graft.plans.GridSpatialJoinExec]], the exec the planner also picks
+  *    when neither side fits a broadcast). Both sides shuffle by the grid
+  *    cells their envelopes cover, each cell is refined with the exact
+  *    predicate, and multi-cell matches are deduped with the
+  *    reference-point rule (a pair is emitted only in the cell containing
+  *    the min corner of the envelope intersection) — no DISTINCT pass.
   *
   * Predicates: intersects | contains | within | covers | dwithin:<d>.
   * `contains`/`covers`/`within` are evaluated as SMALL pred BIG
@@ -860,39 +862,34 @@ object SpatialJoin {
       case other => throw new IllegalArgumentException(s"knn metric '$other'")
     }
 
-  /** Big×big inner join on `intersects` via grid partitioning: shuffle both
-    * sides on covering cell ids, refine exactly, dedupe with the
-    * reference-point rule. Requires disjoint column names. */
+  /** Big×big inner join `left ⋈ right ON ST_Intersects(leftGeom,
+    * rightGeom)` on a grid of square cells of edge `cellSize`, in the
+    * geometries' own units. The cell size is the caller's: no sampling job
+    * runs and no cell is sub-split. Planned as
+    * [[graft.plans.GridSpatialJoinExec]]: both sides are partitioned by the
+    * cells their envelopes cover (never broadcast), each cell is refined
+    * with the exact predicate, and each pair is emitted once, in the cell
+    * holding the min corner of its envelope intersection (reference-point
+    * rule). Null and empty geometries match nothing. Output: every column
+    * of `left`, then of `right`; column names must be disjoint. */
   def grid(left: DataFrame, right: DataFrame,
            leftGeomCol: String, rightGeomCol: String,
            cellSize: Double): DataFrame = {
-    def cells(df: DataFrame, geomCol: String, alias: String): DataFrame = {
-      val cs = lit(cellSize)
-      df.withColumn("__bbox", call_function("st_bbox", col(geomCol)))
-        .withColumn("__cx", explode(sequence(
-          floor(col("__bbox.xmin") / cs).cast("long"),
-          floor(col("__bbox.xmax") / cs).cast("long"))))
-        .withColumn("__cy", explode(sequence(
-          floor(col("__bbox.ymin") / cs).cast("long"),
-          floor(col("__bbox.ymax") / cs).cast("long"))))
-        .withColumnRenamed("__bbox", s"__bbox_$alias")
-        .withColumnRenamed("__cx", s"__cx_$alias")
-        .withColumnRenamed("__cy", s"__cy_$alias")
+    require(cellSize > 0 && !cellSize.isInfinite,
+      s"SpatialJoin.grid: cellSize must be positive and finite, got $cellSize")
+    val spark = left.sparkSession
+    graft.functions.GeoFunctions.register(spark) // installs the planner strategy
+    val (l, r) = (left.queryExecution.analyzed, right.queryExecution.analyzed)
+    require(l.outputSet.intersect(r.outputSet).isEmpty,
+      "SpatialJoin.grid: the two sides share columns; rename one side's columns")
+    def geom(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, c: String) = {
+      val e = p.resolveQuoted(c, spark.sessionState.conf.resolver)
+        .getOrElse(throw new IllegalArgumentException(s"SpatialJoin.grid: no column $c"))
+      require(e.dataType == org.apache.spark.sql.types.BinaryType,
+        s"SpatialJoin.grid: $c must be a WKB binary column, is ${e.dataType.simpleString}")
+      e
     }
-    val l = cells(left, leftGeomCol, "l")
-    val r = cells(right, rightGeomCol, "r")
-    val joined = l.join(r,
-      col("__cx_l") === col("__cx_r") && col("__cy_l") === col("__cy_r") &&
-        // bbox prefilter before the exact JTS predicate
-        col("__bbox_l.xmin") <= col("__bbox_r.xmax") &&
-        col("__bbox_r.xmin") <= col("__bbox_l.xmax") &&
-        col("__bbox_l.ymin") <= col("__bbox_r.ymax") &&
-        col("__bbox_r.ymin") <= col("__bbox_l.ymax") &&
-        // reference point: emit only from the cell holding the top-left
-        // corner of the envelope intersection (dedupe without DISTINCT)
-        floor(greatest(col("__bbox_l.xmin"), col("__bbox_r.xmin")) / lit(cellSize)).cast("long") === col("__cx_l") &&
-        floor(greatest(col("__bbox_l.ymin"), col("__bbox_r.ymin")) / lit(cellSize)).cast("long") === col("__cy_l") &&
-        call_function("st_intersects", col(leftGeomCol), col(rightGeomCol)))
-    joined.drop("__bbox_l", "__bbox_r", "__cx_l", "__cy_l", "__cx_r", "__cy_r")
+    graft.plans.GraftInternal.ofRows(spark,
+      graft.plans.GridJoin(l, r, geom(l, leftGeomCol), geom(r, rightGeomCol), cellSize))
   }
 }

@@ -138,7 +138,7 @@ case class KnnTopKExec(
 
 /** Reflection shims onto Spark-internal (Scala package-private, bytecode
   * public) entry points — the GeoParquetFileFormat pattern. */
-private[plans] object GraftInternal {
+private[graft] object GraftInternal {
   private val datasetModule = {
     val c = Class.forName("org.apache.spark.sql.classic.Dataset$")
     c.getField("MODULE$").get(null)

@@ -68,24 +68,9 @@ case class SpatialJoinExec(
     * normalization ⇒ build side is left) the prepared-geometry method
     * applies directly; otherwise through the transpose (contains↔within,
     * covers↔coveredBy; the rest are symmetric). */
-  private def test(p: PreparedGeometry, g: Geometry): Boolean = {
-    val name = if (buildRight) SpatialJoinExec.transpose(predicate) else predicate
-    name match {
-      case "intersects" => p.intersects(g)
-      case "contains" => p.contains(g)
-      case "within" => p.within(g)
-      case "covers" => p.covers(g)
-      case "coveredBy" => p.coveredBy(g)
-      case "touches" => p.touches(g)
-      case "overlaps" => p.overlaps(g)
-      case "crosses" => p.crosses(g)
-      case "equalsTopo" => p.getGeometry.equalsTopo(g)
-      case "dWithin" => p.getGeometry.isWithinDistance(g, radius)
-      case n if SpatialJoinExec.isGeodesicDWithin(n) =>
-        SpatialJoinExec.geodesicTest(n, p.getGeometry, g, radius)
-      case other => throw new IllegalStateException(s"unsupported spatial predicate: $other")
-    }
-  }
+  private def test(p: PreparedGeometry, g: Geometry): Boolean =
+    SpatialJoinExec.refine(
+      if (buildRight) SpatialJoinExec.transpose(predicate) else predicate, radius, p, g)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (buildPlan, streamPlan) = if (buildRight) (right, left) else (left, right)
@@ -151,6 +136,24 @@ object SpatialJoinExec {
     // rewrite of ST_DWithin over stamped columns — `radius` is METERS
     "dWithinSphere" -> "dWithinSphere", "dWithinGeodesic" -> "dWithinGeodesic",
     "dWithinSpheroid" -> "dWithinSpheroid", "dWithinVincenty" -> "dWithinVincenty")
+
+  /** The exact test `name(p, g)` with the prepared geometry `p` as the
+    * first argument; `radius` is the dWithin distance. */
+  def refine(name: String, radius: Double, p: PreparedGeometry, g: Geometry): Boolean =
+    name match {
+      case "intersects" => p.intersects(g)
+      case "contains" => p.contains(g)
+      case "within" => p.within(g)
+      case "covers" => p.covers(g)
+      case "coveredBy" => p.coveredBy(g)
+      case "touches" => p.touches(g)
+      case "overlaps" => p.overlaps(g)
+      case "crosses" => p.crosses(g)
+      case "equalsTopo" => p.getGeometry.equalsTopo(g)
+      case "dWithin" => p.getGeometry.isWithinDistance(g, radius)
+      case n if isGeodesicDWithin(n) => geodesicTest(n, p.getGeometry, g, radius)
+      case other => throw new IllegalStateException(s"unsupported spatial predicate: $other")
+    }
 
   /** Geodesy kernel method name (as it appears in the analysis-time
     * rewrite's StaticInvoke) → the planner's predicate name. */

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeSet, Cast, DenseRank, EqualNullSafe, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper, Rank, RowNumber, SortOrder, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeReference, AttributeSet, BinaryComparison, Cast, DenseRank, EqualNullSafe, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not, Or, PredicateHelper, Rank, RowNumber, SortOrder, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, Join, LogicalPlan, Project, Window, WindowGroupLimit}
@@ -26,8 +26,11 @@ import org.apache.spark.sql.types.IntegerType
   * sampled from the data at execution time, so an unbroadcastable spatial
   * join never silently degrades to BroadcastNestedLoopJoin.
   *
-  * Remaining conjuncts become a `FilterExec` above the join.
-  * `ST_DWithin(a, b, d)` is supported for foldable `d`.
+  * Remaining conjuncts become a `FilterExec` above the join, except that
+  * the grid exec evaluates the throw-free ones ([[throwFree]]) before its
+  * refine test. `ST_DWithin(a, b, d)` is supported for foldable `d`.
+  * [[GridJoin]], the node of `SpatialJoin.grid`, always plans the grid
+  * exec, at the node's cell size.
   *
   * Registered once per session by `GeoFunctions.register`, together with
   * the whole SQL surface (Geo, Text, Media, aggregates), through
@@ -157,6 +160,10 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
       planSpatialJoin(j, Some(projectList))
     case j @ Join(_, _, Inner, Some(_), _) =>
       planSpatialJoin(j, None)
+    case Project(projectList, g: GridJoin) =>
+      planGridJoin(g, Some(projectList))
+    case g: GridJoin =>
+      planGridJoin(g, None)
     case _ => Nil
   }
 
@@ -291,6 +298,27 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
     }
   }
 
+  /** True if `c` cannot throw and reads only its own row: And/Or/Not,
+    * IsNull/IsNotNull, comparisons and IN over attributes and literals.
+    * Only such a conjunct rides into [[GridSpatialJoinExec]]'s probe loop,
+    * where it runs on candidate pairs the exact predicate may still
+    * reject — a division, an ANSI cast or an `element_at` there could fail
+    * a query whose answer never contains the failing pair. */
+  private[graft] def throwFree(c: Expression): Boolean = {
+    def operand(e: Expression) = e.isInstanceOf[AttributeReference] || e.isInstanceOf[Literal]
+    c match {
+      case And(a, b) => throwFree(a) && throwFree(b)
+      case Or(a, b) => throwFree(a) && throwFree(b)
+      case Not(a) => throwFree(a)
+      case IsNull(a) => operand(a)
+      case IsNotNull(a) => operand(a)
+      case b: BinaryComparison => operand(b.left) && operand(b.right)
+      case In(v, list) => operand(v) && list.forall(operand)
+      case InSet(v, _) => operand(v)
+      case _ => false
+    }
+  }
+
   private def planSpatialJoin(j: Join,
                               proj: Option[Seq[NamedExpression]]): Seq[SparkPlan] = {
     val Join(left, right, _, Some(cond), _) = j: @unchecked
@@ -310,10 +338,6 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         // filter to restore exactness on the boundary
         val remaining =
           if (exact) conjuncts.filterNot(_ fastEquals chosen) else conjuncts
-        val narrowed: Option[Seq[Attribute]] = proj.map { pl =>
-          val needed = AttributeSet(pl.flatMap(_.references) ++ remaining.flatMap(_.references))
-          (left.output ++ right.output).filter(needed.contains)
-        }
         val threshold = SQLConf.get.autoBroadcastJoinThreshold
         val lSize = left.stats.sizeInBytes
         val rSize = right.stats.sizeInBytes
@@ -324,24 +348,15 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         val canLeft = hintLeft || (threshold > 0 && lSize <= threshold)
         val canRight = hintRight || (threshold > 0 && rSize <= threshold)
         val broadcastable = canLeft || canRight
-        // big×big path (round 21): deterministic, subquery-free, KERNEL-FREE
-        // residual conjuncts ride INTO the grid exec and are evaluated in
-        // its probe loop BEFORE the exact JTS refine test — a cheap
-        // inequality like DBSCAN's canonical `a.id < b.id` then skips the
-        // expensive geometry test for the pairs it rejects instead of
-        // filtering rows the refine already paid for. Conjuncts that
-        // invoke kernels (e.g. the strict-< distance residual, which IS a
-        // refine test) stay a FilterExec above the join, where they run on
-        // post-refine survivors only — pushing them below the cheap
-        // prepared-geometry test would invert the cost order.
+        // big×big path: throw-free residual conjuncts ride INTO the grid
+        // exec and are evaluated in its probe loop BEFORE the exact JTS
+        // refine test — a cheap inequality like DBSCAN's canonical
+        // `a.id < b.id` then skips the expensive geometry test for the
+        // pairs it rejects. Everything else (kernel calls such as the
+        // strict-< distance residual, arithmetic, casts) stays a FilterExec
+        // above the join, where it runs on refine survivors only.
         val (absorbed, residual) =
-          if (broadcastable) (Nil, remaining)
-          else remaining.partition(c => c.deterministic && !c.exists {
-            case _: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] => true
-            case _: org.apache.spark.sql.catalyst.expressions.objects.InvokeLike => true
-            case _: org.apache.spark.sql.catalyst.expressions.ScalaUDF => true
-            case _ => false
-          })
+          if (broadcastable) (Nil, remaining) else remaining.partition(throwFree)
         val exec: SparkPlan =
           if (broadcastable) {
             val buildRight =
@@ -349,25 +364,49 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
               else if (canLeft && canRight) rSize <= lSize
               else canRight
             SpatialJoinExec(planLater(left), planLater(right),
-              lg, rg, pred, radius, buildRight, narrowed)
+              lg, rg, pred, radius, buildRight, narrowed(left, right, proj, residual))
           } else // big×big: grid shuffle, never BNLJ
             GridSpatialJoinExec(planLater(left), planLater(right), lg, rg, pred, radius,
-              narrowed, absorbed.reduceOption(And))
-        val withFilter: SparkPlan =
-          if (residual.isEmpty) exec
-          else FilterExec(residual.reduce(And), exec)
-        val result: SparkPlan = proj match {
-          case Some(pl)
-            if pl.length == exec.output.length &&
-              pl.zip(exec.output).forall {
-                case (a: Attribute, o) => a.exprId == o.exprId
-                case _ => false
-              } && residual.isEmpty =>
-            exec // projection IS the join output — no extra node
-          case Some(pl) => ProjectExec(pl, withFilter)
-          case None => withFilter
-        }
-        result :: Nil
+              narrowed(left, right, proj, residual), absorbed.reduceOption(And))
+        projected(exec, proj, residual) :: Nil
     }
+  }
+
+  /** The join's output narrowed to what the parent projection and the
+    * residual filter above the join read; None = no parent projection. */
+  private def narrowed(left: LogicalPlan, right: LogicalPlan,
+                       proj: Option[Seq[NamedExpression]],
+                       residual: Seq[Expression]): Option[Seq[Attribute]] =
+    proj.map { pl =>
+      val needed = AttributeSet(pl.flatMap(_.references) ++ residual.flatMap(_.references))
+      (left.output ++ right.output).filter(needed.contains)
+    }
+
+  /** `exec` under the residual filter and the parent projection; the
+    * projection is dropped when it is exactly the join's output. */
+  private def projected(exec: SparkPlan, proj: Option[Seq[NamedExpression]],
+                        residual: Seq[Expression]): SparkPlan = {
+    val withFilter =
+      if (residual.isEmpty) exec else FilterExec(residual.reduce(And), exec)
+    proj match {
+      case Some(pl)
+        if pl.length == exec.output.length &&
+          pl.zip(exec.output).forall {
+            case (a: Attribute, o) => a.exprId == o.exprId
+            case _ => false
+          } && residual.isEmpty =>
+        exec // projection IS the join output — no extra node
+      case Some(pl) => ProjectExec(pl, withFilter)
+      case None => withFilter
+    }
+  }
+
+  /** [[GridJoin]] (`SpatialJoin.grid`): the grid exec at the caller's
+    * cell size, whatever the sides' sizes. */
+  private def planGridJoin(g: GridJoin, proj: Option[Seq[NamedExpression]]): Seq[SparkPlan] = {
+    val exec = GridSpatialJoinExec(planLater(g.left), planLater(g.right),
+      g.leftGeom, g.rightGeom, "intersects", 0.0,
+      narrowed(g.left, g.right, proj, Nil), cellSize = Some(g.cellSize))
+    projected(exec, proj, Nil) :: Nil
   }
 }

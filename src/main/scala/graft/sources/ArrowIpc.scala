@@ -104,8 +104,16 @@ object ArrowIpc {
     * surfaced as the same `geoparquet.crs`/`geoparquet.edges` Spark field
     * metadata the parquet reader stamps, so `GeoFunctions.edgeLength`/
     * `edgeArea` dispatch identically across sources. */
-  def schemaOf(spark: SparkSession, path: String): StructType =
-    withFirstFile(spark, path) { reader =>
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val file = listFiles(spark, path).head
+    schemaOfFile(file, conf, isFileFormat(file, conf))
+  }
+
+  /** [[schemaOf]] of one listed file whose format is known. */
+  private def schemaOfFile(file: String, conf: org.apache.hadoop.conf.Configuration,
+                           fileFormat: Boolean): StructType =
+    withReader(file, conf, fileFormat) { reader =>
       val fields0 = reader.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq
       // stream-format dictionaries arrive INLINE with the batches, but the
       // schema message still declares every encoded field's VALUE type:
@@ -425,12 +433,9 @@ object ArrowIpc {
     if (fileFormat) new ArrowFileReader(ch, allocator)
     else new org.apache.arrow.vector.ipc.ArrowStreamReader(ch, allocator)
 
-  private def withFirstFile[T](spark: SparkSession, path: String)(
-      f: org.apache.arrow.vector.ipc.ArrowReader => T): T = {
-    val files = listFiles(spark, path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fileFormat = isFileFormat(files.head, conf)
-    val ch = openChannel(files.head, conf)
+  private def withReader[T](file: String, conf: org.apache.hadoop.conf.Configuration,
+      fileFormat: Boolean)(f: org.apache.arrow.vector.ipc.ArrowReader => T): T = {
+    val ch = openChannel(file, conf)
     val allocator = new RootAllocator()
     val reader = openReader(ch, allocator, fileFormat)
     try f(reader)
@@ -471,11 +476,12 @@ object ArrowIpc {
     * `spark.sql.files.maxPartitionBytes`, the same discipline as the
     * FlatGeobuf index splits. Returns (path, startBlock, endBlockExcl,
     * isFileFormat); (-1, -1) = whole file. Probing (6-byte magic for every
-    * file, footer blocks for big file-format ones) runs as ONE Spark job
-    * over the cache misses — never a driver loop, and the cached format
-    * flag rides into every task so the decode path re-probes nothing
-    * (object-store round trips per task, not per file, were the old
-    * cost). */
+    * file, footer blocks for big file-format ones) covers the cache misses
+    * only: up to 64 of them on the driver's shared IO pool, as
+    * GeoParquet's footer reads do, so a cold read of a few files starts no
+    * extra job; past 64 as ONE Spark job, so thousands of files scale out
+    * with the executors. The cached format flag rides into every task, so
+    * the decode path re-probes nothing. */
   private[sources] def planSplits(spark: SparkSession,
       statuses: Seq[(String, Long, Long)]): IndexedSeq[(String, Int, Int, Boolean)] = {
     val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
@@ -489,38 +495,20 @@ object ArrowIpc {
     val miss = statuses.filterNot { case (f, _, _) => cached.contains(f) }
     val probed: Map[String, (Boolean, IndexedSeq[(Int, Int)])] =
       if (miss.isEmpty) Map.empty
-      else {
+      else if (miss.length <= 64) {
+        val conf = spark.sessionState.newHadoopConf()
+        GeoParquet.ioPool.invokeAll(miss.map { case (f, len, _) =>
+          (() => f -> probeSplits(f, len, conf, maxPart))
+            : java.util.concurrent.Callable[(String, (Boolean, IndexedSeq[(Int, Int)]))]
+        }.asJava).asScala.map(_.get()).toMap
+      } else {
         val confSer = spark.sparkContext.broadcast(
           new org.apache.spark.util.SerializableConfiguration(
             spark.sessionState.newHadoopConf()))
         val mp = maxPart
-        spark.sparkContext.parallelize(miss, miss.length).map { case (f, len, _) =>
-          val fileFmt = isFileFormat(f, confSer.value.value)
-          if (!fileFmt || len <= mp) {
-            // small file = one task; a big STREAM file has no footer and
-            // also stays one task
-            f -> ((fileFmt, IndexedSeq((-1, -1))))
-          } else {
-          val ch = openChannel(f, confSer.value.value)
-          val allocator = new RootAllocator()
-          val reader = new ArrowFileReader(ch, allocator)
-          try {
-            val blocks = reader.getRecordBlocks.asScala.toIndexedSeq
-            val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-            var start = 0
-            var acc = 0L
-            var i = 0
-            while (i < blocks.length) {
-              val sz = blocks(i).getMetadataLength + blocks(i).getBodyLength
-              if (i > start && acc + sz > mp) { groups += ((start, i)); start = i; acc = 0L }
-              acc += sz
-              i += 1
-            }
-            if (start < blocks.length) groups += ((start, blocks.length))
-            f -> ((true, groups.toIndexedSeq))
-          } finally { reader.close(); allocator.close(); ch.close() }
-          }
-        }.collect().toMap
+        spark.sparkContext.parallelize(miss, miss.length)
+          .map { case (f, len, _) => f -> probeSplits(f, len, confSer.value.value, mp) }
+          .collect().toMap
       }
     // bound only when this plan actually inserts — an unconditional clear
     // would make every other read of a >4096-file dataset re-probe it all
@@ -531,6 +519,36 @@ object ArrowIpc {
       val (fmt, ranges) = all(f)
       ranges.map { case (s, e) => (f, s, e, fmt) }
     }.toIndexedSeq
+  }
+
+  /** (isFileFormat, batch ranges) of one file: a small file, or a big
+    * STREAM file (no footer), is one task (-1, -1); a big FILE-format one
+    * splits its footer's record-batch blocks into ranges of about
+    * `maxPart` bytes. */
+  private def probeSplits(f: String, len: Long, conf: org.apache.hadoop.conf.Configuration,
+                          maxPart: Long): (Boolean, IndexedSeq[(Int, Int)]) = {
+    val fileFmt = isFileFormat(f, conf)
+    if (!fileFmt || len <= maxPart) (fileFmt, IndexedSeq((-1, -1)))
+    else {
+      val ch = openChannel(f, conf)
+      val allocator = new RootAllocator()
+      val reader = new ArrowFileReader(ch, allocator)
+      try {
+        val blocks = reader.getRecordBlocks.asScala.toIndexedSeq
+        val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+        var start = 0
+        var acc = 0L
+        var i = 0
+        while (i < blocks.length) {
+          val sz = blocks(i).getMetadataLength + blocks(i).getBodyLength
+          if (i > start && acc + sz > maxPart) { groups += ((start, i)); start = i; acc = 0L }
+          acc += sz
+          i += 1
+        }
+        if (start < blocks.length) groups += ((start, blocks.length))
+        (true, groups.toIndexedSeq)
+      } finally { reader.close(); allocator.close(); ch.close() }
+    }
   }
 
   // diagnostics (spec-proof of decode-level pruning; same device as
@@ -1072,10 +1090,12 @@ object ArrowIpc {
       HttpFileSystem.install(spark.sparkContext.hadoopConfiguration)
     graft.functions.GeoFunctions.register(spark)
     val statuses = listFileStatuses(spark, path)
-    val schema = schemaOf(spark, statuses.head._1)
     val splits = planSplits(spark, statuses)
+    val conf = spark.sessionState.newHadoopConf()
+    // the first split is the first listed file's: its format is known
+    val schema = schemaOfFile(splits.head._1, conf, splits.head._4)
     val confSer = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
+      new org.apache.spark.util.SerializableConfiguration(conf))
     val rdd = spark.sparkContext.parallelize(splits, splits.length)
       .flatMap { case (f, s, e, fmt) => decodeFile(f, confSer.value.value, null, s, e, Some(fmt)) }
     spark.createDataFrame(rdd, schema)

@@ -209,8 +209,9 @@ object GeoParquet {
 
   private case class PartFooter(geo: Option[String], rows: Long, schema: StructType)
 
-  /** Shared by every read; its daemon threads exit when idle. */
-  private lazy val footerPool = new java.util.concurrent.ForkJoinPool(16)
+  /** Shared by every driver-side metadata read (these footers, ArrowIpc's
+    * split probes); its daemon threads exit when idle. */
+  private[sources] lazy val ioPool = new java.util.concurrent.ForkJoinPool(16)
 
   /** One footer read per file: the KV value for `key`, the row count (so
     * [[reconcile]] can treat empty fragments' declarations as vacuous: an
@@ -249,7 +250,7 @@ object GeoParquet {
         .collect().sortBy(_._1).map(_._2).toSeq
     } else {
       val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      footerPool.invokeAll(files.map { f =>
+      ioPool.invokeAll(files.map { f =>
         (() => readOne(f, conf, converter)): java.util.concurrent.Callable[PartFooter]
       }.asJava).asScala.map(_.get()).toSeq
     }

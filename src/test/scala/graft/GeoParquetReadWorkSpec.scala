@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,32 +27,12 @@ class GeoParquetReadWorkSpec extends SparkTestBase {
     out
   }
 
-  /** (Spark jobs, footer opens) of `body`. Listener events arrive in the
-    * order they were posted, so once a sentinel job is seen, every job
-    * `body` started has been seen too. */
+  /** (Spark jobs, footer opens) of `body`. */
   private def work(body: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val tag = "gp-readwork-" + java.util.UUID.randomUUID()
-    val sentinel = tag + "-end"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .foreach(t => seen.addAll(t.split(",").toSeq.asJava))
-    }
-    sc.addSparkListener(listener)
-    try {
-      GeoParquet.footerOpens.reset()
-      sc.addJobTag(tag)
-      try body finally sc.removeJobTag(tag)
-      val opens = GeoParquet.footerOpens.sum()
-      sc.addJobTag(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(sentinel)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.contains(sentinel), "listener never saw the sentinel job")
-      (seen.asScala.count(_ == tag), opens)
-    } finally sc.removeSparkListener(listener)
+    GeoParquet.footerOpens.reset()
+    var opens = 0L
+    val jobs = SparkJobs.count(spark) { body; opens = GeoParquet.footerOpens.sum() }
+    (jobs, opens)
   }
 
   /** A cold read runs exactly one job and opens each footer once; a warm

@@ -78,14 +78,15 @@ class MockFsSpec extends SparkTestBase {
     assert(MockFs.opens.get() > o0, "ArrowIpc.read never opened via mockfs://")
 
     // Re-read: the split plan AND the wire-format flag are cached from the
-    // first read and ride into every task, so the whole read costs exactly
-    // 2 opens for schemaOf (magic probe + reader) plus ONE open per task.
-    // On an object store those saved per-task magic probes are round trips.
+    // first read and ride into the schema read and every task, so the
+    // whole read costs exactly 1 open for the schema (the reader; no magic
+    // probe) plus ONE open per task. On an object store those saved magic
+    // probes are round trips.
     val o1 = MockFs.opens.get()
     val back2 = ArrowIpc.read(spark, out)
     val nTasks = back2.rdd.getNumPartitions
     assert(back2.count() == 100)
-    assert(MockFs.opens.get() - o1 == nTasks + 2,
-      s"expected ${nTasks + 2} opens (schemaOf 2 + 1/task), got ${MockFs.opens.get() - o1}")
+    assert(MockFs.opens.get() - o1 == nTasks + 1,
+      s"expected ${nTasks + 1} opens (schema 1 + 1/task), got ${MockFs.opens.get() - o1}")
   }
 }
