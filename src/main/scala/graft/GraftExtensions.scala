@@ -24,13 +24,14 @@ import org.apache.spark.sql.SparkSessionExtensions
   * extension-injected optimizer rules run inside the main
   * operator-optimization batch rather than
   * `experimental.extraOptimizations` (after it) where `register` puts
-  * them. All three rules are shape-driven, idempotent
-  * accelerators whose non-firing leaves plans correct (the WKB path /
-  * unfolded count / planar-refused-then-wrapped extents), and
-  * GeodesicExtentRule still precedes NativePointFastPath in injection
-  * order — the end-to-end equivalence of both wirings is pinned by the
-  * extensions drive (native fast path + geodesic extent + spatial
-  * strategy through a config-only spark-shell). Calling `register`
+  * them. Both rules (SpatialCountFoldRule, NativePointFastPath) are
+  * shape-driven, idempotent accelerators whose non-firing leaves plans
+  * correct (the unfolded count / the WKB path), so their order does not
+  * matter. Edges-stamped extents need no rule: `ST_Extent_Agg` folds the
+  * bounds `ST_BBox` builds, and that builder already picks the geodesic
+  * bound at analysis. The end-to-end equivalence of both wirings is
+  * pinned by the extensions drive (native fast path + geodesic extent +
+  * spatial strategy through a config-only spark-shell). Calling `register`
   * on an extensions-built session stays safe and cheap: it skips every
   * name already bound to graft's own builder, and its
   * `extraOptimizations` appends are idempotent re-runs. */
@@ -40,7 +41,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.functions.GeoFunctions.functionDescriptors.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.SpatialJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.SpatialCountFoldRule)
-    ext.injectOptimizerRule(_ => graft.plans.GeodesicExtentRule)
     ext.injectOptimizerRule(_ => graft.plans.NativePointFastPath)
   }
 }

@@ -745,10 +745,10 @@ object SparkEntry {
       ON px >= zxmin AND px <= zxmin + 50 AND py >= zymin AND py <= zymin + 50
     GROUP BY p_brand ORDER BY p_brand"""
 
-  /** True partial-aggregating extent (graft.functions.GeoAggregates.ExtentAgg,
-    * the reference's BoundingRect accumulator) — map-side combine, unlike the
-    * min/max composition in g06 which proves the built-in path. Catalyst
-    * dedupes the four identical UDAF calls into one aggregate. */
+  /** The extent aggregate (graft.functions.GeoAggregates.Extent, the
+    * reference's BoundingRect accumulator): a min/max fold over each row's
+    * ST_BBox with map-side combine, where g06 composes the built-in min/max
+    * by hand. Catalyst dedupes the four identical calls into one aggregate. */
   private val g16Spark = """
     SELECT c_mktsegment,
            ST_Extent_Agg(pt).xmin AS xmin, ST_Extent_Agg(pt).ymin AS ymin,

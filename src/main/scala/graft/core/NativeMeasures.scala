@@ -37,8 +37,7 @@ import org.locationtech.jts.geom.Coordinate
   *    a polygon's envelope is its SHELL's, and the null envelope of an
   *    empty geometry reads 0/-1 (`Envelope.setToNull`). Methods return
   *    null for the null envelope; the rewrite supplies the 0/-1 sentinel
-  *    for the direct kernels and lets aggregates skip it (ExtentAgg's
-  *    envelope-isNull contract).
+  *    (for `ST_BBox` too, whose null envelope `ST_Extent_Agg` skips).
   *
   * Width is the coordinate struct's field count (2 + z + m); x/y are
   * fields 0 and 1 in the GeoArrow separated layout, and all measures are
@@ -178,8 +177,7 @@ object NativeMeasures {
   // ── envelope bounds (JTS Envelope.expandToInclude chains) ─────────────
   // ord: 0 = x, 1 = y; min/max by flag. null ⇔ the JTS null envelope
   // (empty geometry) — the plan rewrite supplies getMin*/getMax*'s 0/-1
-  // null-envelope sentinel for the direct kernels and leaves null for
-  // the ExtentAgg skip.
+  // null-envelope sentinel.
 
   /** LineString envelope bound: first-coordinate init, then compare —
     * NaN coordinates behave exactly as in Envelope.expandToInclude

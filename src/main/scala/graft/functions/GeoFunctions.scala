@@ -726,6 +726,10 @@ object GeoFunctions extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** `ST_BBox(g)` as its SQL builder builds it, edges dispatch included:
+    * the per-row bounds that `ST_Extent_Agg` folds. */
+  private[functions] def bbox(g: Expression): Expression = build("st_bbox", byName("st_bbox"))(Seq(g))
+
   /** graft's whole SQL surface, one `injectFunction` descriptor per name:
     * the Geo scalars, the Geo aggregates, and the Text and Media functions.
     * [[graft.GraftExtensions]] injects this list and [[register]] installs
@@ -765,13 +769,9 @@ object GeoFunctions extends org.apache.spark.internal.Logging {
     // fold COUNT(*)-over-spatial-join into the probe loop (g15's shape)
     if (!exp.extraOptimizations.contains(graft.plans.SpatialCountFoldRule))
       exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.SpatialCountFoldRule
-    // ST_Extent_Agg over edges-stamped columns aggregates geodesic bounds;
-    // must precede NativePointFastPath so the planar leaf-stats extent
-    // rewrite cannot claim a stamped column first
-    if (!exp.extraOptimizations.contains(graft.plans.GeodesicExtentRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.GeodesicExtentRule
-    // native-point columnar fast path: coordinate accessors / extent over a
-    // ga_point scan transcode read the struct leaves directly (no WKB/JTS)
+    // native columnar fast path: coordinate accessors, measures and bounds
+    // (ST_BBox, hence ST_Extent_Agg) over a ga_* scan transcode read the
+    // struct and list leaves directly (no WKB/JTS)
     if (!exp.extraOptimizations.contains(graft.plans.NativePointFastPath))
       exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.NativePointFastPath
   }

@@ -246,7 +246,7 @@ object SpatialJoin {
       // lon cell (wrapped mod nLon, see lonGrid) and a latitude cell
       // bounding the r-meter displacement; planar rounds use r both axes
       val (csXv, nLon, csYv) =
-        if (geodesic) { val (cx, n) = lonGrid(maxAbsLat, r); (cx, n, r / 110000.0) }
+        if (geodesic) { val (cx, n) = lonGrid(maxAbsLat, r); (cx, n, latCell(r)) }
         else (r, 0L, r)
       val csx = lit(csXv)
       val csy = lit(csYv)
@@ -283,8 +283,8 @@ object SpatialJoin {
       // scale that is O(rounds × |right|) shuffle for a geometrically
       // shrinking candidate need. When the loop KNOWS the unresolved count
       // (rounds after the first) and it is small enough to broadcast
-      // (`graft.knn.cellPrefilterMaxRows`, default 100k lefts ≈ ≤1M cell
-      // keys for point-ish data) and clearly asymmetric vs the right side
+      // ([[CellPrefilterMaxRows]], 100k lefts ≈ ≤1M cell keys for
+      // point-ish data) and clearly asymmetric vs the right side
       // (20×), a broadcast LEFT-SEMI join on the exact candidate cell keys
       // drops non-candidate right rows map-side, BEFORE the shuffle. A
       // pure superset reduction on the join key — results are identical by
@@ -296,22 +296,20 @@ object SpatialJoin {
       // shape the right-side shuffle dominates rounds by orders of
       // magnitude). Spec-exercised with the conf lowered to 0.
       val conf = right.sparkSession.conf
-      val prefilterCap = conf.get("graft.knn.cellPrefilterMaxRows", "100000").toLong
       val prefilterMinRight = conf.get("graft.knn.cellPrefilterMinRight", "1000000").toLong
       val rr =
-        if (unresCount >= 0 && unresCount <= prefilterCap &&
+        if (unresCount >= 0 && unresCount <= CellPrefilterMaxRows &&
             nRight >= prefilterMinRight && unresCount * 20 <= nRight) {
           // bound the broadcast's KEY count, not just the row count
           // (round-21 review fix): wide multi-cell left envelopes at a
           // small round radius could otherwise blow the distinct-cells
-          // broadcast past driver memory. Past
-          // `graft.knn.cellPrefilterMaxKeys` the round keeps the plain
-          // unfiltered shuffle (slower, never wrong, never OOM).
-          val maxKeys = conf.get("graft.knn.cellPrefilterMaxKeys", "2000000").toLong
+          // broadcast past driver memory. Past [[CellPrefilterMaxKeys]]
+          // the round keeps the plain unfiltered shuffle (slower, never
+          // wrong, never OOM).
           val ly0 = floor((col("__lb.ymin") - csy) / csy).cast("long")
           val ly1 = floor((col("__lb.ymax") + csy) / csy).cast("long")
           if (cellKeysWithin(lhs.withColumn("__lb", call_function("st_bbox", col(leftGeomCol))),
-                lx0, lx1, ly0, ly1, maxKeys)) {
+                lx0, lx1, ly0, ly1, CellPrefilterMaxKeys)) {
             cellPrefilterCount.increment()
             val cells = l.select(col("__cx").as("__pcx"), col("__cy").as("__pcy")).distinct()
             rr0.join(org.apache.spark.sql.functions.broadcast(cells),
@@ -339,7 +337,8 @@ object SpatialJoin {
       // max(lx0, rx0 + m·nLon) is therefore a unique per-pair cell both
       // sides emitted — a plain filter on its pmod replaces the old
       // per-round dropDuplicates Exchange of the full candidate stream.
-      // Cell indices stay ≪ 2^53, so the double-division ceil is exact.
+      // Both cell sizes are at least [[MinCellDeg]], so cell indices and
+      // nLon stay ≤ 2^31 ≪ 2^53 and the double-division ceil is exact.
       // Latitude cells never wrap: the planar min-corner rule applies
       // unchanged on y.
       val once =
@@ -610,6 +609,22 @@ object SpatialJoin {
     * cell pre-filter (round 21, behind graft.knn.cellPrefilterMinRight). */
   private[graft] val cellPrefilterCount = new java.util.concurrent.atomic.LongAdder
 
+  /** Most unresolved left rows a kNN round's cell pre-filter broadcasts. */
+  private val CellPrefilterMaxRows = 100000L
+
+  /** Most covering-cell keys the cell pre-filter's broadcast may hold. */
+  private val CellPrefilterMaxKeys = 2000000L
+
+  /** Grid cells the farthest-k operator buckets the right side into. */
+  private val FarthestCells = 1024
+
+  /** Smallest geodesic kNN cell edge in degrees, for both axes: at most
+    * 2^31 cells span the circle, so cell indices and seam shifts stay
+    * exact in a double. A tiny radius would otherwise ask for ~4e16 lon
+    * cells (past 2^53), and the seam-aware dedup could pick the wrong
+    * copy. A larger cell only adds candidates. */
+  private val MinCellDeg = 360.0 / (1L << 31)
+
   /** Whether the rows' covering-cell counts, (x1 − x0 + 1)·(y1 − y0 + 1)
     * each, sum to at most `maxKeys`: an upper bound on the distinct keys
     * the cell pre-filter would broadcast. The counts are computed in
@@ -628,7 +643,7 @@ object SpatialJoin {
     * shape): per left row, the k rows of `right` with the LARGEST planar
     * `ST_Distance`. Exact, one candidate pass, never a cartesian:
     *
-    *  1. the right side buckets into ≤ `graft.knn.farthestCells` grid
+    *  1. the right side buckets into ≤ [[FarthestCells]] grid
     *     cells (envelope-center assignment); per-cell stats — row count +
     *     the union bbox of member envelopes — collect to the driver
     *     (bounded) and broadcast;
@@ -660,7 +675,7 @@ object SpatialJoin {
     * (documented + spec-pinned divergence). Null/EMPTY
     * geometries are excluded on both sides (the documented kNN
     * divergence: the literal plan window-ranks their null distances).
-    * Scale shape: one stats aggregate, one ≤`farthestCells`-row collect,
+    * Scale shape: one stats aggregate, one ≤`FarthestCells`-row collect,
     * one equi-shuffle join over the candidate pairs, one bounded window —
     * no driver loop, no radius iteration. */
   def farthestK(left: DataFrame, right: DataFrame,
@@ -690,8 +705,7 @@ object SpatialJoin {
         .select(outCols: _*)
     val (xmin, ymin, xmax, ymax) =
       (re.getDouble(0), re.getDouble(1), re.getDouble(2), re.getDouble(3))
-    val targetCells = spark.conf.get("graft.knn.farthestCells", "1024").toInt
-    val perAxis = math.max(1, math.sqrt(targetCells.toDouble).toInt)
+    val perAxis = math.max(1, math.sqrt(FarthestCells.toDouble).toInt)
     val csx = math.max((xmax - xmin) / perAxis, 1e-9)
     val csy = math.max((ymax - ymin) / perAxis, 1e-9)
     def cellOf(cxCol: org.apache.spark.sql.Column, cyCol: org.apache.spark.sql.Column) = {
@@ -716,16 +730,10 @@ object SpatialJoin {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-    // ≤ graft.knn.farthestCells rows (default 1024, ~50 KB): ship inside
-    // the task closure — a Broadcast here would live as long as the lazy
-    // plan (the UDF closure pins it), accumulating driver/executor blocks
-    // across repeated farthest-k queries in a long session. Only a
-    // user-raised cell budget big enough to bloat closures gets a real
-    // Broadcast (cleaned by ContextCleaner when the plan is dropped).
-    val getStats: () => Array[(Long, Long, Double, Double, Double, Double)] =
-      if (stats.length > 16384) {
-        val b = spark.sparkContext.broadcast(stats); () => b.value
-      } else () => stats
+    // ≤ FarthestCells rows (~50 KB): ship inside the task closure — a
+    // Broadcast here would live as long as the lazy plan (the UDF closure
+    // pins it), accumulating driver/executor blocks across repeated
+    // farthest-k queries in a long session.
     val kk = k
     val denseMode = rankMode == "dense_rank"
     if (denseMode)
@@ -739,7 +747,7 @@ object SpatialJoin {
       case other => throw new IllegalArgumentException(s"farthestK metric '$other'")
     }
     val candCells = udf { (lxmin: Double, lymin: Double, lxmax: Double, lymax: Double) =>
-      val cs = getStats()
+      val cs = stats
       // per cell: lo = min possible member distance, hi = max possible.
       // Planar: exact box arithmetic (extremes at vertices). Geodesic:
       // triangle inequality on enclosing circles — center distance by
@@ -836,18 +844,24 @@ object SpatialJoin {
     * extent-derived allowance under-sizes cells for multi-1000-km rounds
     * at mid/high latitude and silently drops true neighbors. Rounds whose
     * padded latitude reaches the pole collapse to a single lon cell:
-    * meridians converge there and no bounded lon cell is correct.
+    * meridians converge there and no bounded lon cell is correct. The
+    * cell is never smaller than [[MinCellDeg]], so cellCount ≤ 2^31.
     * Returns (cellSizeDegrees, cellCount); package-visible for the fuzz
     * property pinning the ≤1-wrapped-cell displacement guarantee. */
   private[graft] def lonGrid(maxAbsLat: Double, rM: Double): (Double, Long) = {
     val phi = maxAbsLat + 1.0 + rM / 110000.0
-    lazy val raw = rM / (110000.0 * math.cos(math.toRadians(phi)))
+    lazy val raw = math.max(MinCellDeg, rM / (110000.0 * math.cos(math.toRadians(phi))))
     if (phi >= 89.0 || raw >= 360.0) (360.0, 1L)
     else {
       val n = math.max(1L, math.floor(360.0 / raw).toLong)
       (360.0 / n, n)
     }
   }
+
+  /** Latitude cell edge in degrees for a geodesic [[knn]] round of radius
+    * `rM` meters: one cell bounds the r-meter displacement (a degree of
+    * latitude is ≥ 110.5 km), floored at [[MinCellDeg]]. */
+  private[graft] def latCell(rM: Double): Double = math.max(MinCellDeg, rM / 110000.0)
 
   /** WKB→meters (or planar units) distance kernel matching the SQL
     * function the grid rounds rank by — the broadcast remainder pass must

@@ -3,7 +3,6 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Max, Min}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.optimizer.{CollapseProject, ColumnPruning}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
@@ -29,16 +28,19 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerTyp
   * entirely:
   *
   *  - POINT columns: `ST_X/ST_Y/ST_XMin/…` → `s.x`/`s.y` leaf reads;
-  *    `ST_IsEmpty` → the all-NaN sentinel test; `ST_Distance`/
-  *    `ST_DistanceSphere`/`ST_DWithin` against a point literal or second
-  *    native column → the exact kernel IEEE chains as leaf arithmetic;
-  *    `ST_Extent_Agg` → min/max over the leaves.
+  *    `ST_IsEmpty` → the NaN sentinel test; `ST_BBox` → a struct of the
+  *    leaves; `ST_Distance`/`ST_DistanceSphere`/`ST_DWithin` against a
+  *    point literal or second native column → the exact kernel IEEE
+  *    chains as leaf arithmetic.
   *  - LINESTRING/POLYGON/MULTI* columns (round 19): `ST_Length`/
-  *    `ST_Area`/`ST_Perimeter`/`ST_NPoints`/`ST_XMin` family/`ST_IsEmpty`
-  *    /`ST_Extent_Agg` → [[graft.core.NativeMeasures]] StaticInvoke
+  *    `ST_Area`/`ST_Perimeter`/`ST_NPoints`/`ST_XMin` family/`ST_BBox`/
+  *    `ST_IsEmpty` → [[graft.core.NativeMeasures]] StaticInvoke
   *    kernels over the raw nested arrays, each replicating the exact JTS
   *    1.20 chain of the WKB kernel it replaces (bit-exactness asserted in
   *    NativeNestedFastPathSpec).
+  *  - `ST_Extent_Agg` needs no case of its own: it folds `ST_BBox`'s
+  *    per-row bounds, so the `ST_BBox` case serves it. An edges-stamped
+  *    column's bounds are `Geodesy.bboxGeodesic`, which no case matches.
   *
   * Two plan shapes are covered: the FUSED form where CollapseProject
   * already composed consumer and transcode into one expression, and the
@@ -53,9 +55,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerTyp
   * `ST_X(POINT EMPTY)` and reports JTS's 0-width null envelope for
   * `ST_XMin`; the fast path yields NaN (the sentinel the column stores) —
   * strictly more useful, and unreachable for the non-degenerate data the
-  * WKB path already handled. The nested kinds have no such divergence:
-  * their bound rewrites reproduce the JTS null-envelope 0/-1 sentinel
-  * exactly. */
+  * WKB path already handled. `ST_BBox` has no such divergence: a point
+  * with any NaN ordinate reads as POINT EMPTY through the WKB hop, so its
+  * bbox is the JTS null-envelope sentinel (0, 0, -1, -1), and the nested
+  * kinds' bound rewrites reproduce that sentinel exactly. */
 object NativePointFastPath extends Rule[LogicalPlan] {
 
   private def strip(e: Expression): Expression = e match {
@@ -179,78 +182,6 @@ object NativePointFastPath extends Rule[LogicalPlan] {
     Multiply(Literal(2.0 * graft.core.Geodesy.EarthRadiusM), Asin(clamped))
   }
 
-  private def isExtentAgg(ae: AggregateExpression): Boolean = ae.aggregateFunction match {
-    case sa: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] =>
-      (sa.agg eq graft.functions.GeoAggregates.ExtentAgg) && sa.children.length == 1
-    case _ => false
-  }
-
-  private def extentChild(ae: AggregateExpression): Expression =
-    ae.aggregateFunction
-      .asInstanceOf[org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _]]
-      .children.head
-
-  /** An edges-stamped (non-planar) column's extent is the GEODESIC bound
-    * ([[GeodesicExtentRule]]); the planar leaf-stats rewrite must refuse
-    * it — both rules run in the same fixed-point batch, so without this
-    * guard whichever fires first would win. */
-  private def edgesStamped(e: Expression): Boolean = strip(e) match {
-    case a: AttributeReference if a.resolved && a.metadata.contains("geoparquet.edges") =>
-      a.metadata.getString("geoparquet.edges").toLowerCase != "planar"
-    case _ => false
-  }
-
-  /** the four per-row bound expressions (xmin, ymin, xmax, ymax), null on
-    * EMPTY rows so the Min/Max aggregates skip them — ExtentAgg's
-    * envelope-isNull contract. Points skip when ANY ordinate is NaN: the
-    * GeoArrow sentinel is both-NaN, but the WKB hop the slow path takes
-    * collapses every NaN-bearing point to POINT EMPTY (the JTS WKBReader
-    * NaN convention), so that is the observable contract to match. */
-  private def extentBounds(s: Expression, kind: String,
-                           width: Int): Option[Seq[Expression]] =
-    if (kind == "point")
-      for { x <- leaf(s, "x"); y <- leaf(s, "y") } yield {
-        val empty = Or(IsNaN(x), IsNaN(y))
-        val ex = If(empty, Literal(null, DoubleType), x)
-        val ey = If(empty, Literal(null, DoubleType), y)
-        Seq(ex, ey, ex, ey)
-      }
-    else boundMethod.get(kind).map { method =>
-      boundKernels("xMin") :: boundKernels("yMin") ::
-        boundKernels("xMax") :: boundKernels("yMax") :: Nil map {
-          case (ord, isMin, _) =>
-            nm(method, DoubleType,
-              Seq(s, Literal(width), Literal(ord), Literal(isMin)), nullable = true)
-        }
-    }
-
-  private def extentRewrite(ae: AggregateExpression, s: Expression,
-                            kind: String, width: Int): Option[Expression] =
-    (extentBounds(s, kind, width), ae.dataType) match {
-      case (Some(Seq(bxmin, bymin, bxmax, bymax)), st: StructType) if st.length == 4 =>
-        def agg(fn: Expression => AggregateFunction, e: Expression): Expression =
-          AggregateExpression(fn(e), ae.mode, isDistinct = false,
-            ae.filter, NamedExpression.newExprId)
-        // ExtentAgg reduces with java Math.min/max, which PROPAGATE NaN;
-        // Spark's Min/Max order NaN last and would silently drop it. A
-        // second Max(IsNaN(bound)) aggregate per ordinate restores the
-        // poison exactly (null bounds — EMPTY rows — stay skipped: IsNaN
-        // is false on null, and false is the flag's neutral element).
-        def bound(fn: Expression => AggregateFunction, e: Expression): Expression = {
-          val v = agg(fn, e)
-          If(Coalesce(Seq(agg(Max(_), IsNaN(e)), Literal(false))),
-            Literal(Double.NaN), v)
-        }
-        val xmin = bound(Min(_), bxmin); val ymin = bound(Min(_), bymin)
-        val xmax = bound(Max(_), bxmax); val ymax = bound(Max(_), bymax)
-        // all-null/EMPTY group → NULL struct, matching ExtentAgg.finish
-        Some(If(IsNull(xmin), Literal(null, st),
-          CreateNamedStruct(Seq(
-            Literal(st.fieldNames(0)), xmin, Literal(st.fieldNames(1)), ymin,
-            Literal(st.fieldNames(2)), xmax, Literal(st.fieldNames(3)), ymax))))
-      case _ => None
-    }
-
   private def rewriteNode(node: LogicalPlan): LogicalPlan = {
     // transcode aliases exposed by direct Project children whose raw
     // source is a plain column (the shape GeoParquet.read emits)
@@ -312,6 +243,30 @@ object NativePointFastPath extends Rule[LogicalPlan] {
               nm(method, DoubleType,
                 Seq(s, Literal(w), Literal(ord), Literal(isMin)), nullable = true),
               If(IsNull(s), Literal(null, DoubleType), Literal(sentinel))))
+        }.getOrElse(si)
+      // ST_BBox: the ST_XMin-family bounds in one struct, the JTS
+      // null-envelope sentinel standing in for EMPTY. A point with ANY NaN
+      // ordinate is EMPTY through the WKB hop (JTS WKBReader), and a NULL
+      // leaf is read as NaN.
+      case si: StaticInvoke if isGeomOp(si, "bbox") && si.arguments.length == 1 =>
+        val st = si.dataType.asInstanceOf[StructType]
+        val order = Seq("xMin", "yMin", "xMax", "yMax").map(boundKernels)
+        def struct(s: Expression, bounds: Seq[Expression]): Expression =
+          If(IsNull(s), Literal(null, st), CreateNamedStruct(
+            st.fieldNames.toSeq.zip(bounds).flatMap { case (n, b) => Seq(Literal(n), b) }))
+        measure(si.arguments.head) {
+          case (s, "point", _) =>
+            for { x <- leaf(s, "x"); y <- leaf(s, "y") } yield {
+              val xy = Seq(x, y).map(c => Coalesce(Seq(c, Literal(Double.NaN))))
+              val empty = Or(IsNaN(xy(0)), IsNaN(xy(1)))
+              struct(s, order.map { case (ord, _, sentinel) => If(empty, Literal(sentinel), xy(ord)) })
+            }
+          case (s, kind, w) =>
+            boundMethod.get(kind).map(method => struct(s, order.map { case (ord, isMin, sentinel) =>
+              Coalesce(Seq(nm(method, DoubleType,
+                Seq(s, Literal(w), Literal(ord), Literal(isMin)), nullable = true),
+                Literal(sentinel)))
+            }))
         }.getOrElse(si)
       case si: StaticInvoke if isGeomOp(si, "isEmpty") =>
         measure(si.arguments.head) {
@@ -451,11 +406,6 @@ object NativePointFastPath extends Rule[LogicalPlan] {
         binCoords(si).map { case ((x1, y1), (x2, y2)) =>
           LessThanOrEqual(planarDist(x1, y1, x2, y2), strip(si.arguments(2)))
         }.getOrElse(si)
-      case ae: AggregateExpression if !ae.isDistinct && isExtentAgg(ae) &&
-          !edgesStamped(extentChild(ae)) =>
-        resolveNative(extentChild(ae))
-          .flatMap { case (s, kind, w) => extentRewrite(ae, s, kind, w) }
-          .getOrElse(ae)
     }
     val usedNow = used.toSet
     if (usedNow.isEmpty) newNode

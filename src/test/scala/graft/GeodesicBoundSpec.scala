@@ -197,8 +197,8 @@ class GeodesicBoundSpec extends SparkTestBase {
     // file has NO covering struct, so the bbox read plans row groups from
     // the raw x/y leaf stats — vertex stats, which under-cover arcs. The
     // read must widen the latitude window away (lon-only prune + arc
-    // refine), and ST_Extent_Agg must take the GeodesicExtentRule wrap
-    // rather than NativePointFastPath's planar leaf-stats rewrite.
+    // refine), and ST_Extent_Agg must fold the geodesic bound the ST_BBox
+    // builder picks rather than NativePointFastPath's planar leaf bounds.
     import graft.sources.GeoParquet
     val out = new java.io.File(System.getProperty("java.io.tmpdir"),
       "gnative_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
@@ -208,7 +208,7 @@ class GeodesicBoundSpec extends SparkTestBase {
       SELECT 2L, ST_GeomFromText('LINESTRING (100 -20, 110 -25)')""")
     GeoParquet.write(df.coalesce(1), out, covering = false,
       encoding = "linestring", edges = Some("spherical"))
-    // extent aggregate: geodesic (the planar leaf rewrite must refuse)
+    // extent aggregate: geodesic (the planar leaf rewrite must not apply)
     GeoParquet.read(spark, out).createOrReplaceTempView("gnative_t")
     val agg = spark.sql("SELECT ST_Extent_Agg(geometry) AS e FROM gnative_t")
     val ymax = agg.head().getStruct(0).getDouble(3)

@@ -64,12 +64,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     val rules = built[org.apache.spark.sql.catalyst.rules.Rule[_]](
       "buildOptimizerRules", ext, spark)
     val names = rules.map(_.getClass.getSimpleName.stripSuffix("$"))
-    assert(names.contains("SpatialCountFoldRule") &&
-      names.contains("GeodesicExtentRule") && names.contains("NativePointFastPath"),
-      names.toString)
-    // the stamped-extent wrap must get its chance before the planar
-    // leaf-stats rewrite within the shared fixed-point batch
-    assert(names.indexOf("GeodesicExtentRule") < names.indexOf("NativePointFastPath"))
+    assert(names.toSet == Set("SpatialCountFoldRule", "NativePointFastPath"), names.toString)
     // descriptor census: every Geo scalar, the Geo aggregates, and the
     // Text (bloom included) and Media names, each exactly once
     val descNames = GeoFunctions.functionDescriptors.map(_._1.funcName)

@@ -671,12 +671,15 @@ class KnnJoinSpec extends SparkTestBase {
     // a true neighbor >1 cell away would be silently dropped while the row
     // still resolves with inferior candidates. Covers the radius-dependent
     // latitude allowance AND the pmod seam wrap, across the full globe.
+    // Radii reach down to 1e-9 m, where unfloored cells would number ~4e16
+    // per circle, past the 2^53 range the seam-aware dedup computes in.
+    assert(graft.operators.SpatialJoin.lonGrid(0.0, 1e-9)._2 <= (1L << 31))
     val rnd = new scala.util.Random(4321)
     var checked = 0
-    (0 until 4000).foreach { _ =>
+    (0 until 8000).foreach { _ =>
       val lon = rnd.nextDouble() * 360.0 - 180.0
       val lat = rnd.nextDouble() * 179.8 - 89.9
-      val meters = math.pow(10.0, 1.0 + rnd.nextDouble() * 5.6) // 10 m .. ~4000 km
+      val meters = math.pow(10.0, -9.0 + rnd.nextDouble() * 15.6) // 1e-9 m .. ~4000 km
       val az = rnd.nextDouble() * 2 * math.Pi
       val frac = rnd.nextDouble()
       val src = graft.core.GeomOps.point(lon, lat)
@@ -689,7 +692,7 @@ class KnnJoinSpec extends SparkTestBase {
       // includes BOTH points, so maxAbsLat >= max(|src|, |dst|); model that)
       val maxAbsLat = math.max(math.abs(lat), math.abs(dst.y))
       val (csLon, nLon) = graft.operators.SpatialJoin.lonGrid(maxAbsLat, meters)
-      val csLat = meters / 110000.0
+      val csLat = graft.operators.SpatialJoin.latCell(meters)
       def cx(x: Double): Long = {
         val c = math.floor(x / csLon).toLong % nLon
         if (c < 0) c + nLon else c
@@ -704,7 +707,7 @@ class KnnJoinSpec extends SparkTestBase {
         f"lat cells not adjacent: $lat%.4f vs ${dst.y}%.4f at cs=$csLat%.6f° (r=$meters%.0fm)")
       checked += 1
     }
-    assert(checked == 4000)
+    assert(checked == 8000)
   }
 
   /** brute-force RANK-semantics ground truth: every pair whose distance is

@@ -362,7 +362,7 @@ class NativeNestedFastPathSpec extends SparkTestBase {
     finally spark.conf.set("spark.graft.nativePointFastPath", "true")
     (0 until 4).foreach(i => assert(bits(ext.getDouble(i)) == bits(truth.getDouble(i)),
       s"extent field $i: ${ext.getDouble(i)} vs ${truth.getDouble(i)}"))
-    // all-EMPTY group yields NULL, matching ExtentAgg.finish
+    // all-EMPTY group yields NULL, as on the WKB path
     val grouped = spark.sql("""
       SELECT CASE WHEN geometry IS NULL OR ST_IsEmpty(geometry) THEN 'bad' ELSE 'ok' END AS k,
              ST_Extent_Agg(geometry) AS ext
@@ -491,10 +491,10 @@ class NativeNestedFastPathSpec extends SparkTestBase {
   }
 
   test("ST_Extent_Agg NaN poison parity: degenerate coordinates match the WKB reduce") {
-    // ExtentAgg reduces with Math.min/max, which PROPAGATE NaN; Spark's
-    // Min/Max would silently drop it — the rewrite carries a poison flag
-    // per ordinate (round-19 review finding). EMPTY points (both-NaN)
-    // still skip; a single-NaN ordinate poisons exactly that ordinate.
+    // The extent folds with Math.min/max, which PROPAGATE NaN; Spark's
+    // Min/Max would silently drop it (round-19 review finding). EMPTY
+    // points (both-NaN) still skip; a single-NaN ordinate poisons exactly
+    // that ordinate.
     val ptDir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "nnfp_nan_pt_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
     val pts = spark.sql("""

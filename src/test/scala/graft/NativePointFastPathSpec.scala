@@ -67,7 +67,7 @@ class NativePointFastPathSpec extends SparkTestBase {
         s"extent field $i: ${ext.getDouble(i)} vs ${wkbTruth.getDouble(i)}")
     // EMPTY (NaN sentinel) and NULL rows must not poison the extent
     assert(!ext.anyNull && (0 until 4).forall(i => !ext.getDouble(i).isNaN))
-    // grouped + all-invalid group: NULL struct out, like ExtentAgg.finish
+    // grouped + all-invalid group: NULL struct out, as on the WKB path
     val grouped = spark.sql("""
       SELECT CASE WHEN fid IN (7, 11) THEN 'bad' ELSE 'ok' END AS k,
              ST_Extent_Agg(geometry) AS ext
