@@ -104,11 +104,8 @@ object ArrowIpc {
     * surfaced as the same `geoparquet.crs`/`geoparquet.edges` Spark field
     * metadata the parquet reader stamps, so `GeoFunctions.edgeLength`/
     * `edgeArea` dispatch identically across sources. */
-  def schemaOf(spark: SparkSession, path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val file = listFiles(spark, path).head
-    schemaOfFile(file, conf, isFileFormat(file, conf))
-  }
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    Format.schemaOf(spark, RowFileSource.list(spark, Format, Seq(path)))
 
   /** [[schemaOf]] of one listed file whose format is known. */
   private def schemaOfFile(file: String, conf: org.apache.hadoop.conf.Configuration,
@@ -440,26 +437,6 @@ object ArrowIpc {
     val reader = openReader(ch, allocator, fileFormat)
     try f(reader)
     finally { reader.close(); allocator.close(); ch.close() }
-  }
-
-  private[sources] def listFiles(spark: SparkSession, path: String): Seq[String] =
-    listFileStatuses(spark, path).map(_._1)
-
-  private[sources] def listFileStatuses(spark: SparkSession, path: String)
-      : Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(s => s.getPath.getName.endsWith(".arrow") ||
-            s.getPath.getName.endsWith(".arrows")) // stream-format spelling
-          .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).toSeq
-      else {
-        val st = fs.getFileStatus(p)
-        Seq((path, st.getLen, st.getModificationTime))
-      }
-    require(files.nonEmpty, s"no .arrow files under $path")
-    files
   }
 
   // split-plan + wire-format cache, the FlatGeobuf device: a (path, size,
@@ -962,22 +939,6 @@ object ArrowIpc {
     } catch { case e: Throwable => closeAll(); throw e }
   }
 
-  /** DSv2 decode entry: byte-level pruning when a proper subset of columns
-    * is required, the stock full-batch reader otherwise. `blockStart`/
-    * `blockEnd` (−1 = whole file) select a batch-range split. */
-  private[sources] def decodeFileAuto(path: String, conf: org.apache.hadoop.conf.Configuration,
-                                      wanted: Array[Boolean],
-                                      blockStart: Int = -1,
-                                      blockEnd: Int = -1,
-                                      knownFormat: Option[Boolean] = None): Iterator[Row] = {
-    // format comes from planning when available (planSplits probed + cached
-    // it) — no extra per-task round trip against an object store
-    val fileFmt = knownFormat.getOrElse(isFileFormat(path, conf))
-    if (wanted == null || wanted.forall(identity) || !fileFmt)
-      decodeFile(path, conf, wanted, blockStart, blockEnd, Some(fileFmt)) // stream: no footer to prune by
-    else decodeFilePruned(path, conf, wanted, blockStart, blockEnd)
-  }
-
   /** Streams rows batch-by-batch: only one IPC record batch is resident at
     * a time, so a multi-GB file never materializes in the task. Resources
     * close when the file is exhausted AND on task completion (whichever
@@ -1083,22 +1044,38 @@ object ArrowIpc {
   }
 
   /** Read .arrow file(s) into a DataFrame; geometry columns become WKB.
-    * Files larger than `spark.sql.files.maxPartitionBytes` split into
-    * batch-range tasks via [[planSplits]], same as the DSv2 face. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    if (path.toLowerCase(java.util.Locale.ROOT).startsWith("http"))
-      HttpFileSystem.install(spark.sparkContext.hadoopConfiguration)
-    graft.functions.GeoFunctions.register(spark)
-    val statuses = listFileStatuses(spark, path)
-    val splits = planSplits(spark, statuses)
-    val conf = spark.sessionState.newHadoopConf()
-    // the first split is the first listed file's: its format is known
-    val schema = schemaOfFile(splits.head._1, conf, splits.head._4)
-    val confSer = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(conf))
-    val rdd = spark.sparkContext.parallelize(splits, splits.length)
-      .flatMap { case (f, s, e, fmt) => decodeFile(f, confSer.value.value, null, s, e, Some(fmt)) }
-    spark.createDataFrame(rdd, schema)
+    * The scan of `spark.read.format("arrowipc")`, so Catalyst prunes its
+    * columns down to the decoder. Files larger than
+    * `spark.sql.files.maxPartitionBytes` split into batch-range tasks via
+    * [[planSplits]]. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    RowFileSource.read(spark, Format, Seq(path))
+
+  /** Arrow IPC as a [[RowFileFormat]]; a split is [[planSplits]]'
+    * `(path, startBlock, endBlockExcl, isFileFormat)`. */
+  private[sources] object Format extends RowFileFormat[(String, Int, Int, Boolean)] {
+    def name: String = "arrowipc"
+    def suffixes: Seq[String] = Seq(".arrow", ".arrows") // .arrows: stream format
+
+    // planning first probes every file's format into the split-plan cache,
+    // so the schema read re-probes nothing and the scan plans from the cache
+    def schemaOf(session: SparkSession, files: Seq[(String, Long, Long)]): StructType = {
+      val (f, _, _, fileFormat) = planSplits(session, files).head
+      schemaOfFile(f, session.sessionState.newHadoopConf(), fileFormat)
+    }
+
+    def plan(session: SparkSession, files: Seq[(String, Long, Long)])
+        : Seq[(String, Int, Int, Boolean)] = planSplits(session, files)
+
+    // byte-level pruning when a proper subset of columns is required (a
+    // stream file has no footer to prune by); the format flag comes from
+    // planning, so no task re-probes it against an object store
+    def decode(split: (String, Int, Int, Boolean), wanted: Array[Boolean],
+               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
+      val (f, s, e, fileFormat) = split
+      if (wanted.forall(identity) || !fileFormat) decodeFile(f, conf, wanted, s, e, Some(fileFormat))
+      else decodeFilePruned(f, conf, wanted, s, e)
+    }
   }
 
   // ── write ─────────────────────────────────────────────────────────────
@@ -1850,3 +1827,15 @@ object ArrowIpc {
     }
   }
 }
+
+/** `spark.read.format("arrowipc")`: the same scan as [[ArrowIpc.read]].
+  * Catalyst's required-columns pushdown prunes at BOTH levels. Byte level:
+  * when a proper subset of columns is required,
+  * [[ArrowIpc.decodeFilePruned]] reads only each batch's header plus the
+  * wanted columns' buffer byte ranges — a pruned column's buffers are
+  * never fetched from storage (the columnar projection discipline of the
+  * reference's readers, rust/geoarrow-old/benches/wkb.rs:20-21). Decode
+  * level: per-cell materialization — Arrow getObject boxing, Text→String
+  * copies and the JTS geometry build + WKB serialization — runs only for
+  * required columns. */
+class ArrowIpcSource extends RowFileSource(ArrowIpc.Format)

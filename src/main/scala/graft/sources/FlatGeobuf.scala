@@ -322,7 +322,7 @@ object FlatGeobuf {
   /** Decode the packed property stream. With a non-null `wanted` mask,
     * values of unwanted columns are SKIPPED (the cursor advances without
     * materializing — for strings/binary only the length prefix is read):
-    * decode-level column pruning for the DSv2 path. */
+    * decode-level column pruning for the scan. */
   private[graft] def decodeProperties(bb: ByteBuffer, pos: Int, len: Int,
                                types: Array[Int], out: Array[Any],
                                wanted: Array[Boolean] = null): Unit = {
@@ -424,25 +424,20 @@ object FlatGeobuf {
         StructField("geometry", BinaryType, nullable = true, mb.build()))
   }
 
-  /** Decode every feature of one FGB blob into Rows (props + WKB). With a
-    * bbox over an indexed file, the packed Hilbert R-tree selects candidate
-    * features and ONLY those are decoded (the reference's async reader
-    * seeks via the same index); indexless files fall back to full scan +
-    * envelope filter. */
   /** Decode the feature table rooted at `root` in `bb` into a Row. With a
     * `wanted` mask (length = columns + 1, last slot = geometry) unwanted
     * properties are cursor-skipped and an unwanted geometry is not decoded
     * at all. */
   private[sources] def rowOf(bb: ByteBuffer, root: Int, header: Header,
                              types: Array[Int],
-                             wanted: Array[Boolean] = null): Row = {
+                             wanted: Array[Boolean]): Row = {
     val t = new Table(bb, root + bb.getInt(root))
     val out = new Array[Any](types.length + 1)
     t.indirect(F.Properties) match {
       case -1 =>
       case pp => decodeProperties(bb, pp + 4, bb.getInt(pp), types, out, wanted)
     }
-    if (wanted == null || wanted(types.length)) {
+    if (wanted(types.length)) {
       val geom = t.subTable(F.Geometry).map(g => decodeGeometry(g, header.geometryType)).orNull
       out(types.length) = if (geom == null) null else GeomOps.write(geom)
     }
@@ -458,35 +453,27 @@ object FlatGeobuf {
     }
   }
 
+  /** Decode every feature of one FGB blob into Rows (props + WKB), keeping
+    * with a bbox only the features whose envelope meets it. */
   private[sources] def decodeFeatures(bytes: Array[Byte],
                              bbox: Option[(Double, Double, Double, Double)],
-                             wanted: Array[Boolean] = null): Iterator[Row] = {
+                             wanted: Array[Boolean]): Iterator[Row] = {
     val header = parseHeader(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val types = header.columns.map(_._2).toArray
-    val start = header.headerEnd + indexSize(header.featuresCount, header.indexNodeSize)
-
+    var p = (header.headerEnd + indexSize(header.featuresCount, header.indexNodeSize)).toInt
+    val it = new Iterator[Row] {
+      def hasNext: Boolean = p + 4 <= bytes.length
+      def next(): Row = {
+        val size = bb.getInt(p)
+        val root = p + 4
+        p = root + size
+        rowOf(bb, root, header, types, wanted)
+      }
+    }
     bbox match {
-      case Some((x0, y0, x1, y1)) if header.indexNodeSize > 0 && header.featuresCount > 0 =>
-        // index-seek path: decode only the tree's candidate features
-        searchIndex(bytes, x0, y0, x1, y1).iterator
-          .map(off => rowOf(bb, start.toInt + off.toInt + 4, header, types, wanted))
-          .filter(envelopeHit(_, types.length, x0, y0, x1, y1))
-      case _ =>
-        var p = start.toInt
-        val it = new Iterator[Row] {
-          def hasNext: Boolean = p + 4 <= bytes.length
-          def next(): Row = {
-            val size = bb.getInt(p)
-            val root = p + 4
-            p = root + size
-            rowOf(bb, root, header, types, wanted)
-          }
-        }
-        bbox match {
-          case None => it
-          case Some((x0, y0, x1, y1)) => it.filter(envelopeHit(_, types.length, x0, y0, x1, y1))
-        }
+      case None => it
+      case Some((x0, y0, x1, y1)) => it.filter(envelopeHit(_, types.length, x0, y0, x1, y1))
     }
   }
 
@@ -512,14 +499,17 @@ object FlatGeobuf {
     * async range-request reader (rust/geoarrow-flatgeobuf/src/reader/
     * async.rs:244 `select_bbox`). A 100 TB corpus query reads the few
     * row-ranges the Hilbert tree selects, not the files. Indexless files
-    * fall back to full-scan + envelope filter. */
+    * fall back to full-scan + envelope filter. The envelope test needs
+    * the geometry, so it is decoded even when `wanted` prunes it. */
   private def readSelective(fs: org.apache.hadoop.fs.FileSystem,
                             p: org.apache.hadoop.fs.Path,
-                            x0: Double, y0: Double, x1: Double, y1: Double): Iterator[Row] = {
+                            x0: Double, y0: Double, x1: Double, y1: Double,
+                            wanted: Array[Boolean]): Iterator[Row] = {
     val header = parseHeader(readHeaderBytes(fs, p))
-    if (header.indexNodeSize == 0 || header.featuresCount == 0)
-      return decodeFeatures(readAll(fs, p), Some((x0, y0, x1, y1)))
     val types = header.columns.map(_._2).toArray
+    val w = wanted.updated(types.length, true)
+    if (header.indexNodeSize == 0 || header.featuresCount == 0)
+      return decodeFeatures(readAll(fs, p), Some((x0, y0, x1, y1)), w)
     val idxLen = indexSize(header.featuresCount, header.indexNodeSize)
     val in = fs.open(p)
     try {
@@ -534,7 +524,7 @@ object FlatGeobuf {
         val size = ByteBuffer.wrap(szBuf).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
         val fb = new Array[Byte](size + 4)
         in.readFully(featStart + off, fb)
-        rowOf(ByteBuffer.wrap(fb).order(ByteOrder.LITTLE_ENDIAN), 4, header, types)
+        rowOf(ByteBuffer.wrap(fb).order(ByteOrder.LITTLE_ENDIAN), 4, header, types, w)
       }.filter(envelopeHit(_, types.length, x0, y0, x1, y1)).iterator
     } finally in.close()
   }
@@ -577,7 +567,7 @@ object FlatGeobuf {
   private[sources] def decodeRange(fs: org.apache.hadoop.fs.FileSystem,
                           p: org.apache.hadoop.fs.Path,
                           start: Long, end: Long,
-                          wanted: Array[Boolean] = null): Iterator[Row] = {
+                          wanted: Array[Boolean]): Iterator[Row] = {
     val header = parseHeader(readHeaderBytes(fs, p))
     val types = header.columns.map(_._2).toArray
     val until = if (end < 0) fs.getFileStatus(p).getLen else end
@@ -597,17 +587,6 @@ object FlatGeobuf {
     }
   }
 
-  /** Read FGB file(s) into a DataFrame (property columns + `geometry` WKB).
-    * Files parallelize across executors; a large indexed file additionally
-    * splits into maxPartitionBytes-sized feature-aligned ranges (see the
-    * object scaladoc). */
-  /** Plan `(path, start, end)` decode splits for a set of `(path, size)`
-    * .fgb files: files above `maxPart` split into feature-aligned ranges
-    * via a Spark probe job over the packed index (one bounded header read
-    * + S−1 leaf-node reads each; only tiny descriptors return to the
-    * driver); smaller files stay whole (`start < 0`). ONE implementation
-    * shared by [[read]] and the DSv2 scan — split sizing must not diverge
-    * between the two faces. */
   /** Split-plan cache: the index probe job costs one bounded header read
     * + S−1 leaf reads PER big file PER read() call — repeated queries over
     * the same 100 TB dataset would re-probe identical files every time.
@@ -619,6 +598,11 @@ object FlatGeobuf {
   /** Test gauge: probe jobs actually launched by [[planSplits]]. */
   private[graft] val splitProbeJobs = new java.util.concurrent.atomic.LongAdder
 
+  /** Plan `(path, start, end)` decode splits for a set of `(path, size)`
+    * .fgb files: files above `maxPart` split into feature-aligned ranges
+    * via a Spark probe job over the packed index (one bounded header read
+    * + S−1 leaf-node reads each; only tiny descriptors return to the
+    * driver); smaller files stay whole (`start < 0`). */
   private[sources] def planSplits(spark: SparkSession,
                                   statuses: IndexedSeq[(String, Long, Long)],
                                   maxPart: Long): IndexedSeq[(String, Long, Long)] = {
@@ -656,53 +640,51 @@ object FlatGeobuf {
       big.flatMap { case (f, _, _) => ranges(f).map { case (s, e) => (f, s, e) } }
   }
 
+  /** Read FGB file(s) into a DataFrame (property columns + `geometry` WKB):
+    * the scan of `spark.read.format("flatgeobuf")`, so Catalyst prunes its
+    * columns down to the decoder. Files parallelize across executors; a
+    * large indexed file additionally splits into maxPartitionBytes-sized
+    * feature-aligned ranges (see the object scaladoc). With a `bbox`, each
+    * file is one task that seeks its candidates through the packed
+    * index. */
   def read(spark: SparkSession, path: String,
-           bbox: Option[(Double, Double, Double, Double)] = None): DataFrame = {
-    graft.functions.GeoFunctions.register(spark)
-    val conf = spark.sessionState.newHadoopConf()
-    // bare http(s):// URLs read through the range-request FileSystem —
-    // the reference's remote demo path (async.rs:244); object-store
-    // schemes keep their real Hadoop connectors
-    HttpFileSystem.install(conf)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val statuses =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.getPath.getName.endsWith(".fgb"))
-          .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
-      else {
-        val st = fs.getFileStatus(p)
-        Array((path, st.getLen, st.getModificationTime))
-      }
-    require(statuses.nonEmpty, s"no .fgb files under $path")
-    // schema from the first header (driver side, bounded read), like the reference
-    val schema = schemaOf(parseHeader(readHeaderBytes(fs,
-      new org.apache.hadoop.fs.Path(statuses.head._1))))
-    val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
-    // (path, start, end): start<0 = whole file; end<0 = from start to EOF
-    val splits: IndexedSeq[(String, Long, Long)] = bbox match {
-      case Some(_) => statuses.map { case (f, _, _) => (f, -1L, -1L) }.toIndexedSeq
-      case None => planSplits(spark, statuses.toIndexedSeq, maxPart)
-    }
-    val confSer = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(conf))
-    val rdd = spark.sparkContext.parallelize(splits, splits.length).flatMap {
-      case (f, start, end) =>
-        val fp = new org.apache.hadoop.fs.Path(f)
-        val tfs = fp.getFileSystem(confSer.value.value)
-        bbox match {
-          case Some((x0, y0, x1, y1)) => readSelective(tfs, fp, x0, y0, x1, y1)
-          case None if start < 0 => decodeFeatures(readAll(tfs, fp), None)
-          case None => decodeRange(tfs, fp, start, end)
-        }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+           bbox: Option[(Double, Double, Double, Double)] = None): DataFrame =
+    RowFileSource.read(spark, Format(bbox), Seq(path))
 
   /** bbox-selective read — see [[read]]'s `bbox` parameter. */
   def readBbox(spark: SparkSession, path: String,
                xmin: Double, ymin: Double, xmax: Double, ymax: Double): DataFrame =
     read(spark, path, Some((xmin, ymin, xmax, ymax)))
+
+  /** FlatGeobuf as a [[RowFileFormat]]; a split is `(path, start, end)`. */
+  private[sources] final case class Format(bbox: Option[(Double, Double, Double, Double)])
+      extends RowFileFormat[(String, Long, Long)] {
+    def name: String = "flatgeobuf"
+    def suffixes: Seq[String] = Seq(".fgb")
+
+    def schemaOf(session: SparkSession, files: Seq[(String, Long, Long)]): StructType = {
+      val p = new org.apache.hadoop.fs.Path(files.head._1)
+      FlatGeobuf.schemaOf(parseHeader(readHeaderBytes(
+        p.getFileSystem(session.sessionState.newHadoopConf()), p)))
+    }
+
+    // a bbox read keeps whole files: the index seek selects within one
+    def plan(session: SparkSession, files: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] =
+      if (bbox.isDefined) files.map { case (f, _, _) => (f, -1L, -1L) }
+      else planSplits(session, files.toIndexedSeq, session.sessionState.conf.filesMaxPartitionBytes)
+
+    def decode(split: (String, Long, Long), wanted: Array[Boolean],
+               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
+      val (f, start, end) = split
+      val p = new org.apache.hadoop.fs.Path(f)
+      val fs = p.getFileSystem(conf)
+      bbox match {
+        case Some((x0, y0, x1, y1)) => readSelective(fs, p, x0, y0, x1, y1, wanted)
+        case None if start < 0 => decodeFeatures(readAll(fs, p), None, wanted)
+        case None => decodeRange(fs, p, start, end, wanted)
+      }
+    }
+  }
 
   private[sources] def readAll(fs: org.apache.hadoop.fs.FileSystem,
                       p: org.apache.hadoop.fs.Path): Array[Byte] = {
@@ -713,3 +695,13 @@ object FlatGeobuf {
     out
   }
 }
+
+/** `spark.read.format("flatgeobuf")`: the same scan as [[FlatGeobuf.read]]
+  * without a bbox. Catalyst's required-columns pushdown reaches the
+  * decoder: unwanted property values are cursor-skipped without
+  * materializing, and an unwanted geometry is never decoded — on a
+  * wide-schema corpus the dominant per-feature cost. The reference gains
+  * the same effect by mapping only requested columns into arrays
+  * (rust/geoarrow-flatgeobuf/src/reader/common.rs property schema
+  * selection). */
+class FlatGeobufSource extends RowFileSource(FlatGeobuf.Format(None))

@@ -129,7 +129,7 @@ object GeoParquet {
   }
 
   private def footers(spark: SparkSession, path: String): Footers = {
-    installHttpIfUrl(spark, path)
+    HttpFileSystem.installIfUrl(spark, path)
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -621,18 +621,6 @@ object GeoParquet {
         df.where(coarse && refine)
       case None => df
     }
-  }
-
-  /** `http(s)://` datasets read through [[HttpFileSystem]]'s range
-    * requests like FlatGeobuf's (the reference's remote demo path) —
-    * footer seeks and row-group reads become ranged GETs. Installed on
-    * the CONTEXT hadoopConfiguration (defaults only, never overriding a
-    * user binding) because `spark.read.parquet` plans through the
-    * session conf, which inherits from it. */
-  private def installHttpIfUrl(spark: SparkSession, path: String): Unit = {
-    val lower = path.toLowerCase(java.util.Locale.ROOT)
-    if (lower.startsWith("http://") || lower.startsWith("https://"))
-      HttpFileSystem.install(spark.sparkContext.hadoopConfiguration)
   }
 
   /** Reader-level `limit`/`offset` (the reference's pagination options,

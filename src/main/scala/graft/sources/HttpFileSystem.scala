@@ -143,6 +143,17 @@ object HttpFileSystem {
     if (conf.get("fs.https.impl") == null)
       conf.set("fs.https.impl", classOf[HttpsFileSystem].getName)
   }
+
+  /** Before a reader touches an `http(s)://` path: install on the CONTEXT
+    * hadoopConfiguration, which every session conf and every shipped conf
+    * copies. It must run before the first filesystem access, because
+    * Hadoop caches the filesystem it picks per scheme and authority. */
+  private[sources] def installIfUrl(spark: org.apache.spark.sql.SparkSession,
+                                    path: String): Unit = {
+    val lower = path.toLowerCase(java.util.Locale.ROOT)
+    if (lower.startsWith("http://") || lower.startsWith("https://"))
+      install(spark.sparkContext.hadoopConfiguration)
+  }
 }
 
 /** Seekable/PositionedReadable stream over ranged GETs with a per-stream

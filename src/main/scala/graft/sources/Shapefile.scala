@@ -219,25 +219,9 @@ object Shapefile {
 
   // ── public API ────────────────────────────────────────────────────────
 
-  /** List .shp files under `path` (a single file or a directory). */
-  private[sources] def resolveFiles(spark: SparkSession, path: String): Seq[String] =
-    resolveStatuses(spark, path).map(_._1)
-
   private[graft] def resolveStatuses(spark: SparkSession, path: String)
-      : Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.getPath.getName.endsWith(".shp"))
-          .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).toSeq
-      else {
-        val st = fs.getFileStatus(p)
-        Seq((path, st.getLen, st.getModificationTime))
-      }
-    require(files.nonEmpty, s"no .shp files under $path")
-    files
-  }
+      : Seq[(String, Long, Long)] =
+    RowFileSource.list(spark, Format, Seq(path))
 
   // split-plan cache, the FlatGeobuf/ArrowIpc device: (path, size, mtime,
   // maxPart-if-big) re-probes only when the file actually changed; bounded
@@ -474,23 +458,32 @@ object Shapefile {
 
   /** Read .shp(+.dbf) file(s) into a DataFrame (property columns +
     * `geometry` WKB). `path` may be a single .shp or a directory of them.
-    * For Catalyst-driven column pruning use the DSv2 face,
-    * `spark.read.format("shapefile")` ([[ShapefileSource]]). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.GeoFunctions.register(spark)
-    if (path.toLowerCase(java.util.Locale.ROOT).startsWith("http"))
-      HttpFileSystem.install(spark.sparkContext.hadoopConfiguration)
-    val statuses = resolveStatuses(spark, path)
+    * The scan of `spark.read.format("shapefile")`, so Catalyst prunes its
+    * columns down to the decoder. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    RowFileSource.read(spark, Format, Seq(path))
+
+  /** Shapefile as a [[RowFileFormat]]; a split is [[planSplits]]'
+    * `(path, recStart, nRecs, shpByteStart, shpByteEndExcl)`. */
+  private[sources] object Format extends RowFileFormat[(String, Int, Int, Long, Long)] {
+    def name: String = "shapefile"
+    def suffixes: Seq[String] = Seq(".shp")
+
     // schema from the first .dbf (driver side)
-    val p0 = new org.apache.hadoop.fs.Path(statuses.head._1)
-    val schema = schemaOf(p0.getFileSystem(spark.sessionState.newHadoopConf()), statuses.head._1)
-    val splits = planSplits(spark, statuses)
-    val confSer = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val rdd = spark.sparkContext.parallelize(splits, splits.length)
-      .flatMap { case (f, rs, nr, bs, be) =>
-        fileRowsRange(f, rs, nr, bs, be, null, confSer.value.value) }
-    spark.createDataFrame(rdd, schema)
+    def schemaOf(session: SparkSession, files: Seq[(String, Long, Long)]): StructType = {
+      val f = files.head._1
+      Shapefile.schemaOf(
+        new org.apache.hadoop.fs.Path(f).getFileSystem(session.sessionState.newHadoopConf()), f)
+    }
+
+    def plan(session: SparkSession, files: Seq[(String, Long, Long)])
+        : Seq[(String, Int, Int, Long, Long)] = planSplits(session, files)
+
+    def decode(split: (String, Int, Int, Long, Long), wanted: Array[Boolean],
+               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
+      val (f, rs, nr, bs, be) = split
+      fileRowsRange(f, rs, nr, bs, be, wanted, conf)
+    }
   }
 
   private def readAll(fs: org.apache.hadoop.fs.FileSystem,
@@ -510,3 +503,13 @@ object Shapefile {
     out
   }
 }
+
+/** `spark.read.format("shapefile")`: the same scan as [[Shapefile.read]].
+  * Catalyst's required-columns pushdown reaches the decoder, so a
+  * pruned-out DBF column skips its fixed-width parse (offset hop only) and
+  * a pruned-out geometry skips the JTS build entirely — on attribute-only
+  * queries over geometry-heavy files that is most of the per-record cost.
+  * The reference's legacy driver reads all columns unconditionally
+  * (rust/geoarrow-old/src/io/shapefile/reader.rs:34); column selection is
+  * the host engine's job there too. */
+class ShapefileSource extends RowFileSource(Shapefile.Format)
