@@ -416,14 +416,10 @@ object GeomOps {
     * hotter operand (prepared ops take the prepared side as the left
     * receiver, so the cold side's test uses `swapped` — e.g.
     * within(a,b) ⇔ prepared(b).contains(a)). */
-  // measurement hook (BASELINE.md before/after evidence): GRAFT_PRED_NOCACHE=1
-  // bypasses the cache and runs the historical parse-per-row unprepared path
-  private val predCacheOff = sys.env.get("GRAFT_PRED_NOCACHE").contains("1")
   private def pred(a: Array[Byte], b: Array[Byte])(
       plain: (Geometry, Geometry) => Boolean,
       prepLeft: (org.locationtech.jts.geom.prep.PreparedGeometry, Geometry) => Boolean,
       prepRight: (org.locationtech.jts.geom.prep.PreparedGeometry, Geometry) => Boolean): Boolean = {
-    if (predCacheOff) return plain(read(a), read(b))
     val ca = cachedRead(a)
     val cb = cachedRead(b)
     if (ca.hits >= PrepHits && ca.hits >= cb.hits) prepLeft(ca.prepared, cb.geom)

@@ -46,24 +46,9 @@ case class SpatialJoinFoldExec(
     if (buildRight) Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
     else Seq(BroadcastDistribution(IdentityBroadcastMode), UnspecifiedDistribution)
 
-  private def test(p: PreparedGeometry, g: Geometry): Boolean = {
-    val name = if (buildRight) SpatialJoinExec.transpose(predicate) else predicate
-    name match {
-      case "intersects" => p.intersects(g)
-      case "contains" => p.contains(g)
-      case "within" => p.within(g)
-      case "covers" => p.covers(g)
-      case "coveredBy" => p.coveredBy(g)
-      case "touches" => p.touches(g)
-      case "overlaps" => p.overlaps(g)
-      case "crosses" => p.crosses(g)
-      case "equalsTopo" => p.getGeometry.equalsTopo(g)
-      case "dWithin" => p.getGeometry.isWithinDistance(g, radius)
-      case n if SpatialJoinExec.isGeodesicDWithin(n) =>
-        SpatialJoinExec.geodesicTest(n, p.getGeometry, g, radius)
-      case other => throw new IllegalStateException(s"unsupported spatial predicate: $other")
-    }
-  }
+  private def test(p: PreparedGeometry, g: Geometry): Boolean =
+    SpatialJoinExec.refine(
+      if (buildRight) SpatialJoinExec.transpose(predicate) else predicate, radius, p, g)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (buildPlan, streamPlan) = if (buildRight) (right, left) else (left, right)

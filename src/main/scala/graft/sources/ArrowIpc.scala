@@ -107,10 +107,9 @@ object ArrowIpc {
   def schemaOf(spark: SparkSession, path: String): StructType =
     Format.schemaOf(spark, RowFileSource.list(spark, Format, Seq(path)))
 
-  /** [[schemaOf]] of one listed file whose format is known. */
-  private def schemaOfFile(file: String, conf: org.apache.hadoop.conf.Configuration,
-                           fileFormat: Boolean): StructType =
-    withReader(file, conf, fileFormat) { reader =>
+  /** [[schemaOf]] of one listed file. */
+  private def schemaOfFile(file: String, conf: org.apache.hadoop.conf.Configuration): StructType =
+    withReader(file, conf) { reader =>
       val fields0 = reader.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq
       // stream-format dictionaries arrive INLINE with the batches, but the
       // schema message still declares every encoded field's VALUE type:
@@ -409,15 +408,13 @@ object ArrowIpc {
   }
 
   /** True = IPC FILE format (leading "ARROW1" magic, footer-bearing);
-    * false = STREAM format (.arrows — a bare message sequence). Costs one
-    * 6-byte read. */
-  private[sources] def isFileFormat(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val ch = openChannel(path, conf)
-    try {
-      if (ch.size() < 6) false
-      else java.util.Arrays.equals(readFully(ch, 0, 6), "ARROW1".getBytes("US-ASCII"))
-    } finally ch.close()
+    * false = STREAM format (.arrows — a bare message sequence). One 6-byte
+    * read on the open channel, which is left at 0 for the reader. */
+  private def isFileFormat(ch: FsChannel): Boolean = {
+    val file = ch.size() >= 6 &&
+      java.util.Arrays.equals(readFully(ch, 0, 6), "ARROW1".getBytes("US-ASCII"))
+    ch.position(0)
+    file
   }
 
   /** Format-appropriate reader over an open channel. Stream-format files
@@ -430,103 +427,43 @@ object ArrowIpc {
     if (fileFormat) new ArrowFileReader(ch, allocator)
     else new org.apache.arrow.vector.ipc.ArrowStreamReader(ch, allocator)
 
-  private def withReader[T](file: String, conf: org.apache.hadoop.conf.Configuration,
-      fileFormat: Boolean)(f: org.apache.arrow.vector.ipc.ArrowReader => T): T = {
+  private def withReader[T](file: String, conf: org.apache.hadoop.conf.Configuration)(
+      f: org.apache.arrow.vector.ipc.ArrowReader => T): T = {
     val ch = openChannel(file, conf)
     val allocator = new RootAllocator()
-    val reader = openReader(ch, allocator, fileFormat)
+    val reader = openReader(ch, allocator, isFileFormat(ch))
     try f(reader)
     finally { reader.close(); allocator.close(); ch.close() }
   }
 
-  // split-plan + wire-format cache, the FlatGeobuf device: a (path, size,
-  // mtime, maxPart-if-big) key re-probes only when the file actually
-  // changed; bounded like FlatGeobuf.planSplits so a long-lived driver
-  // scanning many changing files never grows the map without bound
-  private val splitPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), (Boolean, IndexedSeq[(Int, Int)])]()
-
   /** One large IPC file never splits with the stock one-file-one-task model
     * — a 50 GB .arrow would decode in a single task. The file FOOTER lists
     * every record-batch block (offset + metadata + body lengths), so a big
-    * file partitions into contiguous BATCH ranges sized to
-    * `spark.sql.files.maxPartitionBytes`, the same discipline as the
-    * FlatGeobuf index splits. Returns (path, startBlock, endBlockExcl,
-    * isFileFormat); (-1, -1) = whole file. Probing (6-byte magic for every
-    * file, footer blocks for big file-format ones) covers the cache misses
-    * only: up to 64 of them on the driver's shared IO pool, as
-    * GeoParquet's footer reads do, so a cold read of a few files starts no
-    * extra job; past 64 as ONE Spark job, so thousands of files scale out
-    * with the executors. The cached format flag rides into every task, so
-    * the decode path re-probes nothing. */
-  private[sources] def planSplits(spark: SparkSession,
-      statuses: Seq[(String, Long, Long)]): IndexedSeq[(String, Int, Int, Boolean)] = {
-    val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
-    // a small file's plan is (-1,-1) regardless of maxPart — key those 0L so
-    // a session maxPartitionBytes change doesn't invalidate them
-    def key(f: String, len: Long, mt: Long) =
-      (f, len, mt, if (len > maxPart) maxPart else 0L)
-    val cached = statuses.flatMap { case (f, len, mt) =>
-      Option(splitPlanCache.get(key(f, len, mt))).map(f -> _)
-    }.toMap
-    val miss = statuses.filterNot { case (f, _, _) => cached.contains(f) }
-    val probed: Map[String, (Boolean, IndexedSeq[(Int, Int)])] =
-      if (miss.isEmpty) Map.empty
-      else if (miss.length <= 64) {
-        val conf = spark.sessionState.newHadoopConf()
-        GeoParquet.ioPool.invokeAll(miss.map { case (f, len, _) =>
-          (() => f -> probeSplits(f, len, conf, maxPart))
-            : java.util.concurrent.Callable[(String, (Boolean, IndexedSeq[(Int, Int)]))]
-        }.asJava).asScala.map(_.get()).toMap
-      } else {
-        val confSer = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        val mp = maxPart
-        spark.sparkContext.parallelize(miss, miss.length)
-          .map { case (f, len, _) => f -> probeSplits(f, len, confSer.value.value, mp) }
-          .collect().toMap
-      }
-    // bound only when this plan actually inserts — an unconditional clear
-    // would make every other read of a >4096-file dataset re-probe it all
-    if (miss.nonEmpty && splitPlanCache.size() + miss.size > 4096) splitPlanCache.clear()
-    miss.foreach { case (f, len, mt) => splitPlanCache.put(key(f, len, mt), probed(f)) }
-    val all = cached ++ probed
-    statuses.flatMap { case (f, _, _) =>
-      val (fmt, ranges) = all(f)
-      ranges.map { case (s, e) => (f, s, e, fmt) }
-    }.toIndexedSeq
-  }
-
-  /** (isFileFormat, batch ranges) of one file: a small file, or a big
-    * STREAM file (no footer), is one task (-1, -1); a big FILE-format one
-    * splits its footer's record-batch blocks into ranges of about
-    * `maxPart` bytes. */
-  private def probeSplits(f: String, len: Long, conf: org.apache.hadoop.conf.Configuration,
-                          maxPart: Long): (Boolean, IndexedSeq[(Int, Int)]) = {
-    val fileFmt = isFileFormat(f, conf)
-    if (!fileFmt || len <= maxPart) (fileFmt, IndexedSeq((-1, -1)))
-    else {
-      val ch = openChannel(f, conf)
-      val allocator = new RootAllocator()
-      val reader = new ArrowFileReader(ch, allocator)
-      try {
+    * file partitions into contiguous BATCH ranges of about
+    * `maxPartitionBytes`, the same discipline as the FlatGeobuf index
+    * splits. Returns (path, startBlock, endBlockExcl); (-1, -1) = whole
+    * file, as is a STREAM file (no footer). */
+  private def blockSplits(f: String, maxPartitionBytes: Long,
+                          conf: org.apache.hadoop.conf.Configuration): Seq[(String, Int, Int)] =
+    withReader(f, conf) {
+      case reader: ArrowFileReader =>
         val blocks = reader.getRecordBlocks.asScala.toIndexedSeq
-        val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+        val groups = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
         var start = 0
         var acc = 0L
         var i = 0
         while (i < blocks.length) {
           val sz = blocks(i).getMetadataLength + blocks(i).getBodyLength
-          if (i > start && acc + sz > maxPart) { groups += ((start, i)); start = i; acc = 0L }
+          if (i > start && acc + sz > maxPartitionBytes) {
+            groups += ((f, start, i)); start = i; acc = 0L
+          }
           acc += sz
           i += 1
         }
-        if (start < blocks.length) groups += ((start, blocks.length))
-        (true, groups.toIndexedSeq)
-      } finally { reader.close(); allocator.close(); ch.close() }
+        if (start < blocks.length) groups += ((f, start, blocks.length))
+        if (groups.length <= 1) Seq(Format.whole(f)) else groups.toSeq
+      case _ => Seq(Format.whole(f))
     }
-  }
 
   // diagnostics (spec-proof of decode-level pruning; same device as
   // FlatGeobuf.decodedPropValues / Shapefile.decodedGeoms)
@@ -729,353 +666,288 @@ object ArrowIpc {
     }
   }
 
-  /** Byte-level pruned decode: reads the file FOOTER for the record-batch
-    * blocks, then per batch reads only the message HEADER (node and buffer
-    * offsets) plus the body byte ranges of the `wanted` columns — a pruned
-    * column's buffers are never fetched from storage, matching the
-    * columnar-IPC projection discipline of the reference's readers
-    * (rust/geoarrow-old/benches/wkb.rs:20-21 ProjectionMask). The surviving
-    * buffers are reassembled into a reduced-schema `ArrowRecordBatch` and
-    * loaded through the stock `VectorLoader`, so decode semantics are
-    * identical to the full path. Compressed bodies (LZ4/ZSTD
-    * tags — GDAL's .arrow default) pass their `BodyCompression` through to
-    * a compression-capable `VectorLoader`, so the prune skips the pruned
-    * columns' COMPRESSED extents. Dictionary-encoded columns prune
-    * natively at ANY nesting depth (their wire batches are index buffers;
-    * the dictionary batches load once up front via the stock reader's
-    * initialize; nested children resolve per cell through
-    * [[resolveNestedDicts]]). View-typed columns (Utf8View/BinaryView —
-    * the reference treats WkbView/WktView as first-class geometry types,
-    * rust/geoarrow-schema/src/datatype.rs:50-66) prune natively too:
-    * their per-batch variadic data buffers are sized from the
-    * RecordBatch's `variadicBufferCounts` and the reassembled batch
-    * re-declares the kept counts for the loader. ListView/LargeListView
-    * (3 fixed buffers: validity/offsets/sizes) and RunEndEncoded (0 own
-    * buffers, children [run_ends, values] carry their own nodes+buffers)
-    * follow the same pre-order buffer-run arithmetic — every layout that
-    * passes [[schemaOf]] prunes natively; there is no full-reader
-    * fallback. */
-  private[graft] def decodeFilePruned(path: String, conf: org.apache.hadoop.conf.Configuration,
-                                        wanted: Array[Boolean],
-                                        blockStart: Int = -1,
-                                        blockEnd: Int = -1): Iterator[Row] = {
-    import org.apache.arrow.vector.ipc.message.{ArrowFieldNode, ArrowRecordBatch, MessageSerializer}
-    import org.apache.arrow.vector.ipc.ReadChannel
-    val ch = openChannel(path, conf)
-    val allocator = new RootAllocator()
-    val reader = new ArrowFileReader(ch, allocator) // footer + schema only
-    var reducedRoot: org.apache.arrow.vector.VectorSchemaRoot = null
-    var closed = false
-    def closeAll(): Unit = if (!closed) {
-      closed = true
-      try { if (reducedRoot != null) reducedRoot.close() }
-      finally { try reader.close() finally { try allocator.close() finally ch.close() } }
-    }
-    try {
-      val schema = reader.getVectorSchemaRoot.getSchema
-      val fields = schema.getFields.asScala.toArray
-      require(fields.length == wanted.length, s"ArrowIpc: wanted mask arity ${wanted.length} != ${fields.length}")
-      val allBlocks = reader.getRecordBlocks.asScala.toIndexedSeq
-      // a batch-range split (planSplits) decodes only its slice of blocks
-      val blocks =
-        if (blockStart < 0) allBlocks else allBlocks.slice(blockStart, blockEnd)
-      val keepIdx = fields.indices.filter(wanted(_)).toArray
-      val reducedFields = keepIdx.map(fields(_))
-      // top-level dictionary-encoded columns: per-cell index → value lookup
-      // against the reader-owned dictionary vectors (complete before any
-      // record batch is read — file-format dictionaries precede batches)
-      val dicts: Array[org.apache.arrow.vector.dictionary.Dictionary] =
-        reducedFields.map(f => Option(f.getDictionary)
-          .map(enc => reader.lookup(enc.getId)).orNull)
-      // dictionary-encoded CHILDREN (struct/list subtrees): the wire
-      // batches hold their index buffers (the in-memory Field carries the
-      // index type, so the buffer-run arithmetic below is already exact);
-      // values resolve per cell through [[resolveNestedDicts]]
-      val nestedDict: Array[Boolean] =
-        reducedFields.map(_.getChildren.asScala.exists(hasDictionary))
-      reducedRoot = org.apache.arrow.vector.VectorSchemaRoot.create(
-        new org.apache.arrow.vector.types.pojo.Schema(reducedFields.toSeq.asJava), allocator)
-      // compression-capable loader: a batch tagged LZ4/ZSTD (GDAL's default
-      // for .arrow) decompresses per buffer on load; the byte-level prune
-      // still skips pruned columns' COMPRESSED extents, which is strictly
-      // more bytes saved
-      val loader = new org.apache.arrow.vector.VectorLoader(
-        reducedRoot, org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
-      val geoExt = reducedFields.map(f => Option(f.getMetadata.get("ARROW:extension:name"))
-        .filter(_.startsWith("geoarrow.")))
-      // geometry columns decode through per-column closures with VECTOR
-      // access (union extensions need type ids); one converter closure per
-      // kept PROPERTY column — field walk + type dispatch happen here, not
-      // per cell
-      val geoDec = reducedFields.zip(geoExt).map { case (f, e) => e.map(geoDecoder(f, _, reader.lookup)).orNull }
-      val toSpark = reducedFields.zip(geoExt).map { case (f, e) =>
-        if (e.isDefined) null else valueConverter(f, reader.lookup) }
-      val nodeRuns = fields.map(subtreeNodes)
-      val bufRuns = fields.map(subtreeBuffers)
-      val viewSlots = fields.map(subtreeViewSlots)
-      val totalViewSlots = viewSlots.sum
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-      new Iterator[Row] {
-        private var blockIdx = 0
-        private var i = 0
-        private var batchRows = 0
-        private var done = false
-        private def loadBlock(): Unit = {
-          val block = blocks(blockIdx)
-          ch.position(block.getOffset)
-          val msg = MessageSerializer.readMessage(new ReadChannel(ch)).getMessage
-          val rb = msg.header(new org.apache.arrow.flatbuf.RecordBatch())
-            .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch]
-          // view columns declare their per-batch variadic data-buffer
-          // counts here, one entry per view-typed node in schema pre-order;
-          // a count vector that disagrees with the schema's view slots
-          // would mis-slice every subsequent column — refuse loudly
-          require(rb.variadicBufferCountsLength() == totalViewSlots,
-            s"ArrowIpc: $path declares ${rb.variadicBufferCountsLength()} variadic " +
-              s"buffer counts but the schema has $totalViewSlots view-typed nodes")
-          val bodyStart = block.getOffset + block.getMetadataLength
-          val nodes = new java.util.ArrayList[ArrowFieldNode]()
-          val bufs = new java.util.ArrayList[org.apache.arrow.memory.ArrowBuf]()
-          // variadic counts for the KEPT view slots, reduced pre-order —
-          // the reassembled batch must declare them for VectorLoader to
-          // route the extra data buffers to the view vectors
-          val keptVariadic = new java.util.ArrayList[java.lang.Long]()
-          var n = 0
-          var b = 0
-          var v = 0
-          var c = 0
-          while (c < fields.length) {
-            // this batch's buffer-run length for the column = the fixed
-            // subtree count + the variadic data buffers its view nodes
-            // declare (each view node lays out [validity, views, data…])
-            var extra = 0L
-            var s = 0
-            while (s < viewSlots(c)) {
-              val cnt = rb.variadicBufferCounts(v + s)
-              extra += cnt
-              if (wanted(c)) keptVariadic.add(cnt)
-              s += 1
-            }
-            val runLen = bufRuns(c) + extra.toInt
-            if (wanted(c)) {
-              var j = n
-              while (j < n + nodeRuns(c)) {
-                val fn = rb.nodes(j)
-                nodes.add(new ArrowFieldNode(fn.length(), fn.nullCount()))
-                j += 1
-              }
-              j = b
-              while (j < b + runLen) {
-                val bufMeta = rb.buffers(j)
-                val len = bufMeta.length()
-                val ab = allocator.buffer(len)
-                if (len > 0) readIntoBuf(ch, bodyStart + bufMeta.offset(), len, ab)
-                ab.writerIndex(len)
-                bufs.add(ab)
-                bodyBytesRead.add(len)
-                j += 1
-              }
-            }
-            n += nodeRuns(c); b += runLen; v += viewSlots(c); c += 1
-          }
-          bodyBytesTotal.add(block.getBodyLength)
-          val bodyCompression = Option(rb.compression()) match {
-            case Some(bc) =>
-              new org.apache.arrow.vector.ipc.message.ArrowBodyCompression(bc.codec(), bc.method())
-            case None => org.apache.arrow.vector.compression.NoCompressionCodec.DEFAULT_BODY_COMPRESSION
-          }
-          val batch = new ArrowRecordBatch(rb.length().toInt, nodes, bufs,
-            bodyCompression, keptVariadic, true)
-          // refcount contract (verified against arrow-vector 18.3.0 bytecode):
-          // ctor retains each buffer once (alloc 1 → 2). Uncompressed load:
-          // loadFieldBuffers retains for the vectors (3); batch.close (2);
-          // our release (1 = the vectors'). Compressed load: the codec closes
-          // the input (1) but VectorLoader.loadBuffers RE-RETAINS the
-          // original right after (2 — the compensation at its
-          // decompressionNeeded branch), vectors own the NEW decompressed
-          // buffers; batch.close (1); our release (0). Releasing BEFORE load
-          // instead would unmap compressed buffers mid-load.
-          try loader.load(batch) finally batch.close()
-          bufs.asScala.foreach(_.getReferenceManager.release())
-          batchRows = reducedRoot.getRowCount
-          i = 0
-          blockIdx += 1
-        }
-        private def advance(): Unit =
-          while (!done && i >= batchRows) {
-            if (blockIdx < blocks.length) loadBlock()
-            else { done = true; closeAll() }
-          }
-        override def hasNext: Boolean = { advance(); !done }
-        override def next(): Row = {
-          advance()
-          if (done) throw new NoSuchElementException("exhausted " + path)
-          val vals = new Array[Any](fields.length)
-          var k = 0
-          while (k < keepIdx.length) {
-            if (geoDec(k) != null) {
-              val g = geoDec(k)(reducedRoot.getVector(k), i)
-              vals(keepIdx(k)) = if (g == null) null
-                                 else { decodedGeoms.increment(); GeomOps.write(g) }
-            } else {
-              val raw0 = reducedRoot.getVector(k).getObject(i)
-              val raw =
-                if (raw0 != null && dicts(k) != null)
-                  dicts(k).getVector.getObject(raw0.asInstanceOf[Number].intValue())
-                else if (raw0 != null && nestedDict(k))
-                  resolveNestedDicts(reducedFields(k), raw0, reader.lookup)
-                else raw0
-              vals(keepIdx(k)) =
-                if (raw == null) null
-                else { decodedCells.increment(); toSpark(k)(raw) }
-            }
-            k += 1
-          }
-          i += 1
-          Row.fromSeq(vals.toIndexedSeq)
-        }
-      }
-    } catch { case e: Throwable => closeAll(); throw e }
-  }
-
-  /** Streams rows batch-by-batch: only one IPC record batch is resident at
-    * a time, so a multi-GB file never materializes in the task. Resources
-    * close when the file is exhausted AND on task completion (whichever
-    * comes first — a `LIMIT` may abandon the iterator mid-file).
+  /** The rows of `path`'s record batches [blockStart, blockEnd) (all
+    * when -1), streamed batch by batch: only one IPC record batch is
+    * resident at a time, so a multi-GB file never materializes in the
+    * task. A 6-byte magic read on the opened channel tells the FILE format
+    * (footer-bearing) from the STREAM format (.arrows); only a file-format
+    * file splits into block ranges. Resources close when the rows are
+    * exhausted AND on task completion (whichever comes first — a `LIMIT`
+    * may abandon the iterator mid-file).
     *
     * `wanted` (full schema order; null = all) skips per-cell
     * materialization of pruned-out columns — the Arrow getObject boxing,
     * Text→String copies and, for geometry columns, the JTS build + WKB
-    * serialization that dominate per-row cost. The IPC record batch
-    * itself still loads (an IPC frame is one contiguous message; true
-    * buffer-level skip would need footer-driven selective loading), so
-    * this prunes CPU, not file IO. */
+    * serialization that dominate per-row cost. Both batch loaders feed
+    * the one row iterator [[rows]]:
+    *
+    *  - the stock reader loads whole batches, so pruning saves CPU, not
+    *    file IO;
+    *  - with `pruneBytes`, on a file-format file whose `wanted` drops a
+    *    column, a byte-level pruned load reads the FOOTER for the blocks,
+    *    then per batch only the message HEADER (node and buffer offsets)
+    *    plus the body byte ranges of the `wanted` columns — a pruned
+    *    column's buffers are never fetched from storage, matching the
+    *    columnar-IPC projection discipline of the reference's readers
+    *    (rust/geoarrow-old/benches/wkb.rs:20-21 ProjectionMask). The
+    *    surviving buffers are reassembled into a reduced-schema
+    *    `ArrowRecordBatch` and loaded through the stock `VectorLoader`, so
+    *    decode semantics are identical to the stock load. Compressed
+    *    bodies (LZ4/ZSTD tags — GDAL's .arrow default) pass their
+    *    `BodyCompression` through to a compression-capable `VectorLoader`,
+    *    so the prune skips the pruned columns' COMPRESSED extents.
+    *    Dictionary-encoded columns prune natively at ANY nesting depth
+    *    (their wire batches are index buffers; the dictionary batches load
+    *    once up front via the reader's initialize; nested children resolve
+    *    per cell through [[resolveNestedDicts]]). View-typed columns
+    *    (Utf8View/BinaryView — the reference treats WkbView/WktView as
+    *    first-class geometry types, rust/geoarrow-schema/src/
+    *    datatype.rs:50-66) prune natively too: their per-batch variadic
+    *    data buffers are sized from the RecordBatch's
+    *    `variadicBufferCounts` and the reassembled batch re-declares the
+    *    kept counts for the loader. ListView/LargeListView (3 fixed
+    *    buffers: validity/offsets/sizes) and RunEndEncoded (0 own buffers,
+    *    children [run_ends, values] carry their own nodes+buffers) follow
+    *    the same pre-order buffer-run arithmetic — every layout that
+    *    passes [[schemaOf]] prunes natively. */
   private[graft] def decodeFile(path: String, conf: org.apache.hadoop.conf.Configuration,
-                         wanted: Array[Boolean] = null,
-                         blockStart: Int = -1,
-                         blockEnd: Int = -1,
-                         knownFormat: Option[Boolean] = None): Iterator[Row] = {
-    val fileFormat = knownFormat.getOrElse(isFileFormat(path, conf))
+                                wanted: Array[Boolean] = null,
+                                blockStart: Int = -1,
+                                blockEnd: Int = -1,
+                                pruneBytes: Boolean = false): Iterator[Row] = {
+    import org.apache.arrow.vector.ipc.message.{ArrowFieldNode, ArrowRecordBatch, MessageSerializer}
+    import org.apache.arrow.vector.ipc.ReadChannel
     val ch = openChannel(path, conf)
     val allocator = new RootAllocator()
-    val reader = openReader(ch, allocator, fileFormat)
+    var reader: org.apache.arrow.vector.ipc.ArrowReader = null
+    var pruned: org.apache.arrow.vector.VectorSchemaRoot = null
     var closed = false
     def closeAll(): Unit = if (!closed) {
       closed = true
-      try reader.close() finally { try allocator.close() finally ch.close() }
+      try { if (pruned != null) pruned.close() }
+      finally {
+        try { if (reader != null) reader.close() }
+        finally { try allocator.close() finally ch.close() }
+      }
     }
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
     try {
-      // batch-range split: random-access the slice's blocks via the footer
-      // (file format only — planSplits never splits a stream file)
-      val rangeBlocks: IndexedSeq[org.apache.arrow.vector.ipc.message.ArrowBlock] =
-        if (blockStart < 0) null
-        else reader.asInstanceOf[ArrowFileReader]
-          .getRecordBlocks.asScala.toIndexedSeq.slice(blockStart, blockEnd)
-      var rangeIdx = 0
-      def loadNext(): Boolean =
-        if (rangeBlocks == null) reader.loadNextBatch()
-        else if (rangeIdx < rangeBlocks.length) {
-          val ok = reader.asInstanceOf[ArrowFileReader]
-            .loadRecordBatch(rangeBlocks(rangeIdx)); rangeIdx += 1; ok
-        } else false
-      val root = reader.getVectorSchemaRoot
-      val fields = root.getSchema.getFields.asScala.toArray
-      val geoExt = fields.map(f => Option(f.getMetadata.get("ARROW:extension:name"))
-        .filter(_.startsWith("geoarrow.")))
-      // top-level dictionary-encoded columns decode per cell (index → value);
-      // without this the raw getObject would return the INDEX as data
-      val dicts: Array[org.apache.arrow.vector.dictionary.Dictionary] =
-        fields.map(f => Option(f.getDictionary)
-          .map(enc => reader.lookup(enc.getId)).orNull)
-      // dictionary-encoded children (struct/list subtrees) resolve per cell
-      val nestedDict: Array[Boolean] =
-        fields.map(_.getChildren.asScala.exists(hasDictionary))
-      // geometry columns decode through a per-column closure with VECTOR
-      // access (union-backed extensions need type ids, which getObject
-      // erases); property columns get one converter closure each — built
-      // only for non-geo columns so a union-typed geometry never hits the
-      // property-type dispatch
-      val geoDec = fields.zip(geoExt).map { case (f, e) => e.map(geoDecoder(f, _, reader.lookup)).orNull }
-      val toSpark = fields.zip(geoExt).map { case (f, e) =>
-        if (e.isDefined) null else valueConverter(f, reader.lookup) }
-      new Iterator[Row] {
-        private var i = 0
-        private var batchRows = 0
-        private var done = false
-        private def advance(): Unit =
-          while (!done && i >= batchRows) {
-            if (loadNext()) { batchRows = root.getRowCount; i = 0 }
-            else { done = true; closeAll() }
-          }
-        override def hasNext: Boolean = { advance(); !done }
-        override def next(): Row = {
-          advance()
-          if (done) throw new NoSuchElementException("exhausted " + path)
-          val vals = new Array[Any](fields.length)
-          var c = 0
-          while (c < fields.length) {
-            if (wanted != null && !wanted(c)) vals(c) = null
-            else if (geoDec(c) != null) {
-              val g = geoDec(c)(root.getVector(c), i)
-              vals(c) = if (g == null) null
-                        else { decodedGeoms.increment(); GeomOps.write(g) }
-            } else {
-              val raw0 = root.getVector(c).getObject(i)
-              val raw =
-                if (raw0 != null && dicts(c) != null)
-                  dicts(c).getVector.getObject(raw0.asInstanceOf[Number].intValue())
-                else if (raw0 != null && nestedDict(c))
-                  resolveNestedDicts(fields(c), raw0, reader.lookup)
-                else raw0
-              vals(c) =
-                if (raw == null) null
-                else { decodedCells.increment(); toSpark(c)(raw) }
+      reader = openReader(ch, allocator, isFileFormat(ch))
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
+      val fields = reader.getVectorSchemaRoot.getSchema.getFields.asScala.toArray
+      require(wanted == null || fields.length == wanted.length,
+        s"ArrowIpc: wanted mask arity ${wanted.length} != ${fields.length}")
+      val keepIdx = fields.indices.filter(c => wanted == null || wanted(c)).toArray
+      // a batch-range split decodes only its slice of the footer's blocks
+      def blocks(r: ArrowFileReader) = {
+        val all = r.getRecordBlocks.asScala.toIndexedSeq
+        if (blockStart < 0) all else all.slice(blockStart, blockEnd)
+      }
+      reader match {
+        case r: ArrowFileReader if pruneBytes && keepIdx.length < fields.length =>
+          val bs = blocks(r)
+          pruned = org.apache.arrow.vector.VectorSchemaRoot.create(
+            new org.apache.arrow.vector.types.pojo.Schema(keepIdx.toSeq.map(fields(_)).asJava),
+            allocator)
+          // compression-capable loader: a batch tagged LZ4/ZSTD (GDAL's
+          // default for .arrow) decompresses per buffer on load; the
+          // byte-level prune still skips pruned columns' COMPRESSED
+          // extents, which is strictly more bytes saved
+          val loader = new org.apache.arrow.vector.VectorLoader(
+            pruned, org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
+          // a dictionary-encoded field carries its INDEX type in memory, so
+          // these runs match the wire batch's index buffers exactly
+          val nodeRuns = fields.map(subtreeNodes)
+          val bufRuns = fields.map(subtreeBuffers)
+          val viewSlots = fields.map(subtreeViewSlots)
+          val totalViewSlots = viewSlots.sum
+          var blockIdx = 0
+          def loadBlock(): Boolean = blockIdx < bs.length && {
+            val block = bs(blockIdx)
+            ch.position(block.getOffset)
+            val msg = MessageSerializer.readMessage(new ReadChannel(ch)).getMessage
+            val rb = msg.header(new org.apache.arrow.flatbuf.RecordBatch())
+              .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch]
+            // view columns declare their per-batch variadic data-buffer
+            // counts here, one entry per view-typed node in schema pre-order;
+            // a count vector that disagrees with the schema's view slots
+            // would mis-slice every subsequent column — refuse loudly
+            require(rb.variadicBufferCountsLength() == totalViewSlots,
+              s"ArrowIpc: $path declares ${rb.variadicBufferCountsLength()} variadic " +
+                s"buffer counts but the schema has $totalViewSlots view-typed nodes")
+            val bodyStart = block.getOffset + block.getMetadataLength
+            val nodes = new java.util.ArrayList[ArrowFieldNode]()
+            val bufs = new java.util.ArrayList[org.apache.arrow.memory.ArrowBuf]()
+            // variadic counts for the KEPT view slots, reduced pre-order —
+            // the reassembled batch must declare them for VectorLoader to
+            // route the extra data buffers to the view vectors
+            val keptVariadic = new java.util.ArrayList[java.lang.Long]()
+            var n = 0
+            var b = 0
+            var v = 0
+            var c = 0
+            while (c < fields.length) {
+              // this batch's buffer-run length for the column = the fixed
+              // subtree count + the variadic data buffers its view nodes
+              // declare (each view node lays out [validity, views, data…])
+              var extra = 0L
+              var s = 0
+              while (s < viewSlots(c)) {
+                val cnt = rb.variadicBufferCounts(v + s)
+                extra += cnt
+                if (wanted(c)) keptVariadic.add(cnt)
+                s += 1
+              }
+              val runLen = bufRuns(c) + extra.toInt
+              if (wanted(c)) {
+                var j = n
+                while (j < n + nodeRuns(c)) {
+                  val fn = rb.nodes(j)
+                  nodes.add(new ArrowFieldNode(fn.length(), fn.nullCount()))
+                  j += 1
+                }
+                j = b
+                while (j < b + runLen) {
+                  val bufMeta = rb.buffers(j)
+                  val len = bufMeta.length()
+                  val ab = allocator.buffer(len)
+                  if (len > 0) readIntoBuf(ch, bodyStart + bufMeta.offset(), len, ab)
+                  ab.writerIndex(len)
+                  bufs.add(ab)
+                  bodyBytesRead.add(len)
+                  j += 1
+                }
+              }
+              n += nodeRuns(c); b += runLen; v += viewSlots(c); c += 1
             }
-            c += 1
+            bodyBytesTotal.add(block.getBodyLength)
+            val bodyCompression = Option(rb.compression()) match {
+              case Some(bc) =>
+                new org.apache.arrow.vector.ipc.message.ArrowBodyCompression(bc.codec(), bc.method())
+              case None => org.apache.arrow.vector.compression.NoCompressionCodec.DEFAULT_BODY_COMPRESSION
+            }
+            val batch = new ArrowRecordBatch(rb.length().toInt, nodes, bufs,
+              bodyCompression, keptVariadic, true)
+            // refcount contract (verified against arrow-vector 18.3.0 bytecode):
+            // ctor retains each buffer once (alloc 1 → 2). Uncompressed load:
+            // loadFieldBuffers retains for the vectors (3); batch.close (2);
+            // our release (1 = the vectors'). Compressed load: the codec closes
+            // the input (1) but VectorLoader.loadBuffers RE-RETAINS the
+            // original right after (2 — the compensation at its
+            // decompressionNeeded branch), vectors own the NEW decompressed
+            // buffers; batch.close (1); our release (0). Releasing BEFORE load
+            // instead would unmap compressed buffers mid-load.
+            try loader.load(batch) finally batch.close()
+            bufs.asScala.foreach(_.getReferenceManager.release())
+            blockIdx += 1
+            true
           }
-          i += 1
-          Row.fromSeq(vals.toIndexedSeq)
-        }
+          // the pruned root holds the kept columns in order: its column k
+          // is the schema's column keepIdx(k)
+          rows(path, pruned, r.lookup, fields.length, keepIdx.indices.toArray, keepIdx,
+            () => loadBlock(), () => closeAll())
+        case r: ArrowFileReader if blockStart >= 0 =>
+          val bs = blocks(r)
+          var k = 0
+          rows(path, r.getVectorSchemaRoot, r.lookup, fields.length, keepIdx, keepIdx,
+            () => k < bs.length && { val ok = r.loadRecordBatch(bs(k)); k += 1; ok },
+            () => closeAll())
+        case r =>
+          rows(path, r.getVectorSchemaRoot, r.lookup, fields.length, keepIdx, keepIdx,
+            () => r.loadNextBatch(), () => closeAll())
       }
     } catch { case e: Throwable => closeAll(); throw e }
+  }
+
+  /** The one per-row decode of both batch loaders: `load` puts the next
+    * batch into `root` (false when none is left), and root column
+    * `cols(k)` fills slot `slots(k)` of each `width`-wide row; the other
+    * slots stay null. The per-column setup — geometry decoder, dictionary
+    * lookup, value converter — happens once here, not per cell. */
+  private def rows(path: String, root: org.apache.arrow.vector.VectorSchemaRoot,
+                   lookup: Long => org.apache.arrow.vector.dictionary.Dictionary,
+                   width: Int, cols: Array[Int], slots: Array[Int],
+                   load: () => Boolean, closeAll: () => Unit): Iterator[Row] = {
+    val fields = cols.map(root.getSchema.getFields.get(_))
+    // geometry columns decode through a per-column closure with VECTOR
+    // access (union-backed extensions need type ids, which getObject
+    // erases); property columns get one converter closure each — built
+    // only for non-geo columns so a union-typed geometry never hits the
+    // property-type dispatch
+    val geoDec = fields.map(f => Option(f.getMetadata.get("ARROW:extension:name"))
+      .filter(_.startsWith("geoarrow.")).map(geoDecoder(f, _, lookup)).orNull)
+    val toSpark = fields.indices.map(k =>
+      if (geoDec(k) != null) null else valueConverter(fields(k), lookup)).toArray
+    // top-level dictionary-encoded columns decode per cell (index → value);
+    // without this the raw getObject would return the INDEX as data
+    val dicts = fields.map(f => Option(f.getDictionary).map(enc => lookup(enc.getId)).orNull)
+    // dictionary-encoded children (struct/list subtrees) resolve per cell
+    val nestedDict = fields.map(_.getChildren.asScala.exists(hasDictionary))
+    new Iterator[Row] {
+      private var i = 0
+      private var batchRows = 0
+      private var done = false
+      private def advance(): Unit =
+        while (!done && i >= batchRows) {
+          if (load()) { batchRows = root.getRowCount; i = 0 }
+          else { done = true; closeAll() }
+        }
+      override def hasNext: Boolean = { advance(); !done }
+      override def next(): Row = {
+        advance()
+        if (done) throw new NoSuchElementException("exhausted " + path)
+        val vals = new Array[Any](width)
+        var k = 0
+        while (k < cols.length) {
+          val vec = root.getVector(cols(k))
+          vals(slots(k)) =
+            if (geoDec(k) != null) {
+              val g = geoDec(k)(vec, i)
+              if (g == null) null else { decodedGeoms.increment(); GeomOps.write(g) }
+            } else {
+              val raw0 = vec.getObject(i)
+              val raw =
+                if (raw0 != null && dicts(k) != null)
+                  dicts(k).getVector.getObject(raw0.asInstanceOf[Number].intValue())
+                else if (raw0 != null && nestedDict(k))
+                  resolveNestedDicts(fields(k), raw0, lookup)
+                else raw0
+              if (raw == null) null else { decodedCells.increment(); toSpark(k)(raw) }
+            }
+          k += 1
+        }
+        i += 1
+        Row.fromSeq(vals.toIndexedSeq)
+      }
+    }
   }
 
   /** Read .arrow file(s) into a DataFrame; geometry columns become WKB.
     * The scan of `spark.read.format("arrowipc")`, so Catalyst prunes its
     * columns down to the decoder. Files larger than
     * `spark.sql.files.maxPartitionBytes` split into batch-range tasks via
-    * [[planSplits]]. */
+    * [[blockSplits]]. */
   def read(spark: SparkSession, path: String): DataFrame =
     RowFileSource.read(spark, Format, Seq(path))
 
-  /** Arrow IPC as a [[RowFileFormat]]; a split is [[planSplits]]'
-    * `(path, startBlock, endBlockExcl, isFileFormat)`. */
-  private[sources] object Format extends RowFileFormat[(String, Int, Int, Boolean)] {
+  /** Arrow IPC as a [[RowFileFormat]]; a split is [[blockSplits]]'
+    * `(path, startBlock, endBlockExcl)`. */
+  private[sources] object Format extends RowFileFormat[(String, Int, Int)] {
     def name: String = "arrowipc"
     def suffixes: Seq[String] = Seq(".arrow", ".arrows") // .arrows: stream format
 
-    // planning first probes every file's format into the split-plan cache,
-    // so the schema read re-probes nothing and the scan plans from the cache
-    def schemaOf(session: SparkSession, files: Seq[(String, Long, Long)]): StructType = {
-      val (f, _, _, fileFormat) = planSplits(session, files).head
-      schemaOfFile(f, session.sessionState.newHadoopConf(), fileFormat)
-    }
+    def schemaOf(session: SparkSession, files: Seq[(String, Long, Long)]): StructType =
+      schemaOfFile(files.head._1, session.sessionState.newHadoopConf())
 
-    def plan(session: SparkSession, files: Seq[(String, Long, Long)])
-        : Seq[(String, Int, Int, Boolean)] = planSplits(session, files)
+    def whole(path: String): (String, Int, Int) = (path, -1, -1)
 
-    // byte-level pruning when a proper subset of columns is required (a
-    // stream file has no footer to prune by); the format flag comes from
-    // planning, so no task re-probes it against an object store
-    def decode(split: (String, Int, Int, Boolean), wanted: Array[Boolean],
-               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
-      val (f, s, e, fileFormat) = split
-      if (wanted.forall(identity) || !fileFormat) decodeFile(f, conf, wanted, s, e, Some(fileFormat))
-      else decodeFilePruned(f, conf, wanted, s, e)
-    }
+    def probe(path: String, size: Long, maxPartitionBytes: Long,
+              conf: org.apache.hadoop.conf.Configuration): Seq[(String, Int, Int)] =
+      blockSplits(path, maxPartitionBytes, conf)
+
+    def decode(split: (String, Int, Int), wanted: Array[Boolean],
+               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] =
+      decodeFile(split._1, conf, wanted, split._2, split._3, pruneBytes = true)
   }
 
   // ── write ─────────────────────────────────────────────────────────────
@@ -1093,7 +965,7 @@ object ArrowIpc {
     * properties too.
     *
     * `dictionaryColumns`: low-cardinality STRING columns to
-    * dictionary-encode (the GDAL interop shape [[decodeFilePruned]]
+    * dictionary-encode (the GDAL interop shape [[decodeFile]]
     * consumes): one bounded distributed distinct per column (≤64k values
     * enforced), values broadcast so every part-file carries the SAME
     * dictionary; on disk each such column is 4-byte indexes + one
@@ -1830,8 +1702,8 @@ object ArrowIpc {
 
 /** `spark.read.format("arrowipc")`: the same scan as [[ArrowIpc.read]].
   * Catalyst's required-columns pushdown prunes at BOTH levels. Byte level:
-  * when a proper subset of columns is required,
-  * [[ArrowIpc.decodeFilePruned]] reads only each batch's header plus the
+  * when a proper subset of columns is required, [[ArrowIpc.decodeFile]]'s
+  * byte-level load reads only each batch's header plus the
   * wanted columns' buffer byte ranges — a pruned column's buffers are
   * never fetched from storage (the columnar projection discipline of the
   * reference's readers, rust/geoarrow-old/benches/wkb.rs:20-21). Decode

@@ -26,10 +26,10 @@ import graft.core.GeomOps
   * feature-aligned ranges (the reference's async reader seeks feature
   * ranges via the same index, rust/geoarrow-flatgeobuf/src/reader/
   * async.rs:244). Range size follows spark.sql.files.maxPartitionBytes,
-  * mirroring FileSourceScanExec's split sizing; split probing for large
-  * files runs as a Spark job (only tiny (path,start,end) descriptors are
-  * collected), never a driver-side per-file IO loop. Indexless files stay
-  * one task — a 100 TB corpus without indexes should arrive as many files.
+  * mirroring FileSourceScanExec's split sizing; [[RowFileSource.plan]]
+  * probes only the files bigger than that and caches their splits.
+  * Indexless files stay one task — a 100 TB corpus without indexes should
+  * arrive as many files.
   * The in-file Hilbert index also enables bbox-selective reads
   * ([[readBbox]]): only features whose envelope intersects the query rect
   * are decoded.
@@ -206,11 +206,14 @@ object FlatGeobuf {
                                    x1: Double, y1: Double): Seq[Long] = {
     val header = parseHeader(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val leafStart = levelBounds(header.featuresCount, header.indexNodeSize)(0)._1
     searchNodes(bb, header.headerEnd, header.featuresCount, header.indexNodeSize,
-      x0, y0, x1, y1)
+      x0, y0, x1, y1).map(i => bb.getLong(header.headerEnd + 40 * (leafStart + i).toInt + 32))
   }
 
-  /** Core packed-R-tree traversal over a node array at `base` in `bb`. */
+  /** Core packed-R-tree traversal over a node array at `base` in `bb`:
+    * the leaf items (feature numbers in leaf order) whose boxes meet the
+    * query rect, ascending. */
   private def searchNodes(bb: ByteBuffer, base: Int, numItems: Long, nodeSize: Int,
                           x0: Double, y0: Double, x1: Double, y1: Double): Seq[Long] = {
     if (numItems == 0 || nodeSize == 0) return Nil
@@ -228,8 +231,8 @@ object FlatGeobuf {
         val nMinX = bb.getDouble(p); val nMinY = bb.getDouble(p + 8)
         val nMaxX = bb.getDouble(p + 16); val nMaxY = bb.getDouble(p + 24)
         if (nMinX <= x1 && nMaxX >= x0 && nMinY <= y1 && nMaxY >= y0) {
-          val off = bb.getLong(p + 32)
-          if (isLeaf) results += off else queue.enqueue((off, level - 1))
+          if (isLeaf) results += pos - leafStart
+          else queue.enqueue((bb.getLong(p + 32), level - 1))
         }
         pos += 1
       }
@@ -494,13 +497,23 @@ object FlatGeobuf {
     } finally in.close()
   }
 
+  /** Index candidates closer than this many bytes share one positioned
+    * read: fetching a small gap costs less than another request. */
+  private val MergeGap = 64 << 10
+  /** The most bytes one merged read fetches. */
+  private val MaxRunBytes = 64 << 20
+
   /** bbox read over an indexed file touching ONLY header + packed R-tree +
     * candidate feature ranges — the distributed mirror of the reference's
     * async range-request reader (rust/geoarrow-flatgeobuf/src/reader/
     * async.rs:244 `select_bbox`). A 100 TB corpus query reads the few
-    * row-ranges the Hilbert tree selects, not the files. Indexless files
-    * fall back to full-scan + envelope filter. The envelope test needs
-    * the geometry, so it is decoded even when `wanted` prunes it. */
+    * row-ranges the Hilbert tree selects, not the files. The candidates
+    * are read in runs: one positioned read covers each run of features
+    * less than [[MergeGap]] apart. Leaves hold the features in file
+    * order, so a feature ends where the next leaf's feature starts.
+    * Indexless files fall back to full-scan + envelope filter. The
+    * envelope test needs the geometry, so it is decoded even when
+    * `wanted` prunes it. */
   private def readSelective(fs: org.apache.hadoop.fs.FileSystem,
                             p: org.apache.hadoop.fs.Path,
                             x0: Double, y0: Double, x1: Double, y1: Double,
@@ -508,46 +521,60 @@ object FlatGeobuf {
     val header = parseHeader(readHeaderBytes(fs, p))
     val types = header.columns.map(_._2).toArray
     val w = wanted.updated(types.length, true)
-    if (header.indexNodeSize == 0 || header.featuresCount == 0)
+    val n = header.featuresCount
+    if (header.indexNodeSize == 0 || n == 0)
       return decodeFeatures(readAll(fs, p), Some((x0, y0, x1, y1)), w)
-    val idxLen = indexSize(header.featuresCount, header.indexNodeSize)
+    val idxLen = indexSize(n, header.indexNodeSize)
+    val featStart = header.headerEnd.toLong + idxLen
     val in = fs.open(p)
     try {
       val idx = new Array[Byte](idxLen.toInt)
       in.readFully(header.headerEnd.toLong, idx)
       val bb = ByteBuffer.wrap(idx).order(ByteOrder.LITTLE_ENDIAN)
-      val offs = searchNodes(bb, 0, header.featuresCount, header.indexNodeSize, x0, y0, x1, y1)
-      val featStart = header.headerEnd.toLong + idxLen
-      val szBuf = new Array[Byte](4)
-      offs.map { off =>
-        in.readFully(featStart + off, szBuf)
-        val size = ByteBuffer.wrap(szBuf).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
-        val fb = new Array[Byte](size + 4)
-        in.readFully(featStart + off, fb)
-        rowOf(ByteBuffer.wrap(fb).order(ByteOrder.LITTLE_ENDIAN), 4, header, types, w)
-      }.filter(envelopeHit(_, types.length, x0, y0, x1, y1)).iterator
+      val leafStart = levelBounds(n, header.indexNodeSize)(0)._1
+      lazy val sectionEnd = fs.getFileStatus(p).getLen - featStart
+      def offset(item: Long): Long =
+        if (item >= n) sectionEnd else bb.getLong(40 * (leafStart + item).toInt + 32)
+      // (start, end) of each candidate relative to the features section
+      val spans = searchNodes(bb, 0, n, header.indexNodeSize, x0, y0, x1, y1)
+        .map(i => (offset(i), offset(i + 1))).sortBy(_._1).toIndexedSeq
+      require(spans.forall { case (a, b) => a < b },
+        s"FlatGeobuf index leaves out of file order: $p")
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var k = 0
+      while (k < spans.length) {
+        val runStart = spans(k)._1
+        var j = k
+        while (j + 1 < spans.length && spans(j + 1)._1 - spans(j)._2 < MergeGap &&
+               spans(j + 1)._2 - runStart <= MaxRunBytes) j += 1
+        val buf = new Array[Byte]((spans(j)._2 - runStart).toInt)
+        in.readFully(featStart + runStart, buf)
+        val rb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
+        (k to j).foreach(c => rows += rowOf(rb, (spans(c)._1 - runStart).toInt + 4, header, types, w))
+        k = j + 1
+      }
+      rows.iterator.filter(envelopeHit(_, types.length, x0, y0, x1, y1))
     } finally in.close()
   }
 
-  /** Feature-aligned byte ranges for one file, from the packed index's leaf
-    * level: S-1 positioned 40-byte reads at evenly spaced leaf nodes give
-    * the boundary features' byte offsets (leaves are in file order — the
-    * writer packs them in the features' Hilbert sort order). Returns
-    * absolute [start, end) ranges covering the whole feature section;
-    * (start, -1) means "whole file from the features section" (indexless or
-    * single-split files). Runs task-side. */
+  /** Feature-aligned byte ranges for one file of `len` bytes, from the
+    * packed index's leaf level: S-1 positioned 40-byte reads at evenly
+    * spaced leaf nodes give the boundary features' byte offsets (leaves
+    * are in file order — the writer packs them in the features' Hilbert
+    * sort order). Returns absolute [start, end) ranges covering the whole
+    * feature section; (-1, -1) means "whole file" (indexless or
+    * single-split files). */
   private[sources] def splitRanges(fs: org.apache.hadoop.fs.FileSystem,
-                                   p: org.apache.hadoop.fs.Path,
+                                   p: org.apache.hadoop.fs.Path, len: Long,
                                    maxPartitionBytes: Long): Seq[(Long, Long)] = {
     val header = parseHeader(readHeaderBytes(fs, p))
-    val len = fs.getFileStatus(p).getLen
     val idxLen = indexSize(header.featuresCount, header.indexNodeSize)
     val featStart = header.headerEnd.toLong + idxLen
     val sectionLen = len - featStart
     val nSplits = math.min(
       (sectionLen + maxPartitionBytes - 1) / maxPartitionBytes,
       header.featuresCount).toInt
-    if (header.indexNodeSize == 0 || nSplits <= 1) return Seq((featStart, -1L))
+    if (header.indexNodeSize == 0 || nSplits <= 1) return Seq((-1L, -1L))
     val leafStartNode = levelBounds(header.featuresCount, header.indexNodeSize)(0)._1
     val in = fs.open(p)
     val offs =
@@ -561,17 +588,15 @@ object FlatGeobuf {
     bounds.sliding(2).collect { case Seq(a, b) if a < b => (featStart + a, featStart + b) }.toSeq
   }
 
-  /** Decode the size-prefixed features in absolute byte range [start, end)
-    * (or to EOF when end = -1). Range ends are feature-aligned by
-    * construction (splitRanges). */
+  /** Decode the size-prefixed features in absolute byte range [start,
+    * end). Range ends are feature-aligned by construction (splitRanges). */
   private[sources] def decodeRange(fs: org.apache.hadoop.fs.FileSystem,
                           p: org.apache.hadoop.fs.Path,
                           start: Long, end: Long,
                           wanted: Array[Boolean]): Iterator[Row] = {
     val header = parseHeader(readHeaderBytes(fs, p))
     val types = header.columns.map(_._2).toArray
-    val until = if (end < 0) fs.getFileStatus(p).getLen else end
-    val bytes = new Array[Byte]((until - start).toInt)
+    val bytes = new Array[Byte]((end - start).toInt)
     val in = fs.open(p)
     try in.readFully(start, bytes) finally in.close()
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -585,59 +610,6 @@ object FlatGeobuf {
         rowOf(bb, root, header, types, wanted)
       }
     }
-  }
-
-  /** Split-plan cache: the index probe job costs one bounded header read
-    * + S−1 leaf reads PER big file PER read() call — repeated queries over
-    * the same 100 TB dataset would re-probe identical files every time.
-    * Keyed by (path, size, mtime, maxPart) — same contract as the
-    * GeoParquet metadata cache: any overwrite/append changes the
-    * signature and re-probes. */
-  private val splitPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), IndexedSeq[(Long, Long)]]
-  /** Test gauge: probe jobs actually launched by [[planSplits]]. */
-  private[graft] val splitProbeJobs = new java.util.concurrent.atomic.LongAdder
-
-  /** Plan `(path, start, end)` decode splits for a set of `(path, size)`
-    * .fgb files: files above `maxPart` split into feature-aligned ranges
-    * via a Spark probe job over the packed index (one bounded header read
-    * + S−1 leaf-node reads each; only tiny descriptors return to the
-    * driver); smaller files stay whole (`start < 0`). */
-  private[sources] def planSplits(spark: SparkSession,
-                                  statuses: IndexedSeq[(String, Long, Long)],
-                                  maxPart: Long): IndexedSeq[(String, Long, Long)] = {
-    val (big, small) = statuses.partition(_._2 > maxPart)
-    // emission reads LOCAL values only — never back through the cache, so
-    // a concurrent size-bound clear() between put and emit cannot drop a
-    // file's splits from this plan
-    val cachedByFile: Map[String, IndexedSeq[(Long, Long)]] =
-      big.flatMap { case (f, len, mt) =>
-        Option(splitPlanCache.get((f, len, mt, maxPart))).map(f -> _)
-      }.toMap
-    val miss = big.filterNot { case (f, _, _) => cachedByFile.contains(f) }
-    val probed: Map[String, IndexedSeq[(Long, Long)]] =
-      if (miss.isEmpty) Map.empty
-      else {
-        splitProbeJobs.increment()
-        val confSer = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        spark.sparkContext.parallelize(miss.map(_._1), miss.length)
-          .map { f =>
-            val fp = new org.apache.hadoop.fs.Path(f)
-            val tfs = fp.getFileSystem(confSer.value.value)
-            f -> splitRanges(tfs, fp, maxPart).toIndexedSeq
-          }.collect().toMap
-      }
-    // bound the driver map — but only when this plan actually INSERTS: an
-    // unconditional clear made every other read of a >4096-file dataset
-    // re-probe the whole directory (hit, wipe, miss-all, repeat)
-    if (miss.nonEmpty && splitPlanCache.size + miss.size > 4096) splitPlanCache.clear()
-    miss.foreach { case (f, len, mt) =>
-      splitPlanCache.put((f, len, mt, maxPart), probed(f)) }
-    val ranges = cachedByFile ++ probed
-    small.map { case (f, _, _) => (f, -1L, -1L) } ++
-      big.flatMap { case (f, _, _) => ranges(f).map { case (s, e) => (f, s, e) } }
   }
 
   /** Read FGB file(s) into a DataFrame (property columns + `geometry` WKB):
@@ -656,7 +628,8 @@ object FlatGeobuf {
                xmin: Double, ymin: Double, xmax: Double, ymax: Double): DataFrame =
     read(spark, path, Some((xmin, ymin, xmax, ymax)))
 
-  /** FlatGeobuf as a [[RowFileFormat]]; a split is `(path, start, end)`. */
+  /** FlatGeobuf as a [[RowFileFormat]]; a split is `(path, start, end)`,
+    * `(path, -1, -1)` for a whole file. */
   private[sources] final case class Format(bbox: Option[(Double, Double, Double, Double)])
       extends RowFileFormat[(String, Long, Long)] {
     def name: String = "flatgeobuf"
@@ -668,10 +641,19 @@ object FlatGeobuf {
         p.getFileSystem(session.sessionState.newHadoopConf()), p)))
     }
 
-    // a bbox read keeps whole files: the index seek selects within one
-    def plan(session: SparkSession, files: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] =
-      if (bbox.isDefined) files.map { case (f, _, _) => (f, -1L, -1L) }
-      else planSplits(session, files.toIndexedSeq, session.sessionState.conf.filesMaxPartitionBytes)
+    def whole(path: String): (String, Long, Long) = (path, -1L, -1L)
+
+    def probe(path: String, size: Long, maxPartitionBytes: Long,
+              conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long, Long)] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      splitRanges(p.getFileSystem(conf), p, size, maxPartitionBytes).map { case (s, e) => (path, s, e) }
+    }
+
+    // a bbox read keeps whole files and probes none: the index seek
+    // selects within one
+    override def plan(session: SparkSession,
+                      files: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] =
+      if (bbox.isDefined) files.map(f => whole(f._1)) else super.plan(session, files)
 
     def decode(split: (String, Long, Long), wanted: Array[Boolean],
                conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {

@@ -209,50 +209,30 @@ object GeoParquet {
 
   private case class PartFooter(geo: Option[String], rows: Long, schema: StructType)
 
-  /** Shared by every driver-side metadata read (these footers, ArrowIpc's
-    * split probes); its daemon threads exit when idle. */
-  private[sources] lazy val ioPool = new java.util.concurrent.ForkJoinPool(16)
-
   /** One footer read per file: the KV value for `key`, the row count (so
     * [[reconcile]] can treat empty fragments' declarations as vacuous: an
     * empty part-file observes `geometry_types: []` and no bbox, which must
     * not defeat the dataset-level union) and the Spark schema, converted
-    * as Spark's parquet schema inference converts it. Small datasets use
-    * the shared driver-side pool (footer reads are tiny ranged IO); past
-    * 64 part-files the reads run as a Spark job so a 100 TB dataset's
-    * thousands of footers scale out with the executors instead of queuing
-    * behind 16 driver threads. */
+    * as Spark's parquet schema inference converts it. The reads go through
+    * [[RowFileSource.fanOut]]: the driver's IO pool for a few part-files,
+    * one Spark job past 64, so a 100 TB dataset's thousands of footers
+    * scale out with the executors. */
   private def footerKVs(spark: SparkSession, conf: Configuration, files: Seq[Path],
                         key: String): Seq[PartFooter] = {
-    // gauge counts here (driver side, exactly one open per file on every
-    // path) — NOT inside readOne: an object-field reference from the
-    // Spark-job closure would capture the non-serializable module
     footerOpens.add(files.length)
-    def readOne(f: Path, c: Configuration, sc: ParquetToSparkSchemaConverter): PartFooter = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, c))
-      try PartFooter(Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(key)),
-        r.getRecordCount, ParquetFileFormat.readSchemaFromFooter(new Footer(f, r.getFooter), sc))
-      finally r.close()
-    }
-    if (files.length > 64) {
-      val serConf = new SerializableConfiguration(conf)
-      // a deserialized SQLConf cannot be read: tasks rebuild one
-      val settings = spark.sessionState.conf.getAllConfs
-      spark.sparkContext
-        .parallelize(files.map(_.toString).zipWithIndex,
-          math.max(1, math.min(files.length, spark.sparkContext.defaultParallelism)))
-        .mapPartitions { it =>
-          val sc = new SQLConf
-          settings.foreach { case (k, v) => sc.setConfString(k, v) }
-          val converter = new ParquetToSparkSchemaConverter(sc)
-          it.map { case (f, i) => (i, readOne(new Path(f), serConf.value, converter)) }
-        }
-        .collect().sortBy(_._1).map(_._2).toSeq
-    } else {
-      val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      ioPool.invokeAll(files.map { f =>
-        (() => readOne(f, conf, converter)): java.util.concurrent.Callable[PartFooter]
-      }.asJava).asScala.map(_.get()).toSeq
+    // a deserialized SQLConf cannot be read: each reader rebuilds one
+    val settings = spark.sessionState.conf.getAllConfs
+    RowFileSource.fanOut(spark, conf, files.map(_.toString)) { conf =>
+      val sc = new SQLConf
+      settings.foreach { case (k, v) => sc.setConfString(k, v) }
+      val converter = new ParquetToSparkSchemaConverter(sc)
+      f => {
+        val p = new Path(f)
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        try PartFooter(Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(key)),
+          r.getRecordCount, ParquetFileFormat.readSchemaFromFooter(new Footer(p, r.getFooter), converter))
+        finally r.close()
+      }
     }
   }
 

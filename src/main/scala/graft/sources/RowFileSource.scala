@@ -1,6 +1,10 @@
 package graft.sources
 
 import java.util
+import java.util.concurrent.{Callable, ConcurrentHashMap, ForkJoinPool}
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -19,23 +23,36 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** A file format decoded as full-width [[Row]]s — FlatGeobuf, Shapefile
   * and Arrow IPC. Each supplies only what differs between them: which
-  * files a directory holds, the schema of a listing, the splits of a
-  * listing, and the decode of one split. `S` is the split descriptor,
-  * planned on the driver and shipped to the task that decodes it.
+  * files a directory holds, the schema of a listing, the whole-file split,
+  * the probe that splits one big file, and the decode of one split. `S` is
+  * the split descriptor, planned on the driver and shipped to the task
+  * that decodes it.
   *
-  * Everything else is one implementation: listing, the DSv2 table, scan
-  * and reader factory, and the Row→InternalRow reader. `X.read(...)` and
-  * `spark.read.format("x").load(...)` both plan this scan, so both prune
-  * columns down to the decoder. */
-private[sources] trait RowFileFormat[S] extends Serializable {
+  * Everything else is one implementation: listing, split planning, the
+  * DSv2 table, scan and reader factory, and the Row→InternalRow reader.
+  * `X.read(...)` and `spark.read.format("x").load(...)` both plan this
+  * scan, so both prune columns down to the decoder.
+  *
+  * The one planning rule ([[RowFileSource.plan]]): a file at or under
+  * `spark.sql.files.maxPartitionBytes` is one whole-file split and is
+  * never probed; a bigger one is probed once per (path, size, mtime,
+  * maxPartitionBytes) and its splits are cached. */
+private[graft] trait RowFileFormat[S] extends Serializable {
   /** The `format(...)` short name. */
   def name: String
   /** File-name suffixes a directory listing keeps. */
   def suffixes: Seq[String]
   /** Driver side: the schema of the listed `(path, size, mtime)` files. */
   def schemaOf(session: SparkSession, files: Seq[(String, Long, Long)]): StructType
+  /** The split that decodes all of `path`. */
+  def whole(path: String): S
+  /** The splits of one file of `size` bytes over `maxPartitionBytes`, in
+    * file order, read from the file or its sidecar. Runs on the driver's
+    * IO pool or in a probe task. */
+  def probe(path: String, size: Long, maxPartitionBytes: Long, conf: Configuration): Seq[S]
   /** Driver side: the splits of the listed files, in listing order. */
-  def plan(session: SparkSession, files: Seq[(String, Long, Long)]): Seq[S]
+  def plan(session: SparkSession, files: Seq[(String, Long, Long)]): Seq[S] =
+    RowFileSource.plan(session, this, files)
   /** Task side: the full-width rows of one split. `wanted` indexes the
     * full schema; a pruned column may stay null. */
   def decode(split: S, wanted: Array[Boolean], conf: Configuration): Iterator[Row]
@@ -98,6 +115,67 @@ private[sources] object RowFileSource {
     require(files.nonEmpty,
       s"no ${format.suffixes.mkString("/")} files under ${roots.mkString(",")}")
     files
+  }
+
+  /** The split plans of big files, keyed by (format, path, size, mtime,
+    * maxPartitionBytes): an overwrite or append changes the key and
+    * re-probes, so repeated reads of an unchanged dataset probe nothing. */
+  private val splitPlans =
+    new ConcurrentHashMap[(String, String, Long, Long, Long), Seq[Any]]()
+
+  /** The splits of the listed files, in listing order: a file at or under
+    * `maxPartitionBytes` is `format.whole`; a bigger one is
+    * `format.probe`d through [[fanOut]] on a cache miss. */
+  def plan[S](session: SparkSession, format: RowFileFormat[S],
+              files: Seq[(String, Long, Long)]): Seq[S] = {
+    val maxPart = session.sessionState.conf.filesMaxPartitionBytes
+    def key(f: (String, Long, Long)) = (format.name, f._1, f._2, f._3, maxPart)
+    val big = files.filter(_._2 > maxPart)
+    // emission reads these local maps, never the cache again, so a
+    // concurrent clear between insert and emit cannot drop a file's splits
+    val cached = big.flatMap(f => Option(splitPlans.get(key(f))).map(f._1 -> _)).toMap
+    val miss = big.filterNot(f => cached.contains(f._1))
+    val probed = miss.map(_._1).zip(
+      fanOut(session, session.sessionState.newHadoopConf(), miss) { conf => {
+        case (f, size, _) => format.probe(f, size, maxPart, conf)
+      }}).toMap
+    // bound the map only when this plan inserts: an unconditional clear
+    // made every other read of a >4096-file dataset re-probe it all
+    if (miss.nonEmpty && splitPlans.size + miss.size > 4096) splitPlans.clear()
+    miss.foreach(f => splitPlans.put(key(f), probed(f._1)))
+    val splits = cached ++ probed
+    files.flatMap { case (f, size, _) =>
+      if (size > maxPart) splits(f).asInstanceOf[Seq[S]] else Seq(format.whole(f)) }
+  }
+
+  /** Driver-side metadata reads share this pool; its daemon threads exit
+    * when idle. */
+  private lazy val ioPool = new ForkJoinPool(16)
+
+  /** `read` over `items`, results in item order — the one fan-out of the
+    * driver's metadata reads (split probes, GeoParquet footers). Up to 64
+    * items run on the driver's IO pool: the reads are small, and a cold
+    * read of a few files starts no job. More run as ONE Spark job, so
+    * thousands of files scale out with the executors. `read` turns the
+    * session Hadoop conf `conf` into the per-item function, once on the
+    * driver and once per probe task; `conf` is built only when there are
+    * items. */
+  def fanOut[A: ClassTag, B: ClassTag](session: SparkSession, conf: => Configuration,
+                                       items: Seq[A])(read: Configuration => A => B): Seq[B] = {
+    if (items.isEmpty) return Nil
+    if (items.length <= 64) {
+      val one = read(conf)
+      ioPool.invokeAll(items.map(a => (() => one(a)): Callable[B]).asJava)
+        .asScala.map(_.get()).toSeq
+    } else {
+      val sc = session.sparkContext
+      val serConf = new SerializableConfiguration(conf)
+      // parallelize slices in order and collect concatenates the slices
+      // in order, so results line up with items
+      sc.parallelize(items, math.min(items.length, sc.defaultParallelism))
+        .mapPartitions { it => val one = read(serConf.value); it.map(one) }
+        .collect().toSeq
+    }
   }
 
   def table[S](session: SparkSession, format: RowFileFormat[S], roots: Seq[String],

@@ -19,9 +19,10 @@ import graft.core.GeomOps
   *
   * Distribution model: one small file pair = one task; a file larger than
   * `spark.sql.files.maxPartitionBytes` splits into record-aligned byte
-  * ranges via the .shx offset index ([[planSplits]] — the FGB/IPC split
-  * discipline), and the fixed-width .dbf maps the same record range to a
-  * byte range directly. Many files also fan out across executors.
+  * ranges via the .shx offset index ([[shxSplits]], planned by
+  * [[RowFileSource.plan]] as FlatGeobuf and Arrow IPC are), and the
+  * fixed-width .dbf maps the same record range to a byte range directly.
+  * Many files also fan out across executors.
   */
 object Shapefile {
 
@@ -223,80 +224,42 @@ object Shapefile {
       : Seq[(String, Long, Long)] =
     RowFileSource.list(spark, Format, Seq(path))
 
-  // split-plan cache, the FlatGeobuf/ArrowIpc device: (path, size, mtime,
-  // maxPart-if-big) re-probes only when the file actually changed; bounded
-  private val splitPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), IndexedSeq[(Int, Int, Long, Long)]]()
-
   /** One .shp pair = one task is wrong for a single large file. The .shx
     * sidecar is a fixed-width index (8 bytes per record: offset + content
     * length in 16-bit words, both BE), so a big .shp partitions into
-    * record-aligned byte ranges sized to `spark.sql.files.maxPartitionBytes`
-    * — the FGB/IPC split discipline: probing runs as ONE Spark job over the
-    * cache misses, never a driver loop. The fixed-width .dbf maps the same
-    * record range to a byte range directly. Returns (path, recStart, nRecs,
-    * shpByteStart, shpByteEndExcl); recStart = -1 means whole file (small,
-    * or no .shx to split by). */
-  private[graft] def planSplits(spark: SparkSession,
-      statuses: Seq[(String, Long, Long)]): IndexedSeq[(String, Int, Int, Long, Long)] = {
-    val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
-    def key(f: String, len: Long, mt: Long) = (f, len, mt, maxPart)
-    val whole = IndexedSeq((-1, -1, -1L, -1L))
-    // a small file's plan is decidable from the listing alone (unlike
-    // ArrowIpc, no per-task flag depends on a probe) — no job, no cache
-    val big = statuses.filter(_._2 > maxPart)
-    val cached = big.flatMap { case (f, len, mt) =>
-      Option(splitPlanCache.get(key(f, len, mt))).map(f -> _)
-    }.toMap
-    val miss = big.filterNot { case (f, _, _) => cached.contains(f) }
-    val probed: Map[String, IndexedSeq[(Int, Int, Long, Long)]] =
-      if (miss.isEmpty) Map.empty
-      else {
-        val confSer = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        val mp = maxPart
-        spark.sparkContext.parallelize(miss, miss.length).map { case (f, len, _) =>
-          val shxP = new org.apache.hadoop.fs.Path(f.stripSuffix(".shp") + ".shx")
-          val fs = shxP.getFileSystem(confSer.value.value)
-          if (!fs.exists(shxP)) f -> whole
-          else {
-            val shx = readAll(fs, shxP)
-            val be = ByteBuffer.wrap(shx).order(ByteOrder.BIG_ENDIAN)
-            val n = (shx.length - 100) / 8
-            val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Long)]
-            var gStart = 0
-            var gByteStart = if (n > 0) be.getInt(100).toLong * 2 else 100L
-            var acc = 0L
-            var i = 0
-            while (i < n) {
-              val off = be.getInt(100 + 8 * i).toLong * 2
-              val sz = 8L + be.getInt(104 + 8 * i).toLong * 2
-              if (i > gStart && acc + sz > mp) {
-                groups += ((gStart, i - gStart, gByteStart, off))
-                gStart = i; gByteStart = off; acc = 0L
-              }
-              acc += sz
-              i += 1
-            }
-            if (gStart < n) {
-              val lastEnd = be.getInt(100 + 8 * (n - 1)).toLong * 2 +
-                8L + be.getInt(104 + 8 * (n - 1)).toLong * 2
-              groups += ((gStart, n - gStart, gByteStart, lastEnd))
-            }
-            f -> (if (groups.length <= 1) whole else groups.toIndexedSeq)
-          }
-        }.collect().toMap
+    * record-aligned byte ranges sized to `maxPartitionBytes`. The
+    * fixed-width .dbf maps the same record range to a byte range directly.
+    * Returns (path, recStart, nRecs, shpByteStart, shpByteEndExcl);
+    * recStart = -1 means whole file (one range, or no .shx to split by). */
+  private def shxSplits(f: String, maxPartitionBytes: Long,
+      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Int, Int, Long, Long)] = {
+    val shxP = new org.apache.hadoop.fs.Path(f.stripSuffix(".shp") + ".shx")
+    val fs = shxP.getFileSystem(conf)
+    if (!fs.exists(shxP)) return Seq(Format.whole(f))
+    val shx = readAll(fs, shxP)
+    val be = ByteBuffer.wrap(shx).order(ByteOrder.BIG_ENDIAN)
+    val n = (shx.length - 100) / 8
+    val groups = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Long, Long)]
+    var gStart = 0
+    var gByteStart = if (n > 0) be.getInt(100).toLong * 2 else 100L
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val off = be.getInt(100 + 8 * i).toLong * 2
+      val sz = 8L + be.getInt(104 + 8 * i).toLong * 2
+      if (i > gStart && acc + sz > maxPartitionBytes) {
+        groups += ((f, gStart, i - gStart, gByteStart, off))
+        gStart = i; gByteStart = off; acc = 0L
       }
-    // bound only when this plan actually inserts — an unconditional clear
-    // would make every other read of a >4096-file dataset re-probe it all
-    if (miss.nonEmpty && splitPlanCache.size() + miss.size > 4096) splitPlanCache.clear()
-    miss.foreach { case (f, len, mt) => splitPlanCache.put(key(f, len, mt), probed(f)) }
-    val all = cached ++ probed
-    statuses.flatMap { case (f, len, _) =>
-      (if (len > maxPart) all(f) else whole)
-        .map { case (rs, nr, bs, be2) => (f, rs, nr, bs, be2) }
-    }.toIndexedSeq
+      acc += sz
+      i += 1
+    }
+    if (gStart < n) {
+      val lastEnd = be.getInt(100 + 8 * (n - 1)).toLong * 2 +
+        8L + be.getInt(104 + 8 * (n - 1)).toLong * 2
+      groups += ((f, gStart, n - gStart, gByteStart, lastEnd))
+    }
+    if (groups.length <= 1) Seq(Format.whole(f)) else groups.toSeq
   }
 
   /** Schema = DBF property columns (file order) + `geometry` WKB. A `.prj`
@@ -463,9 +426,9 @@ object Shapefile {
   def read(spark: SparkSession, path: String): DataFrame =
     RowFileSource.read(spark, Format, Seq(path))
 
-  /** Shapefile as a [[RowFileFormat]]; a split is [[planSplits]]'
+  /** Shapefile as a [[RowFileFormat]]; a split is [[shxSplits]]'
     * `(path, recStart, nRecs, shpByteStart, shpByteEndExcl)`. */
-  private[sources] object Format extends RowFileFormat[(String, Int, Int, Long, Long)] {
+  private[graft] object Format extends RowFileFormat[(String, Int, Int, Long, Long)] {
     def name: String = "shapefile"
     def suffixes: Seq[String] = Seq(".shp")
 
@@ -476,8 +439,11 @@ object Shapefile {
         new org.apache.hadoop.fs.Path(f).getFileSystem(session.sessionState.newHadoopConf()), f)
     }
 
-    def plan(session: SparkSession, files: Seq[(String, Long, Long)])
-        : Seq[(String, Int, Int, Long, Long)] = planSplits(session, files)
+    def whole(path: String): (String, Int, Int, Long, Long) = (path, -1, -1, -1L, -1L)
+
+    def probe(path: String, size: Long, maxPartitionBytes: Long,
+              conf: org.apache.hadoop.conf.Configuration): Seq[(String, Int, Int, Long, Long)] =
+      shxSplits(path, maxPartitionBytes, conf)
 
     def decode(split: (String, Int, Int, Long, Long), wanted: Array[Boolean],
                conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {

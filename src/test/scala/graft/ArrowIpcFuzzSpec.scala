@@ -16,7 +16,7 @@ import graft.sources.ArrowIpc
   * for 60 random schemas drawn from every supported layout family (scalars,
   * view types, List/ListView/FixedSizeList, Struct, RunEndEncoded,
   * dictionary-encoded, LZ4/ZSTD-compressed bodies) and random projection
-  * masks, [[ArrowIpc.decodeFilePruned]] must return exactly what the
+  * masks, [[ArrowIpc.decodeFile]]'s byte-level load must return exactly what the
   * stock full reader returns. This pins the pre-order buffer-run
   * arithmetic (a mis-slice anywhere shifts EVERY later column) against
   * arbitrary producers, not just the hand-built fixtures. Seeded —
@@ -482,7 +482,7 @@ class ArrowIpcFuzzSpec extends AnyFunSuite {
       if (!mask.exists(identity)) mask(rnd.nextInt(ncols)) = true
       for (m <- Seq(mask, Array.fill(ncols)(true))) {
         val full = ArrowIpc.decodeFile(file.getAbsolutePath, conf, m).toVector
-        val pruned = ArrowIpc.decodeFilePruned(file.getAbsolutePath, conf, m).toVector
+        val pruned = ArrowIpc.decodeFile(file.getAbsolutePath, conf, m, pruneBytes = true).toVector
         assert(pruned.size == full.size,
           s"trial $trial kinds=${kinds.mkString(",")} mask=${m.mkString(",")}: " +
             s"row count ${pruned.size} != ${full.size}")

@@ -906,27 +906,6 @@ class ArrowIpcSpec extends SparkTestBase {
     assert(hdr.fieldNames.toSeq == Seq("id", "label", "score", "flag", "geometry"))
   }
 
-  test("cold read runs one job: split probes of up to 64 files stay on the driver") {
-    def written(parts: Int): String = {
-      val out = java.nio.file.Files.createTempDirectory("arrowjobs").toString
-      ArrowIpc.write(spark.range(0, 200, 1, parts).selectExpr("id",
-        "ST_Point(CAST(id AS DOUBLE), 0.0) AS geometry"), out)
-      out
-    }
-    // freshly written files miss the split-plan cache: a cold read probes
-    // each file, then scans; a warm read only scans
-    val few = written(3)
-    var rows = 0L
-    assert(SparkJobs.count(spark) { rows = ArrowIpc.read(spark, few).collect().length } == 1)
-    assert(rows == 200L)
-    assert(SparkJobs.count(spark)(ArrowIpc.read(spark, few).collect()) == 1)
-    // past 64 files the probes run as one Spark job of their own
-    val many = written(65)
-    assert(SparkJobs.count(spark) { rows = ArrowIpc.read(spark, many).collect().length } == 2)
-    assert(rows == 200L)
-    assert(SparkJobs.count(spark)(ArrowIpc.read(spark, many).collect()) == 1)
-  }
-
   test("STREAM-format WRITE: .arrows roundtrip (nested + geometry + metadata), wire shape, dictionary roundtrip") {
     val out = java.nio.file.Files.createTempDirectory("arrowsw").toString
     val df = spark.sql("""

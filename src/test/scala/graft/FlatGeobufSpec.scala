@@ -220,19 +220,6 @@ class FlatGeobufSpec extends SparkTestBase {
       val sp = split.selectExpr("fid", "ST_AsText(geometry) AS w")
       val wh = whole.selectExpr("fid", "ST_AsText(geometry) AS w")
       assert(sp.except(wh).isEmpty && wh.except(sp).isEmpty)
-      // split-plan cache: a second read of the unchanged file launches
-      // ZERO index-probe jobs (plan keyed by path/size/mtime)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
-      graft.sources.FlatGeobuf.splitProbeJobs.reset()
-      assert(FlatGeobuf.read(spark, out).count() == n)
-      assert(graft.sources.FlatGeobuf.splitProbeJobs.sum() == 0,
-        "repeated split planning over an unchanged file must hit the cache")
-      // rewriting the file (new size/mtime) re-probes
-      FlatGeobufWriter.write(df.where("fid < 2000"), out)
-      graft.sources.FlatGeobuf.splitProbeJobs.reset()
-      assert(FlatGeobuf.read(spark, out).count() == 2000)
-      assert(graft.sources.FlatGeobuf.splitProbeJobs.sum() == 1,
-        "changed file must re-probe")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
@@ -333,6 +320,32 @@ class FlatGeobufSpec extends SparkTestBase {
     val expected = (0 until 1000).filter(i => (i % 100) >= 20 && (i % 100) <= 29 &&
       (i / 100) >= 2 && (i / 100) <= 5).toSet
     assert(ids == expected)
+  }
+
+  test("bbox read over candidates spread across the file == envelope-filtered full read") {
+    val out = java.nio.file.Files.createTempDirectory("fgbspread").toString
+    // a 200 x 200 point grid in ONE indexed file (~6 MB): the Hilbert order
+    // scatters a full-width strip's candidates over the whole file, in runs
+    // far more than one merged read apart
+    val df = spark.sql(
+      """SELECT CAST(id AS BIGINT) AS fid, CONCAT('p', id) AS label,
+                ST_Point(CAST(id % 200 AS DOUBLE), CAST(id DIV 200 AS DOUBLE)) AS geometry
+         FROM range(40000)""").coalesce(1)
+    FlatGeobufWriter.write(df, out)
+    val boxes = Seq((0.0, 50.0, 199.0, 50.0) -> 200, (0.0, 10.0, 199.0, 12.5) -> 600,
+      (20.0, 0.0, 21.0, 199.0) -> 400, (0.0, 0.0, 199.0, 199.0) -> 40000,
+      (-5.0, -5.0, -1.0, -1.0) -> 0)
+    boxes.foreach { case (b @ (x0, y0, x1, y1), n) =>
+      val got = FlatGeobuf.read(spark, out, Some(b))
+        .selectExpr("fid", "label", "ST_AsText(geometry) AS w").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+      val want = FlatGeobuf.read(spark, out)
+        .where(s"ST_X(geometry) BETWEEN $x0 AND $x1 AND ST_Y(geometry) BETWEEN $y0 AND $y1")
+        .selectExpr("fid", "label", "ST_AsText(geometry) AS w").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+      assert(got == want, s"bbox $b: ${got.length} rows, want ${want.length}")
+      assert(got.length == n)
+    }
   }
 
   test("index roundtrip matches indexless read on identical data") {

@@ -255,7 +255,7 @@ class ShapefileFuzzSpec extends SparkTestBase {
       val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
       try {
         spark.conf.set("spark.sql.files.maxPartitionBytes", (8 * 1024).toString)
-        val splits = Shapefile.planSplits(spark,
+        val splits = Shapefile.Format.plan(spark,
           Shapefile.resolveStatuses(spark, s"$base.shp"))
         assert(splits.length >= 2, s"kind $kind: expected real splits, got ${splits.length}")
         val got = Shapefile.read(spark, s"$base.shp")

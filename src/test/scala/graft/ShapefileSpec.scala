@@ -242,7 +242,7 @@ class ShapefileSpec extends SparkTestBase {
     val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", (16 * 1024).toString)
-      val splits = Shapefile.planSplits(spark,
+      val splits = Shapefile.Format.plan(spark,
         Shapefile.resolveStatuses(spark, s"$d3/big.shp"))
       assert(splits.length > 4, s"expected multiple ranges, got ${splits.length}")
       assert(splits.map(_._3).sum == 5000, "ranges must cover every record exactly once")
@@ -387,9 +387,9 @@ class ShapefileSpec extends SparkTestBase {
   }
 
   test("g40/g54 fixture (no .shx) still reads whole-pair") {
-    // the driver-embedded 4-point fixture ships no .shx: planSplits must
+    // the driver-embedded 4-point fixture ships no .shx: planning must
     // fall back to one pair = one task
-    val splits = Shapefile.planSplits(spark, Shapefile.resolveStatuses(spark, s"$dir/pts.shp"))
+    val splits = Shapefile.Format.plan(spark, Shapefile.resolveStatuses(spark, s"$dir/pts.shp"))
     assert(splits == IndexedSeq((s"$dir/pts.shp", -1, -1, -1L, -1L)))
   }
 }
