@@ -89,46 +89,55 @@ object GeoArrowOps {
       Array.tabulate(a.numElements())(i => poly(a.getArray(i), z, m))))
 
   // ── WKB → GeoArrow export (the interop direction: native-encoded
-  //    GeoParquet write / Arrow interchange; XY layout) ───────────────────
+  //    GeoParquet write / Arrow interchange; XY, XYZ, XYM, XYZM) ─────────
 
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  /** The export layout is XY-only; silently dropping Z/M would corrupt
-    * 3D/measured data on write, so lossy input fails loudly instead. */
-  private def requireXY(g: Geometry, kernel: String): Geometry = {
-    if (GeomOps.hasZ(g) || GeomOps.hasM(g))
+  /** The WKB of one export kernel, checked against the kernel's dimensions:
+    * the input must carry EXACTLY x, y plus `wantZ`/`wantM` — silently
+    * fabricating or dropping an ordinate would corrupt 3D/measured data on
+    * write, so a mismatch fails loudly. An EMPTY has no coordinates to
+    * contradict the declared dimensions — it exports as the natural empty
+    * shape (NaN point / zero-length lists). */
+  private def readDims(wkb: Array[Byte], kernel: String,
+                       wantZ: Boolean, wantM: Boolean): Geometry = {
+    val g = GeomOps.read(wkb)
+    if (g.isEmpty) return g
+    val z = GeomOps.hasZ(g); val m = GeomOps.hasM(g)
+    if (z != wantZ || m != wantM) {
+      def dims(hz: Boolean, hm: Boolean) =
+        "XY" + (if (hz) "Z" else "") + (if (hm) "M" else "")
+      val want = dims(wantZ, wantM)
       throw new IllegalArgumentException(
-        s"$kernel: GeoArrow export emits XY only but the input geometry has Z/M " +
-        "coordinates, which would be silently dropped. Strip them first with " +
-        "ST_Force2D, or write with encoding=WKB (Z/M-preserving).")
+        if (!wantZ && !wantM)
+          s"$kernel: GeoArrow export emits XY only but the input geometry has Z/M " +
+          "coordinates, which would be silently dropped. Strip them first with " +
+          "ST_Force2D, or write with encoding=WKB (Z/M-preserving)."
+        else
+          s"$kernel: $want export requires ${want.drop(2)} ordinates and no others but the " +
+          s"geometry is ${dims(z, m)} — use the matching kernel, or write with " +
+          "encoding=WKB (Z/M-preserving)")
+    }
     g
   }
 
-  private def readXY(wkb: Array[Byte], kernel: String): Geometry =
-    requireXY(GeomOps.read(wkb), kernel)
-
-  private def coordRow(c: Coordinate): InternalRow =
-    new GenericInternalRow(Array[Any](c.x, c.y))
-
-  private def coordArr(cs: Array[Coordinate]): ArrayData =
-    new GenericArrayData(cs.map(coordRow(_): Any))
-
-  private def polyArr(p: Polygon): ArrayData =
-    new GenericArrayData(
-      ((p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN))
-        .map(r => coordArr(r.getCoordinates): Any)).toArray)
-
-  def toPoint(wkb: Array[Byte]): InternalRow = {
-    val g = readXY(wkb, "ga_to_point")
-    // POINT EMPTY exports as the spec's NaN pair (getCoordinate is null for
-    // an empty point — a bare NPE here was round-16's defect)
-    if (g.isEmpty) new GenericInternalRow(Array[Any](Double.NaN, Double.NaN))
-    else coordRow(g.getCoordinate)
+  /** GeoArrow separated order is x, y[, z][, m]. */
+  private def coordRow(c: Coordinate, z: Boolean, m: Boolean): InternalRow = {
+    val a = new Array[Any](width(z, m))
+    a(0) = c.x; a(1) = c.y
+    if (z) a(2) = c.getZ
+    if (m) a(a.length - 1) = c.getM
+    new GenericInternalRow(a)
   }
 
-  def toLineString(wkb: Array[Byte]): ArrayData =
-    coordArr(readXY(wkb, "ga_to_linestring").getCoordinates)
+  private def coordArr(cs: Array[Coordinate], z: Boolean, m: Boolean): ArrayData =
+    new GenericArrayData(cs.map(coordRow(_, z, m): Any))
+
+  private def polyArr(p: Polygon, z: Boolean, m: Boolean): ArrayData =
+    new GenericArrayData(
+      ((p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN))
+        .map(r => coordArr(r.getCoordinates, z, m): Any)).toArray)
 
   /** THE empty-member sentinel, defined once: an all-NaN x/y coordinate
     * ⇔ POINT EMPTY inside a multipoint (the GeoArrow empty-point
@@ -154,186 +163,84 @@ object GeoArrowOps {
       }
     }
 
-  def toMultiPoint(wkb: Array[Byte]): ArrayData =
-    coordArr(mpCoords(readXY(wkb, "ga_to_multipoint"), "ga_to_multipoint"))
+  // ── one exporter per geometry kind, any dimensions; the 24 public
+  //    kernels below are the XY / XYZ / XYM / XYZM families of these six.
+  //    A separate kernel per family because a SQL function's return struct
+  //    is fixed — {x,y,z} is a different type than {x,y}. ────────────────
 
-  def toPolygon(wkb: Array[Byte]): ArrayData =
-    polyArr(readXY(wkb, "ga_to_polygon").asInstanceOf[Polygon])
-
-  def toMultiLineString(wkb: Array[Byte]): ArrayData = {
-    val g = readXY(wkb, "ga_to_multilinestring")
-    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
-      coordArr(g.getGeometryN(i).getCoordinates)))
+  private def point(wkb: Array[Byte], kernel: String, z: Boolean, m: Boolean): InternalRow = {
+    val g = readDims(wkb, kernel, z, m)
+    // POINT EMPTY exports as the spec's NaN tuple (getCoordinate is null
+    // for an empty point)
+    if (g.isEmpty) new GenericInternalRow(Array.fill[Any](width(z, m))(Double.NaN))
+    else coordRow(g.getCoordinate, z, m)
   }
 
-  def toMultiPolygon(wkb: Array[Byte]): ArrayData = {
-    val g = readXY(wkb, "ga_to_multipolygon")
+  private def lineString(wkb: Array[Byte], kernel: String, z: Boolean, m: Boolean): ArrayData =
+    coordArr(readDims(wkb, kernel, z, m).getCoordinates, z, m)
+
+  private def multiPoint(wkb: Array[Byte], kernel: String, z: Boolean, m: Boolean): ArrayData =
+    coordArr(mpCoords(readDims(wkb, kernel, z, m), kernel), z, m)
+
+  private def polygon(wkb: Array[Byte], kernel: String, z: Boolean, m: Boolean): ArrayData =
+    polyArr(readDims(wkb, kernel, z, m).asInstanceOf[Polygon], z, m)
+
+  private def multiLineString(wkb: Array[Byte], kernel: String,
+                              z: Boolean, m: Boolean): ArrayData = {
+    val g = readDims(wkb, kernel, z, m)
+    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
+      coordArr(g.getGeometryN(i).getCoordinates, z, m)))
+  }
+
+  private def multiPolygon(wkb: Array[Byte], kernel: String, z: Boolean, m: Boolean): ArrayData = {
+    val g = readDims(wkb, kernel, z, m)
     new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
       polyArr(g.getGeometryN(i) match {
         case p: Polygon => p
         case other => throw new IllegalArgumentException(
-          s"ga_to_multipolygon: component is ${other.getGeometryType}, not Polygon")
-      })))
-  }
-
-  // ── XYZ export twins (round 16): the reference emits Dimension::XYZ
-  //    native arrays; a separate kernel family because a SQL function's
-  //    return struct is fixed — {x,y,z} is a different type than {x,y}.
-  //    Input must actually CARRY Z (and no M — GeoParquet 1.1 native has
-  //    no measured encoding): half-fidelity would silently fabricate or
-  //    drop an ordinate, so both directions fail loudly. ──────────────────
-
-  private def readXYZ(wkb: Array[Byte], kernel: String): Geometry = {
-    val g = GeomOps.read(wkb)
-    // an EMPTY has no coordinates to contradict the declared dimensions —
-    // it exports as the natural empty shape (NaN point / zero-length lists)
-    if (g.isEmpty) return g
-    if (!GeomOps.hasZ(g))
-      throw new IllegalArgumentException(
-        s"$kernel: XYZ export requires Z coordinates but the input geometry is 2D — " +
-        "use the XY kernel (drop the _z suffix) instead")
-    if (GeomOps.hasM(g))
-      throw new IllegalArgumentException(
-        s"$kernel: XYZ export cannot carry the input's M measures — strip them " +
-        "first or write with encoding=WKB (Z/M-preserving)")
-    g
-  }
-
-  private def coordRowZ(c: Coordinate): InternalRow =
-    new GenericInternalRow(Array[Any](c.x, c.y, c.getZ))
-
-  private def coordArrZ(cs: Array[Coordinate]): ArrayData =
-    new GenericArrayData(cs.map(coordRowZ(_): Any))
-
-  private def polyArrZ(p: Polygon): ArrayData =
-    new GenericArrayData(
-      ((p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN))
-        .map(r => coordArrZ(r.getCoordinates): Any)).toArray)
-
-  def toPointZ(wkb: Array[Byte]): InternalRow = {
-    val g = readXYZ(wkb, "ga_to_point_z")
-    if (g.isEmpty) new GenericInternalRow(Array[Any](Double.NaN, Double.NaN, Double.NaN))
-    else coordRowZ(g.getCoordinate)
-  }
-
-  def toLineStringZ(wkb: Array[Byte]): ArrayData =
-    coordArrZ(readXYZ(wkb, "ga_to_linestring_z").getCoordinates)
-
-  def toMultiPointZ(wkb: Array[Byte]): ArrayData =
-    coordArrZ(mpCoords(readXYZ(wkb, "ga_to_multipoint_z"), "ga_to_multipoint_z"))
-
-  def toPolygonZ(wkb: Array[Byte]): ArrayData =
-    polyArrZ(readXYZ(wkb, "ga_to_polygon_z").asInstanceOf[Polygon])
-
-  def toMultiLineStringZ(wkb: Array[Byte]): ArrayData = {
-    val g = readXYZ(wkb, "ga_to_multilinestring_z")
-    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
-      coordArrZ(g.getGeometryN(i).getCoordinates)))
-  }
-
-  def toMultiPolygonZ(wkb: Array[Byte]): ArrayData = {
-    val g = readXYZ(wkb, "ga_to_multipolygon_z")
-    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
-      polyArrZ(g.getGeometryN(i) match {
-        case p: Polygon => p
-        case other => throw new IllegalArgumentException(
-          s"ga_to_multipolygon_z: component is ${other.getGeometryType}, not Polygon")
-      })))
-  }
-
-  // ── XYM / XYZM export twins (round 17): completes the reference's
-  //    all-dims native write coverage (rust/geoparquet/src/writer/
-  //    encode.rs:21-74 encodes any GeoArrowType dimension). Same exact-
-  //    fidelity contract as the Z family: the input must carry EXACTLY the
-  //    kernel's dimensions — fabricating or dropping an ordinate fails
-  //    loudly in both directions. ───────────────────────────────────────────
-
-  private def readDims(wkb: Array[Byte], kernel: String,
-                       wantZ: Boolean, wantM: Boolean): Geometry = {
-    val g = GeomOps.read(wkb)
-    // an EMPTY has no coordinates to contradict the declared dimensions —
-    // it exports as the natural empty shape (NaN point / zero-length lists)
-    if (g.isEmpty) return g
-    val z = GeomOps.hasZ(g); val m = GeomOps.hasM(g)
-    if (z != wantZ || m != wantM) {
-      def dims(hz: Boolean, hm: Boolean) =
-        "XY" + (if (hz) "Z" else "") + (if (hm) "M" else "")
-      throw new IllegalArgumentException(
-        s"$kernel: ${dims(wantZ, wantM)} export requires ${dims(wantZ, wantM)} input but the " +
-        s"geometry is ${dims(z, m)} — use the matching kernel, or write with " +
-        "encoding=WKB (Z/M-preserving)")
-    }
-    g
-  }
-
-  /** GeoArrow separated order is x, y[, z][, m]. */
-  private def coordRowD(c: Coordinate, z: Boolean, m: Boolean): InternalRow =
-    new GenericInternalRow(
-      (Seq(c.x, c.y) ++ (if (z) Seq(c.getZ) else Nil) ++ (if (m) Seq(c.getM) else Nil))
-        .map(_.asInstanceOf[Any]).toArray)
-
-  private def coordArrD(cs: Array[Coordinate], z: Boolean, m: Boolean): ArrayData =
-    new GenericArrayData(cs.map(coordRowD(_, z, m): Any))
-
-  private def polyArrD(p: Polygon, z: Boolean, m: Boolean): ArrayData =
-    new GenericArrayData(
-      ((p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN))
-        .map(r => coordArrD(r.getCoordinates, z, m): Any)).toArray)
-
-  private def mlsArrD(g: Geometry, z: Boolean, m: Boolean): ArrayData =
-    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
-      coordArrD(g.getGeometryN(i).getCoordinates, z, m)))
-
-  private def mpolyArrD(g: Geometry, kernel: String, z: Boolean, m: Boolean): ArrayData =
-    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
-      polyArrD(g.getGeometryN(i) match {
-        case p: Polygon => p
-        case other => throw new IllegalArgumentException(
           s"$kernel: component is ${other.getGeometryType}, not Polygon")
       }, z, m)))
-
-  private def nanRow(width: Int): InternalRow =
-    new GenericInternalRow(Array.fill[Any](width)(Double.NaN))
-
-  def toPointM(wkb: Array[Byte]): InternalRow = {
-    val g = readDims(wkb, "ga_to_point_m", wantZ = false, wantM = true)
-    if (g.isEmpty) nanRow(3) else coordRowD(g.getCoordinate, z = false, m = true)
   }
+
+  def toPoint(wkb: Array[Byte]): InternalRow = point(wkb, "ga_to_point", false, false)
+  def toLineString(wkb: Array[Byte]): ArrayData = lineString(wkb, "ga_to_linestring", false, false)
+  def toMultiPoint(wkb: Array[Byte]): ArrayData = multiPoint(wkb, "ga_to_multipoint", false, false)
+  def toPolygon(wkb: Array[Byte]): ArrayData = polygon(wkb, "ga_to_polygon", false, false)
+  def toMultiLineString(wkb: Array[Byte]): ArrayData =
+    multiLineString(wkb, "ga_to_multilinestring", false, false)
+  def toMultiPolygon(wkb: Array[Byte]): ArrayData =
+    multiPolygon(wkb, "ga_to_multipolygon", false, false)
+
+  def toPointZ(wkb: Array[Byte]): InternalRow = point(wkb, "ga_to_point_z", true, false)
+  def toLineStringZ(wkb: Array[Byte]): ArrayData =
+    lineString(wkb, "ga_to_linestring_z", true, false)
+  def toMultiPointZ(wkb: Array[Byte]): ArrayData =
+    multiPoint(wkb, "ga_to_multipoint_z", true, false)
+  def toPolygonZ(wkb: Array[Byte]): ArrayData = polygon(wkb, "ga_to_polygon_z", true, false)
+  def toMultiLineStringZ(wkb: Array[Byte]): ArrayData =
+    multiLineString(wkb, "ga_to_multilinestring_z", true, false)
+  def toMultiPolygonZ(wkb: Array[Byte]): ArrayData =
+    multiPolygon(wkb, "ga_to_multipolygon_z", true, false)
+
+  def toPointM(wkb: Array[Byte]): InternalRow = point(wkb, "ga_to_point_m", false, true)
   def toLineStringM(wkb: Array[Byte]): ArrayData =
-    coordArrD(readDims(wkb, "ga_to_linestring_m", wantZ = false, wantM = true).getCoordinates,
-      z = false, m = true)
+    lineString(wkb, "ga_to_linestring_m", false, true)
   def toMultiPointM(wkb: Array[Byte]): ArrayData =
-    coordArrD(mpCoords(readDims(wkb, "ga_to_multipoint_m", wantZ = false, wantM = true),
-      "ga_to_multipoint_m"),
-      z = false, m = true)
-  def toPolygonM(wkb: Array[Byte]): ArrayData =
-    polyArrD(readDims(wkb, "ga_to_polygon_m", wantZ = false, wantM = true).asInstanceOf[Polygon],
-      z = false, m = true)
+    multiPoint(wkb, "ga_to_multipoint_m", false, true)
+  def toPolygonM(wkb: Array[Byte]): ArrayData = polygon(wkb, "ga_to_polygon_m", false, true)
   def toMultiLineStringM(wkb: Array[Byte]): ArrayData =
-    mlsArrD(readDims(wkb, "ga_to_multilinestring_m", wantZ = false, wantM = true),
-      z = false, m = true)
+    multiLineString(wkb, "ga_to_multilinestring_m", false, true)
   def toMultiPolygonM(wkb: Array[Byte]): ArrayData =
-    mpolyArrD(readDims(wkb, "ga_to_multipolygon_m", wantZ = false, wantM = true),
-      "ga_to_multipolygon_m", z = false, m = true)
+    multiPolygon(wkb, "ga_to_multipolygon_m", false, true)
 
-  def toPointZM(wkb: Array[Byte]): InternalRow = {
-    val g = readDims(wkb, "ga_to_point_zm", wantZ = true, wantM = true)
-    if (g.isEmpty) nanRow(4) else coordRowD(g.getCoordinate, z = true, m = true)
-  }
+  def toPointZM(wkb: Array[Byte]): InternalRow = point(wkb, "ga_to_point_zm", true, true)
   def toLineStringZM(wkb: Array[Byte]): ArrayData =
-    coordArrD(readDims(wkb, "ga_to_linestring_zm", wantZ = true, wantM = true).getCoordinates,
-      z = true, m = true)
+    lineString(wkb, "ga_to_linestring_zm", true, true)
   def toMultiPointZM(wkb: Array[Byte]): ArrayData =
-    coordArrD(mpCoords(readDims(wkb, "ga_to_multipoint_zm", wantZ = true, wantM = true),
-      "ga_to_multipoint_zm"),
-      z = true, m = true)
-  def toPolygonZM(wkb: Array[Byte]): ArrayData =
-    polyArrD(readDims(wkb, "ga_to_polygon_zm", wantZ = true, wantM = true).asInstanceOf[Polygon],
-      z = true, m = true)
+    multiPoint(wkb, "ga_to_multipoint_zm", true, true)
+  def toPolygonZM(wkb: Array[Byte]): ArrayData = polygon(wkb, "ga_to_polygon_zm", true, true)
   def toMultiLineStringZM(wkb: Array[Byte]): ArrayData =
-    mlsArrD(readDims(wkb, "ga_to_multilinestring_zm", wantZ = true, wantM = true),
-      z = true, m = true)
+    multiLineString(wkb, "ga_to_multilinestring_zm", true, true)
   def toMultiPolygonZM(wkb: Array[Byte]): ArrayData =
-    mpolyArrD(readDims(wkb, "ga_to_multipolygon_zm", wantZ = true, wantM = true),
-      "ga_to_multipolygon_zm", z = true, m = true)
+    multiPolygon(wkb, "ga_to_multipolygon_zm", true, true)
 }

@@ -84,16 +84,8 @@ case class SpatialJoinExec(
     val joinedAttrs = left.output ++ right.output
 
     streamPlan.execute().mapPartitions { iter =>
-      val tree = new STRtree()
-      val prep = new PreparedGeometryFactory()
-      broadcastRows.value.foreach { row =>
-        val wkb = buildGeomBound.eval(row).asInstanceOf[Array[Byte]]
-        if (wkb != null) {
-          val g = GeomOps.read(wkb)
-          if (!g.isEmpty) tree.insert(g.getEnvelopeInternal, (row, prep.create(g)))
-        }
-      }
-      tree.build()
+      val rows = broadcastRows.value
+      val tree = SpatialJoinExec.buildTree(rows, buildGeomBound)
       val joined = new JoinedRow()
       val proj = UnsafeProjection.create(outAttrs, joinedAttrs)
       iter.flatMap { srow =>
@@ -109,8 +101,9 @@ case class SpatialJoinExec(
             // lazy: each next() projects into the reused UnsafeRow buffer —
             // the doExecute contract allows row reuse, so no per-row copy
             (0 until cands.size()).iterator.flatMap { i =>
-              val (brow, pg) = cands.get(i).asInstanceOf[(InternalRow, PreparedGeometry)]
+              val (idx, pg) = cands.get(i).asInstanceOf[(Integer, PreparedGeometry)]
               if (test(pg, sg)) {
+                val brow = rows(idx.intValue())
                 if (bRight) joined(srow, brow) else joined(brow, srow)
                 Iterator.single(proj(joined))
               } else Iterator.empty
@@ -126,6 +119,26 @@ case class SpatialJoinExec(
 }
 
 object SpatialJoinExec {
+  /** The STRtree over the broadcast build rows that both broadcast execs
+    * probe: each row with a non-null, non-empty geometry (`geom`, bound to
+    * the build side) is one item, (its index in `rows`, its prepared
+    * geometry), keyed by its envelope. */
+  def buildTree(rows: Array[InternalRow], geom: Expression): STRtree = {
+    val tree = new STRtree()
+    val prep = new PreparedGeometryFactory()
+    var i = 0
+    while (i < rows.length) {
+      val wkb = geom.eval(rows(i)).asInstanceOf[Array[Byte]]
+      if (wkb != null) {
+        val g = GeomOps.read(wkb)
+        if (!g.isEmpty) tree.insert(g.getEnvelopeInternal, (Integer.valueOf(i), prep.create(g)))
+      }
+      i += 1
+    }
+    tree.build()
+    tree
+  }
+
   /** P(a,b) ⟺ transpose(P)(b,a). */
   val transpose: Map[String, String] = Map(
     "intersects" -> "intersects", "contains" -> "within", "within" -> "contains",

@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Exp
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.strtree.STRtree
+import org.locationtech.jts.geom.prep.PreparedGeometry
 
 import graft.core.GeomOps
 
@@ -62,19 +61,7 @@ case class SpatialJoinFoldExec(
 
     streamPlan.execute().mapPartitions { iter =>
       val rows = broadcastRows.value
-      val tree = new STRtree()
-      val prep = new PreparedGeometryFactory()
-      var i = 0
-      while (i < rows.length) {
-        val wkb = buildGeomBound.eval(rows(i)).asInstanceOf[Array[Byte]]
-        if (wkb != null) {
-          val g = GeomOps.read(wkb)
-          if (!g.isEmpty)
-            tree.insert(g.getEnvelopeInternal, (Integer.valueOf(i), prep.create(g)))
-        }
-        i += 1
-      }
-      tree.build()
+      val tree = SpatialJoinExec.buildTree(rows, buildGeomBound)
       val counts = new Array[Long](rows.length)
       iter.foreach { srow =>
         val wkb = streamGeomBound.eval(srow).asInstanceOf[Array[Byte]]

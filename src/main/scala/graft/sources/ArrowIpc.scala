@@ -952,8 +952,10 @@ object ArrowIpc {
 
   // ── write ─────────────────────────────────────────────────────────────
 
-  /** Write `df` as a directory of .arrow files, one per partition (same
-    * distribution model as the FlatGeobuf writer — no driver collect). The
+  /** Write `df` as a directory of .arrow (.arrows with `streamFormat`)
+    * files, one per partition, through [[RowFileSource.writeParts]] — no
+    * driver collect, and a write replaces the directory's earlier
+    * `.arrow`/`.arrows` part-files. The
     * geometry column is written as a binary vector tagged
     * `ARROW:extension:name = geoarrow.wkb`, which GeoPandas/pyarrow and
     * [[read]] both recognize. Property types: int/long/float/double/
@@ -1060,11 +1062,7 @@ object ArrowIpc {
       }
 
     val sparkSchema = df1.schema
-    val dir = new org.apache.hadoop.fs.Path(path)
-    dir.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).mkdirs(dir)
     val geomName = geometryCol
-    val confSer = df.sparkSession.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(df.sparkSession.sessionState.newHadoopConf()))
     val batchSize = 4096 // rows per IPC record batch — bounds task memory
     // dictionary-encoded string columns: one distributed distinct per
     // column (bounded — dictionary encoding only makes sense for low
@@ -1108,7 +1106,8 @@ object ArrowIpc {
       if (node.isEmpty) null else jsonMapper.writeValueAsString(node)
     }.orNull
 
-    df1.rdd.foreachPartition { rows =>
+    val ext = if (streamFormat) "arrows" else "arrow"
+    RowFileSource.writeParts(df1, path, Seq("arrow", "arrows")) { (rows, open) =>
       val allocator = new RootAllocator()
       val dictVectors = scala.collection.mutable.ArrayBuffer.empty[VarCharVector]
       try {
@@ -1365,11 +1364,7 @@ object ArrowIpc {
           w.end()
         }
         val root = VectorSchemaRoot.create(new Schema(java.util.List.of(fields: _*)), allocator)
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val fs = dir.getFileSystem(confSer.value.value)
-        val ext = if (streamFormat) "arrows" else "arrow"
-        val out = fs.create(new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.$ext"), true)
-        val ch = java.nio.channels.Channels.newChannel(out)
+        val ch = java.nio.channels.Channels.newChannel(open(ext))
         val writer: org.apache.arrow.vector.ipc.ArrowWriter =
           if (streamFormat) new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, provider, ch)
           else new org.apache.arrow.vector.ipc.ArrowFileWriter(root, provider, ch)
@@ -1691,7 +1686,7 @@ object ArrowIpc {
           }
           // an empty partition still writes a valid zero-batch file
           writer.end()
-        } finally { writer.close(); out.close(); root.close() }
+        } finally { writer.close(); root.close() }
       } finally {
         dictVectors.foreach(v => try v.close() catch { case _: Exception => })
         allocator.close()

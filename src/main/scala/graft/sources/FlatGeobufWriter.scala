@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStream}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -270,23 +270,16 @@ object FlatGeobufWriter {
     bb.array()
   }
 
-  private def headerBytes(name: String, cols: Seq[(String, Int)], count: Long,
-                          env: Array[Double], indexNodeSize: Int,
-                          crsWkt: Option[String],
-                          hasZ: Boolean, hasM: Boolean,
-                          title: Option[String] = None,
-                          description: Option[String] = None,
-                          metadata: Option[String] = None,
-                          geometryType: Int = 0): Array[Byte] = {
+  private def headerBytes(lay: Layout, facts: Facts, indexNodeSize: Int): Array[Byte] = {
     val b = new FBB()
-    val nameOff = b.createString(name)
+    val nameOff = b.createString(lay.name)
     // dataset annotations — header.fbs fields 11-13; parity with the
     // reference's with_title/with_description/with_metadata options
     // (rust/geoarrow-flatgeobuf/src/writer.rs:66-89)
-    val titleOff = title.fold(0)(b.createString)
-    val descOff = description.fold(0)(b.createString)
-    val metaOff = metadata.fold(0)(b.createString)
-    val colOffs = cols.map { case (n, t) =>
+    val titleOff = lay.title.fold(0)(b.createString)
+    val descOff = lay.description.fold(0)(b.createString)
+    val metaOff = lay.metadata.fold(0)(b.createString)
+    val colOffs = lay.cols.map { case (n, t) =>
       val no = b.createString(n)
       b.startTable(2)
       b.slotOffset(0, no)     // Column.name
@@ -294,9 +287,11 @@ object FlatGeobufWriter {
       b.endTable()
     }.toArray
     val colsVec = if (colOffs.isEmpty) 0 else b.createOffsetVector(colOffs)
-    val envVec = if (env == null) 0 else b.createDoubleVector(env)
+    val env = facts.extent
+    val envVec = if (env.isNull) 0
+                 else b.createDoubleVector(Array(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
     // Crs table per the public spec: org(0), code(1), name(2), desc(3), wkt(4)
-    val crsOff = crsWkt.fold(0) { wkt =>
+    val crsOff = lay.crsWkt.fold(0) { wkt =>
       val w = b.createString(wkt)
       b.startTable(5)
       b.slotOffset(4, w)
@@ -309,11 +304,11 @@ object FlatGeobufWriter {
     // detect_type semantics, writer.rs:52-57) or Unknown(0) on a mix —
     // per-feature tags are always present either way, so both strict and
     // per-feature readers decode the file
-    b.slotByte(2, geometryType.toByte, 0)
-    b.slotByte(3, if (hasZ) 1 else 0, 0) // Header.has_z
-    b.slotByte(4, if (hasM) 1 else 0, 0) // Header.has_m
+    b.slotByte(2, facts.geometryType.toByte, 0)
+    b.slotByte(3, if (facts.anyZ) 1 else 0, 0) // Header.has_z
+    b.slotByte(4, if (facts.anyM) 1 else 0, 0) // Header.has_m
     b.slotOffset(7, colsVec)
-    b.slotLong(8, count, 0)
+    b.slotLong(8, facts.count, 0)
     b.slotOffset(10, crsOff)     // Header.crs
     b.slotOffset(11, titleOff)   // Header.title
     b.slotOffset(12, descOff)    // Header.description
@@ -445,13 +440,16 @@ object FlatGeobufWriter {
     case _: GeometryCollection => 7
   }
 
-  private def featureBytes(row: Row, types: Array[Int], geomIdx: Int,
-                           promote: Boolean): (Array[Byte], Envelope, Boolean, Boolean, Int) = {
+  /** One encoded feature and what its file's header needs of it. */
+  private final case class Feature(bytes: Array[Byte], env: Envelope, z: Boolean, m: Boolean,
+                                   typeCode: Int)
+
+  private def featureBytes(row: Row, lay: Layout): Feature = {
     val b = new FBB()
-    val wkb = if (row.isNullAt(geomIdx)) null else row.getAs[Array[Byte]](geomIdx)
+    val wkb = if (row.isNullAt(lay.geomIdx)) null else row.getAs[Array[Byte]](lay.geomIdx)
     val raw = if (wkb == null) null else GeomOps.read(wkb)
-    val geom = if (raw != null && promote) promoteMulti(raw) else raw
-    val props = propertyBytes(row, types)
+    val geom = if (raw != null && lay.promote) promoteMulti(raw) else raw
+    val props = propertyBytes(row, lay.types)
     val propsVec = if (props.isEmpty) 0 else b.createByteVector(props)
     val geomOff = if (geom == null || geom.isEmpty) 0 else geometryOffset(b, geom)
     b.startTable(2)
@@ -460,8 +458,92 @@ object FlatGeobufWriter {
     val fb = b.finish(b.endTable())
     val (z, m) =
       if (geom == null || geom.isEmpty) (false, false) else zmOf(geom.getCoordinates)
-    (fb, if (geom == null) null else geom.getEnvelopeInternal, z, m,
+    Feature(fb, if (geom == null) null else geom.getEnvelopeInternal, z, m,
       if (geom == null || geom.isEmpty) 0 else fgbTypeCode(geom))
+  }
+
+  /** What every file of one write shares: the geometry column, the typed
+    * property columns and the header options. */
+  private final case class Layout(geomIdx: Int, cols: Seq[(String, Int)], name: String,
+                                  index: Boolean, crsWkt: Option[String], title: Option[String],
+                                  description: Option[String], metadata: Option[String],
+                                  promote: Boolean) {
+    val types: Array[Int] = cols.map(_._2).toArray
+  }
+
+  private def layout(df: DataFrame, geometryCol: String, name: String, index: Boolean,
+                     crsWkt: Option[String], title: Option[String],
+                     description: Option[String], metadata: Option[String],
+                     promoteToMulti: Boolean): Layout = {
+    val schema = df.schema
+    val geomIdx = schema.fieldIndex(geometryCol)
+    require(geomIdx == schema.fields.length - 1,
+      s"geometry column must be last (got schema ${schema.simpleString}); select it last")
+    Layout(geomIdx, schema.fields.dropRight(1).map(f => (f.name, sparkToFgbType(f.dataType))).toSeq,
+      name, index, crsWkt, title, description,
+      metadataWithEdges(schema, geometryCol, metadata), promoteToMulti)
+  }
+
+  /** The header facts of one file, folded feature by feature: the count,
+    * the extent, whether every feature has an envelope, Z/M presence and
+    * the header geometry_type — the file's uniform post-promotion type, or
+    * Unknown (0) on a mix. With promoteToMulti a mixed Polygon/MultiPolygon
+    * frame becomes uniformly MultiPolygon and the header declares it, which
+    * strict homogeneous-type readers require. */
+  private final class Facts {
+    var count = 0L
+    val extent = new Envelope()
+    private var allHaveEnv = true
+    var anyZ = false
+    var anyM = false
+    private var uniformType = -1 // -1 = unseen, 0 = mixed, else the shared code
+
+    def add(f: Feature): Unit = {
+      count += 1
+      anyZ ||= f.z; anyM ||= f.m
+      if (f.env != null) extent.expandToInclude(f.env) else allHaveEnv = false
+      if (f.typeCode != 0)
+        uniformType = if (uniformType == -1 || uniformType == f.typeCode) f.typeCode else 0
+    }
+
+    def geometryType: Int = math.max(uniformType, 0)
+
+    /** The packed tree addresses every feature by envelope; a file with
+      * geometry-less rows can't be indexed → spec-legal indexless file. */
+    def indexed(want: Boolean): Boolean = want && count > 0 && allHaveEnv
+  }
+
+  /** Little-endian size prefix, then the bytes: the framing of the header
+    * and of every feature. */
+  private def writeSized(out: OutputStream, bytes: Array[Byte]): Unit = {
+    val size = bytes.length
+    out.write(size & 0xFF); out.write((size >> 8) & 0xFF)
+    out.write((size >> 16) & 0xFF); out.write((size >> 24) & 0xFF)
+    out.write(bytes, 0, size)
+  }
+
+  /** One .fgb file: magic, size-prefixed header, the packed Hilbert R-tree
+    * when `facts.indexed(layout.index)`, then the size-prefixed feature
+    * section that `features` writes — `envs` and `sizes` describe its
+    * features in file order. */
+  private def writeFile(out: OutputStream, layout: Layout, facts: Facts,
+                        envs: Array[Envelope], sizes: Array[Int])(
+                        features: OutputStream => Unit): Unit = {
+    val doIndex = facts.indexed(layout.index)
+    out.write(Array[Byte]('f', 'g', 'b', 3, 'f', 'g', 'b', 0))
+    writeSized(out, headerBytes(layout, facts, if (doIndex) 16 else 0))
+    if (doIndex) {
+      val offsets = new Array[Long](sizes.length)
+      var acc = 0L
+      var i = 0
+      while (i < sizes.length) {
+        offsets(i) = acc
+        acc += 4L + sizes(i)
+        i += 1
+      }
+      out.write(buildIndex(envs, offsets, 16))
+    }
+    features(out)
   }
 
   /** Write `df` as ONE .fgb FILE at `path` — the reference writer's
@@ -473,7 +555,7 @@ object FlatGeobufWriter {
     * single-task assembly (a one-file artifact serializes its writer by
     * definition — the reference's writer is single-threaded throughout)
     * streams feature bytes to a task-local spill file while only the
-    * envelopes + offsets the packed R-tree needs stay in memory, so the
+    * envelopes + sizes the packed R-tree needs stay in memory, so the
     * task never materializes the dataset. Features arrive pre-sorted, so
     * no in-task sort happens. */
   def writeSingle(df: DataFrame, path: String, geometryCol: String = "geometry",
@@ -482,21 +564,11 @@ object FlatGeobufWriter {
                   title: Option[String] = None, description: Option[String] = None,
                   metadata: Option[String] = None,
                   promoteToMulti: Boolean = false): Unit = {
-    val schema = df.schema
-    val geomIdx = schema.fieldIndex(geometryCol)
-    require(geomIdx == schema.fields.length - 1,
-      s"geometry column must be last (got schema ${schema.simpleString}); select it last")
-    val cols = schema.fields.dropRight(1).map(f => (f.name, sparkToFgbType(f.dataType))).toSeq
-    val types = cols.map(_._2).toArray
+    val lay = layout(df, geometryCol, name, index, crsWkt, title, description, metadata,
+      promoteToMulti)
     val target = new org.apache.hadoop.fs.Path(path)
-    target.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-      .mkdirs(target.getParent)
-    val confSer = df.sparkSession.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        df.sparkSession.sessionState.newHadoopConf()))
-    val wantIndex = index
-    val promote = promoteToMulti
-    val effMeta = metadataWithEdges(schema, geometryCol, metadata)
+    val conf = RowFileSource.broadcastConf(df.sparkSession)
+    target.getFileSystem(conf.value.value).mkdirs(target.getParent)
     // global Hilbert order via distributed range shuffle; with index off a
     // plain single-range repartition suffices (order is then irrelevant).
     // The trailing coalesce(1) is a no-op on the already-single-range sort
@@ -504,60 +576,32 @@ object FlatGeobufWriter {
     // the original multi-partition frame there, and multiple tasks racing
     // one fs.create(target) would corrupt the artifact.
     val ordered =
-      (if (wantIndex) GeoParquet.spatialSort(df, geometryCol, numPartitions = 1)
+      (if (index) GeoParquet.spatialSort(df, geometryCol, numPartitions = 1)
        else df.repartition(1)).coalesce(1)
     ordered.rdd.foreachPartition { rows =>
       val spillFile = java.io.File.createTempFile("graft_fgb_single", ".spill")
-      val spill = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(spillFile), 1 << 16))
+      val spill = new java.io.BufferedOutputStream(new java.io.FileOutputStream(spillFile), 1 << 16)
       val envs = scala.collection.mutable.ArrayBuffer.empty[Envelope]
-      val offsets = new scala.collection.mutable.ArrayBuffer[Long]
-      val env = new Envelope()
-      var acc = 0L
-      var allHaveEnv = true
-      var anyZ = false
-      var anyM = false
-      var uniformType = -1 // as in [[write]]: -1 unseen, 0 mixed, else shared
+      val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val facts = new Facts
       try {
         rows.foreach { row =>
-          val (fb, e, z, m, tcode) = featureBytes(row, types, geomIdx, promote)
-          val size = fb.length
-          // little-endian size prefix, exactly the on-file feature framing —
+          val f = featureBytes(row, lay)
           // the spill is byte-identical to the file's feature section
-          spill.write(size & 0xFF); spill.write((size >> 8) & 0xFF)
-          spill.write((size >> 16) & 0xFF); spill.write((size >> 24) & 0xFF)
-          spill.write(fb, 0, size)
-          envs += e
-          offsets += acc
-          acc += 4L + size
-          anyZ ||= z; anyM ||= m
-          if (e != null) env.expandToInclude(e) else allHaveEnv = false
-          if (tcode != 0)
-            uniformType = if (uniformType == -1 || uniformType == tcode) tcode else 0
+          writeSized(spill, f.bytes)
+          envs += f.env
+          sizes += f.bytes.length
+          facts.add(f)
         }
         spill.close()
-        val count = envs.length.toLong
-        val doIndex = wantIndex && count > 0 && allHaveEnv
-        // the SESSION Hadoop conf (spark.hadoop.* overlays — object-store
-        // credentials/endpoints), not a bare new Configuration()
-        val fs = target.getFileSystem(confSer.value.value)
-        val out = fs.create(target, true)
-        try {
-          out.write(Array[Byte]('f', 'g', 'b', 3, 'f', 'g', 'b', 0))
-          val hdr = headerBytes(name, cols, count,
-            if (env.isNull) null else Array(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY),
-            if (doIndex) 16 else 0, crsWkt, anyZ, anyM, title, description, effMeta,
-            geometryType = math.max(uniformType, 0))
-          out.write(hdr.length & 0xFF); out.write((hdr.length >> 8) & 0xFF)
-          out.write((hdr.length >> 16) & 0xFF); out.write((hdr.length >> 24) & 0xFF)
-          out.write(hdr)
-          if (doIndex) out.write(buildIndex(envs.toArray, offsets.toArray, 16))
+        val out = target.getFileSystem(conf.value.value).create(target, true)
+        try writeFile(out, lay, facts, envs.toArray, sizes.toArray) { o =>
           val in = new java.io.BufferedInputStream(
             new java.io.FileInputStream(spillFile), 1 << 16)
           try {
             val buf = new Array[Byte](1 << 16)
             var n = in.read(buf)
-            while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
+            while (n > 0) { o.write(buf, 0, n); n = in.read(buf) }
           } finally in.close()
         } finally out.close()
       } finally {
@@ -567,91 +611,36 @@ object FlatGeobufWriter {
     }
   }
 
-  /** Write `df` as a directory of .fgb files, one per partition. The
-    * geometry column (WKB) becomes the FGB geometry; all other columns
-    * become typed FGB properties in schema order. With `index=true` (the
-    * default) features are Hilbert-sorted and each file carries the packed
-    * Hilbert R-tree, making it bbox-seekable. */
+  /** Write `df` as a directory of .fgb files, one per partition, through
+    * [[RowFileSource.writeParts]]: a write replaces the directory's earlier
+    * `.fgb` part-files. The geometry column (WKB) becomes the FGB geometry;
+    * all other columns become typed FGB properties in schema order. With
+    * `index=true` (the default) features are Hilbert-sorted and each file
+    * carries the packed Hilbert R-tree, making it bbox-seekable. */
   def write(df: DataFrame, path: String, geometryCol: String = "geometry",
             name: String = "graft", index: Boolean = true,
             crsWkt: Option[String] = None,
             title: Option[String] = None, description: Option[String] = None,
             metadata: Option[String] = None,
             promoteToMulti: Boolean = false): Unit = {
-    val schema = df.schema
-    val geomIdx = schema.fieldIndex(geometryCol)
-    require(geomIdx == schema.fields.length - 1,
-      s"geometry column must be last (got schema ${schema.simpleString}); select it last")
-    val propFields = schema.fields.dropRight(1)
-    val cols = propFields.map(f => (f.name, sparkToFgbType(f.dataType))).toSeq
-    val types = cols.map(_._2).toArray
-    val effMeta = metadataWithEdges(schema, geometryCol, metadata)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    dir.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).mkdirs(dir)
-    val wantIndex = index
-    val promote = promoteToMulti
-    val confSer = df.sparkSession.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        df.sparkSession.sessionState.newHadoopConf()))
-    df.rdd.foreachPartition { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      // buffer (feature bytes, envelope) — same per-partition memory bound
-      // as the previous streaming buffer, but sortable for the Hilbert index
+    val lay = layout(df, geometryCol, name, index, crsWkt, title, description, metadata,
+      promoteToMulti)
+    RowFileSource.writeParts(df, path, Seq("fgb")) { (rows, open) =>
+      // the partition's (feature bytes, envelope), buffered: the header
+      // carries the extent and the Hilbert sort needs every envelope
       val feats = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Envelope)]
-      val env = new Envelope()
-      var allHaveEnv = true
-      var anyZ = false
-      var anyM = false
-      // header geometry_type: the partition's uniform post-promotion type,
-      // or Unknown (0) on a mix — with promoteToMulti a mixed Polygon/
-      // MultiPolygon frame becomes uniformly MultiPolygon and the header
-      // declares it, which strict homogeneous-type readers require
-      var uniformType = -1 // -1 = unseen, 0 = mixed, else the shared code
+      val facts = new Facts
       rows.foreach { row =>
-        val (fb, e, z, m, tcode) = featureBytes(row, types, geomIdx, promote)
-        feats += ((fb, e))
-        anyZ ||= z; anyM ||= m
-        if (e != null) env.expandToInclude(e) else allHaveEnv = false
-        if (tcode != 0)
-          uniformType = if (uniformType == -1 || uniformType == tcode) tcode else 0
+        val f = featureBytes(row, lay)
+        feats += ((f.bytes, f.env))
+        facts.add(f)
       }
-      val headerType = math.max(uniformType, 0)
-      val count = feats.length.toLong
-      // the packed tree addresses every feature by envelope; a partition
-      // with geometry-less rows can't be indexed → spec-legal indexless file
-      val doIndex = wantIndex && count > 0 && allHaveEnv
       val sorted =
-        if (doIndex) feats.sortBy { case (_, e) => hilbertOf(e, env) }
+        if (facts.indexed(lay.index)) feats.sortBy { case (_, e) => hilbertOf(e, facts.extent) }
         else feats
-      val fs = dir.getFileSystem(confSer.value.value)
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.fgb"), true)
-      try {
-        out.write(Array[Byte]('f', 'g', 'b', 3, 'f', 'g', 'b', 0))
-        val hdr = headerBytes(name, cols, count,
-          if (env.isNull) null else Array(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY),
-          if (doIndex) 16 else 0, crsWkt, anyZ, anyM, title, description, effMeta,
-          geometryType = headerType)
-        out.write(hdr.length & 0xFF); out.write((hdr.length >> 8) & 0xFF)
-        out.write((hdr.length >> 16) & 0xFF); out.write((hdr.length >> 24) & 0xFF)
-        out.write(hdr)
-        if (doIndex) {
-          val offsets = new Array[Long](sorted.length)
-          var acc = 0L
-          var i = 0
-          while (i < sorted.length) {
-            offsets(i) = acc
-            acc += 4L + sorted(i)._1.length
-            i += 1
-          }
-          out.write(buildIndex(sorted.map(_._2).toArray, offsets, 16))
-        }
-        sorted.foreach { case (fb, _) =>
-          val size = fb.length
-          out.write(size & 0xFF); out.write((size >> 8) & 0xFF)
-          out.write((size >> 16) & 0xFF); out.write((size >> 24) & 0xFF)
-          out.write(fb, 0, fb.length)
-        }
-      } finally out.close()
+      writeFile(open("fgb"), lay, facts, sorted.map(_._2).toArray, sorted.map(_._1.length).toArray) {
+        out => sorted.foreach { case (fb, _) => writeSized(out, fb) }
+      }
     }
   }
 }

@@ -16,9 +16,10 @@ import graft.core.GeomOps
   * payloads), .shx fixed-width offset index, .dbf attribute table
   * (dBASE III), optional .prj with a verbatim CRS WKT.
   *
-  * One file SET per partition (`part-NNNNN.shp/.shx/.dbf`) — the same
-  * convention as [[FlatGeobufWriter.write]]; `df.coalesce(1)` for a single
-  * set. Each partition buffers its rows (the header carries record count
+  * One file SET per partition (`part-NNNNN.shp/.shx/.dbf[/.prj]`), written
+  * through [[RowFileSource.writeParts]]: a write replaces the directory's
+  * earlier part-file sets, sidecars included; `df.coalesce(1)` for a
+  * single set. Each partition buffers its rows (the header carries record count
   * and bbox, and .dbf fields size themselves from the data), so the
   * memory bound is one partition — size partitions accordingly.
   *
@@ -81,14 +82,7 @@ object ShapefileWriter {
     val propFields = schema.fields.zipWithIndex.filter(_._2 != geomIdx).map(_._1)
       .zip(laundered).map { case (f, n) => f.copy(name = n) }
     val propIdxs = schema.fields.indices.filterNot(_ == geomIdx).toArray
-    val dir = new org.apache.hadoop.fs.Path(path)
-    dir.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).mkdirs(dir)
-    val confSer = df.sparkSession.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        df.sparkSession.sessionState.newHadoopConf()))
-    val prj = prjWkt
-    df.rdd.foreachPartition { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+    RowFileSource.writeParts(df, path, Seq("shp", "shx", "dbf", "prj")) { (rows, open) =>
       val geoms = scala.collection.mutable.ArrayBuffer.empty[Geometry]
       val props = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
       rows.foreach { row =>
@@ -96,17 +90,11 @@ object ShapefileWriter {
                   else GeomOps.read(row.getAs[Array[Byte]](geomIdx)))
         props += propIdxs.map(i => if (row.isNullAt(i)) null else row.get(i))
       }
-      val fs = dir.getFileSystem(confSer.value.value)
-      def out(ext: String) =
-        fs.create(new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.$ext"), true)
       val (shpBytes, shxBytes) = encodeShp(geoms.toSeq)
-      val o1 = out("shp"); try o1.write(shpBytes) finally o1.close()
-      val o2 = out("shx"); try o2.write(shxBytes) finally o2.close()
-      val dbf = encodeDbf(propFields.toSeq, props.toSeq)
-      val o3 = out("dbf"); try o3.write(dbf) finally o3.close()
-      prj.foreach { w =>
-        val o4 = out("prj"); try o4.write(w.getBytes("ASCII")) finally o4.close()
-      }
+      open("shp").write(shpBytes)
+      open("shx").write(shxBytes)
+      open("dbf").write(encodeDbf(propFields.toSeq, props.toSeq))
+      prjWkt.foreach(w => open("prj").write(w.getBytes("ASCII")))
     }
   }
 
