@@ -7,14 +7,21 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * stage and task counts, summed task time, and wall — so driver-loop /
   * micro-batch fixed costs are measurable without the (disabled) UI.
   *
-  * Usage: runMain graft.Profile <query[,query...]> [reps]
+  * Usage: runMain graft.Profile [--plans <dir>] <query[,query...]> [reps]
+  * `--plans <dir>` also writes each query's `.explain("formatted")` to
+  * `<dir>/<query>.txt` (the plans/r20 evidence files); reps 0 writes the
+  * plans only.
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as Bench).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.map(_.split(",").toSet)
-      .getOrElse(sys.error("usage: Profile <query[,query...]> [reps]"))
-    val reps = if (args.length > 1) args(1).toInt else 2
+    val (plansDir, rest) = args.toList match {
+      case "--plans" :: dir :: more => (Some(dir), more)
+      case more => (None, more)
+    }
+    val names = rest.headOption.map(_.split(",").toSet)
+      .getOrElse(sys.error("usage: Profile [--plans <dir>] <query[,query...]> [reps]"))
+    val reps = if (rest.length > 1) rest(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // experiment passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets an
@@ -72,11 +79,19 @@ object Profile {
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    run(SparkEntry.entry(spark)) // warmup: JVM + codegen + footer caches
+    if (reps > 0) run(SparkEntry.entry(spark)) // warmup: JVM + codegen + footer caches
+    plansDir.foreach(new java.io.File(_).mkdirs())
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names(n) }
     selected.foreach { case (name, fn) =>
+      plansDir.foreach { dir =>
+        val txt = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, s"$name.txt"), txt)
+        println(s"dumped $name (${txt.length} chars)")
+        graft.core.Blocks.scrub(spark)
+      }
       for (r <- 1 to reps) {
         graft.core.Blocks.scrub(spark, blocking = true)
         Thread.sleep(200) // let listener events from the scrub drain

@@ -958,13 +958,15 @@ object ArrowIpc {
     * `.arrow`/`.arrows` part-files. The
     * geometry column is written as a binary vector tagged
     * `ARROW:extension:name = geoarrow.wkb`, which GeoPandas/pyarrow and
-    * [[read]] both recognize. Property types: int/long/float/double/
-    * string/boolean/binary, date (day unit), timestamp (zoned UTC
-    * micros) and timestamp_ntz (zoneless micros), plus nested
-    * array/struct/map of those (any depth) written as List/Struct/Map
-    * subtrees —
-    * the shapes [[read]] maps back, so write∘read is identity for nested
-    * properties too.
+    * [[read]] both recognize. Columns are typed by Spark's own Arrow
+    * mapping and filled from the Catalyst rows by Spark's `ArrowWriter`:
+    * byte/short/int/long, float/double, decimal, string, boolean, binary,
+    * date (day unit), timestamp (zoned UTC micros), timestamp_ntz
+    * (zoneless micros), and nested array/struct/map of those (any depth)
+    * as List (child `element`)/Struct/Map subtrees — the shapes [[read]]
+    * maps back, so write∘read is identity for nested properties too. Only
+    * the `geometry`/`geometrycollection` union columns and
+    * `dictionaryColumns` are filled here.
     *
     * `dictionaryColumns`: low-cardinality STRING columns to
     * dictionary-encode (the GDAL interop shape [[decodeFile]]
@@ -985,12 +987,14 @@ object ArrowIpc {
     import org.apache.arrow.vector._
     import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
     import org.apache.arrow.vector.types.FloatingPointPrecision
+    import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+    import org.apache.spark.sql.execution.arrow.ArrowWriter
 
     // native GeoArrow encoding (round 16): transcode the WKB geometry to
     // the separated nested layout via the same ga_to_* exporters the
-    // GeoParquet writer uses — the nested field builder below already
-    // writes List/Struct subtrees, so the only geometry-specific part is
-    // the extension tag. The reference's IPC writers emit exactly these
+    // GeoParquet writer uses — Spark's ArrowWriter below writes the
+    // List/Struct subtrees, so the only geometry-specific part is the
+    // extension tag. The reference's IPC writers emit exactly these
     // native arrays; zero-copy-readable by GeoPandas/pyarrow and mapped
     // back by [[schemaOf]] (which also stamps geometry_types evidence from
     // the typed extension name).
@@ -1132,45 +1136,6 @@ object ArrowIpc {
           if (dictByCol.isEmpty) null
           else new org.apache.arrow.vector.dictionary.DictionaryProvider.MapDictionaryProvider(
             dictByCol.values.map(_._1).toSeq: _*)
-        // recursive Spark→Arrow field mapping: nested property columns
-        // (array/struct, any depth) write as List/Struct subtrees — the
-        // shapes [[sparkTypeOf]] reads back, so write∘read is identity
-        def arrowFieldOf(name: String, dt: DataType, nullable: Boolean,
-                         md: java.util.Map[String, String]): Field = dt match {
-          case ArrayType(et, cn) =>
-            new Field(name, new FieldType(nullable, new ArrowType.List(), null, md),
-              java.util.List.of(arrowFieldOf("item", et, cn, java.util.Map.of[String, String]())))
-          case st: StructType =>
-            new Field(name, new FieldType(nullable, new ArrowType.Struct(), null, md),
-              java.util.List.of(st.fields.map(sf =>
-                arrowFieldOf(sf.name, sf.dataType, sf.nullable,
-                  java.util.Map.of[String, String]())): _*))
-          case MapType(kt, vt, vcn) => // entries: struct<key not null, value>
-            new Field(name, new FieldType(nullable, new ArrowType.Map(false), null, md),
-              java.util.List.of(new Field("entries",
-                FieldType.notNullable(new ArrowType.Struct()),
-                java.util.List.of(
-                  arrowFieldOf("key", kt, nullable = false, java.util.Map.of[String, String]()),
-                  arrowFieldOf("value", vt, vcn, java.util.Map.of[String, String]())))))
-          case scalar =>
-            val at: ArrowType = scalar match {
-              case IntegerType => new ArrowType.Int(32, true)
-              case LongType => new ArrowType.Int(64, true)
-              case FloatType => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
-              case DoubleType => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
-              case StringType => new ArrowType.Utf8()
-              case BooleanType => new ArrowType.Bool()
-              case BinaryType => new ArrowType.Binary()
-              case DateType => new ArrowType.Date(org.apache.arrow.vector.types.DateUnit.DAY)
-              case TimestampType => // instant semantics → zoned micros
-                new ArrowType.Timestamp(org.apache.arrow.vector.types.TimeUnit.MICROSECOND, "UTC")
-              case TimestampNTZType => // wall-clock → zoneless micros
-                new ArrowType.Timestamp(org.apache.arrow.vector.types.TimeUnit.MICROSECOND, null)
-              case other => throw new IllegalArgumentException(
-                s"ArrowIpc.write: unsupported type $other for column $name")
-            }
-            new Field(name, new FieldType(nullable, at, null, md), java.util.List.of[Field]())
-        }
         // geometry-union field tree: the reference's FULL 28-id matrix —
         // 7 kinds × 4 dims, type id = dim_order*10 + kind offset
         // (rust/geoarrow-schema/src/type_id.rs:28-35; GeometryCollection
@@ -1250,443 +1215,293 @@ object ArrowIpc {
               if (isGeomCol && geoExtName == "geoarrow.geometry") unionGeomField(f.name, md)
               else if (isGeomCol && geoExtName == "geoarrow.geometrycollection")
                 gcColumnField(f.name, md)
-              else arrowFieldOf(f.name, f.dataType, f.nullable, md)
+              else {
+                // Spark's own Arrow mapping (the types its Arrow export
+                // writes and [[sparkTypeOf]] reads back), plus the GeoArrow
+                // extension tags on the geometry column
+                val t = GraftSchemas.toArrowField(f.name, f.dataType, f.nullable)
+                new Field(f.name, new FieldType(f.nullable, t.getType, null, md), t.getChildren)
+              }
           }
-        }
-        val dictLookup: Array[Map[String, Int]] =
-          sparkSchema.fields.map(f => dictByCol.get(f.name).map(_._2).orNull)
-        // datetime externals → arrow physical values (both the legacy
-        // java.sql and the java.time external types Spark may hand out);
-        // Spark's own converters, which throw on overflow instead of
-        // silently wrapping far-out-of-range values into the file
-        import org.apache.spark.sql.catalyst.util.DateTimeUtils
-        def dateDays(v: Any): Int = v match {
-          case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
-          case ld: java.time.LocalDate => DateTimeUtils.localDateToDays(ld)
-          case other => throw new IllegalArgumentException(
-            s"ArrowIpc.write: unexpected date value ${other.getClass}")
-        }
-        def instantMicros(v: Any): Long = v match {
-          case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
-          case i: java.time.Instant => DateTimeUtils.instantToMicros(i)
-          case other => throw new IllegalArgumentException(
-            s"ArrowIpc.write: unexpected timestamp value ${other.getClass}")
-        }
-        def ntzMicros(v: Any): Long = v match {
-          case ldt: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(ldt)
-          case other => throw new IllegalArgumentException(
-            s"ArrowIpc.write: unexpected timestamp_ntz value ${other.getClass}")
-        }
-        // recursive population for nested columns, via the arrow writer API
-        // (position-based: unwritten positions stay null)
-        import org.apache.arrow.vector.complex.writer.BaseWriter
-        def writeNullElem(w: BaseWriter.ListWriter, et: DataType): Unit = et match {
-          case IntegerType => w.integer().writeNull()
-          case LongType => w.bigInt().writeNull()
-          case FloatType => w.float4().writeNull()
-          case DoubleType => w.float8().writeNull()
-          case StringType => w.varChar().writeNull()
-          case BooleanType => w.bit().writeNull()
-          case BinaryType => w.varBinary().writeNull()
-          case DateType => w.dateDay().writeNull()
-          case TimestampType => w.timeStampMicroTZ().writeNull()
-          case TimestampNTZType => w.timeStampMicro().writeNull()
-          case _: ArrayType => w.list().writeNull()
-          case _: StructType => w.struct().writeNull()
-          case _: MapType => w.map(false).writeNull()
-          case other => throw new IllegalArgumentException(
-            s"ArrowIpc.write: unsupported array element type $other")
-        }
-        def writeElem(w: BaseWriter.ListWriter, et: DataType, e: Any): Unit = et match {
-          case IntegerType => w.integer().writeInt(e.asInstanceOf[Int])
-          case LongType => w.bigInt().writeBigInt(e.asInstanceOf[Long])
-          case FloatType => w.float4().writeFloat4(e.asInstanceOf[Float])
-          case DoubleType => w.float8().writeFloat8(e.asInstanceOf[Double])
-          case StringType => w.varChar().writeVarChar(e.asInstanceOf[String])
-          case BooleanType => w.bit().writeBit(if (e.asInstanceOf[Boolean]) 1 else 0)
-          case BinaryType => w.varBinary().writeVarBinary(e.asInstanceOf[Array[Byte]])
-          case DateType => w.dateDay().writeDateDay(dateDays(e))
-          case TimestampType => w.timeStampMicroTZ().writeTimeStampMicroTZ(instantMicros(e))
-          case TimestampNTZType => w.timeStampMicro().writeTimeStampMicro(ntzMicros(e))
-          case ArrayType(et2, _) => writeArray(w.list(), et2, e.asInstanceOf[scala.collection.Seq[Any]])
-          case st: StructType => writeStructVal(w.struct(), st, e.asInstanceOf[Row])
-          case MapType(kt, vt, _) =>
-            writeMap(w.map(false), kt, vt, e.asInstanceOf[scala.collection.Map[Any, Any]])
-          case other => throw new IllegalArgumentException(
-            s"ArrowIpc.write: unsupported array element type $other")
-        }
-        def writeArray(w: BaseWriter.ListWriter, et: DataType,
-                       xs: scala.collection.Seq[Any]): Unit = {
-          w.startList()
-          xs.foreach {
-            case null => writeNullElem(w, et)
-            case e => writeElem(w, et, e)
-          }
-          w.endList()
-        }
-        def writeMap(w: BaseWriter.MapWriter, kt: DataType, vt: DataType,
-                     m: scala.collection.Map[Any, Any]): Unit = {
-          w.startMap()
-          m.foreach { case (k, v) =>
-            w.startEntry()
-            writeElem(w.key(), kt, k) // spark map keys are never null
-            if (v == null) writeNullElem(w.value(), vt) else writeElem(w.value(), vt, v)
-            w.endEntry()
-          }
-          w.endMap()
-        }
-        def writeStructVal(w: BaseWriter.StructWriter, st: StructType, r: Row): Unit = {
-          w.start()
-          var i = 0
-          while (i < st.fields.length) { // absent (unwritten) child = null
-            val f = st.fields(i)
-            if (!r.isNullAt(i)) f.dataType match {
-              case IntegerType => w.integer(f.name).writeInt(r.getInt(i))
-              case LongType => w.bigInt(f.name).writeBigInt(r.getLong(i))
-              case FloatType => w.float4(f.name).writeFloat4(r.getFloat(i))
-              case DoubleType => w.float8(f.name).writeFloat8(r.getDouble(i))
-              case StringType => w.varChar(f.name).writeVarChar(r.getString(i))
-              case BooleanType => w.bit(f.name).writeBit(if (r.getBoolean(i)) 1 else 0)
-              case BinaryType => w.varBinary(f.name).writeVarBinary(r.getAs[Array[Byte]](i))
-              case DateType => w.dateDay(f.name).writeDateDay(dateDays(r.get(i)))
-              case TimestampType =>
-                w.timeStampMicroTZ(f.name, "UTC").writeTimeStampMicroTZ(instantMicros(r.get(i)))
-              case TimestampNTZType => w.timeStampMicro(f.name).writeTimeStampMicro(ntzMicros(r.get(i)))
-              case ArrayType(et, _) => writeArray(w.list(f.name), et, r.getSeq[Any](i))
-              case st2: StructType => writeStructVal(w.struct(f.name), st2, r.getStruct(i))
-              case MapType(kt, vt, _) =>
-                writeMap(w.map(f.name, false), kt, vt, r.getMap[Any, Any](i))
-              case other => throw new IllegalArgumentException(
-                s"ArrowIpc.write: unsupported struct field type $other for ${f.name}")
-            }
-            i += 1
-          }
-          w.end()
         }
         val root = VectorSchemaRoot.create(new Schema(java.util.List.of(fields: _*)), allocator)
+        import org.apache.arrow.vector.complex.{DenseUnionVector => DUV, FixedSizeListVector => FSL, ListVector => LV}
+        import org.locationtech.jts.geom._
+        // per-union type-id offset counters, keyed by vector identity and
+        // cleared per batch: the top-level union plus up to four inner GC
+        // "geometries" unions, each with its own dense-union offset space
+        val unionCounters = new java.util.IdentityHashMap[DUV, Array[Int]]()
+        def countersFor(du: DUV): Array[Int] = {
+          var a = unionCounters.get(du)
+          if (a == null) { a = new Array[Int](38); unionCounters.put(du, a) }
+          a
+        }
+        // collection kinds probe their FIRST NON-EMPTY component —
+        // hasZ/hasM read only the first element's coordinate, so a
+        // leading EMPTY would misreport a Z/M collection as XY (an
+        // order-dependent refusal of a representable value)
+        def dimsOfGeom(g: Geometry): String = g match {
+          case gc: GeometryCollection =>
+            (0 until gc.getNumGeometries).iterator.map(gc.getGeometryN)
+              .find(!_.isEmpty).map(dimsOfGeom).getOrElse("xy")
+          case _ =>
+            "xy" + (if (graft.core.GeomOps.hasZ(g)) "z" else "") +
+                   (if (graft.core.GeomOps.hasM(g)) "m" else "")
+        }
+        def dimBase(dims: String): Int = dims match {
+          case "xy" => 0; case "xyz" => 10; case "xym" => 20; case _ => 30
+        }
+        // hot loop: dims decode ONCE per geometry, ordinates written
+        // straight to the vector (no per-vertex array allocation)
+        def fillCoords(flv: FSL, start: Int, cs: Array[Coordinate], dims: String): Unit = {
+          val d = dims.length
+          val withZ = dims == "xyz" || dims == "xyzm"
+          val withM = dims == "xym" || dims == "xyzm"
+          val dv = flv.getDataVector.asInstanceOf[Float8Vector]
+          var k = 0
+          while (k < cs.length) {
+            flv.setNotNull(start + k)
+            val cd = cs(k)
+            val base = (start + k) * d
+            dv.setSafe(base, cd.x)
+            dv.setSafe(base + 1, cd.y)
+            var j = 2
+            if (withZ) { dv.setSafe(base + j, cd.getZ); j += 1 }
+            if (withM) dv.setSafe(base + j, cd.getM)
+            k += 1
+          }
+        }
+        def fillLine(lv: LV, row2: Int, cs: Array[Coordinate], dims: String): Unit = {
+          val start = lv.startNewValue(row2)
+          fillCoords(lv.getDataVector.asInstanceOf[FSL], start, cs, dims)
+          lv.endValue(row2, cs.length)
+        }
+        def fillRings(lv2: LV, row2: Int, rings: Seq[Array[Coordinate]], dims: String): Unit = {
+          val start = lv2.startNewValue(row2)
+          val inner = lv2.getDataVector.asInstanceOf[LV]
+          rings.zipWithIndex.foreach { case (cs, k) => fillLine(inner, start + k, cs, dims) }
+          lv2.endValue(row2, rings.length)
+        }
+        def ringsOf(p: Polygon): Seq[Array[Coordinate]] =
+          (p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN))
+            .map(_.getCoordinates)
+        def fillMPoly(lv3: LV, row2: Int, polys: Seq[Polygon], dims: String): Unit = {
+          val start = lv3.startNewValue(row2)
+          val inner = lv3.getDataVector.asInstanceOf[LV]
+          polys.zipWithIndex.foreach { case (pp, k) => fillRings(inner, start + k, ringsOf(pp), dims) }
+          lv3.endValue(row2, polys.length)
+        }
+        def fillEmptyList(lv: LV, row2: Int): Unit = {
+          lv.startNewValue(row2); lv.endValue(row2, 0)
+        }
+        // append one geometry at union position `pos`. EMPTY ≠ NULL
+        // (the reference's logical-null contract, trait_.rs:157-198):
+        // null → null Point child; POINT EMPTY → all-NaN coords (the
+        // GeoArrow empty-point encoding); every list-backed EMPTY →
+        // a length-0 outer list in its own kind child.
+        // `emptyDims`: an EMPTY geometry has no coordinates to probe,
+        // so inside a single-dimension collection it inherits the
+        // collection's declared dims (a top-level empty rides XY)
+        def appendGeom(du: DUV, pos: Int, g: Geometry, topLevel: Boolean,
+                       emptyDims: String = "xy"): Unit = {
+          val cnt = countersFor(du)
+          if (g == null) {
+            val tid: Byte = 1
+            val off = cnt(1)
+            du.getVectorByType(tid).asInstanceOf[FSL].setNull(off)
+            du.setTypeId(pos, tid); du.setOffset(pos, off)
+            cnt(1) += 1
+            return
+          }
+          val dims = if (g.isEmpty) emptyDims else dimsOfGeom(g)
+          val base = dimBase(dims)
+          def put(tid0: Int)(fill: org.apache.arrow.vector.ValueVector => Unit): Unit = {
+            val tid = (base + tid0).toByte
+            val child = du.getVectorByType(tid)
+            require(child != null,
+              s"ArrowIpc.write: geometry union has no child for type id $tid — " +
+                "a GeometryCollection's elements must share one dimension " +
+                "(the reference's mixed type is single-dimension per collection)")
+            fill(child)
+            du.setTypeId(pos, tid); du.setOffset(pos, cnt(base + tid0))
+            cnt(base + tid0) += 1
+          }
+          g match {
+            case p: Point => put(1) { ch =>
+              val flv = ch.asInstanceOf[FSL]
+              val off = cnt(base + 1)
+              if (p.isEmpty) { // NaN ordinates, NOT null: null means SQL NULL
+                flv.setNotNull(off)
+                val dv = flv.getDataVector.asInstanceOf[Float8Vector]
+                var j = 0
+                while (j < dims.length) { dv.setSafe(off * dims.length + j, Double.NaN); j += 1 }
+              } else fillCoords(flv, off, Array(p.getCoordinate), dims)
+            }
+            case l: LineString => put(2)(ch =>
+              fillLine(ch.asInstanceOf[LV], cnt(base + 2), l.getCoordinates, dims))
+            case p: Polygon => put(3) { ch =>
+              if (p.isEmpty) fillEmptyList(ch.asInstanceOf[LV], cnt(base + 3))
+              else fillRings(ch.asInstanceOf[LV], cnt(base + 3), ringsOf(p), dims)
+            }
+            case mp: MultiPoint => put(4)(ch =>
+              // per-member coords with the shared all-NaN EMPTY
+              // sentinel (GeoArrowOps.mpCoords), NOT the flattening
+              // getCoordinates: JTS skips EMPTY point members there,
+              // so MULTIPOINT (1 1, EMPTY) would silently lose an
+              // element on roundtrip
+              fillLine(ch.asInstanceOf[LV], cnt(base + 4),
+                GeoArrowOps.mpCoords(mp, "ArrowIpc.write[geometry]"), dims))
+            case mls: MultiLineString => put(5)(ch =>
+              fillRings(ch.asInstanceOf[LV], cnt(base + 5),
+                (0 until mls.getNumGeometries).map(mls.getGeometryN(_).getCoordinates), dims))
+            case mp: MultiPolygon => put(6)(ch =>
+              fillMPoly(ch.asInstanceOf[LV], cnt(base + 6),
+                (0 until mp.getNumGeometries).map(mp.getGeometryN(_).asInstanceOf[Polygon]), dims))
+            case gc: GeometryCollection => // after the Multi* subclasses
+              require(topLevel,
+                "ArrowIpc.write: a GeometryCollection nested inside another " +
+                  "GeometryCollection is not representable in geoarrow.geometry " +
+                  "(the reference's collection type holds only concrete kinds, " +
+                  "type.rs:738-805) — write with geometryEncoding=wkb")
+              put(7) { ch =>
+                val lv = ch.asInstanceOf[LV]
+                val off = cnt(base + 7)
+                if (gc.getNumGeometries == 0) fillEmptyList(lv, off)
+                else {
+                  val start = lv.startNewValue(off)
+                  val innerDu = lv.getDataVector.asInstanceOf[DUV]
+                  var k = 0
+                  while (k < gc.getNumGeometries) {
+                    appendGeom(innerDu, start + k, gc.getGeometryN(k),
+                      topLevel = false, emptyDims = dims)
+                    k += 1
+                  }
+                  lv.endValue(off, gc.getNumGeometries)
+                }
+              }
+            case other => throw new IllegalArgumentException(
+              s"ArrowIpc.write: geometry-union encoding cannot hold a " +
+                s"${other.getGeometryType} — write with geometryEncoding=wkb")
+          }
+        }
+        // children's own counts first (inner GC unions before their
+        // list parents); the union's own count last
+        val allTids = Seq(0, 10, 20, 30).flatMap(b => (1 to 7).map(b + _))
+        def closeUnion(du: DUV, total: Int): Unit = {
+          val cnt = countersFor(du)
+          allTids.foreach { t =>
+            val child = du.getVectorByType(t.toByte)
+            if (child != null) {
+              if (t % 10 == 7) {
+                val innerDu = child.asInstanceOf[LV].getDataVector.asInstanceOf[DUV]
+                closeUnion(innerDu, countersFor(innerDu).sum)
+              }
+              child.setValueCount(cnt(t))
+            }
+          }
+          du.setValueCount(total)
+        }
+        // a homogeneous geoarrow.geometrycollection cell: GEOMETRYCOLLECTION
+        // EMPTY = length-0 list; elements append into the declared-dim inner
+        // union (a wrong-dim element fails loudly via the child-id check in
+        // appendGeom)
+        def appendCollection(lv: LV, innerDu: DUV, i: Int, g: Geometry): Unit = g match {
+          case _: MultiPoint | _: MultiLineString | _: MultiPolygon =>
+            throw new IllegalArgumentException(
+              "ArrowIpc.write: geometrycollection encoding requires " +
+                "GEOMETRYCOLLECTION rows (a Multi* type has its own encoding)")
+          case gc: GeometryCollection =>
+            if (gc.getNumGeometries == 0) fillEmptyList(lv, i)
+            else {
+              val start = lv.startNewValue(i)
+              var k = 0
+              while (k < gc.getNumGeometries) {
+                appendGeom(innerDu, start + k, gc.getGeometryN(k),
+                  topLevel = false, emptyDims = gcDims)
+                k += 1
+              }
+              lv.endValue(i, gc.getNumGeometries)
+            }
+          case other => throw new IllegalArgumentException(
+            "ArrowIpc.write: geometrycollection encoding requires " +
+              s"GEOMETRYCOLLECTION rows, got ${other.getGeometryType} — " +
+              "use geometryEncoding=geometry for mixed columns")
+        }
+        // the columns filled here rather than by Spark's ArrowWriter: the
+        // geometry unions (per-row WKB decode → kind/dim dispatch → child
+        // append; a null row is a null Point child, since dense unions carry
+        // no validity) and the dictionary indexes. `put(row, i)` writes a
+        // row's cell at batch position i, `end(n)` closes a batch of n rows.
+        final case class Own(ordinal: Int, put: (InternalRow, Int) => Unit, end: Int => Unit)
+        val own: Seq[Own] = fields.indices.flatMap { c =>
+          val name = sparkSchema.fields(c).name
+          root.getVector(c) match {
+            case iv: IntVector if dictByCol.contains(name) =>
+              val ids = dictByCol(name)._2
+              Some(Own(c, (row, i) =>
+                if (row.isNullAt(c)) iv.setNull(i)
+                else {
+                  // the driver pre-pass saw every non-null value; a miss
+                  // here would mean non-deterministic data — fail loudly
+                  val v = row.getUTF8String(c).toString
+                  iv.setSafe(i, ids.getOrElse(v, throw new IllegalStateException(
+                    s"ArrowIpc.write: value absent from pre-scanned dictionary for column $name")))
+                }, _ => ()))
+            case du: DUV =>
+              Some(Own(c, (row, i) =>
+                appendGeom(du, i, if (row.isNullAt(c)) null else GeomOps.read(row.getBinary(c)),
+                  topLevel = true), n => closeUnion(du, n)))
+            case lv: LV if "geoarrow.geometrycollection" ==
+                fields(c).getMetadata.get("ARROW:extension:name") =>
+              val innerDu = lv.getDataVector.asInstanceOf[DUV]
+              Some(Own(c, (row, i) =>
+                // a null row stays unwritten: a null list
+                if (!row.isNullAt(c)) appendCollection(lv, innerDu, i, GeomOps.read(row.getBinary(c))),
+                n => { closeUnion(innerDu, countersFor(innerDu).sum); lv.setValueCount(n) }))
+            case _ => None
+          }
+        }
+        // every other column: Spark's ArrowWriter, over the Catalyst row or,
+        // beside columns filled here, over its projection to the rest
+        val plain = fields.indices.filterNot(c => own.exists(_.ordinal == c))
+        val fill = ArrowWriter.create(
+          if (own.isEmpty) root
+          else new VectorSchemaRoot(plain.map(root.getVector(_): FieldVector).asJava))
+        val projected =
+          if (own.isEmpty) null
+          else ProjectingInternalRow(StructType(plain.map(sparkSchema.fields(_))), plain)
         val ch = java.nio.channels.Channels.newChannel(open(ext))
-        val writer: org.apache.arrow.vector.ipc.ArrowWriter =
+        val ipc: org.apache.arrow.vector.ipc.ArrowWriter =
           if (streamFormat) new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, provider, ch)
           else new org.apache.arrow.vector.ipc.ArrowFileWriter(root, provider, ch)
         try {
-          writer.start()
-          rows.grouped(batchSize).foreach { chunk =>
-            root.allocateNew()
-            var c = 0
-            while (c < fields.length) {
-              val vec = root.getVector(c)
-              // complex columns populate through a per-batch writer
-              // (MapVector extends ListVector — match it first)
-              val mapW = vec match {
-                case v: org.apache.arrow.vector.complex.MapVector => v.getWriter
-                case _ => null
-              }
-              // a geoarrow.geometrycollection COLUMN is a ListVector but
-              // populates through the union machinery below, not the
-              // generic list writer
-              val gcColVec: org.apache.arrow.vector.complex.ListVector =
-                if ("geoarrow.geometrycollection" ==
-                    fields(c).getMetadata.get("ARROW:extension:name"))
-                  vec.asInstanceOf[org.apache.arrow.vector.complex.ListVector]
-                else null
-              val listW = vec match {
-                case _: org.apache.arrow.vector.complex.MapVector => null
-                case _ if gcColVec != null => null
-                case v: org.apache.arrow.vector.complex.ListVector => v.getWriter
-                case _ => null
-              }
-              val structW = vec match {
-                case v: org.apache.arrow.vector.complex.StructVector => v.getWriter
-                case _ => null
-              }
-              val colType = sparkSchema.fields(c).dataType
-              // geometry-union population: per-row WKB decode → kind/dim
-              // dispatch → child append; type ids/offsets live on the
-              // union itself (dense unions carry no validity — a null or
-              // empty geometry becomes a null Point child value)
-              val duVec = vec match {
-                case v: org.apache.arrow.vector.complex.DenseUnionVector => v
-                case _ => null
-              }
-              if (duVec != null || gcColVec != null) {
-                import org.apache.arrow.vector.complex.{DenseUnionVector => DUV, FixedSizeListVector => FSL, ListVector => LV}
-                import org.locationtech.jts.geom._
-                // per-union type-id offset counters, keyed by vector identity:
-                // the top-level union plus up to four inner GC "geometries"
-                // unions, each with its own dense-union offset space
-                val unionCounters = new java.util.IdentityHashMap[DUV, Array[Int]]()
-                def countersFor(du: DUV): Array[Int] = {
-                  var a = unionCounters.get(du)
-                  if (a == null) { a = new Array[Int](38); unionCounters.put(du, a) }
-                  a
-                }
-                // collection kinds probe their FIRST NON-EMPTY component —
-                // hasZ/hasM read only the first element's coordinate, so a
-                // leading EMPTY would misreport a Z/M collection as XY (an
-                // order-dependent refusal of a representable value)
-                def dimsOfGeom(g: Geometry): String = g match {
-                  case gc: GeometryCollection =>
-                    (0 until gc.getNumGeometries).iterator.map(gc.getGeometryN)
-                      .find(!_.isEmpty).map(dimsOfGeom).getOrElse("xy")
-                  case _ =>
-                    "xy" + (if (graft.core.GeomOps.hasZ(g)) "z" else "") +
-                           (if (graft.core.GeomOps.hasM(g)) "m" else "")
-                }
-                def dimBase(dims: String): Int = dims match {
-                  case "xy" => 0; case "xyz" => 10; case "xym" => 20; case _ => 30
-                }
-                // hot loop: dims decode ONCE per geometry, ordinates written
-                // straight to the vector (no per-vertex array allocation)
-                def fillCoords(flv: FSL, start: Int, cs: Array[Coordinate], dims: String): Unit = {
-                  val d = dims.length
-                  val withZ = dims == "xyz" || dims == "xyzm"
-                  val withM = dims == "xym" || dims == "xyzm"
-                  val dv = flv.getDataVector.asInstanceOf[Float8Vector]
-                  var k = 0
-                  while (k < cs.length) {
-                    flv.setNotNull(start + k)
-                    val cd = cs(k)
-                    val base = (start + k) * d
-                    dv.setSafe(base, cd.x)
-                    dv.setSafe(base + 1, cd.y)
-                    var j = 2
-                    if (withZ) { dv.setSafe(base + j, cd.getZ); j += 1 }
-                    if (withM) dv.setSafe(base + j, cd.getM)
-                    k += 1
-                  }
-                }
-                def fillLine(lv: LV, row2: Int, cs: Array[Coordinate], dims: String): Unit = {
-                  val start = lv.startNewValue(row2)
-                  fillCoords(lv.getDataVector.asInstanceOf[FSL], start, cs, dims)
-                  lv.endValue(row2, cs.length)
-                }
-                def fillRings(lv2: LV, row2: Int, rings: Seq[Array[Coordinate]], dims: String): Unit = {
-                  val start = lv2.startNewValue(row2)
-                  val inner = lv2.getDataVector.asInstanceOf[LV]
-                  rings.zipWithIndex.foreach { case (cs, k) => fillLine(inner, start + k, cs, dims) }
-                  lv2.endValue(row2, rings.length)
-                }
-                def ringsOf(p: Polygon): Seq[Array[Coordinate]] =
-                  (p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN))
-                    .map(_.getCoordinates)
-                def fillMPoly(lv3: LV, row2: Int, polys: Seq[Polygon], dims: String): Unit = {
-                  val start = lv3.startNewValue(row2)
-                  val inner = lv3.getDataVector.asInstanceOf[LV]
-                  polys.zipWithIndex.foreach { case (pp, k) => fillRings(inner, start + k, ringsOf(pp), dims) }
-                  lv3.endValue(row2, polys.length)
-                }
-                def fillEmptyList(lv: LV, row2: Int): Unit = {
-                  lv.startNewValue(row2); lv.endValue(row2, 0)
-                }
-                // append one geometry at union position `pos`. EMPTY ≠ NULL
-                // (the reference's logical-null contract, trait_.rs:157-198):
-                // null → null Point child; POINT EMPTY → all-NaN coords (the
-                // GeoArrow empty-point encoding); every list-backed EMPTY →
-                // a length-0 outer list in its own kind child.
-                // `emptyDims`: an EMPTY geometry has no coordinates to probe,
-                // so inside a single-dimension collection it inherits the
-                // collection's declared dims (a top-level empty rides XY)
-                def appendGeom(du: DUV, pos: Int, g: Geometry, topLevel: Boolean,
-                               emptyDims: String = "xy"): Unit = {
-                  val cnt = countersFor(du)
-                  if (g == null) {
-                    val tid: Byte = 1
-                    val off = cnt(1)
-                    du.getVectorByType(tid).asInstanceOf[FSL].setNull(off)
-                    du.setTypeId(pos, tid); du.setOffset(pos, off)
-                    cnt(1) += 1
-                    return
-                  }
-                  val dims = if (g.isEmpty) emptyDims else dimsOfGeom(g)
-                  val base = dimBase(dims)
-                  def put(tid0: Int)(fill: org.apache.arrow.vector.ValueVector => Unit): Unit = {
-                    val tid = (base + tid0).toByte
-                    val child = du.getVectorByType(tid)
-                    require(child != null,
-                      s"ArrowIpc.write: geometry union has no child for type id $tid — " +
-                        "a GeometryCollection's elements must share one dimension " +
-                        "(the reference's mixed type is single-dimension per collection)")
-                    fill(child)
-                    du.setTypeId(pos, tid); du.setOffset(pos, cnt(base + tid0))
-                    cnt(base + tid0) += 1
-                  }
-                  g match {
-                    case p: Point => put(1) { ch =>
-                      val flv = ch.asInstanceOf[FSL]
-                      val off = cnt(base + 1)
-                      if (p.isEmpty) { // NaN ordinates, NOT null: null means SQL NULL
-                        flv.setNotNull(off)
-                        val dv = flv.getDataVector.asInstanceOf[Float8Vector]
-                        var j = 0
-                        while (j < dims.length) { dv.setSafe(off * dims.length + j, Double.NaN); j += 1 }
-                      } else fillCoords(flv, off, Array(p.getCoordinate), dims)
-                    }
-                    case l: LineString => put(2)(ch =>
-                      fillLine(ch.asInstanceOf[LV], cnt(base + 2), l.getCoordinates, dims))
-                    case p: Polygon => put(3) { ch =>
-                      if (p.isEmpty) fillEmptyList(ch.asInstanceOf[LV], cnt(base + 3))
-                      else fillRings(ch.asInstanceOf[LV], cnt(base + 3), ringsOf(p), dims)
-                    }
-                    case mp: MultiPoint => put(4)(ch =>
-                      // per-member coords with the shared all-NaN EMPTY
-                      // sentinel (GeoArrowOps.mpCoords), NOT the flattening
-                      // getCoordinates: JTS skips EMPTY point members there,
-                      // so MULTIPOINT (1 1, EMPTY) would silently lose an
-                      // element on roundtrip
-                      fillLine(ch.asInstanceOf[LV], cnt(base + 4),
-                        GeoArrowOps.mpCoords(mp, "ArrowIpc.write[geometry]"), dims))
-                    case mls: MultiLineString => put(5)(ch =>
-                      fillRings(ch.asInstanceOf[LV], cnt(base + 5),
-                        (0 until mls.getNumGeometries).map(mls.getGeometryN(_).getCoordinates), dims))
-                    case mp: MultiPolygon => put(6)(ch =>
-                      fillMPoly(ch.asInstanceOf[LV], cnt(base + 6),
-                        (0 until mp.getNumGeometries).map(mp.getGeometryN(_).asInstanceOf[Polygon]), dims))
-                    case gc: GeometryCollection => // after the Multi* subclasses
-                      require(topLevel,
-                        "ArrowIpc.write: a GeometryCollection nested inside another " +
-                          "GeometryCollection is not representable in geoarrow.geometry " +
-                          "(the reference's collection type holds only concrete kinds, " +
-                          "type.rs:738-805) — write with geometryEncoding=wkb")
-                      put(7) { ch =>
-                        val lv = ch.asInstanceOf[LV]
-                        val off = cnt(base + 7)
-                        if (gc.getNumGeometries == 0) fillEmptyList(lv, off)
-                        else {
-                          val start = lv.startNewValue(off)
-                          val innerDu = lv.getDataVector.asInstanceOf[DUV]
-                          var k = 0
-                          while (k < gc.getNumGeometries) {
-                            appendGeom(innerDu, start + k, gc.getGeometryN(k),
-                              topLevel = false, emptyDims = dims)
-                            k += 1
-                          }
-                          lv.endValue(off, gc.getNumGeometries)
-                        }
-                      }
-                    case other => throw new IllegalArgumentException(
-                      s"ArrowIpc.write: geometry-union encoding cannot hold a " +
-                        s"${other.getGeometryType} — write with geometryEncoding=wkb")
-                  }
-                }
-                // children's own counts first (inner GC unions before their
-                // list parents); the union's own count last
-                val allTids = Seq(0, 10, 20, 30).flatMap(b => (1 to 7).map(b + _))
-                def closeUnion(du: DUV, total: Int): Unit = {
-                  val cnt = countersFor(du)
-                  allTids.foreach { t =>
-                    val child = du.getVectorByType(t.toByte)
-                    if (child != null) {
-                      if (t % 10 == 7) {
-                        val innerDu = child.asInstanceOf[LV].getDataVector.asInstanceOf[DUV]
-                        closeUnion(innerDu, countersFor(innerDu).sum)
-                      }
-                      child.setValueCount(cnt(t))
-                    }
-                  }
-                  du.setValueCount(total)
-                }
-                if (duVec != null) {
-                  var i = 0
-                  while (i < chunk.length) {
-                    val row = chunk(i)
-                    val wkb = if (row.isNullAt(c)) null else row.getAs[Array[Byte]](c)
-                    appendGeom(duVec, i, if (wkb == null) null else graft.core.GeomOps.read(wkb),
-                      topLevel = true)
-                    i += 1
-                  }
-                  closeUnion(duVec, chunk.length)
-                } else {
-                  // homogeneous geoarrow.geometrycollection column: null row
-                  // = unwritten (null list); GEOMETRYCOLLECTION EMPTY =
-                  // length-0 list; elements append into the declared-dim
-                  // inner union (a wrong-dim element fails loudly via the
-                  // child-id check in appendGeom)
-                  val innerDu = gcColVec.getDataVector.asInstanceOf[DUV]
-                  var i = 0
-                  while (i < chunk.length) {
-                    val row = chunk(i)
-                    if (!row.isNullAt(c)) {
-                      graft.core.GeomOps.read(row.getAs[Array[Byte]](c)) match {
-                        case _: MultiPoint | _: MultiLineString | _: MultiPolygon =>
-                          throw new IllegalArgumentException(
-                            "ArrowIpc.write: geometrycollection encoding requires " +
-                              "GEOMETRYCOLLECTION rows (a Multi* type has its own encoding)")
-                        case gc: GeometryCollection =>
-                          if (gc.getNumGeometries == 0) fillEmptyList(gcColVec, i)
-                          else {
-                            val start = gcColVec.startNewValue(i)
-                            var k = 0
-                            while (k < gc.getNumGeometries) {
-                              appendGeom(innerDu, start + k, gc.getGeometryN(k),
-                                topLevel = false, emptyDims = gcDims)
-                              k += 1
-                            }
-                            gcColVec.endValue(i, gc.getNumGeometries)
-                          }
-                        case other => throw new IllegalArgumentException(
-                          "ArrowIpc.write: geometrycollection encoding requires " +
-                            s"GEOMETRYCOLLECTION rows, got ${other.getGeometryType} — " +
-                            "use geometryEncoding=geometry for mixed columns")
-                      }
-                    }
-                    i += 1
-                  }
-                  closeUnion(innerDu, countersFor(innerDu).sum)
-                  gcColVec.setValueCount(chunk.length)
-                }
-                c += 1
-              } else {
-              var i = 0
-              while (i < chunk.length) {
-                val row = chunk(i)
-                if (row.isNullAt(c)) vec.asInstanceOf[FieldVector] match {
-                  case v: BaseFixedWidthVector => v.setNull(i)
-                  case v: BaseVariableWidthVector => v.setNull(i)
-                  case _: org.apache.arrow.vector.complex.ListVector |
-                       _: org.apache.arrow.vector.complex.StructVector => () // unwritten = null
-                  case v => throw new IllegalStateException(s"unexpected vector $v")
-                } else if (mapW != null) {
-                  mapW.setPosition(i)
-                  val mt = colType.asInstanceOf[MapType]
-                  writeMap(mapW, mt.keyType, mt.valueType, row.getMap[Any, Any](c))
-                } else if (listW != null) {
-                  listW.setPosition(i)
-                  writeArray(listW, colType.asInstanceOf[ArrayType].elementType, row.getSeq[Any](c))
-                } else if (structW != null) {
-                  structW.setPosition(i)
-                  writeStructVal(structW, colType.asInstanceOf[StructType], row.getStruct(c))
-                } else if (dictLookup(c) != null) {
-                  // the driver pre-pass saw every non-null value; a miss
-                  // here would mean non-deterministic data — fail loudly
-                  val idx = dictLookup(c).getOrElse(row.getString(c),
-                    throw new IllegalStateException(
-                      s"ArrowIpc.write: value absent from pre-scanned dictionary " +
-                        s"for column ${sparkSchema.fields(c).name}"))
-                  vec.asInstanceOf[IntVector].setSafe(i, idx)
-                } else vec match {
-                  case v: IntVector => v.setSafe(i, row.getInt(c))
-                  case v: BigIntVector => v.setSafe(i, row.getLong(c))
-                  case v: Float4Vector => v.setSafe(i, row.getFloat(c))
-                  case v: Float8Vector => v.setSafe(i, row.getDouble(c))
-                  case v: VarCharVector => v.setSafe(i, row.getString(c).getBytes("UTF-8"))
-                  case v: BitVector => v.setSafe(i, if (row.getBoolean(c)) 1 else 0)
-                  case v: VarBinaryVector => v.setSafe(i, row.getAs[Array[Byte]](c))
-                  case v: DateDayVector => v.setSafe(i, dateDays(row.get(c)))
-                  case v: TimeStampMicroTZVector => v.setSafe(i, instantMicros(row.get(c)))
-                  case v: TimeStampMicroVector => v.setSafe(i, ntzMicros(row.get(c)))
-                  case v => throw new IllegalStateException(s"unexpected vector $v")
-                }
-                i += 1
-              }
-              c += 1
-              }
-            }
-            root.setRowCount(chunk.length)
-            writer.writeBatch()
+          ipc.start()
+          // rows stream into the vectors, one IPC record batch per
+          // `batchSize` rows: the row object may be reused, so none is held
+          var n = 0
+          def flush(): Unit = {
+            fill.finish()
+            own.foreach(_.end(n))
+            root.setRowCount(n)
+            ipc.writeBatch()
+            fill.reset()
+            n = 0
           }
+          rows.foreach { row =>
+            if (n == 0) {
+              own.foreach(o => root.getVector(o.ordinal).allocateNew())
+              unionCounters.clear()
+            }
+            if (projected == null) fill.write(row)
+            else { projected.project(row); fill.write(projected) }
+            own.foreach(_.put(row, n))
+            n += 1
+            if (n == batchSize) flush()
+          }
+          if (n > 0) flush()
           // an empty partition still writes a valid zero-batch file
-          writer.end()
-        } finally { writer.close(); root.close() }
+          ipc.end()
+        } finally { ipc.close(); root.close() }
       } finally {
         dictVectors.foreach(v => try v.close() catch { case _: Exception => })
         allocator.close()

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.io.{ByteArrayOutputStream, OutputStream}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.locationtech.jts.geom._
 
@@ -385,7 +386,7 @@ object FlatGeobufWriter {
     }
   }
 
-  private def propertyBytes(row: Row, types: Array[Int]): Array[Byte] = {
+  private def propertyBytes(row: InternalRow, types: Array[Int]): Array[Byte] = {
     val out = new ByteArrayOutputStream(64)
     def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
     def le32(v: Int): Unit = { le16(v & 0xFFFF); le16((v >> 16) & 0xFFFF) }
@@ -403,10 +404,10 @@ object FlatGeobufWriter {
           case 9 => le32(java.lang.Float.floatToIntBits(row.getFloat(i)))
           case 10 => le64(java.lang.Double.doubleToLongBits(row.getDouble(i)))
           case 11 =>
-            val bs = row.getString(i).getBytes("UTF-8")
+            val bs = row.getUTF8String(i).getBytes
             le32(bs.length); out.write(bs, 0, bs.length)
           case 14 =>
-            val bs = row.getAs[Array[Byte]](i)
+            val bs = row.getBinary(i)
             le32(bs.length); out.write(bs, 0, bs.length)
         }
       }
@@ -444,9 +445,9 @@ object FlatGeobufWriter {
   private final case class Feature(bytes: Array[Byte], env: Envelope, z: Boolean, m: Boolean,
                                    typeCode: Int)
 
-  private def featureBytes(row: Row, lay: Layout): Feature = {
+  private def featureBytes(row: InternalRow, lay: Layout): Feature = {
     val b = new FBB()
-    val wkb = if (row.isNullAt(lay.geomIdx)) null else row.getAs[Array[Byte]](lay.geomIdx)
+    val wkb = if (row.isNullAt(lay.geomIdx)) null else row.getBinary(lay.geomIdx)
     val raw = if (wkb == null) null else GeomOps.read(wkb)
     val geom = if (raw != null && lay.promote) promoteMulti(raw) else raw
     val props = propertyBytes(row, lay.types)
@@ -578,7 +579,7 @@ object FlatGeobufWriter {
     val ordered =
       (if (index) GeoParquet.spatialSort(df, geometryCol, numPartitions = 1)
        else df.repartition(1)).coalesce(1)
-    ordered.rdd.foreachPartition { rows =>
+    ordered.queryExecution.toRdd.foreachPartition { rows =>
       val spillFile = java.io.File.createTempFile("graft_fgb_single", ".spill")
       val spill = new java.io.BufferedOutputStream(new java.io.FileOutputStream(spillFile), 1 << 16)
       val envs = scala.collection.mutable.ArrayBuffer.empty[Envelope]

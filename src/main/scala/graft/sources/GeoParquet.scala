@@ -149,7 +149,7 @@ object GeoParquet {
     val hit = metaCache.get(root.toString)
     if (hit != null && sig(hit.files) == sig(stats) && hit.schemaConf == schemaConf) return hit
     val files = stats.map(_.getPath)
-    val perFile = footerKVs(spark, conf, files, "geo")
+    val perFile = footerKVs(spark, files, "geo")
     // labels are root-relative so partitioned layouts (k=v/part-000…) stay
     // unambiguous in reconcile's error messages
     val rootStr = p.toString
@@ -217,12 +217,11 @@ object GeoParquet {
     * [[RowFileSource.fanOut]]: the driver's IO pool for a few part-files,
     * one Spark job past 64, so a 100 TB dataset's thousands of footers
     * scale out with the executors. */
-  private def footerKVs(spark: SparkSession, conf: Configuration, files: Seq[Path],
-                        key: String): Seq[PartFooter] = {
+  private def footerKVs(spark: SparkSession, files: Seq[Path], key: String): Seq[PartFooter] = {
     footerOpens.add(files.length)
     // a deserialized SQLConf cannot be read: each reader rebuilds one
     val settings = spark.sessionState.conf.getAllConfs
-    RowFileSource.fanOut(spark, conf, files.map(_.toString)) { conf =>
+    RowFileSource.fanOut(spark, files.map(_.toString)) { conf =>
       val sc = new SQLConf
       settings.foreach { case (k, v) => sc.setConfString(k, v) }
       val converter = new ParquetToSparkSchemaConverter(sc)

@@ -144,7 +144,7 @@ private[sources] object RowFileSource {
     val cached = big.flatMap(f => Option(splitPlans.get(key(f))).map(f._1 -> _)).toMap
     val miss = big.filterNot(f => cached.contains(f._1))
     val probed = miss.map(_._1).zip(
-      fanOut(session, session.sessionState.newHadoopConf(), miss) { conf => {
+      fanOut(session, miss) { conf => {
         case (f, size, _) => format.probe(f, size, maxPart, conf)
       }}).toMap
     // bound the map only when this plan inserts: an unconditional clear
@@ -165,23 +165,22 @@ private[sources] object RowFileSource {
     * items run on the driver's IO pool: the reads are small, and a cold
     * read of a few files starts no job. More run as ONE Spark job, so
     * thousands of files scale out with the executors. `read` turns the
-    * session Hadoop conf `conf` into the per-item function, once on the
-    * driver and once per probe task; `conf` is built only when there are
-    * items. */
-  def fanOut[A: ClassTag, B: ClassTag](session: SparkSession, conf: => Configuration,
-                                       items: Seq[A])(read: Configuration => A => B): Seq[B] = {
+    * session Hadoop conf into the per-item function, once on the driver
+    * and once per probe task, which takes the conf from [[broadcastConf]]. */
+  def fanOut[A: ClassTag, B: ClassTag](session: SparkSession, items: Seq[A])(
+      read: Configuration => A => B): Seq[B] = {
     if (items.isEmpty) return Nil
     if (items.length <= 64) {
-      val one = read(conf)
+      val one = read(session.sessionState.newHadoopConf())
       ioPool.invokeAll(items.map(a => (() => one(a)): Callable[B]).asJava)
         .asScala.map(_.get()).toSeq
     } else {
       val sc = session.sparkContext
-      val serConf = new SerializableConfiguration(conf)
+      val conf = broadcastConf(session)
       // parallelize slices in order and collect concatenates the slices
       // in order, so results line up with items
       sc.parallelize(items, math.min(items.length, sc.defaultParallelism))
-        .mapPartitions { it => val one = read(serConf.value); it.map(one) }
+        .mapPartitions { it => val one = read(conf.value.value); it.map(one) }
         .collect().toSeq
     }
   }
@@ -195,20 +194,23 @@ private[sources] object RowFileSource {
     session.sparkContext.broadcast(new SerializableConfiguration(session.sessionState.newHadoopConf()))
 
   /** The one write of the row-file formats: ONE Spark job over `df`'s
-    * partitions. Each task hands its rows to `encode` with an `open(ext)`
-    * that creates `part-<partition id>.<ext>` in `path`; the streams are
-    * closed when `encode` returns. After the job succeeds, every `part-*`
+    * partitions. Each task hands its Catalyst rows to `encode` with an
+    * `open(ext)` that creates `part-<partition id>.<ext>` in `path`; the
+    * streams are closed when `encode` returns. The rows come from
+    * `queryExecution.toRdd`, so no external [[Row]] is built, and the
+    * iterator may hand out one reused row object: an encoder copies what
+    * it keeps past the next row. After the job succeeds, every `part-*`
     * file in `path` with one of `extensions` that this write did not
     * produce is deleted, so a rewrite with fewer partitions, another
     * extension or no sidecar leaves nothing of the earlier write; other
     * files are not touched. */
   def writeParts(df: DataFrame, path: String, extensions: Seq[String])(
-      encode: (Iterator[Row], String => OutputStream) => Unit): Unit = {
+      encode: (Iterator[InternalRow], String => OutputStream) => Unit): Unit = {
     val conf = broadcastConf(df.sparkSession)
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf.value.value)
     fs.mkdirs(dir)
-    val written = df.rdd.mapPartitions { rows =>
+    val written = df.queryExecution.toRdd.mapPartitions { rows =>
       val pid = TaskContext.getPartitionId()
       val tfs = dir.getFileSystem(conf.value.value)
       val opened = ArrayBuffer.empty[(String, OutputStream)]

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.types.{BooleanType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField}
 import org.locationtech.jts.geom._
 
@@ -82,13 +83,18 @@ object ShapefileWriter {
     val propFields = schema.fields.zipWithIndex.filter(_._2 != geomIdx).map(_._1)
       .zip(laundered).map { case (f, n) => f.copy(name = n) }
     val propIdxs = schema.fields.indices.filterNot(_ == geomIdx).toArray
+    // the .dbf formats external values (String, java.sql.Date, BigDecimal,
+    // ...); converting a cell also copies it out of the reused Catalyst row
+    val toScala = propFields.map(f => CatalystTypeConverters.createToScalaConverter(f.dataType))
     RowFileSource.writeParts(df, path, Seq("shp", "shx", "dbf", "prj")) { (rows, open) =>
       val geoms = scala.collection.mutable.ArrayBuffer.empty[Geometry]
       val props = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
       rows.foreach { row =>
-        geoms += (if (row.isNullAt(geomIdx)) null
-                  else GeomOps.read(row.getAs[Array[Byte]](geomIdx)))
-        props += propIdxs.map(i => if (row.isNullAt(i)) null else row.get(i))
+        geoms += (if (row.isNullAt(geomIdx)) null else GeomOps.read(row.getBinary(geomIdx)))
+        props += Array.tabulate[Any](propIdxs.length) { k =>
+          val i = propIdxs(k)
+          if (row.isNullAt(i)) null else toScala(k)(row.get(i, propFields(k).dataType))
+        }
       }
       val (shpBytes, shxBytes) = encodeShp(geoms.toSeq)
       open("shp").write(shpBytes)

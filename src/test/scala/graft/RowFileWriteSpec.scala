@@ -82,6 +82,21 @@ class RowFileWriteSpec extends SparkTestBase {
     assert(ids(ArrowIpc.read(spark, dir)) == (500L until 590L))
   }
 
+  test("arrowipc: byte, short and decimal columns are written and read back equal") {
+    val dir = Files.createTempDirectory("rowfilewrite-narrow").toString
+    val df = frame(0, 300, 3).selectExpr("id",
+      "CAST(id % 128 AS BYTE) AS b", "CAST(id * 97 % 32768 AS SHORT) AS s",
+      "CAST(id * 1.25 - 100 AS DECIMAL(12, 2)) AS d",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE CAST(id AS DECIMAL(38, 0)) END AS wide",
+      "geometry")
+    ArrowIpc.write(df, dir)
+    val back = ArrowIpc.read(spark, dir)
+    assert(back.schema.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType))
+    def rows(d: DataFrame): Seq[Row] = d.orderBy("id").collect().toSeq.map(r =>
+      Row.fromSeq(r.toSeq.map { case g: Array[Byte] => g.toSeq; case v => v }))
+    assert(rows(back) == rows(df))
+  }
+
   test("shapefile: a write without prjWkt over one with it leaves no .prj file") {
     val dir = Files.createTempDirectory("rowfilewrite-prj").toString
     val wgs84 = "GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\",SPHEROID[\"WGS 84\",6378137,298.257223563]]," +
