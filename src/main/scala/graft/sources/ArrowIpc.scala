@@ -4,8 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.ArrowFileReader
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, CoordinateXYM, CoordinateXYZM, Geometry}
 
 import graft.core.{GeoArrowOps, GeomOps}
@@ -548,18 +552,20 @@ object ArrowIpc {
     }
   }
 
-  /** Build a per-FIELD converter closure, Arrow `getObject` tree → Spark
-    * external value: `Text` → String, list-kind layouts (incl.
-    * ListView/LargeListView) → `Seq`, `Struct` → [[Row]] in child-field
-    * order, `Map` → scala Map, RunEndEncoded → converted by its values
-    * child (the run lookup already happened inside `getObject`),
-    * Date/Timestamp physical shapes → LocalDate/Instant. Dictionary-encoded
-    * fields convert by their VALUE field — callers resolve indexes to
-    * values first (top-level `dicts` lookup / [[resolveNestedDicts]]).
-    * The Field walk, type dispatch and dictionary lookups happen ONCE per
-    * column here, not per cell — decode loops pay one closure call per
-    * value (plain scalars get `identity`). Every returned closure is
-    * null-safe. */
+  /** Build a per-FIELD converter closure, Arrow `getObject` tree → Catalyst
+    * value: `Text` → `UTF8String` over its bytes, list-kind layouts (incl.
+    * ListView/LargeListView) → `GenericArrayData`, `Struct` →
+    * `GenericInternalRow` in child-field order, `Map` → `ArrayBasedMapData`
+    * (a repeated key keeps its first position and last value), RunEndEncoded
+    * → converted by its values child (the run lookup already happened
+    * inside `getObject`), `Decimal` → Catalyst `Decimal`, dates → epoch
+    * days, timestamps → epoch micros (floored, as `Instant` → micros).
+    * Dictionary-encoded fields convert by their VALUE field — callers
+    * resolve indexes to values first (top-level `dicts` lookup /
+    * [[resolveNestedDicts]]). The Field walk, type dispatch and dictionary
+    * lookups happen ONCE per column here, not per cell — decode loops pay
+    * one closure call per value (plain scalars get `identity`). Every
+    * returned closure is null-safe. */
   private def valueConverter(f: org.apache.arrow.vector.types.pojo.Field,
       lookup: Long => org.apache.arrow.vector.dictionary.Dictionary): Any => Any = {
     import org.apache.arrow.vector.types.pojo.ArrowType
@@ -577,17 +583,18 @@ object ArrowIpc {
           val (kName, vName) = (kf.getName, vf.getName)
           val (kc, vc) = (valueConverter(kf, lookup), valueConverter(vf, lookup))
           nullSafe { v =>
-            val out = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
-            v.asInstanceOf[java.util.List[_]].asScala.foreach { e =>
+            val out = new java.util.LinkedHashMap[Any, Any]()
+            v.asInstanceOf[java.util.List[_]].forEach { e =>
               val m = e.asInstanceOf[java.util.Map[_, _]]
-              out(kc(m.get(kName))) = vc(m.get(vName))
+              out.put(kc(m.get(kName)), vc(m.get(vName)))
             }
-            out
+            new ArrayBasedMapData(new GenericArrayData(out.keySet.toArray),
+              new GenericArrayData(out.values.toArray))
           }
         case _: ArrowType.List | _: ArrowType.LargeList | _: ArrowType.FixedSizeList |
              _: ArrowType.ListView | _: ArrowType.LargeListView =>
           val ec = valueConverter(f.getChildren.get(0), lookup)
-          nullSafe(v => v.asInstanceOf[java.util.List[_]].asScala.toSeq.map(ec))
+          nullSafe(v => new GenericArrayData(v.asInstanceOf[java.util.List[_]].asScala.map(ec).toArray))
         case _: ArrowType.Struct =>
           val kids = f.getChildren.asScala.toArray
           val names = kids.map(_.getName)
@@ -597,42 +604,46 @@ object ArrowIpc {
             val vals = new Array[Any](kids.length)
             var i = 0
             while (i < kids.length) { vals(i) = convs(i)(m.get(names(i))); i += 1 }
-            Row.fromSeq(vals.toIndexedSeq)
+            new GenericInternalRow(vals)
           }
+        case t: ArrowType.Decimal => nullSafe(v =>
+          Decimal(v.asInstanceOf[java.math.BigDecimal], t.getPrecision, t.getScale))
         case _: ArrowType.Date => nullSafe {
-          // DateDay yields epoch-day Integers, DateMilli LocalDateTime —
-          // neither is a Catalyst-convertible date on its own
-          case i: java.lang.Integer => java.time.LocalDate.ofEpochDay(i.longValue())
-          case ldt: java.time.LocalDateTime => ldt.toLocalDate
-          case other => other
+          // DateDay yields epoch-day Integers, DateMilli LocalDateTime
+          case ldt: java.time.LocalDateTime => ldt.toLocalDate.toEpochDay.toInt
+          case day => day
         }
         case t: ArrowType.Timestamp if t.getTimezone != null && t.getTimezone.nonEmpty =>
           import org.apache.arrow.vector.types.TimeUnit
           val unit = t.getUnit
-          val zone = t.getTimezone
+          // only a wall-clock value needs the zone: an id java.time cannot
+          // parse fails that value, not the scan
+          lazy val zone = java.time.ZoneId.of(t.getTimezone)
           nullSafe {
             case l: java.lang.Long => // TZ vectors: epoch in the declared unit
               val e = l.longValue()
               unit match {
-                case TimeUnit.SECOND => java.time.Instant.ofEpochSecond(e)
-                case TimeUnit.MILLISECOND => java.time.Instant.ofEpochMilli(e)
-                case TimeUnit.MICROSECOND => java.time.Instant.ofEpochSecond(
-                  Math.floorDiv(e, 1000000L), Math.floorMod(e, 1000000L) * 1000L)
-                case TimeUnit.NANOSECOND => java.time.Instant.ofEpochSecond(
-                  Math.floorDiv(e, 1000000000L), Math.floorMod(e, 1000000000L))
+                case TimeUnit.SECOND => Math.multiplyExact(e, 1000000L)
+                case TimeUnit.MILLISECOND => Math.multiplyExact(e, 1000L)
+                case TimeUnit.MICROSECOND => e
+                case TimeUnit.NANOSECOND => Math.floorDiv(e, 1000L)
               }
             case ldt: java.time.LocalDateTime =>
               // zoned vectors normally yield longs; a producer's wall-clock
               // object is interpreted in the column's declared zone
-              ldt.atZone(java.time.ZoneId.of(zone)).toInstant
-            case other => other
+              DateTimeUtils.instantToMicros(ldt.atZone(zone).toInstant)
           }
+        case _: ArrowType.Timestamp => nullSafe { v =>
+          // zoneless vectors yield wall-clock LocalDateTime
+          DateTimeUtils.localDateTimeToMicros(v.asInstanceOf[java.time.LocalDateTime])
+        }
         case _: ArrowType.Utf8 | _: ArrowType.LargeUtf8 | _: ArrowType.Utf8View =>
           nullSafe {
-            case t: org.apache.arrow.vector.util.Text => t.toString
-            case other => other
+            case t: org.apache.arrow.vector.util.Text =>
+              UTF8String.fromBytes(t.getBytes, 0, t.getLength.toInt)
+            case other => UTF8String.fromString(other.toString)
           }
-        case _ => identity // numeric/bool/binary/decimal/NTZ pass through as-is
+        case _ => identity // numeric/bool/binary pass through as-is
       }
     }
   }
@@ -677,7 +688,7 @@ object ArrowIpc {
     *
     * `wanted` (full schema order; null = all) skips per-cell
     * materialization of pruned-out columns — the Arrow getObject boxing,
-    * Text→String copies and, for geometry columns, the JTS build + WKB
+    * Text copies and, for geometry columns, the JTS build + WKB
     * serialization that dominate per-row cost. Both batch loaders feed
     * the one row iterator [[rows]]:
     *
@@ -714,7 +725,7 @@ object ArrowIpc {
                                 wanted: Array[Boolean] = null,
                                 blockStart: Int = -1,
                                 blockEnd: Int = -1,
-                                pruneBytes: Boolean = false): Iterator[Row] = {
+                                pruneBytes: Boolean = false): Iterator[InternalRow] = {
     import org.apache.arrow.vector.ipc.message.{ArrowFieldNode, ArrowRecordBatch, MessageSerializer}
     import org.apache.arrow.vector.ipc.ReadChannel
     val ch = openChannel(path, conf)
@@ -867,7 +878,7 @@ object ArrowIpc {
   private def rows(path: String, root: org.apache.arrow.vector.VectorSchemaRoot,
                    lookup: Long => org.apache.arrow.vector.dictionary.Dictionary,
                    width: Int, cols: Array[Int], slots: Array[Int],
-                   load: () => Boolean, closeAll: () => Unit): Iterator[Row] = {
+                   load: () => Boolean, closeAll: () => Unit): Iterator[InternalRow] = {
     val fields = cols.map(root.getSchema.getFields.get(_))
     // geometry columns decode through a per-column closure with VECTOR
     // access (union-backed extensions need type ids, which getObject
@@ -876,14 +887,14 @@ object ArrowIpc {
     // property-type dispatch
     val geoDec = fields.map(f => Option(f.getMetadata.get("ARROW:extension:name"))
       .filter(_.startsWith("geoarrow.")).map(geoDecoder(f, _, lookup)).orNull)
-    val toSpark = fields.indices.map(k =>
+    val toCatalyst = fields.indices.map(k =>
       if (geoDec(k) != null) null else valueConverter(fields(k), lookup)).toArray
     // top-level dictionary-encoded columns decode per cell (index → value);
     // without this the raw getObject would return the INDEX as data
     val dicts = fields.map(f => Option(f.getDictionary).map(enc => lookup(enc.getId)).orNull)
     // dictionary-encoded children (struct/list subtrees) resolve per cell
     val nestedDict = fields.map(_.getChildren.asScala.exists(hasDictionary))
-    new Iterator[Row] {
+    new Iterator[InternalRow] {
       private var i = 0
       private var batchRows = 0
       private var done = false
@@ -893,7 +904,7 @@ object ArrowIpc {
           else { done = true; closeAll() }
         }
       override def hasNext: Boolean = { advance(); !done }
-      override def next(): Row = {
+      override def next(): InternalRow = {
         advance()
         if (done) throw new NoSuchElementException("exhausted " + path)
         val vals = new Array[Any](width)
@@ -912,12 +923,12 @@ object ArrowIpc {
                 else if (raw0 != null && nestedDict(k))
                   resolveNestedDicts(fields(k), raw0, lookup)
                 else raw0
-              if (raw == null) null else { decodedCells.increment(); toSpark(k)(raw) }
+              if (raw == null) null else { decodedCells.increment(); toCatalyst(k)(raw) }
             }
           k += 1
         }
         i += 1
-        Row.fromSeq(vals.toIndexedSeq)
+        new GenericInternalRow(vals)
       }
     }
   }
@@ -946,7 +957,7 @@ object ArrowIpc {
       blockSplits(path, maxPartitionBytes, conf)
 
     def decode(split: (String, Int, Int), wanted: Array[Boolean],
-               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] =
+               conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] =
       decodeFile(split._1, conf, wanted, split._2, split._3, pruneBytes = true)
   }
 
@@ -987,7 +998,7 @@ object ArrowIpc {
     import org.apache.arrow.vector._
     import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
     import org.apache.arrow.vector.types.FloatingPointPrecision
-    import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+    import org.apache.spark.sql.catalyst.ProjectingInternalRow
     import org.apache.spark.sql.execution.arrow.ArrowWriter
 
     // native GeoArrow encoding (round 16): transcode the WKB geometry to
@@ -1517,7 +1528,7 @@ object ArrowIpc {
   * wanted columns' buffer byte ranges — a pruned column's buffers are
   * never fetched from storage (the columnar projection discipline of the
   * reference's readers, rust/geoarrow-old/benches/wkb.rs:20-21). Decode
-  * level: per-cell materialization — Arrow getObject boxing, Text→String
+  * level: per-cell materialization — Arrow getObject boxing, Text
   * copies and the JTS geometry build + WKB serialization — runs only for
   * required columns. */
 class ArrowIpcSource extends RowFileSource(ArrowIpc.Format)

@@ -2,8 +2,11 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, CoordinateXYM, CoordinateXYZM, Geometry, LinearRing, Polygon}
 
 import graft.core.GeomOps
@@ -322,10 +325,11 @@ object FlatGeobuf {
     * allocation it counts. */
   private[graft] val decodedPropValues = new java.util.concurrent.atomic.LongAdder
 
-  /** Decode the packed property stream. With a non-null `wanted` mask,
-    * values of unwanted columns are SKIPPED (the cursor advances without
-    * materializing — for strings/binary only the length prefix is read):
-    * decode-level column pruning for the scan. */
+  /** Decode the packed property stream into `out` as Catalyst values
+    * (strings as `UTF8String` over `bb`'s backing array). With a non-null
+    * `wanted` mask, values of unwanted columns are SKIPPED (the cursor
+    * advances without materializing — for strings/binary only the length
+    * prefix is read): decode-level column pruning for the scan. */
   private[graft] def decodeProperties(bb: ByteBuffer, pos: Int, len: Int,
                                types: Array[Int], out: Array[Any],
                                wanted: Array[Boolean] = null): Unit = {
@@ -373,12 +377,7 @@ object FlatGeobuf {
         case 10 => if (want) out(idx) = bb.getDouble(p); p += 8
         case 11 | 12 | 13 => // String / Json / DateTime
           val len = bb.getInt(p); p += 4
-          if (want) {
-            val arr = new Array[Byte](len)
-            val dup = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-            dup.position(p); dup.get(arr)
-            out(idx) = new String(arr, "UTF-8")
-          }
+          if (want) out(idx) = UTF8String.fromBytes(bb.array, bb.arrayOffset + p, len)
           p += len
         case 14 =>
           val len = bb.getInt(p); p += 4
@@ -427,56 +426,63 @@ object FlatGeobuf {
         StructField("geometry", BinaryType, nullable = true, mb.build()))
   }
 
-  /** Decode the feature table rooted at `root` in `bb` into a Row. With a
-    * `wanted` mask (length = columns + 1, last slot = geometry) unwanted
-    * properties are cursor-skipped and an unwanted geometry is not decoded
-    * at all. */
+  /** Decode the feature table rooted at `root` in `bb` into a full-width
+    * row. With a `wanted` mask (length = columns + 1, last slot = geometry)
+    * unwanted properties are cursor-skipped and an unwanted geometry is not
+    * decoded at all. */
   private[sources] def rowOf(bb: ByteBuffer, root: Int, header: Header,
                              types: Array[Int],
-                             wanted: Array[Boolean]): Row = {
+                             wanted: Array[Boolean]): InternalRow = {
     val t = new Table(bb, root + bb.getInt(root))
     val out = new Array[Any](types.length + 1)
     t.indirect(F.Properties) match {
       case -1 =>
       case pp => decodeProperties(bb, pp + 4, bb.getInt(pp), types, out, wanted)
     }
-    if (wanted(types.length)) {
-      val geom = t.subTable(F.Geometry).map(g => decodeGeometry(g, header.geometryType)).orNull
-      out(types.length) = if (geom == null) null else GeomOps.write(geom)
-    }
-    Row.fromSeq(out.toIndexedSeq)
+    if (wanted(types.length))
+      out(types.length) = t.subTable(F.Geometry)
+        .map(g => GeomOps.write(decodeGeometry(g, header.geometryType))).orNull
+    new GenericInternalRow(out)
   }
 
-  private def envelopeHit(r: Row, geomIdx: Int,
+  private def envelopeHit(r: InternalRow, geomIdx: Int,
                           x0: Double, y0: Double, x1: Double, y1: Double): Boolean = {
-    val wkb = r.getAs[Array[Byte]](geomIdx)
+    val wkb = r.getBinary(geomIdx)
     wkb != null && {
       val e = GeomOps.read(wkb).getEnvelopeInternal
       e.getMinX <= x1 && e.getMaxX >= x0 && e.getMinY <= y1 && e.getMaxY >= y0
     }
   }
 
-  /** Decode every feature of one FGB blob into Rows (props + WKB), keeping
-    * with a bbox only the features whose envelope meets it. */
-  private[sources] def decodeFeatures(bytes: Array[Byte],
-                             bbox: Option[(Double, Double, Double, Double)],
-                             wanted: Array[Boolean]): Iterator[Row] = {
-    val header = parseHeader(bytes)
+  /** The one feature loop: the rows of the whole file (`start < 0`) or of
+    * its feature-aligned byte range [start, end) ([[splitRanges]]). The two
+    * differ only in the bytes read: the whole file, whose features follow
+    * its header and index, or just the range, with the header read apart. */
+  private def decodeFeatures(fs: org.apache.hadoop.fs.FileSystem,
+                             p: org.apache.hadoop.fs.Path,
+                             start: Long, end: Long,
+                             wanted: Array[Boolean]): Iterator[InternalRow] = {
+    val (bytes, header, from) =
+      if (start < 0) {
+        val all = readAll(fs, p)
+        val h = parseHeader(all)
+        (all, h, (h.headerEnd + indexSize(h.featuresCount, h.indexNodeSize)).toInt)
+      } else {
+        val range = new Array[Byte]((end - start).toInt)
+        val in = fs.open(p)
+        try in.readFully(start, range) finally in.close()
+        (range, parseHeader(readHeaderBytes(fs, p)), 0)
+      }
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val types = header.columns.map(_._2).toArray
-    var p = (header.headerEnd + indexSize(header.featuresCount, header.indexNodeSize)).toInt
-    val it = new Iterator[Row] {
-      def hasNext: Boolean = p + 4 <= bytes.length
-      def next(): Row = {
-        val size = bb.getInt(p)
-        val root = p + 4
-        p = root + size
+    var pos = from
+    new Iterator[InternalRow] {
+      def hasNext: Boolean = pos + 4 <= bytes.length
+      def next(): InternalRow = {
+        val root = pos + 4
+        pos = root + bb.getInt(pos)
         rowOf(bb, root, header, types, wanted)
       }
-    }
-    bbox match {
-      case None => it
-      case Some((x0, y0, x1, y1)) => it.filter(envelopeHit(_, types.length, x0, y0, x1, y1))
     }
   }
 
@@ -517,13 +523,13 @@ object FlatGeobuf {
   private def readSelective(fs: org.apache.hadoop.fs.FileSystem,
                             p: org.apache.hadoop.fs.Path,
                             x0: Double, y0: Double, x1: Double, y1: Double,
-                            wanted: Array[Boolean]): Iterator[Row] = {
+                            wanted: Array[Boolean]): Iterator[InternalRow] = {
     val header = parseHeader(readHeaderBytes(fs, p))
     val types = header.columns.map(_._2).toArray
     val w = wanted.updated(types.length, true)
     val n = header.featuresCount
     if (header.indexNodeSize == 0 || n == 0)
-      return decodeFeatures(readAll(fs, p), Some((x0, y0, x1, y1)), w)
+      return decodeFeatures(fs, p, -1, -1, w).filter(envelopeHit(_, types.length, x0, y0, x1, y1))
     val idxLen = indexSize(n, header.indexNodeSize)
     val featStart = header.headerEnd.toLong + idxLen
     val in = fs.open(p)
@@ -540,7 +546,7 @@ object FlatGeobuf {
         .map(i => (offset(i), offset(i + 1))).sortBy(_._1).toIndexedSeq
       require(spans.forall { case (a, b) => a < b },
         s"FlatGeobuf index leaves out of file order: $p")
-      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       var k = 0
       while (k < spans.length) {
         val runStart = spans(k)._1
@@ -588,30 +594,6 @@ object FlatGeobuf {
     bounds.sliding(2).collect { case Seq(a, b) if a < b => (featStart + a, featStart + b) }.toSeq
   }
 
-  /** Decode the size-prefixed features in absolute byte range [start,
-    * end). Range ends are feature-aligned by construction (splitRanges). */
-  private[sources] def decodeRange(fs: org.apache.hadoop.fs.FileSystem,
-                          p: org.apache.hadoop.fs.Path,
-                          start: Long, end: Long,
-                          wanted: Array[Boolean]): Iterator[Row] = {
-    val header = parseHeader(readHeaderBytes(fs, p))
-    val types = header.columns.map(_._2).toArray
-    val bytes = new Array[Byte]((end - start).toInt)
-    val in = fs.open(p)
-    try in.readFully(start, bytes) finally in.close()
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var pos = 0
-    new Iterator[Row] {
-      def hasNext: Boolean = pos + 4 <= bytes.length
-      def next(): Row = {
-        val size = bb.getInt(pos)
-        val root = pos + 4
-        pos = root + size
-        rowOf(bb, root, header, types, wanted)
-      }
-    }
-  }
-
   /** Read FGB file(s) into a DataFrame (property columns + `geometry` WKB):
     * the scan of `spark.read.format("flatgeobuf")`, so Catalyst prunes its
     * columns down to the decoder. Files parallelize across executors; a
@@ -656,14 +638,13 @@ object FlatGeobuf {
       if (bbox.isDefined) files.map(f => whole(f._1)) else super.plan(session, files)
 
     def decode(split: (String, Long, Long), wanted: Array[Boolean],
-               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
+               conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] = {
       val (f, start, end) = split
       val p = new org.apache.hadoop.fs.Path(f)
       val fs = p.getFileSystem(conf)
       bbox match {
         case Some((x0, y0, x1, y1)) => readSelective(fs, p, x0, y0, x1, y1, wanted)
-        case None if start < 0 => decodeFeatures(readAll(fs, p), None, wanted)
-        case None => decodeRange(fs, p, start, end, wanted)
+        case None => decodeFeatures(fs, p, start, end, wanted)
       }
     }
   }

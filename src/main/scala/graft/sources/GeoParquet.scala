@@ -14,7 +14,6 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{GraftSchemas, MetadataBuilder, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 /** GeoParquet 1.1 source/sink on top of Spark's native parquet scan.
   *
@@ -870,13 +869,14 @@ object GeoParquet {
     val fs = d.getFileSystem(conf)
     val parts = listPartFiles(fs, d).map(_.getPath.toString)
     if (parts.isEmpty) return 0L
-    val serConf = new SerializableConfiguration(conf)
+    // broadcast, not shipped in the closure: ~1,100 entries per task
+    val serConf = RowFileSource.broadcastConf(spark)
     val inTask = spark.sparkContext.longAccumulator("graft.geoparquet.footerRewrites")
     spark.sparkContext
       .parallelize(parts, math.max(1, math.min(parts.length, spark.sparkContext.defaultParallelism)))
       .foreach { s =>
         val part = new Path(s)
-        val c = serConf.value
+        val c = serConf.value.value
         rewriteFooter(c, part.getFileSystem(c), part, geometryColumn, crs, covering, encoding, geometryTypes)
         if (org.apache.spark.TaskContext.get() != null) inTask.add(1L)
       }

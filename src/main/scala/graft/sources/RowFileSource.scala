@@ -12,27 +12,27 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-/** A file format decoded as full-width [[Row]]s — FlatGeobuf, Shapefile
-  * and Arrow IPC. Each supplies only what differs between them: which
-  * files a directory holds, the schema of a listing, the whole-file split,
-  * the probe that splits one big file, and the decode of one split. `S` is
-  * the split descriptor, planned on the driver and shipped to the task
-  * that decodes it.
+/** A file format decoded as full-width Catalyst rows — FlatGeobuf,
+  * Shapefile and Arrow IPC. Each supplies only what differs between them:
+  * which files a directory holds, the schema of a listing, the whole-file
+  * split, the probe that splits one big file, and the decode of one split.
+  * `S` is the split descriptor, planned on the driver and shipped to the
+  * task that decodes it.
   *
   * Everything else is one implementation: listing, split planning, the
-  * DSv2 table, scan and reader factory, and the Row→InternalRow reader.
+  * DSv2 table, scan and reader factory, and the reader that projects the
+  * decoded rows to the required columns.
   * `X.read(...)` and `spark.read.format("x").load(...)` both plan this
   * scan, so both prune columns down to the decoder.
   *
@@ -61,9 +61,10 @@ private[graft] trait RowFileFormat[S] extends Serializable {
   /** Driver side: the splits of the listed files, in listing order. */
   def plan(session: SparkSession, files: Seq[(String, Long, Long)]): Seq[S] =
     RowFileSource.plan(session, this, files)
-  /** Task side: the full-width rows of one split. `wanted` indexes the
-    * full schema; a pruned column may stay null. */
-  def decode(split: S, wanted: Array[Boolean], conf: Configuration): Iterator[Row]
+  /** Task side: the full-width rows of one split, each cell already in its
+    * Catalyst form (`UTF8String`, epoch days, micros, `ArrayData`, …).
+    * `wanted` indexes the full schema; a pruned column may stay null. */
+  def decode(split: S, wanted: Array[Boolean], conf: Configuration): Iterator[InternalRow]
 }
 
 /** `spark.read.format(format.name)`: the provider of a [[RowFileFormat]].
@@ -197,7 +198,7 @@ private[sources] object RowFileSource {
     * partitions. Each task hands its Catalyst rows to `encode` with an
     * `open(ext)` that creates `part-<partition id>.<ext>` in `path`; the
     * streams are closed when `encode` returns. The rows come from
-    * `queryExecution.toRdd`, so no external [[Row]] is built, and the
+    * `queryExecution.toRdd`, so no external `Row` is built, and the
     * iterator may hand out one reused row object: an encoder copies what
     * it keeps past the next row. After the job succeeds, every `part-*`
     * file in `path` with one of `extensions` that this write did not
@@ -289,8 +290,7 @@ private[sources] final class RowFileScan[S](format: RowFileFormat[S],
     val outIdx = required.fieldNames.map(dataSchema.fieldIndex)
     val wanted = Array.fill(dataSchema.length)(false)
     outIdx.foreach(wanted(_) = true)
-    RowReaderFactory(format, required.fields.map(_.dataType), outIdx, wanted,
-      RowFileSource.broadcastConf(session))
+    RowReaderFactory(format, required, outIdx, wanted, RowFileSource.broadcastConf(session))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
@@ -299,7 +299,7 @@ private[sources] final class RowFileScan[S](format: RowFileFormat[S],
 private[sources] final case class RowFileSplit[S](split: S) extends InputPartition
 
 private[sources] final case class RowReaderFactory[S](format: RowFileFormat[S],
-                                                      types: Array[DataType],
+                                                      required: StructType,
                                                       outIdx: Array[Int],
                                                       wanted: Array[Boolean],
                                                       conf: Broadcast[SerializableConfiguration])
@@ -307,33 +307,24 @@ private[sources] final case class RowReaderFactory[S](format: RowFileFormat[S],
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new RowPartitionReader(
       format.decode(partition.asInstanceOf[RowFileSplit[S]].split, wanted, conf.value.value),
-      outIdx, types)
+      ProjectingInternalRow(required, outIdx.toIndexedSeq))
 }
 
-/** Projects a full-width decoded [[Row]] stream down to the required
-  * columns (`outIdx` into the full schema) and converts each value to its
-  * Catalyst representation via [[CatalystTypeConverters]] (String→
-  * UTF8String, Decimal, date/time, …). */
+/** Projects a full-width decoded row stream down to the required columns
+  * through one reused `projection` (`outIdx` into the full schema). A
+  * reader may hand out a reused row: the unsafe projection Spark plans
+  * over a row scan copies each row before asking for the next. */
 private[sources] final class RowPartitionReader(
-    rows: Iterator[Row],
-    outIdx: Array[Int],
-    types: Array[DataType]) extends PartitionReader[InternalRow] {
+    rows: Iterator[InternalRow],
+    projection: ProjectingInternalRow) extends PartitionReader[InternalRow] {
 
-  private val conv = types.map(CatalystTypeConverters.createToCatalystConverter)
-  private var row: Row = _
-
-  override def next(): Boolean = { val h = rows.hasNext; if (h) row = rows.next(); h }
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](outIdx.length)
-    var i = 0
-    while (i < outIdx.length) {
-      val v = row.get(outIdx(i))
-      vals(i) = if (v == null) null else conv(i)(v)
-      i += 1
-    }
-    new GenericInternalRow(vals)
+  override def next(): Boolean = {
+    val h = rows.hasNext
+    if (h) projection.project(rows.next())
+    h
   }
+
+  override def get(): InternalRow = projection
 
   override def close(): Unit = ()
 }

@@ -2,8 +2,11 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, CoordinateXYM, CoordinateXYZM, Geometry, LinearRing, Polygon}
 
 import graft.core.GeomOps
@@ -158,17 +161,14 @@ object Shapefile {
 
   private case class DbfField(name: String, typ: Char, len: Int, dec: Int)
 
-  private def dbfFields(bytes: Array[Byte]): (Seq[DbfField], Int, Int, Int) = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val numRecords = bb.getInt(4)
-    val headerSize = bb.getShort(8) & 0xFFFF
-    val recordSize = bb.getShort(10) & 0xFFFF
-    val fields = ((32 until headerSize - 1 by 32).takeWhile(bytes(_) != 0x0D)).map { off =>
+  /** The field descriptors of the .dbf header at the start of `bytes`. */
+  private def dbfFields(bytes: Array[Byte]): Seq[DbfField] = {
+    val headerSize = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getShort(8) & 0xFFFF
+    (32 until headerSize - 1 by 32).takeWhile(bytes(_) != 0x0D).map { off =>
       val nameBytes = bytes.slice(off, off + 11).takeWhile(_ != 0)
       DbfField(new String(nameBytes, "ASCII").trim, bytes(off + 11).toChar,
         bytes(off + 16) & 0xFF, bytes(off + 17) & 0xFF)
     }
-    (fields, numRecords, headerSize, recordSize)
   }
 
   private def dbfType(f: DbfField): DataType = f.typ match {
@@ -186,36 +186,30 @@ object Shapefile {
   private[graft] val decodedPropValues = new java.util.concurrent.atomic.LongAdder
   private[graft] val decodedGeoms = new java.util.concurrent.atomic.LongAdder
 
-  /** DBF records are fixed-width, so skipping a pruned-out column is free:
-    * `wanted(i) = false` advances the offset without the String alloc +
-    * numeric parse that dominate DBF decode. `wanted = null` decodes all. */
-  private def decodeDbfRecord(bytes: Array[Byte], base: Int, fields: Seq[DbfField],
-                              wanted: Array[Boolean]): Array[Any] = {
+  /** Decode one DBF record at `base` into `out`'s first slots as Catalyst
+    * values. Records are fixed-width, so skipping a pruned-out column is
+    * free: `wanted(i) = false` advances the offset without the String
+    * alloc + numeric parse that dominate DBF decode. */
+  private def decodeDbfRecord(bytes: Array[Byte], base: Int, fields: Array[DbfField],
+                              wanted: Array[Boolean], out: Array[Any]): Unit = {
     var off = base + 1 // skip deletion flag
-    fields.zipWithIndex.map { case (f, fi) =>
-      if (wanted != null && !wanted(fi)) { off += f.len; null }
-      else {
+    var fi = 0
+    while (fi < fields.length) {
+      val f = fields(fi)
+      if (wanted(fi)) {
         val raw = new String(bytes, off, f.len, "ASCII").trim
-        off += f.len
         decodedPropValues.increment()
-        if (raw.isEmpty) null
-        else f.typ match {
-          case 'C' | 'D' => raw
+        if (raw.nonEmpty) out(fi) = f.typ match {
           case 'N' if f.dec == 0 && f.len < 10 => raw.toInt
           case 'N' if f.dec == 0 => raw.toLong
           case 'N' | 'F' => raw.toDouble
           case 'L' => "YyTt".contains(raw.head)
-          case _ => raw
+          case _ => UTF8String.fromString(raw) // 'C', 'D' and unknown types
         }
       }
-    }.toArray[Any]
-  }
-
-  private def dbfRecords(bytes: Array[Byte],
-                         wanted: Array[Boolean] = null): Iterator[Array[Any]] = {
-    val (fields, numRecords, headerSize, recordSize) = dbfFields(bytes)
-    (0 until numRecords).iterator.map(r =>
-      decodeDbfRecord(bytes, headerSize + r * recordSize, fields, wanted))
+      off += f.len
+      fi += 1
+    }
   }
 
   // ── public API ────────────────────────────────────────────────────────
@@ -295,128 +289,115 @@ object Shapefile {
       mb.build()
     }
     StructType(
-      (if (fs.exists(dbp)) dbfFields(readAll(fs, dbp))._1
+      (if (fs.exists(dbp)) dbfFields(readAll(fs, dbp))
         .map(f => StructField(f.name, dbfType(f)))
       else Seq.empty) :+ StructField("geometry", BinaryType, nullable = true, geomMeta))
   }
 
-  /** Zip geometries with property records, FAILING LOUDLY when the two
-    * sides disagree in length: a plain `zip` stops at the shorter iterator,
-    * so a truncated/corrupt .shp (or a .dbf with a different record count)
-    * would silently drop rows AND leave the .dbf stream un-exhausted (its
-    * close rides natural exhaustion). Checking both `hasNext`s every step
-    * surfaces the mismatch at the first divergent record. */
-  private def strictZip(f: String, geoms: Iterator[Geometry],
-      props: Iterator[Array[Any]]): Iterator[(Geometry, Array[Any])] =
-    new Iterator[(Geometry, Array[Any])] {
+  /** The one record emitter: the full-width rows of one .shp(+.dbf) pair,
+    * the whole pair (`recStart = -1`) or one .shx-planned record range,
+    * which reads ONLY the range's .shp bytes and the matching fixed-width
+    * .dbf record slice — a split task's IO is proportional to its range,
+    * not the file. The two differ only in the bytes read. `wanted` indexes
+    * the full schema (properties in file order, geometry LAST); pruned-out
+    * slots stay null: DBF values skip their parse, a pruned geometry skips
+    * the JTS build entirely. Runs task-side on the session conf (a bare
+    * `new Configuration()` would drop spark.hadoop.* overrides and
+    * credentials on s3a/hdfs).
+    *
+    * The .shp and .dbf sides must agree in length: a plain `zip` would stop
+    * at the shorter side, so a truncated/corrupt .shp (or a .dbf with a
+    * different record count) would silently drop rows. Checking both sides
+    * every step fails loudly at the first divergent record, and also runs
+    * the .dbf stream's natural-exhaustion close (the task listener is the
+    * backstop). */
+  private def records(f: String, recStart: Int, nRecs: Int,
+      shpStart: Long, shpEnd: Long, wanted: Array[Boolean],
+      conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] = {
+    val fp = new org.apache.hadoop.fs.Path(f)
+    val fsw = fp.getFileSystem(conf)
+    val geomIdx = wanted.length - 1
+    val geoms =
+      if (recStart < 0) shpGeometries(readAll(fsw, fp), decode = wanted(geomIdx))
+      else shpGeometries(readRange(fsw, fp, shpStart, (shpEnd - shpStart).toInt),
+        decode = wanted(geomIdx), sliced = true)
+    val dbp = new org.apache.hadoop.fs.Path(f.stripSuffix(".shp") + ".dbf")
+    val label = if (recStart < 0) f else s"$f[$recStart+$nRecs]"
+    val props = if (fsw.exists(dbp)) dbfSlice(fsw, dbp, recStart, nRecs, wanted) else null
+    new Iterator[InternalRow] {
       def hasNext: Boolean = {
-        val g = geoms.hasNext; val pr = props.hasNext
-        require(g == pr, s"shp/dbf record-count mismatch in $f: " +
-          (if (g) "more geometries than .dbf records" else "more .dbf records than geometries"))
+        val g = geoms.hasNext
+        if (props != null) {
+          val pr = props.hasNext
+          require(g == pr, s"shp/dbf record-count mismatch in $label: " +
+            (if (g) "more geometries than .dbf records" else "more .dbf records than geometries"))
+        }
         g
       }
-      def next(): (Geometry, Array[Any]) = (geoms.next(), props.next())
-    }
-
-  /** Decode one .shp(+.dbf) pair to full-width rows. `wanted` indexes the
-    * full schema (properties in file order, geometry LAST); pruned-out
-    * slots stay null: DBF values skip their parse, a pruned geometry skips
-    * the JTS build entirely. `wanted = null` decodes everything. Runs
-    * task-side — opens its own FileSystem. */
-  private[sources] def fileRows(f: String, wanted: Array[Boolean],
-      conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
-    val fp = new org.apache.hadoop.fs.Path(f)
-    // conf is REQUIRED (the session hadoop conf, shipped via
-    // SerializableConfiguration): a bare new Configuration() here would
-    // drop spark.hadoop.* overrides and credentials on s3a/hdfs
-    val fsw = fp.getFileSystem(conf)
-    val wantGeom = wanted == null || wanted(wanted.length - 1)
-    val geoms = shpGeometries(readAll(fsw, fp), decode = wantGeom)
-    val dbp = new org.apache.hadoop.fs.Path(f.stripSuffix(".shp") + ".dbf")
-    val hasDbf = fsw.exists(dbp)
-    val props: Iterator[Array[Any]] =
-      if (hasDbf)
-        dbfRecords(readAll(fsw, dbp), if (wanted == null) null else wanted.dropRight(1))
-      else Iterator.continually(Array.empty[Any])
-    // no .dbf → props is infinite, only plain zip terminates
-    val zipped = if (hasDbf) strictZip(f, geoms, props) else geoms.zip(props)
-    zipped.map { case (g, pr) =>
-      Row.fromSeq(pr.toIndexedSeq :+ (if (g == null) null else GeomOps.write(g)))
+      def next(): InternalRow = {
+        val out = new Array[Any](wanted.length)
+        if (props != null) props.fill(out)
+        val g = geoms.next()
+        if (g != null) out(geomIdx) = GeomOps.write(g)
+        new GenericInternalRow(out)
+      }
     }
   }
 
-  /** [[fileRows]] over one .shx-planned record range: reads ONLY the
-    * range's .shp bytes and the matching fixed-width .dbf record slice —
-    * a split task's IO is proportional to its range, not the file.
-    * `recStart = -1` delegates to the whole-pair path. */
-  private[sources] def fileRowsRange(f: String, recStart: Int, nRecs: Int,
-      shpStart: Long, shpEnd: Long, wanted: Array[Boolean],
-      conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
-    if (recStart < 0) return fileRows(f, wanted, conf)
-    val fp = new org.apache.hadoop.fs.Path(f)
-    val fsw = fp.getFileSystem(conf)
-    val wantGeom = wanted == null || wanted(wanted.length - 1)
-    val slice = readRange(fsw, fp, shpStart, (shpEnd - shpStart).toInt)
-    val geoms = shpGeometries(slice, decode = wantGeom, sliced = true)
-    val dbp = new org.apache.hadoop.fs.Path(f.stripSuffix(".shp") + ".dbf")
-    val hasDbf = fsw.exists(dbp)
-    val props: Iterator[Array[Any]] =
-      if (hasDbf) {
-        // ONE stream for header + record batches (object-store round trips
-        // cost more than the positioned reads), and the slice decodes in
-        // bounded batches: nRecs * recordSize can exceed Int range for wide
-        // DBFs (recordSize up to 64 KiB), so no single whole-range array
-        val in = fsw.open(dbp)
-        var closed = false
-        def closeIn(): Unit = if (!closed) { closed = true; in.close() }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeIn()))
-        try {
-          val head = new Array[Byte](32)
-          in.readFully(0, head)
-          val hb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
-          val headerSize = hb.getShort(8) & 0xFFFF
-          val recordSize = math.max(1, hb.getShort(10) & 0xFFFF)
-          val hdr = new Array[Byte](headerSize)
-          in.readFully(0, hdr)
-          val fields = dbfFields(hdr)._1
-          val w = if (wanted == null) null else wanted.dropRight(1)
-          val batchRecs = math.max(1, (16 << 20) / recordSize) // ≤16 MiB per batch
-          // lifetime: the stream closes when the LAST batch is in memory,
-          // on natural exhaustion, and (inside a task) at task completion;
-          // a caller outside Spark that abandons mid-iteration leaks until
-          // GC — acceptable for a private per-split decoder
-          new Iterator[Array[Any]] {
-            private var r = 0
-            private var batch: Array[Byte] = null
-            private var batchStart = 0
-            private var batchRows = 0
-            def hasNext: Boolean = { val h = r < nRecs; if (!h) closeIn(); h }
-            def next(): Array[Any] = {
-              if (batch == null || r >= batchStart + batchRows) {
-                batchStart = r
-                batchRows = math.min(batchRecs, nRecs - r)
-                if (batch == null || batch.length != batchRows * recordSize)
-                  batch = new Array[Byte](batchRows * recordSize)
-                in.readFully(headerSize.toLong + (recStart.toLong + r) * recordSize, batch)
-                if (r + batchRows >= nRecs) closeIn() // last batch is in memory
-              }
-              val out = decodeDbfRecord(batch, (r - batchStart) * recordSize, fields, w)
-              r += 1
-              out
-            }
-          }
-        } catch { case e: Throwable => closeIn(); throw e }
-      } else Iterator.continually(Array.empty[Any])
-    // the sliced .dbf iterator is bounded by nRecs, so strictZip both
-    // surfaces a truncated .shp range AND guarantees the stream's
-    // natural-exhaustion close runs (the task listener is the backstop)
-    val zipped =
-      if (hasDbf) strictZip(s"$f[$recStart+$nRecs]", geoms, props)
-      else geoms.zip(props)
-    zipped.map { case (g, pr) =>
-      Row.fromSeq(pr.toIndexedSeq :+ (if (g == null) null else GeomOps.write(g)))
+  /** The .dbf records `recStart` until `recStart + nRecs` (all of them when
+    * `recStart = -1`), decoded into a row's first slots. ONE stream for
+    * header + record batches (object-store round trips cost more than the
+    * positioned reads), and the records decode in bounded batches:
+    * nRecs * recordSize can exceed Int range for wide DBFs (recordSize up
+    * to 64 KiB), so no single whole-range array. Lifetime: the stream
+    * closes when the LAST batch is in memory, on natural exhaustion, and
+    * (inside a task) at task completion; a caller outside Spark that
+    * abandons mid-iteration leaks until GC — acceptable for a private
+    * per-split decoder. */
+  private final class DbfSlice(in: org.apache.hadoop.fs.FSDataInputStream, recStart: Int,
+      nRecs: Int, headerSize: Int, recordSize: Int, fields: Array[DbfField],
+      wanted: Array[Boolean]) {
+    private var closed = false
+    def close(): Unit = if (!closed) { closed = true; in.close() }
+    private val batchRecs = math.max(1, (16 << 20) / recordSize) // ≤16 MiB per batch
+    private var r = 0
+    private var batch: Array[Byte] = null
+    private var batchStart = 0
+    private var batchRows = 0
+    def hasNext: Boolean = { val h = r < nRecs; if (!h) close(); h }
+    def fill(out: Array[Any]): Unit = {
+      if (batch == null || r >= batchStart + batchRows) {
+        batchStart = r
+        batchRows = math.min(batchRecs, nRecs - r)
+        if (batch == null || batch.length != batchRows * recordSize)
+          batch = new Array[Byte](batchRows * recordSize)
+        in.readFully(headerSize.toLong + (recStart.toLong + r) * recordSize, batch)
+        if (r + batchRows >= nRecs) close() // last batch is in memory
+      }
+      decodeDbfRecord(batch, (r - batchStart) * recordSize, fields, wanted, out)
+      r += 1
     }
+  }
+
+  private def dbfSlice(fs: org.apache.hadoop.fs.FileSystem, dbp: org.apache.hadoop.fs.Path,
+      recStart: Int, nRecs: Int, wanted: Array[Boolean]): DbfSlice = {
+    val in = fs.open(dbp)
+    try {
+      val head = new Array[Byte](32)
+      in.readFully(0, head)
+      val hb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
+      val headerSize = hb.getShort(8) & 0xFFFF
+      val recordSize = math.max(1, hb.getShort(10) & 0xFFFF)
+      val hdr = new Array[Byte](headerSize)
+      in.readFully(0, hdr)
+      // a pair with more fields than the schema fills only the schema's
+      val fields = dbfFields(hdr).take(wanted.length - 1).toArray
+      val (from, count) = if (recStart < 0) (0, hb.getInt(4)) else (recStart, nRecs)
+      val slice = new DbfSlice(in, from, count, headerSize, recordSize, fields, wanted)
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => slice.close()))
+      slice
+    } catch { case e: Throwable => in.close(); throw e }
   }
 
   /** Read .shp(+.dbf) file(s) into a DataFrame (property columns +
@@ -446,9 +427,9 @@ object Shapefile {
       shxSplits(path, maxPartitionBytes, conf)
 
     def decode(split: (String, Int, Int, Long, Long), wanted: Array[Boolean],
-               conf: org.apache.hadoop.conf.Configuration): Iterator[Row] = {
+               conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] = {
       val (f, rs, nr, bs, be) = split
-      fileRowsRange(f, rs, nr, bs, be, wanted, conf)
+      records(f, rs, nr, bs, be, wanted, conf)
     }
   }
 

@@ -8,6 +8,8 @@ import org.apache.arrow.vector.complex.{DenseUnionVector, FixedSizeListVector, L
 import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
 import org.apache.arrow.vector.types.{FloatingPointPrecision, UnionMode}
 import org.apache.arrow.vector.types.pojo._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ArrowIpc
@@ -433,6 +435,26 @@ class ArrowIpcFuzzSpec extends AnyFunSuite {
       v.setValueCount(n); (v, None)
   }
 
+  /** The Spark type a column kind reads as. A list kind keeps its element
+    * type even when no element was written (the file then declares a Null
+    * child). */
+  private def sparkType(kind: Int): DataType = kind match {
+    case 0 => IntegerType
+    case 1 => DoubleType
+    case 2 | 3 | 9 | 10 | 19 => StringType
+    case 4 | 11 | 20 | 22 | 23 | 24 => BinaryType
+    case 5 => BooleanType
+    case 6 | 16 | 17 => ArrayType(DoubleType)
+    case 7 | 18 => ArrayType(IntegerType)
+    case 8 => StructType.fromDDL("a INT, b STRING")
+    case 12 => DateType
+    case 13 => TimestampType
+    case 14 => TimestampNTZType
+    case 15 => MapType(StringType, DoubleType)
+    case 21 => ArrayType(StringType)
+    case _ => StructType.fromDDL("s STRING, d DOUBLE")
+  }
+
   test("pruned reader == full reader over random schemas, masks, and compression") {
     val rnd = new Random(20260815L)
     val dir = java.nio.file.Files.createTempDirectory("arrowfuzz").toString
@@ -480,9 +502,15 @@ class ArrowIpcFuzzSpec extends AnyFunSuite {
       // random projection mask (at least one column kept) + the full mask
       val mask = Array.fill(ncols)(rnd.nextBoolean())
       if (!mask.exists(identity)) mask(rnd.nextInt(ncols)) = true
+      // decoded rows are Catalyst rows, and ArrayBasedMapData has no
+      // equals: compare them as external rows
+      val toRow = CatalystTypeConverters.createToScalaConverter(
+        StructType(kinds.map(k => StructField("c", sparkType(k)))))
+      def decode(f: java.io.File, m: Array[Boolean], pruneBytes: Boolean = false) =
+        ArrowIpc.decodeFile(f.getAbsolutePath, conf, m, pruneBytes = pruneBytes).map(toRow).toVector
       for (m <- Seq(mask, Array.fill(ncols)(true))) {
-        val full = ArrowIpc.decodeFile(file.getAbsolutePath, conf, m).toVector
-        val pruned = ArrowIpc.decodeFile(file.getAbsolutePath, conf, m, pruneBytes = true).toVector
+        val full = decode(file, m)
+        val pruned = decode(file, m, pruneBytes = true)
         assert(pruned.size == full.size,
           s"trial $trial kinds=${kinds.mkString(",")} mask=${m.mkString(",")}: " +
             s"row count ${pruned.size} != ${full.size}")
@@ -493,7 +521,7 @@ class ArrowIpcFuzzSpec extends AnyFunSuite {
         // .arrows twin decodes to the same rows through the stream path
         val twin = streamTwin(file)
         if (twin.exists()) {
-          val stream = ArrowIpc.decodeFile(twin.getAbsolutePath, conf, m).toVector
+          val stream = decode(twin, m)
           assert(stream == full, s"trial $trial kinds=${kinds.mkString(",")} " +
             s"mask=${m.mkString(",")}: stream decode diverged from file decode")
         }

@@ -751,6 +751,55 @@ class ArrowIpcSpec extends SparkTestBase {
       "datetime write→read roundtrip must be exact")
   }
 
+  test("timestamps in SECOND/NANOSECOND units and dates before the epoch decode exactly") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.arrow.memory.RootAllocator
+    import org.apache.arrow.vector._
+    // zoned and zoneless timestamps in second and nanosecond units, with
+    // pre-1970 values that carry a sub-microsecond part (micros floor), and
+    // DateDay/DateMilli days before 1970
+    val file = new java.io.File(
+      java.nio.file.Files.createTempDirectory("arrowunits").toFile, "part-00000.arrow")
+    val secs = Seq(-86401L, 0L, 1700000000L)
+    val nanos = Seq(-1500000001L, -1L, 1700000000123456789L)
+    val alloc = new RootAllocator()
+    try {
+      val ssz = new TimeStampSecTZVector("ssz", alloc, "UTC")
+      val ss = new TimeStampSecVector("ss", alloc)
+      val nsz = new TimeStampNanoTZVector("nsz", alloc, "Europe/Paris")
+      val ns = new TimeStampNanoVector("ns", alloc)
+      val dd = new DateDayVector("dd", alloc)
+      val dm = new DateMilliVector("dm", alloc)
+      Seq[BaseFixedWidthVector](ssz, ss, nsz, ns, dd, dm).foreach(_.allocateNew(3))
+      for (i <- 0 until 3) {
+        ssz.set(i, secs(i)); ss.set(i, secs(i))
+        nsz.set(i, nanos(i)); ns.set(i, nanos(i))
+      }
+      dd.set(0, -25567); dd.set(1, -1); dd.set(2, 19000)
+      dm.set(0, -86400000L * 365); dm.set(1, -1L); dm.set(2, 19000L * 86400000L)
+      val vecs = Seq[FieldVector](ssz, ss, nsz, ns, dd, dm)
+      vecs.foreach(_.setValueCount(3))
+      val root = new VectorSchemaRoot(vecs.toList.asJava)
+      try {
+        val out = new java.io.FileOutputStream(file)
+        val writer = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, null, out.getChannel)
+        try { writer.start(); writer.writeBatch(); writer.end() }
+        finally { writer.close(); out.close() }
+      } finally root.close()
+    } finally alloc.close()
+    val got = ArrowIpc.read(spark, file.getAbsolutePath)
+      .selectExpr("unix_micros(ssz)", "CAST(ss AS STRING)", "unix_micros(nsz)",
+        "CAST(ns AS STRING)", "CAST(dd AS STRING)", "CAST(dm AS STRING)")
+      .collect().map(r => (0 until 6).map(r.get))
+    assert(got.toSeq == Seq(
+      Seq(-86401000000L, "1969-12-30 23:59:59", -1500001L,
+        "1969-12-31 23:59:58.499999", "1900-01-01", "1969-01-01"),
+      Seq(0L, "1970-01-01 00:00:00", -1L,
+        "1969-12-31 23:59:59.999999", "1969-12-31", "1969-12-31"),
+      Seq(1700000000000000L, "2023-11-14 22:13:20", 1700000000123456L,
+        "2023-11-14 22:13:20.123456", "2022-01-08", "2022-01-08")))
+  }
+
   test("nested property WRITE: array/struct columns roundtrip write→read exactly") {
     val out = java.nio.file.Files.createTempDirectory("arrownw").toString
     // arrays (with null elements and null rows), structs (with null

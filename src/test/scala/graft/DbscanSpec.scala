@@ -155,29 +155,12 @@ class DbscanSpec extends SparkTestBase {
           ELSE ST_Point(CAST((id * 7) % 100 AS DOUBLE), CAST((id * 13) % 100 AS DOUBLE))
         END AS geom
       FROM (SELECT explode(sequence(0L, 659L)) AS id)""")
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, List[Long]]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          perStage.merge(te.stageId, List(m.shuffleReadMetrics.recordsRead),
-            (a, b) => a ++ b)
-        }
-    }
-    s.sparkContext.addSparkListener(listener)
     try {
-      val got = labelsOf(Dbscan.cluster(df, "id", "geom", eps = 1.0, minPts = 5))
-      // sanity: the blob is one cluster labeled by its min id, end to end
-      assert(got(0L) == Some(0L) && got(599L) == Some(0L))
-      assert(got.values.flatten.count(_ == 0L) >= 600, s"blob fragmented: $got")
-      // listener bus is async: wait until stage totals stabilize
-      var snapshot = Map.empty[Int, List[Long]]
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var stable = false
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val now = scala.jdk.CollectionConverters.MapHasAsScala(perStage).asScala.toMap
-        stable = now == snapshot && now.values.map(_.sum).maxOption.exists(_ > 1000)
-        snapshot = now
+      val snapshot = SparkJobs.shuffleReads(s) {
+        val got = labelsOf(Dbscan.cluster(df, "id", "geom", eps = 1.0, minPts = 5))
+        // sanity: the blob is one cluster labeled by its min id, end to end
+        assert(got(0L) == Some(0L) && got(599L) == Some(0L))
+        assert(got.values.flatten.count(_ == 0L) >= 600, s"blob fragmented: $got")
       }
       // EVERY substantial shuffle stage must balance — the grid-join
       // pair-generation stage (hot-cell sub-split under test) AND the
@@ -197,7 +180,6 @@ class DbscanSpec extends SparkTestBase {
             s"of ${recs.sum} shuffle records ($recs)")
       }
     } finally {
-      s.sparkContext.removeSparkListener(listener)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
       s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)

@@ -539,13 +539,7 @@ class KnnJoinSpec extends SparkTestBase {
       (40L until 45L).map(i => (i, 5000.0 + (i - 40L) * 3.0, 5000.0 + (i - 40L) * 5.0))
     val r = (0L until 5000L).map(i =>
       (10000L + i, rnd.nextDouble() * 100.0, rnd.nextDouble() * 100.0))
-    val perTask = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m => perTask.add(m.shuffleReadMetrics.recordsRead))
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
+    val perStage = SparkJobs.shuffleReads(s) {
       val out = SpatialJoin.knn(pts(l, "lid", "lg"), pts(r, "rid", "rg"),
         "lg", "rg", 3, "lid", "rid", initialRadius = 2.0)
         .select("lid", "rid", "knn_rank").as[(Long, Long, Long)].collect()
@@ -555,22 +549,12 @@ class KnnJoinSpec extends SparkTestBase {
       l.foreach { case (lid, _, _) =>
         assert(out(lid) == exp(lid).map(_._1), s"left $lid: ${out(lid)} vs ${exp(lid)}")
       }
-      // listener bus is async — wait until the task totals stabilize
-      var snap = -1
-      var stable = false
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val now = perTask.size()
-        stable = now == snap && now > 0
-        snap = now
-      }
-      val max = scala.jdk.CollectionConverters.IteratorHasAsScala(perTask.iterator).asScala
-        .foldLeft(0L)(math.max)
-      assert(max < 5000,
-        s"a task read $max shuffle records — the 5×5000 remainder product " +
-          "must distribute map-side, not land on one task")
-    } finally s.sparkContext.removeSparkListener(listener)
+    }
+    assert(perStage.nonEmpty, "no tasks observed")
+    val max = perStage.values.flatten.max
+    assert(max < 5000,
+      s"a task read $max shuffle records — the 5×5000 remainder product " +
+        "must distribute map-side, not land on one task")
   }
 
   test("cap boundary at forced scale: broadcast under the cap == grid fallback over it") {

@@ -488,19 +488,13 @@ class SpatialJoinSpec extends SparkTestBase {
     pts.createOrReplaceTempView("skew_pts")
     zs.createOrReplaceTempView("skew_zs")
 
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, List[Long]]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          perStage.merge(te.stageId, List(m.shuffleReadMetrics.recordsRead),
-            (a, b) => a ++ b)
-        }
-    }
-    s.sparkContext.addSparkListener(listener)
     try {
       val q = sql("SELECT id, zid FROM skew_pts JOIN skew_zs ON ST_Covers(zone, pt)")
       assert(planOf(q).contains("GridSpatialJoin"), planOf(q))
-      val all = q.collect().map(r => (r.getInt(0), r.getInt(1)))
+      var all = Array.empty[(Int, Int)]
+      val snapshot = SparkJobs.shuffleReads(s) {
+        all = q.collect().map(r => (r.getInt(0), r.getInt(1)))
+      }
       // ground truth driver-side with the JTS kernel
       val cp = pts.collect().map(r => (r.getInt(0), r.getAs[Array[Byte]]("pt")))
       val cz = zs.collect().map(r => (r.getInt(0), r.getAs[Array[Byte]]("zone")))
@@ -508,16 +502,7 @@ class SpatialJoinSpec extends SparkTestBase {
                        if graft.core.GeomOps.covers(zone, pt) } yield (id, zid)).toSet
       assert(all.toSet == exp, s"got ${all.length} rows, expected ${exp.size}")
       assert(all.length == all.toSet.size, "reference-point dedup must survive sub-split")
-      // listener bus is async: wait until the join stage's totals stabilize
-      var snapshot = Map.empty[Int, List[Long]]
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var stable = false
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val now = scala.jdk.CollectionConverters.MapHasAsScala(perStage).asScala.toMap
-        stable = now == snapshot && now.values.map(_.sum).maxOption.exists(_ > 1000)
-        snapshot = now
-      }
+      assert(snapshot.nonEmpty, "join shuffle stage not found")
       val (joinStage, recs) = snapshot.maxBy(_._2.sum)
       assert(recs.sum > 1000, s"join shuffle stage not found: $snapshot")
       val maxShare = recs.max.toDouble / recs.sum
@@ -525,7 +510,6 @@ class SpatialJoinSpec extends SparkTestBase {
         s"stage $joinStage skewed: max task reads ${(maxShare * 100).round}% " +
           s"of ${recs.sum} shuffle records ($recs)")
     } finally {
-      s.sparkContext.removeSparkListener(listener)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
